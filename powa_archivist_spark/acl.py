@@ -266,6 +266,9 @@ class AclWarehouse:
     def acl_check_read(self, table: str) -> None:
         self._check("stage", table, READ)
 
+    def engine(self) -> "AclWarehouse":
+        return AclWarehouse(self._wh.engine(), self.principal)
+
     def __getattr__(self, name: str):
         attr = getattr(self._wh, name)
         if name in self._READS:

@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.packing import pack
-from ..session import narrow_exchanges
 from ..specs import DatasourceSpec
 from ..storage import Warehouse
 
@@ -24,26 +23,25 @@ from ..storage import Warehouse
 def aggregate(wh: Warehouse, spec: DatasourceSpec, srvid: int) -> int:
     """Pack one server's current rows into history; returns packed rows.
 
-    The whole pass runs under :func:`narrow_exchanges` (r12): a coalesce
+    Runs on the engine session (:meth:`Warehouse.engine`): a coalesce
     pass packs ONE server's current window — bounded per (srvid,
     coalesce interval) by the snapshot contract — so its pack groupBy
     and history append plan at cluster parallelism instead of paying
     the wide analytics posture on a micro-batch."""
-    with narrow_exchanges(wh.spark):
-        total = 0
+    wh = wh.engine()
+    total = _aggregate_one(
+        wh, spec, srvid,
+        Warehouse.current(spec.name), Warehouse.history(spec.name),
+        key_names=spec.key_names,
+    )
+    if spec.db_rollup:
         total += _aggregate_one(
             wh, spec, srvid,
-            Warehouse.current(spec.name), Warehouse.history(spec.name),
-            key_names=spec.key_names,
+            Warehouse.current_db(spec.name),
+            Warehouse.history_db(spec.name),
+            key_names=[spec.dbid_col],
         )
-        if spec.db_rollup:
-            total += _aggregate_one(
-                wh, spec, srvid,
-                Warehouse.current_db(spec.name),
-                Warehouse.history_db(spec.name),
-                key_names=[spec.dbid_col],
-            )
-        return total
+    return total
 
 
 def _aggregate_one(

@@ -23,18 +23,6 @@ from ..storage import Warehouse
 TARGET_FILE_BYTES = 128 << 20  # one HDFS-ish block per file
 
 
-def partition_stats(wh: Warehouse, table: str, srvid: int) -> tuple[int, int]:
-    """(n_files, n_bytes) of one srvid partition's parquet files."""
-    root = os.path.join(wh.path(table), f"srvid={srvid}")
-    n_files = n_bytes = 0
-    for dirpath, _dirs, files in os.walk(root):
-        for f in files:
-            if f.endswith(".parquet"):
-                n_files += 1
-                n_bytes += os.path.getsize(os.path.join(dirpath, f))
-    return n_files, n_bytes
-
-
 def recover_base(wh: Warehouse, parent_dir: str, base: str) -> None:
     """Resolve one interrupted compaction swap, deciding from the full
     (live, scratch, trash) state triple — the markers are not

@@ -93,11 +93,15 @@ def qualstats_snapshot(
     them inside a single wCTE statement (:7104-7184), and the staged
     publish is the parquet analog: a crash anywhere in the pass leaves
     readers on the pre-pass state with staging intact for replay."""
+    from ..session import adopt
     from ..txn import StagedPass
 
+    wh = wh.engine()
     StagedPass.recover(wh, srvid)
     if capture is None:
         capture = wh.read(Warehouse.src_tmp(QUALSTATS_SPEC.name), SRC_SCHEMA)
+    else:
+        capture = adopt(wh.spark, capture)
     capture = capture.filter(F.col("srvid") == srvid)
     # statements gate (J2): qualstats rows must reference known
     # statements (:7116-7124)
@@ -207,6 +211,9 @@ def qualstats_aggregate(wh: Warehouse, srvid: int) -> int:
     generic purge's partition-drop fast path applies."""
     from .topk import qualstats_constvalues_topk
 
+    # engine session: the persisted ranking below would otherwise plan
+    # every exchange at the analytics posture's 256 partitions
+    wh = wh.engine()
     if not wh.exists(CONSTVALUES_TABLE):
         return 0
     cur = constvalues_current(wh, srvid)

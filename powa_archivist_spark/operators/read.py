@@ -158,18 +158,3 @@ def top_consumers(
         pruned.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-
-
-def stat_get_diffs(
-    wh: Warehouse,
-    spec: DatasourceSpec,
-    srvid: int,
-    ts_from: dt.datetime,
-    ts_to: dt.datetime,
-    clamp_resets: bool = False,
-) -> DataFrame:
-    """The `-` operator over the unpack-read (powa--5.2.0.sql:1139-1173)."""
-    series = stat_get_history(wh, spec, srvid, ts_from, ts_to)
-    return with_diff(series, spec, clamp_resets=clamp_resets).filter(
-        F.col("intvl").isNotNull()
-    )

@@ -32,6 +32,7 @@ from .operators import databases, dictionary
 from .operators.aggregate import aggregate
 from .operators.purge import DEFAULT_RETENTION, purge, reset
 from .operators.snapshot import snapshot
+from .session import adopt
 from .specs import ALL_SPECS, DatasourceSpec
 from .storage import Warehouse
 from .txn import StagedPass, TxnLog
@@ -68,7 +69,10 @@ class ServerConfig:
 class Orchestrator:
     def __init__(self, wh: Warehouse,
                  specs: dict[str, DatasourceSpec] | None = None):
-        self.wh = wh
+        # passes run on the engine session (session.engine_session);
+        # the metas table view is a read and stays on the caller's
+        self.wh = wh.engine()
+        self._caller = wh
         self.specs = specs if specs is not None else dict(ALL_SPECS)
         self.txns = TxnLog(wh.root)
         self._locks: dict[int, threading.Lock] = {}
@@ -122,7 +126,7 @@ class Orchestrator:
                     continue
                 m = self.read_metas(int(fname.split("=")[1].split(".")[0]))
                 rows.append(tuple(m[f.name] for f in schema.fields))
-        return self.wh.spark.createDataFrame(rows, schema)
+        return self._caller.spark.createDataFrame(rows, schema)
 
     def _write_metas(self, meta: dict) -> None:
         out = dict(meta)
@@ -222,9 +226,8 @@ class Orchestrator:
         # powa--5.2.0.sql:170-173) so P3/J1 joins see a fresh dimension
         if "databases" in captures:
             try:
-                databases.databases_snapshot(
-                    self.wh, srvid, captures["databases"], now=now
-                )
+                feed = adopt(self.wh.spark, captures["databases"])
+                databases.databases_snapshot(self.wh, srvid, feed, now=now)
             except Exception as e:
                 errors.append(f"powa_databases_snapshot: {e}")
 
@@ -232,7 +235,12 @@ class Orchestrator:
         for spec in order:
             try:
                 cap = captures.get(spec.name)
-                if cap is None and server.version is not None:
+                if cap is not None:
+                    # a caller's frame joins the pass on the engine
+                    # session (a cross-session plan runs on its left
+                    # operand's session and conf)
+                    cap = adopt(self.wh.spark, cap)
+                elif server.version is not None:
                     # resolve the server's layout epoch for this module
                     # (the reference's version-branched *_src functions,
                     # powa--5.2.0.sql:4315-5547)

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 # (r13) so the text stack shares one implementation with the ANN
 # scoring fan-out (here the amplification is the 63x broadcast-codebook
 # row blowup; there it is the gram/shingle explode)
-from ..session import narrow_engine_pass
+from ..session import adopt
 from .spread import spread as _spread
 
 QUANT = 1_000_000  # 1e6 quantization: 64-dim unit vectors -> dot < 6.5e13
@@ -822,10 +822,9 @@ def ivf_build(
 # r14 (VERDICT r13 task 4, BENCH_STAGES_ANN_r14.json): the upsert is
 # batch-bounded BY DESIGN (run append + Bloom-gated touched-cell
 # rewrite), i.e. an engine maintenance pass, not an analytics query —
-# its probes and staged writes get the fold posture (narrow exchanges,
-# no per-exchange AQE stage jobs, single-job bounded probes); the
-# full-corpus ivf_build/ivfpq_index_build keep the analytics posture.
-@narrow_engine_pass
+# it runs on the engine session (narrow exchanges, no per-exchange AQE
+# stage jobs, single-job bounded probes); the full-corpus
+# ivf_build/ivfpq_index_build keep the analytics posture.
 def ivf_upsert(
     wh,
     new_emb: DataFrame,
@@ -877,6 +876,8 @@ def ivf_upsert(
     the run append."""
     from ..txn import GLOBAL_LANE, StagedPass
 
+    wh = wh.engine()
+    new_emb = adopt(wh.spark, new_emb)
     # complete any interrupted index publish first (idempotent, cheap —
     # readers would self-heal anyway via the manifest, this also sweeps
     # dead stage trees)
@@ -2275,7 +2276,6 @@ def ivfpq_cells(wh) -> DataFrame:
     return _cells_union(wh, ANNPQ_CELLS_TABLE, ANNPQ_DELTA_TABLE)
 
 
-@narrow_engine_pass
 def ivfpq_upsert(
     wh,
     new_emb: DataFrame,
@@ -2296,6 +2296,8 @@ def ivfpq_upsert(
     a full rebuild with the same quantizers would."""
     from ..txn import GLOBAL_LANE, StagedPass
 
+    wh = wh.engine()
+    new_emb = adopt(wh.spark, new_emb)
     StagedPass.recover(wh, GLOBAL_LANE, sweep=True)
     cents = wh.read(ANNPQ_CENTROIDS_TABLE)
     cb = wh.read(ANNPQ_CODEBOOK_TABLE)

@@ -122,13 +122,6 @@ def exchange_count(df: DataFrame) -> int:
     return _node_count(df, "Exchange")
 
 
-def codegen_span_count(df: DataFrame) -> int:
-    """Distinct WholeStageCodegen regions (wider = fewer interpreted
-    boundaries).  Formatted mode annotates nodes with
-    ``[codegen id : N]``."""
-    return len(set(re.findall(r"\[codegen id : (\d+)\]", plan_string(df))))
-
-
 def has_cartesian(df: DataFrame) -> bool:
     return "CartesianProduct" in plan_string(df)
 

@@ -4,148 +4,78 @@ from __future__ import annotations
 
 import os
 import threading
-from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-# r13 (ADVICE r12): the set/restore window below mutates SESSION-GLOBAL
-# runtime conf.  Structured Streaming foreachBatch runs each fold on its
-# own micro-batch thread, so two concurrent engine passes (two streams,
-# or a stream plus a StagedPass write) could interleave set/restore and
-# leave the session pinned narrow.  A re-entrant lock held across the
-# whole pass serializes concurrent engine folds (they are micro-jobs by
-# contract, so serializing them costs little), and a depth counter makes
-# nested passes (a StagedPass write inside a streaming fold) set/restore
-# only at the outermost level.  Residual, documented: an ANALYTICS query
-# planned by another thread DURING an engine pass still captures the
-# narrow value — callers that interleave corpus-scale analytics with
-# live streams should run analytics on spark.newSession() (isolated SQL
-# conf, shared context).
-_NARROW_LOCK = threading.RLock()
-_NARROW_DEPTH = 0
-#: thread-local marker for WORKER threads an engine pass spawns to
-#: overlap its independent staged writes (r14, guide §2.6): the pass
-#: itself holds _NARROW_LOCK with the conf already set, so a worker
-#: blocking on the lock would deadlock the pass waiting on its own
-#: writers — workers inherit the pass's conf scope instead.
-_NARROW_TL = threading.local()
+#: the engine-pass posture, fixed once per engine session (see
+#: engine_session); shuffle partitions are added at build time
+ENGINE_CONF = {
+    # AQE materializes every Exchange as its own scheduler job, and an
+    # engine pass runs dozens of multi-exchange micro-statements: the
+    # per-stage job overhead dominates at bounded batch sizes, where
+    # runtime re-planning buys nothing
+    "spark.sql.adaptive.enabled": "false",
+    # bounded take()/limit probes read everything small: one job over
+    # every partition beats executeTake's 1 -> 4x escalation
+    "spark.sql.limit.initialNumPartitions": "100000",
+}
+
+_ENGINE_GUARD = threading.Lock()
 
 
-@contextmanager
-def narrow_inherited():
-    """Mark the current thread as running INSIDE an already-narrow
-    engine pass: nested :func:`narrow_exchanges` calls become no-ops
-    (the owning pass holds the conf for the worker's whole lifetime).
-    Only for threads whose lifetime is enclosed by the owning pass."""
-    _NARROW_TL.inherited = True
+def engine_session(spark: SparkSession) -> SparkSession:
+    """The engine-pass session of ``spark``: built once with
+    ``newSession()`` (own SQL conf, shared context, cache and catalog)
+    and fixed in the engine posture.
+
+    Snapshot passes, coalesce, purge and streaming folds are bounded per
+    (srvid, batch) by the snapshot contract: dozens of tiny jobs whose
+    latency is fixed per-job and per-task cost.  The analytics posture
+    (AQE on, exchanges planned ``initialPartitionNum`` wide so partition
+    size stays bounded on corpus-scale shuffles) pays 256 tasks per
+    exchange there, and never coalesces under a persisted frame.  The
+    engine session plans every exchange at ``defaultParallelism`` (the
+    cluster's core count) with AQE off, so the two postures never share
+    a conf and analytics planned during a pass keep their own.
+
+    Idempotent: the engine session of an engine session is itself."""
+    eng = getattr(spark, "_engine_session", None)
+    if eng is not None:
+        return eng
+    with _ENGINE_GUARD:
+        eng = getattr(spark, "_engine_session", None)
+        if eng is None:
+            eng = spark.newSession()
+            conf = dict(ENGINE_CONF)
+            conf["spark.sql.shuffle.partitions"] = str(
+                spark.sparkContext.defaultParallelism)
+            for k, v in conf.items():
+                eng.conf.set(k, v)
+            eng._engine_session = eng
+            spark._engine_session = eng
+    return eng
+
+
+def adopt(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """Re-home ``df`` on ``spark``: the same logical plan (cached data
+    still matches), planned and run under ``spark``'s conf.  A frame
+    from another session would otherwise drag its posture into the
+    pass — a cross-session join runs on its LEFT operand's session."""
+    if df._jdf.sparkSession().equals(spark._jsparkSession):
+        return df
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.logicalPlan())
+    return DataFrame(jdf, spark)
+
+
+def _default_driver_memory() -> str:
+    """Half the host's memory, capped at 16g."""
     try:
-        yield
-    finally:
-        _NARROW_TL.inherited = False
-
-
-@contextmanager
-def narrow_exchanges(spark: SparkSession):
-    """Plan exchanges at CLUSTER PARALLELISM for the engine's per-batch
-    micro-jobs (r12, VERDICT r11 task 2): the session-wide AQE posture
-    plans every exchange ``initialPartitionNum`` (256) wide so partition
-    SIZE stays bounded on corpus-scale analytics shuffles — but a
-    snapshot/ledger pass runs DOZENS of tiny jobs per batch, and each
-    one paying the wide map-output split + block bookkeeping measured
-    3.9x on ``snapshot_lifecycle_unpack`` (BENCH_AB_ATTR_r12.json warm
-    arms: 11-13 s at 256 vs 2.7-3.4 s at core count, identical plans
-    otherwise).  Engine lifecycle writes are bounded per (srvid, batch)
-    BY DESIGN — the reference's snapshot contract — so their exchanges
-    get the classic parallelism-sized plan; analytics queries keep the
-    wide posture.  On a real cluster defaultParallelism is the total
-    core count, so this scales with the deployment exactly like the
-    wide number does; override with SPARK_GRAFT_NARROW_PARTITIONS.
-
-    Runtime-conf scoped around the write ACTION (Spark reads the AQE
-    conf at query-stage planning, i.e. execution time).  Concurrent
-    engine passes (foreachBatch micro-batch threads) are serialized by
-    ``_NARROW_LOCK``; nesting set/restores only at the outermost depth
-    (r13, ADVICE r12)."""
-    global _NARROW_DEPTH
-    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    want = os.environ.get("SPARK_GRAFT_NARROW_PARTITIONS") or str(
-        spark.sparkContext.defaultParallelism
-    )
-    # r14 (VERDICT r13 tasks 2/6): AQE materializes every Exchange of a
-    # query as its own scheduler job ("query stage"), and an engine fold
-    # runs DOZENS of multi-exchange micro-statements per batch — the
-    # per-fold job count (and the ~0.1 s driver gap each job carries)
-    # was measured as HALF the streaming ledgers' wall clock at bounded
-    # batch sizes.  Engine passes are bounded per (srvid, batch) BY
-    # CONTRACT, which is exactly the regime where AQE's runtime
-    # re-planning buys nothing (exchanges are already narrow-planned
-    # here) and its per-stage job overhead dominates.  Analytics
-    # queries keep AQE untouched.  Opt-out: SPARK_GRAFT_FOLD_AQE=true
-    # restores adaptive execution inside engine passes.
-    aqe_key = "spark.sql.adaptive.enabled"
-    aqe_want = os.environ.get("SPARK_GRAFT_FOLD_AQE", "false")
-    # The folds' bounded take()/limit-collect probes (contracted-graph
-    # edges, empty-batch checks) EXPECT to read everything small:
-    # executeTake's default 1 -> 4x escalation turns each probe into
-    # 3-4 scheduler jobs over an already-materialized micro-frame.  One
-    # job that scans all partitions is strictly cheaper here; analytics
-    # limits outside engine passes keep the escalating default.
-    lim_key = "spark.sql.limit.initialNumPartitions"
-    lim_want = os.environ.get("SPARK_GRAFT_FOLD_LIMIT_PARTITIONS", "100000")
-    if getattr(_NARROW_TL, "inherited", False):
-        # worker thread of an engine pass that already holds the lock
-        # and the conf (see narrow_inherited) — pure pass-through
-        yield
-        return
-    scoped = [(key, want), (aqe_key, aqe_want), (lim_key, lim_want)]
-    with _NARROW_LOCK:
-        _NARROW_DEPTH += 1
-        outermost = _NARROW_DEPTH == 1
-        olds: list[tuple[str, str | None]] = []
-        if outermost:
-            for k, v in scoped:
-                try:
-                    olds.append((k, spark.conf.get(k)))
-                except Exception:
-                    olds.append((k, None))
-                spark.conf.set(k, v)
-        try:
-            yield
-        finally:
-            _NARROW_DEPTH -= 1
-            if outermost:
-                for k, v in olds:
-                    if v is None:
-                        spark.conf.unset(k)
-                    else:
-                        spark.conf.set(k, v)
-
-
-def narrow_engine_pass(fn):
-    """Decorator form of :func:`narrow_exchanges` for the engine's
-    per-batch fold functions (streaming ledgers, compactions): the
-    first argument is the Warehouse (or a SparkSession), and the whole
-    fold — including non-staged ``wh.append`` writes and cached-frame
-    materializations — runs with parallelism-sized exchanges.  Folds
-    are bounded per micro-batch by the streaming contract; the one
-    corpus-wide fold (the k-means refresh) only runs bounded-key
-    aggregations whose reduce side is k x dim rows, where narrow is
-    strictly better."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        spark = None
-        if args:
-            a = args[0]
-            spark = a if isinstance(a, SparkSession) else getattr(
-                a, "spark", None)
-        if spark is None:
-            return fn(*args, **kwargs)
-        with narrow_exchanges(spark):
-            return fn(*args, **kwargs)
-
-    return wrapper
+        with open("/proc/meminfo") as f:
+            kib = int(f.readline().split()[1])  # MemTotal
+    except (OSError, ValueError, IndexError):
+        return "16g"
+    return f"{min(16 * 1024, kib // 2048)}m"
 
 
 def get_spark(app_name: str = "powa_archivist_spark",
@@ -214,7 +144,8 @@ def get_spark(app_name: str = "powa_archivist_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory())
         # long sessions run hundreds of generated-code classes; the JVM
         # default 240m code cache silently flush-thrashes once full and
         # expression-heavy queries degrade 10-30x late in a session

@@ -23,6 +23,7 @@ concurrency control is orchestrator-level per-srvid locking (§3.1).
 
 from __future__ import annotations
 
+import copy
 import os
 import shutil
 import threading
@@ -68,6 +69,20 @@ class Warehouse:
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
+
+    def engine(self) -> "Warehouse":
+        """This warehouse bound to the engine session
+        (:func:`~.session.engine_session`): same root and write locks,
+        engine-pass posture.  Snapshot, coalesce, purge and fold passes
+        run on it; reads stay on the caller's session."""
+        from .session import engine_session
+
+        eng = engine_session(self.spark)
+        if eng is self.spark:
+            return self
+        view = copy.copy(self)
+        view.spark = eng
+        return view
 
     # ---- paths -----------------------------------------------------------
 

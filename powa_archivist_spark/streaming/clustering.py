@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 
 from ..pipeline.similarity import assign_to_centers, kmeans, quantized
 from ..pipeline.spread import spread, write_coalesce
-from ..session import narrow_engine_pass
+from ..session import adopt
 from ..storage import Warehouse
 
 VECTORS_TABLE = "kmeans_vectors"
@@ -61,7 +61,6 @@ CENTERS_TABLE = "kmeans_centers"
 ASSIGN_TABLE = "kmeans_assign"
 
 
-@narrow_engine_pass
 def process_kmeans_batch(
     wh: Warehouse,
     batch: DataFrame,
@@ -88,6 +87,8 @@ def process_kmeans_batch(
 
     from .epochs import epoch_replayed, landed
 
+    wh = wh.engine()
+    batch = adopt(wh.spark, batch)
     StagedPass.recover(wh, GLOBAL_LANE)
     StagedPass.sweep_flat_stages(wh, vectors_table, centers_table,
                                  assign_table)
@@ -124,7 +125,7 @@ def process_kmeans_batch(
     # the stream wrapper's epoch marker skips it entirely).  r14: the
     # probe rides the vecs checkpoint — take(1) materializes the
     # checkpointed quantized batch (engine passes scan all partitions
-    # in one job, session.narrow_exchanges), so the staged append and
+    # in one job on the engine session), so the staged append and
     # the refresh/frozen assignment below read blocks instead of
     # re-running the exchange + quantize; one probe job either way.
     is_empty = not vecs.take(1)
@@ -275,49 +276,4 @@ def kmeans_staleness(wh: Warehouse,
         (F.col("latest_epoch") - F.col("trained_epoch"))
         .alias("epochs_since_refresh"),
         (frac >= F.lit(frozen_frac_threshold)).alias("refresh_due"),
-    )
-
-
-def stream_kmeans(
-    spark,
-    landing_glob: str,
-    schema,
-    checkpoint_dir: str,
-    wh: Warehouse,
-    k: int = 8,
-    refresh_every: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_files_per_trigger: int = 16,
-):
-    """Structured Streaming wrapper: landing files -> foreachBatch
-    ledger fold; every ``refresh_every``-th epoch runs the Lloyd
-    refresh, others frozen-assign.  The epoch marker skips wasted work
-    on re-delivery and the in-fold epoch probe makes a marker-less
-    replay a no-op too."""
-    import os
-
-    from .ingest import with_epoch_marker as _with_epoch_marker
-
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_glob)
-    )
-    marker_dir = os.path.join(checkpoint_dir, "epoch_markers")
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        _with_epoch_marker(
-            marker_dir, epoch_id,
-            lambda: process_kmeans_batch(
-                wh, batch, epoch_id, k=k,
-                refresh=(epoch_id % refresh_every == 0),
-                id_col=id_col, vec_col=vec_col,
-            ),
-        )
-
-    return (
-        reader.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
     )

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..pipeline.sketches import cms_estimate, cms_registers
-from ..session import narrow_engine_pass
+from ..session import adopt
 from ..storage import Warehouse
 
 CMS_TABLE = "profile_cms_registers"
@@ -50,7 +50,6 @@ def _merged_registers(rows: DataFrame,
     )
 
 
-@narrow_engine_pass
 def process_cms_batch(
     wh: Warehouse,
     batch: DataFrame,
@@ -68,6 +67,8 @@ def process_cms_batch(
 
     from .epochs import epoch_replayed, landed
 
+    wh = wh.engine()
+    batch = adopt(wh.spark, batch)
     StagedPass.recover(wh, GLOBAL_LANE)
     StagedPass.sweep_flat_stages(wh, table)
     # in-process replay memo (r13): a dict lookup instead of one
@@ -103,7 +104,6 @@ def cms_profile(
     return cms_estimate(merged, groups, probes, key_col, group_cols, d, w)
 
 
-@narrow_engine_pass
 def compact_cms_profile(
     wh: Warehouse,
     group_cols: Sequence[str],
@@ -114,6 +114,7 @@ def compact_cms_profile(
     manifest like every other replace."""
     from ..txn import GLOBAL_LANE, StagedPass
 
+    wh = wh.engine()
     StagedPass.recover(wh, GLOBAL_LANE)
     if not wh.exists(table):
         return

@@ -71,7 +71,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..pipeline.spread import spread, write_coalesce
-from ..session import narrow_engine_pass
+from ..session import adopt
 from ..storage import Warehouse
 from .dedup import NearDupLedger
 from .ingest import with_epoch_marker as _with_epoch_marker
@@ -153,7 +153,6 @@ def components_assignment(wh: Warehouse,
     return _assignment_view(assign, remap)
 
 
-@narrow_engine_pass
 def process_components_batch(
     wh: Warehouse,
     batch: DataFrame,
@@ -177,6 +176,8 @@ def process_components_batch(
 
     from .epochs import epoch_replayed, landed
 
+    wh = wh.engine()
+    batch = adopt(wh.spark, batch)
     healed = StagedPass.recover(wh, GLOBAL_LANE)
     StagedPass.sweep_flat_stages(wh, COMP_LEDGER_TABLE, COMP_EDGES_TABLE,
                                  COMP_ASSIGN_TABLE, COMP_REMAP_TABLE)

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from ..pipeline.corpus import dataset_split
 from ..pipeline.textstats import quality_gate
 from ..pipeline.spread import write_coalesce
-from ..session import narrow_engine_pass
+from ..session import adopt
 from ..storage import Warehouse
 from .dedup import dedup_batch_survivors
 from .ingest import with_epoch_marker as _with_epoch_marker
@@ -73,7 +73,6 @@ def _stream_generation(checkpoint_dir: str) -> str:
         return f.read().strip()
 
 
-@narrow_engine_pass
 def process_curation_batch(
     wh: Warehouse,
     batch: DataFrame,
@@ -104,6 +103,8 @@ def process_curation_batch(
 
     from .dedup import LEDGER_TABLE
 
+    wh = wh.engine()
+    batch = adopt(wh.spark, batch)
     StagedPass.recover(wh, GLOBAL_LANE)
     StagedPass.sweep_flat_stages(wh, sink_table, LEDGER_TABLE, REJECT_TABLE)
     if digest_ledger is not None:

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from ..pipeline.dedup import normalized_text
 from ..pipeline.spread import spread, write_coalesce
-from ..session import narrow_engine_pass
+from ..session import adopt
 from ..storage import Warehouse
 from .ingest import with_epoch_marker as _with_epoch_marker
 
@@ -103,6 +103,9 @@ class BucketedDigestLedger:
         from .. import txn
 
         txn.heal_table(self.wh, self.table)
+        # a pass publishes on the engine session, and its REFRESH TABLE
+        # only reaches that session's relation cache
+        self.spark.catalog.refreshTable(self.table)
         return self.spark.table(self.table)
 
     def _location(self, table: str) -> str:
@@ -175,15 +178,11 @@ def dedup_batch_survivors(
     exchange is one-sided — SCALE.md).  Exposed separately from
     :func:`process_dedup_batch` so tests can pin the join strategy."""
     hashed = with_digest(batch, text_col)
-    w_min = (
-        hashed.groupBy("text_hash")
-        .agg(F.min(id_col).alias("_keep_id"))
-    )
-    firsts = hashed.join(
-        w_min,
-        (hashed["text_hash"] == w_min["text_hash"])
-        & (hashed[id_col] == w_min["_keep_id"]),
-    ).select(hashed["*"])
+    # the min id per digest, joined back on (text_hash, id): the keep
+    # side names its min column after id_col, so the join needs no
+    # self-join column references
+    w_min = hashed.groupBy("text_hash").agg(F.min(id_col).alias(id_col))
+    firsts = hashed.join(w_min, ["text_hash", id_col]).select(*hashed.columns)
     if digest_ledger is not None:
         # bucketed ledger: NO Exchange on the ledger side — the batch
         # side alone shuffles into the ledger's bucketing (plan-pinned)
@@ -206,7 +205,6 @@ def dedup_batch_survivors(
     return firsts
 
 
-@narrow_engine_pass
 def process_dedup_batch(
     wh: Warehouse, batch: DataFrame, sink_table: str,
     text_col: str = "text", id_col: str = "doc_id",
@@ -223,6 +221,8 @@ def process_dedup_batch(
     to nothing) or neither is (clean replay)."""
     from ..txn import GLOBAL_LANE, StagedPass
 
+    wh = wh.engine()
+    batch = adopt(wh.spark, batch)
     StagedPass.recover(wh, GLOBAL_LANE)
     StagedPass.sweep_flat_stages(wh, sink_table, LEDGER_TABLE)
     if digest_ledger is not None:
@@ -309,7 +309,6 @@ class NearDupLedger:
         self.combined = None
 
 
-@narrow_engine_pass
 def process_near_dup_batch(
     wh: Warehouse,
     batch: DataFrame,
@@ -339,6 +338,8 @@ def process_near_dup_batch(
     colliding buckets' files."""
     from ..pipeline.dedup import minhash_bands, shingle_arrays
 
+    wh = wh.engine()
+    batch = adopt(wh.spark, batch)
     # eager localCheckpoint, not persist (r13): both frames feed many
     # downstream statements, and with persist every action over them
     # re-canonicalizes the full minhash expression tree on the driver

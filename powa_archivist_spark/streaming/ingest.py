@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 
 from ..operators.snapshot import snapshot
 from ..specs import DatasourceSpec
-from ..session import narrow_engine_pass
+from ..session import adopt
 from ..storage import Warehouse
 
 
@@ -71,7 +71,6 @@ def with_epoch_marker(marker_dir: str, epoch_id: int, apply_fn) -> None:
     os.replace(tmp, marker)
 
 
-@narrow_engine_pass
 def process_staged_batch(
     wh: Warehouse,
     spec: DatasourceSpec,
@@ -99,6 +98,8 @@ def process_staged_batch(
     arrays) is the batch ``qualstats_snapshot`` pipeline's input
     contract and is not a streaming wire format - collectors pre-roll
     or land through the batch path."""
+    wh = wh.engine()
+    batch = adopt(wh.spark, batch)
     def apply() -> None:
         b = batch.cache()
         try:

@@ -43,14 +43,13 @@ from pyspark.sql import functions as F
 
 from ..pipeline.corpus import _word_ngrams
 from ..pipeline.spread import spread
-from ..session import narrow_engine_pass
+from ..session import adopt
 from ..storage import Warehouse
 
 OWNERS_TABLE = "novelty_first_owner"
 STATS_TABLE = "novelty_doc_stats"
 
 
-@narrow_engine_pass
 def process_novelty_batch(
     wh: Warehouse,
     batch: DataFrame,
@@ -68,6 +67,8 @@ def process_novelty_batch(
 
     from .epochs import epoch_replayed, landed
 
+    wh = wh.engine()
+    batch = adopt(wh.spark, batch)
     StagedPass.recover(wh, GLOBAL_LANE)
     StagedPass.sweep_flat_stages(wh, owners_table)
     StagedPass.sweep_flat_stages(wh, stats_table)
@@ -156,45 +157,4 @@ def novelty_profile(
                 F.col("n_novel").cast("double") / F.col("n_grams"),
             ).alias("novelty"),
         )
-    )
-
-
-def stream_novelty_profile(
-    spark,
-    landing_glob: str,
-    schema,
-    checkpoint_dir: str,
-    wh: Warehouse,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_files_per_trigger: int = 16,
-):
-    """Structured Streaming wrapper: landing files -> foreachBatch
-    ledger fold; the epoch marker skips wasted work on re-delivery and
-    the in-fold epoch probe makes a marker-less replay a no-op too."""
-    import os
-
-    from .ingest import with_epoch_marker as _with_epoch_marker
-
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_glob)
-    )
-    marker_dir = os.path.join(checkpoint_dir, "epoch_markers")
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        _with_epoch_marker(
-            marker_dir, epoch_id,
-            lambda: process_novelty_batch(
-                wh, batch, epoch_id, n=n, text_col=text_col,
-                id_col=id_col,
-            ),
-        )
-
-    return (
-        reader.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
     )

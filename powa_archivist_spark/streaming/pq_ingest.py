@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..pipeline.similarity import pq_encode, pq_train
-from ..session import narrow_engine_pass
+from ..session import adopt
 from ..storage import Warehouse
 from .ingest import with_epoch_marker as _with_epoch_marker
 
@@ -79,7 +79,6 @@ def pq_bootstrap(
     )
 
 
-@narrow_engine_pass
 def process_pq_batch(
     wh: Warehouse,
     batch: DataFrame,
@@ -98,6 +97,8 @@ def process_pq_batch(
 
     from .epochs import epoch_replayed, landed
 
+    wh = wh.engine()
+    batch = adopt(wh.spark, batch)
     StagedPass.recover(wh, GLOBAL_LANE)
     StagedPass.sweep_flat_stages(wh, PQ_CODES_TABLE)
     # in-process replay memo (r13): a dict lookup instead of one
@@ -144,7 +145,8 @@ def stream_pq_ingest(
 ):
     """Structured Streaming wrapper: landing parquet -> foreachBatch
     encode+append with committed-epoch markers; ``pq_bootstrap`` must
-    have published the frozen codebook first."""
+    have published the frozen codebook first.  ``availableNow``: the
+    query ends once the landing drains."""
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -165,5 +167,6 @@ def stream_pq_ingest(
     return (
         stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
         .start()
     )

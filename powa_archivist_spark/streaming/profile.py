@@ -32,14 +32,13 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 
 from ..pipeline.sketches import hll_estimate, hll_merge, hll_registers
-from ..session import narrow_engine_pass
+from ..session import adopt
 from ..storage import Warehouse
 from .ingest import with_epoch_marker as _with_epoch_marker
 
 HLL_TABLE = "profile_hll_registers"
 
 
-@narrow_engine_pass
 def process_hll_batch(
     wh: Warehouse,
     batch: DataFrame,
@@ -49,6 +48,8 @@ def process_hll_batch(
     table: str = HLL_TABLE,
 ) -> None:
     """Fold one micro-batch into the at-rest register table."""
+    wh = wh.engine()
+    batch = adopt(wh.spark, batch)
     new = hll_registers(batch, key_col, group_cols, p)
     if wh.exists(table):
         new = hll_merge(wh.read(table), new, group_cols=group_cols)
@@ -79,7 +80,7 @@ def stream_hll_profile(
     """Structured Streaming wrapper: landing files -> foreachBatch
     register fold, with the package's committed-epoch markers (replay
     is harmless here — idempotent merge — the marker only skips wasted
-    work)."""
+    work).  ``availableNow``: the query ends once the landing drains."""
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -96,5 +97,6 @@ def stream_hll_profile(
     return (
         stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
         .start()
     )

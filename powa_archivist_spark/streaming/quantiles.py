@@ -40,7 +40,7 @@ from ..pipeline.sketches import (
     level_sample_quantiles,
     level_sample_sketch,
 )
-from ..session import narrow_engine_pass
+from ..session import adopt
 from ..storage import Warehouse
 
 KLL_TABLE = "profile_quantile_sketch"
@@ -68,7 +68,6 @@ def _merged_survivors(rows: DataFrame, group_cols: Sequence[str],
     )
 
 
-@narrow_engine_pass
 def process_quantile_batch(
     wh: Warehouse,
     batch: DataFrame,
@@ -85,6 +84,8 @@ def process_quantile_batch(
 
     from .epochs import epoch_replayed, landed
 
+    wh = wh.engine()
+    batch = adopt(wh.spark, batch)
     StagedPass.recover(wh, GLOBAL_LANE)
     StagedPass.sweep_flat_stages(wh, table)
     # in-process replay memo (r13): a dict lookup instead of one
@@ -114,7 +115,6 @@ def quantile_profile(
     return level_sample_quantiles(surv, group_cols, percents)
 
 
-@narrow_engine_pass
 def compact_profile(
     wh: Warehouse,
     group_cols: Sequence[str],
@@ -126,6 +126,7 @@ def compact_profile(
     manifest like every other replace."""
     from ..txn import GLOBAL_LANE, StagedPass
 
+    wh = wh.engine()
     StagedPass.recover(wh, GLOBAL_LANE)
     if not wh.exists(table):
         return

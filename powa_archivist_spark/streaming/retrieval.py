@@ -40,14 +40,13 @@ from ..pipeline.textstats import (
     bm25_wand_from_index,
 )
 from ..pipeline.spread import spread
-from ..session import narrow_engine_pass
+from ..session import adopt
 from ..storage import Warehouse
 
 POSTINGS_TABLE = "retrieval_postings"
 STATS_TABLE = "retrieval_corpus_stats"
 
 
-@narrow_engine_pass
 def process_postings_batch(
     wh: Warehouse,
     batch: DataFrame,
@@ -65,6 +64,8 @@ def process_postings_batch(
 
     from .epochs import epoch_replayed, landed
 
+    wh = wh.engine()
+    batch = adopt(wh.spark, batch)
     StagedPass.recover(wh, GLOBAL_LANE)
     StagedPass.sweep_flat_stages(wh, table)
     StagedPass.sweep_flat_stages(wh, stats_table)

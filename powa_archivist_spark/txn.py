@@ -39,7 +39,7 @@ import shutil
 import tempfile
 import threading
 
-from .session import narrow_exchanges, narrow_inherited
+from .session import adopt
 
 
 #: srvid lane for passes that are not tied to a monitored server — the
@@ -183,7 +183,9 @@ class StagedPass:
     def __init__(self, wh, srvid: int, pass_id: str | None = None) -> None:
         import uuid
 
-        self.wh = wh
+        # every staged write runs on the engine session; frames handed
+        # in from elsewhere are re-homed there (adopt)
+        self.wh = wh.engine()
         self.srvid = srvid
         self.pass_id = pass_id or uuid.uuid4().hex[:12]
         # the stage-dir naming uses "__" as its field delimiter and
@@ -228,13 +230,13 @@ class StagedPass:
         must carry the srvid column (dropped here: partition dirs encode
         it, matching what a partitionBy append writes)."""
         self._acl_check(table)
+        df = adopt(self.wh.spark, df)
         idx = self._reserve_op()
         d = os.path.join(
             self._part_dir(table),
             f".__stage__{self.pass_id}__{idx}",
         )
-        with narrow_exchanges(self.wh.spark):
-            df.drop("srvid").write.mode("overwrite").parquet(d)
+        df.drop("srvid").write.mode("overwrite").parquet(d)
         self._ops[idx] = {
             "kind": "append", "table": table, "stage": d,
             "files": _staged_files(d),
@@ -248,13 +250,13 @@ class StagedPass:
         through one manifest (ADVICE r6: a crash between the two made
         the epoch replay re-admit the whole survivor set)."""
         self._acl_check(table)
+        df = adopt(self.wh.spark, df)
         idx = self._reserve_op()
         d = os.path.join(
             self.wh.path(table),
             f".__stage__{self.pass_id}__{idx}",
         )
-        with narrow_exchanges(self.wh.spark):
-            df.write.mode("overwrite").parquet(d)
+        df.write.mode("overwrite").parquet(d)
         self._ops[idx] = {
             "kind": "append", "table": table, "stage": d,
             "files": _staged_files(d),
@@ -263,13 +265,13 @@ class StagedPass:
     def stage_replace(self, df, table: str) -> None:
         """Stage a full replace of the srvid partition of ``table``."""
         self._acl_check(table)
+        df = adopt(self.wh.spark, df)
         idx = self._reserve_op()
         d = os.path.join(
             self.wh.path(table),
             f".__stageswap__srvid={self.srvid}__{self.pass_id}__{idx}",
         )
-        with narrow_exchanges(self.wh.spark):
-            df.drop("srvid").write.mode("overwrite").parquet(d)
+        df.drop("srvid").write.mode("overwrite").parquet(d)
         self._ops[idx] = {
             "kind": "replace", "table": table, "stage": d,
             "files": _staged_files(d),
@@ -285,14 +287,14 @@ class StagedPass:
         ingest paths whose IO must stay proportional to the batch (ANN
         upsert fresh rows), committed under the same single manifest."""
         self._acl_check(table)
+        df = adopt(self.wh.spark, df)
         idx = self._reserve_op()
         token = f"{self.pass_id}__{idx}"
         d = os.path.join(self.wh.path(table), f".__stagetree__{token}")
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
-        with narrow_exchanges(self.wh.spark):
-            w.parquet(d)
+        w.parquet(d)
         self._ops[idx] = {
             "kind": "append_tree", "table": table, "stage": d,
             "token": token, "children": _staged_children(d),
@@ -304,11 +306,11 @@ class StagedPass:
         a crashed re-apply can tell this pass's already-moved files
         from the old content it is retiring."""
         self._acl_check(table)
+        df = adopt(self.wh.spark, df)
         idx = self._reserve_op()
         token = f"{self.pass_id}__{idx}"
         d = os.path.join(self.wh.path(table), f".__stageflatswap__{token}")
-        with narrow_exchanges(self.wh.spark):
-            df.write.mode("overwrite").parquet(d)
+        df.write.mode("overwrite").parquet(d)
         files = [f for f in os.listdir(d) if f.endswith(".parquet")]
         self._ops[idx] = {
             "kind": "replace_flat", "table": table, "stage": d,
@@ -328,14 +330,14 @@ class StagedPass:
         dynamic-partition overwrite read the table it was overwriting
         and left a crash window holding replaced ids in two cells)."""
         self._acl_check(table)
+        df = adopt(self.wh.spark, df)
         idx = self._reserve_op()
         token = f"{self.pass_id}__{idx}"
         d = os.path.join(self.wh.path(table), f".__stagetree__{token}")
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
-        with narrow_exchanges(self.wh.spark):
-            w.parquet(d)
+        w.parquet(d)
         self._ops[idx] = {
             "kind": "replace_tree", "table": table, "stage": d,
             "token": token, "drops": list(drops),
@@ -374,20 +376,14 @@ class StagedPass:
         """Run independent ``stage_*`` thunks on worker threads so their
         write jobs overlap (r14, guide §2.6 — a fold's sink writes are
         bounded micro-jobs whose wall clock is fixed latency, and
-        Spark's scheduler happily runs them together; the owning engine
-        pass already holds the narrow conf, so workers inherit it via
-        :func:`~..session.narrow_inherited`).  ONLY for calls touching
-        DISTINCT tables: manifest op order is not deterministic across
-        workers, and recovery applies ops in list order — two ops on one
-        table must stay sequenced by the caller."""
+        Spark's scheduler happily runs them together).  ONLY for calls
+        touching DISTINCT tables: manifest op order is not deterministic
+        across workers, and recovery applies ops in list order — two ops
+        on one table must stay sequenced by the caller."""
         from concurrent.futures import ThreadPoolExecutor
 
-        def run(c):
-            with narrow_inherited():
-                return c()
-
         with ThreadPoolExecutor(max_workers=max(2, len(calls))) as pool:
-            futs = [pool.submit(run, c) for c in calls]
+            futs = [pool.submit(c) for c in calls]
             for f in futs:
                 f.result()
 

@@ -713,3 +713,106 @@ def test_chaos_random_crashes_converge_to_clean_run(spark, wh):
     finally:
         shutil.rmtree(d_clean, ignore_errors=True)
         shutil.rmtree(d_chaos, ignore_errors=True)
+
+
+def test_qualstats_coalesce_tick_runs_narrow_off_the_caller_conf(spark, wh):
+    """A tick is a burst of tiny jobs, so every job of a qualstats
+    coalesce tick must plan at cluster parallelism: no stage may run the
+    analytics posture's ``initialPartitionNum`` tasks (the persisted
+    constvalues ranking used to, three 256-task jobs per tick).  And the
+    engine posture lives in its own session: while two servers tick at
+    once, the caller session's conf never moves."""
+    import threading
+    import time
+
+    from powa_archivist_spark.operators import dictionary, qualstats
+    from powa_archivist_spark.specs import QUALSTATS_SPEC
+
+    aqe_key = "spark.sql.adaptive.enabled"
+    wide_key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    caller_conf = (spark.conf.get(aqe_key), spark.conf.get(wide_key))
+    wide = int(caller_conf[1])
+    orch = Orchestrator(wh, specs={QUALSTATS_SPEC.name: QUALSTATS_SPEC})
+
+    def tick(srvid, i):
+        cap = spark.createDataFrame(
+            [(srvid, ts(i * 5), 7, 10, 5, 70 + q, 2 + i, 10 + i, 4, 1.5,
+              2.0, 100, [str(40 + q + i)], [(1259, q, 96, "f")])
+             for q in range(3)],
+            qualstats.SRC_SCHEMA,
+        )
+        return orch.take_snapshot(
+            ServerConfig(srvid=srvid, powa_coalesce=3),
+            captures={QUALSTATS_SPEC.name: cap}, now=ts(i * 5),
+        )
+
+    for srvid in (1, 2, 3):
+        dictionary.merge_statements(
+            wh, srvid,
+            spark.createDataFrame(
+                [(100, 10, 5, "SELECT a", ts(0))],
+                "queryid long, dbid long, userid long, query string, "
+                "ts timestamp",
+            ),
+            now=ts(0),
+        )
+
+    # srvid 1 coalesces on its 2nd pass: (2 + 1 % 20) % 3 == 0
+    assert tick(1, 0) == 0
+    sc = spark.sparkContext
+    group = "qualstats-coalesce-tick"
+    sc.setJobGroup(group, "qualstats coalesce tick")
+    try:
+        assert tick(1, 1) == 0, orch.read_metas(1)["errors"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert orch.read_metas(1)["aggts"] is not None
+    assert qualstats.constvalues_history(wh, 1).count() == 3
+
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while True:
+        jobs = [tracker.getJobInfo(j)
+                for j in tracker.getJobIdsForGroup(group)]
+        if jobs and all(j is not None and j.status != "RUNNING"
+                        for j in jobs):
+            break
+        assert time.time() < deadline, "tick jobs never settled"
+        time.sleep(0.2)
+    stages = [tracker.getStageInfo(s) for j in jobs for s in j.stageIds]
+    tasks = {s.stageId: s.numTasks for s in stages if s is not None}
+    assert tasks and max(tasks.values()) < wide, tasks
+
+    # two servers tick concurrently while a third thread watches the
+    # caller session's conf
+    errs: list = []
+    seen: set = set()
+    done = threading.Event()
+
+    def watch():
+        while not done.is_set():
+            seen.add((spark.conf.get(aqe_key), spark.conf.get(wide_key)))
+            time.sleep(0.01)
+
+    def ticks(srvid):
+        try:
+            for i in range(3):
+                if tick(srvid, i):
+                    errs.append((srvid, orch.read_metas(srvid)["errors"]))
+        except Exception as e:  # noqa: BLE001
+            errs.append((srvid, repr(e)))
+
+    watcher = threading.Thread(target=watch)
+    workers = [threading.Thread(target=ticks, args=(s,)) for s in (2, 3)]
+    watcher.start()
+    for t in workers:
+        t.start()
+    for t in workers:
+        t.join()
+    done.set()
+    watcher.join()
+    assert errs == []
+    assert seen == {caller_conf}
+    for srvid in (2, 3):
+        assert orch.read_metas(srvid)["aggts"] is not None

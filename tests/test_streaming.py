@@ -1027,6 +1027,7 @@ def test_stream_hll_profile_runtime(spark, wh):
     q = stream_hll_profile(spark, landing + "/*", b1.schema, ckpt, wh,
                            "k", ["g"])
     q.awaitTermination(60)
+    assert not q.isActive  # availableNow: ends once the landing drains
     est1 = {r.g: r.est_distinct for r in hll_profile(wh, ["g"]).collect()}
     assert 85 < est1["a"] < 115  # ~100 distinct, small-range corrected
     b2 = spark.createDataFrame(
@@ -1036,6 +1037,7 @@ def test_stream_hll_profile_runtime(spark, wh):
     q = stream_hll_profile(spark, landing + "/*", b1.schema, ckpt, wh,
                            "k", ["g"])
     q.awaitTermination(60)
+    assert not q.isActive  # availableNow: ends once the landing drains
     est2 = {r.g: r.est_distinct for r in hll_profile(wh, ["g"]).collect()}
     assert 130 < est2["a"] < 170  # ~150 distinct after the union
 

@@ -230,15 +230,16 @@ class AclWarehouse:
     """A ``Warehouse`` proxy that enforces the grant matrix for one
     actor.  Read surface: ``read`` / ``exists``; mutation surface:
     ``append`` / ``overwrite`` / ``overwrite_partitions`` /
-    ``rewrite_srvid_partition`` / ``drop_srvid`` / ``drop_table``.
+    ``drop_srvid`` / ``drop_table`` (staged writes check through
+    ``acl_check_write``).
     Everything else (table-name helpers, ``spark``, ``root``, ``path``)
     passes through, so any operator accepts it in place of the raw
     warehouse."""
 
     _READS = {"read", "exists"}
     _WRITES = {
-        "append", "overwrite", "overwrite_partitions",
-        "rewrite_srvid_partition", "drop_srvid", "drop_table",
+        "append", "overwrite", "overwrite_partitions", "drop_srvid",
+        "drop_table",
     }
 
     def __init__(self, wh: Warehouse, principal: str) -> None:

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.packing import pack
+from ..session import concurrently
 from ..specs import DatasourceSpec
 from ..storage import Warehouse
 
@@ -27,21 +28,20 @@ def aggregate(wh: Warehouse, spec: DatasourceSpec, srvid: int) -> int:
     pass packs ONE server's current window — bounded per (srvid,
     coalesce interval) by the snapshot contract — so its pack groupBy
     and history append plan at cluster parallelism instead of paying
-    the wide analytics posture on a micro-batch."""
+    the wide analytics posture on a micro-batch.  The entity table and
+    its ``_db`` twin share nothing, so they pack concurrently."""
     wh = wh.engine()
-    total = _aggregate_one(
+    calls = [lambda: _aggregate_one(
         wh, spec, srvid,
         Warehouse.current(spec.name), Warehouse.history(spec.name),
-        key_names=spec.key_names,
-    )
+    )]
     if spec.db_rollup:
-        total += _aggregate_one(
-            wh, spec, srvid,
-            Warehouse.current_db(spec.name),
-            Warehouse.history_db(spec.name),
-            key_names=[spec.dbid_col],
-        )
-    return total
+        db = _db_subspec(spec)
+        calls.append(lambda: _aggregate_one(
+            wh, db, srvid,
+            Warehouse.current_db(spec.name), Warehouse.history_db(spec.name),
+        ))
+    return sum(concurrently(wh.spark, *calls))
 
 
 def _aggregate_one(
@@ -50,20 +50,15 @@ def _aggregate_one(
     srvid: int,
     current_table: str,
     history_table: str,
-    key_names: list[str],
 ) -> int:
     if not wh.exists(current_table):
         return 0
-    cur = wh.read(current_table).filter(F.col("srvid") == srvid)
-
-    if key_names == spec.key_names:
-        packed = pack(cur, spec)
-    else:
-        # per-db rollup history packs the db_record (aggregatable counters
-        # only — powa--5.2.0.sql:1047-1056)
-        packed = pack(cur, _db_subspec(spec))
-
-    packed = packed.withColumn("range_day", F.to_date("range_end"))
+    # the known schema spares a footer-inference job per read
+    cur = (
+        wh.read(current_table, spec.current_schema)
+        .filter(F.col("srvid") == srvid)
+    )
+    packed = pack(cur, spec).withColumn("range_day", F.to_date("range_end"))
     # cache the packed output (~coalesce:1 smaller than current) so the
     # count and the write don't each re-run the pack groupBy
     packed = packed.persist()
@@ -82,13 +77,21 @@ def _aggregate_one(
 
 def _db_subspec(spec: DatasourceSpec) -> DatasourceSpec:
     """Derived spec for the `_db` tables: keyed by dbid, aggregatable
-    counters only."""
-    from ..specs import Counter, DatasourceSpec, Key
+    counters only (powa--5.2.0.sql:1047-1056), typed as
+    :func:`~.snapshot.db_rollup_agg` writes them — ``sum()`` widens
+    integer counters to bigint (numeric is already decimal(38, 0), the
+    widest decimal)."""
+    from dataclasses import replace
+
+    from ..specs import DatasourceSpec, Key
 
     return DatasourceSpec(
         name=f"{spec.name}_db",
         kind=spec.kind,
         priority=spec.priority,
         keys=(Key(spec.dbid_col, "oid"),),
-        counters=tuple(c for c in spec.counters if c.aggregatable),
+        counters=tuple(
+            replace(c, dtype="bigint") if c.dtype == "integer" else c
+            for c in spec.agg_counters
+        ),
     )

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..storage import Warehouse
+from ..txn import StagedPass
 from . import dictionary
 
 TABLE = "powa_databases"
@@ -54,7 +55,7 @@ def databases_snapshot(
 
     One full-outer join classifies insert/rename/soft-delete in a single
     pass (the reference uses three statements — 3746-3786); the srvid
-    partition is overwritten atomically."""
+    partition is replaced atomically (one staged swap)."""
     now = now or dt.datetime.now(dt.timezone.utc)
     stored = wh.read(TABLE, SCHEMA).filter(F.col("srvid") == srvid)
     incoming = (
@@ -75,7 +76,9 @@ def databases_snapshot(
         .otherwise(F.col("dropped"))
         .alias("dropped"),
     )
-    wh.rewrite_srvid_partition(merged, TABLE, SCHEMA, srvid)
+    sp = StagedPass(wh, srvid)
+    sp.stage_replace(merged, TABLE)
+    sp.publish()
 
 
 def purge_databases(
@@ -95,19 +98,17 @@ def purge_databases(
     doomed_oids = [r.oid for r in doomed.select("oid").collect()]
     if not doomed_oids:
         return 0
-    wh.rewrite_srvid_partition(
-        stored.filter(~F.col("oid").isin(doomed_oids)), TABLE, SCHEMA, srvid
-    )
-
-    # FK-cascade analog: statements dictionary rows of purged dbs
+    # one staged pass: the FK-cascade analog (statements dictionary rows
+    # of purged dbs) commits together with the dimension delete
+    sp = StagedPass(wh, srvid)
+    sp.stage_replace(stored.filter(~F.col("oid").isin(doomed_oids)), TABLE)
     if wh.exists(dictionary.TABLE):
         dic = wh.read(dictionary.TABLE, dictionary.SCHEMA).filter(
             F.col("srvid") == srvid
         )
-        wh.rewrite_srvid_partition(
-            dic.filter(~F.col("dbid").isin(doomed_oids)),
-            dictionary.TABLE, dictionary.SCHEMA, srvid,
-        )
+        sp.stage_replace(dic.filter(~F.col("dbid").isin(doomed_oids)),
+                         dictionary.TABLE)
+    sp.publish()
     return len(doomed_oids)
 
 

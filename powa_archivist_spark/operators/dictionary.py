@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..storage import Warehouse
+from ..txn import StagedPass
 
 TABLE = "powa_statements"
 
@@ -96,7 +97,9 @@ def purge_statements(
 
 
 def _overwrite_srvid_partition(wh: Warehouse, df: DataFrame, srvid: int) -> None:
-    wh.rewrite_srvid_partition(df, TABLE, SCHEMA, srvid)
+    sp = StagedPass(wh, srvid)
+    sp.stage_replace(df, TABLE)
+    sp.publish()
 
 
 def gate_to_statements(wh: Warehouse, srvid: int, df: DataFrame) -> DataFrame:

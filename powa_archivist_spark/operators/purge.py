@@ -22,9 +22,12 @@ import os
 import shutil
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..session import concurrently
 from ..specs import DatasourceSpec
 from ..storage import Warehouse
+from .aggregate import _db_subspec
 
 DEFAULT_RETENTION = dt.timedelta(days=1)  # powa.c:283-290
 
@@ -36,18 +39,22 @@ def purge(
     retention: dt.timedelta = DEFAULT_RETENTION,
     now: dt.datetime | None = None,
 ) -> None:
-    """Delete history rows whose range_end fell out of retention."""
+    """Delete history rows whose range_end fell out of retention.  The
+    entity table and its ``_db`` twin are trimmed concurrently."""
     now = now or dt.datetime.now(dt.timezone.utc)
     cutoff = now - retention
-    tables = [Warehouse.history(spec.name)]
+    calls = [lambda: _purge_table(wh, Warehouse.history(spec.name), srvid,
+                                  cutoff, spec.history_schema)]
     if spec.db_rollup:
-        tables.append(Warehouse.history_db(spec.name))
-    for table in tables:
-        _purge_table(wh, table, srvid, cutoff)
+        calls.append(lambda: _purge_table(
+            wh, Warehouse.history_db(spec.name), srvid, cutoff,
+            _db_subspec(spec).history_schema))
+    concurrently(wh.spark, *calls)
 
 
 def _purge_table(wh: Warehouse, table: str, srvid: int,
-                 cutoff: dt.datetime) -> None:
+                 cutoff: dt.datetime,
+                 schema: T.StructType | None = None) -> None:
     if not wh.exists(table):
         return
     srv_path = os.path.join(wh.path(table), f"srvid={srvid}")
@@ -64,29 +71,34 @@ def _purge_table(wh: Warehouse, table: str, srvid: int,
             shutil.rmtree(os.path.join(srv_path, entry))
         elif day == cutoff_day:
             boundary_days.append(entry)
+    # a day leaf holds the history columns minus its partition keys; a
+    # known schema spares a footer-inference job
+    reader = wh.spark.read
+    if schema is not None:
+        reader = reader.schema(
+            T.StructType([f for f in schema.fields if f.name != "srvid"]))
     # 2) rewrite only the boundary day with the exact timestamp predicate
     for entry in boundary_days:
         p = os.path.join(srv_path, entry)
-        df = wh.spark.read.parquet(p)
-        kept = df.filter(F.col("range_end") >= F.lit(cutoff)).cache()
-        try:
-            n_kept = kept.count()
-            n_all = df.count()
-            if n_kept == n_all:
-                continue
-            # dot-prefixed scratch: Spark readers treat it as hidden, the
-            # range_day= scan above skips it, and a crash between write
-            # and replace leaves an inert dir instead of a bogus
-            # partition that poisons every later read and purge pass
-            tmp = os.path.join(srv_path, f".__tmp__{entry}")
-            if n_kept > 0:
-                kept.write.mode("overwrite").parquet(tmp)
-                shutil.rmtree(p)
-                os.replace(tmp, p)
-            else:
-                shutil.rmtree(p)
-        finally:
-            kept.unpersist()
+        df = reader.parquet(p)
+        keep = F.col("range_end") >= F.lit(cutoff)
+        # both counts in one aggregate job
+        n_kept, n_all = df.agg(
+            F.count(F.when(keep, 1)), F.count(F.lit(1))
+        ).first()
+        if n_kept == n_all:
+            continue
+        # dot-prefixed scratch: Spark readers treat it as hidden, the
+        # range_day= scan above skips it, and a crash between write
+        # and replace leaves an inert dir instead of a bogus
+        # partition that poisons every later read and purge pass
+        tmp = os.path.join(srv_path, f".__tmp__{entry}")
+        if n_kept > 0:
+            df.filter(keep).write.mode("overwrite").parquet(tmp)
+            shutil.rmtree(p)
+            os.replace(tmp, p)
+        else:
+            shutil.rmtree(p)
 
 
 def reset(wh: Warehouse, spec: DatasourceSpec, srvid: int) -> None:

@@ -9,7 +9,10 @@ Reference: powa--5.2.0.sql:3450-3710 + the bgworker timer loop
 2. ``coalesce_seq += 1``, ``snapts = now()``.
 3. snapshot dispatch in (priority, name) order, each datasource inside its
    own try/except; failures append to the errors ledger and never abort the
-   pass (powa--5.2.0.sql:3509-3547).
+   pass (powa--5.2.0.sql:3509-3547).  Priority is the only order needed,
+   so dispatch runs in priority waves: a wave's datasources share no sink
+   and snapshot concurrently, and the ledger keeps dispatch order.
+   Coalesce and purge run every datasource at once.
 4. conditional coalesce when ``(coalesce_seq + srvid % 20) % coalesce == 0``
    — the % 20 smears maintenance of many servers across passes
    (powa--5.2.0.sql:3549-3604).
@@ -20,19 +23,22 @@ Reference: powa--5.2.0.sql:3450-3710 + the bgworker timer loop
 from __future__ import annotations
 
 import datetime as dt
+import functools
+import itertools
 import json
 import os
 import threading
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .operators import databases, dictionary
 from .operators.aggregate import aggregate
 from .operators.purge import DEFAULT_RETENTION, purge, reset
 from .operators.snapshot import snapshot
-from .session import adopt
+from .session import adopt, concurrently
 from .specs import ALL_SPECS, DatasourceSpec
 from .storage import Warehouse
 from .txn import StagedPass, TxnLog
@@ -216,6 +222,8 @@ class Orchestrator:
         # heal interrupted compaction swaps — all in ONE warehouse walk
         # per pass, error-trapped so a stray unreadable dir lands in
         # the error ledger instead of halting every server's ingestion.
+        # It runs before any datasource's worker starts: its sweep would
+        # delete a live sibling's stage dir.
         try:
             StagedPass.recover(self.wh, srvid, sweep=True)
         except OSError as e:
@@ -232,83 +240,21 @@ class Orchestrator:
                 errors.append(f"powa_databases_snapshot: {e}")
 
         order = self._dispatch_order(server)
-        for spec in order:
-            try:
-                cap = captures.get(spec.name)
-                if cap is not None:
-                    # a caller's frame joins the pass on the engine
-                    # session (a cross-session plan runs on its left
-                    # operand's session and conf)
-                    cap = adopt(self.wh.spark, cap)
-                elif server.version is not None:
-                    # resolve the server's layout epoch for this module
-                    # (the reference's version-branched *_src functions,
-                    # powa--5.2.0.sql:4315-5547)
-                    from .sources.readers import read_staging
-                    from .sources.versions import MODULE_SOURCES
-
-                    source = MODULE_SOURCES.get(spec.name)
-                    if source is not None:
-                        cap = read_staging(
-                            self.wh, spec, srvid,
-                            server_version=server.version, source=source,
-                        )
-                if (
-                    spec.name == "wait_sampling"
-                    and cap is not None
-                    and "dbid" not in cap.columns
-                ):
-                    # local-path raw profile samples: resolve dbid via
-                    # the statements dictionary (J8,
-                    # powa--5.2.0.sql:7315-7334)
-                    from .operators.wait_sampling import resolve_wait_sampling
-
-                    cap = resolve_wait_sampling(self.wh, srvid, cap)
-                cap = self._apply_db_module_scope(server, spec, srvid, cap)
-                if spec.name == "statements":
-                    self._statements_snapshot(spec, srvid, cap, now)
-                elif spec.name == "qualstats":
-                    # end-to-end wCTE pipeline: gate -> quals dedup ->
-                    # per-qual rollup -> constvalues
-                    # (powa--5.2.0.sql:7104-7184)
-                    from .operators.qualstats import qualstats_snapshot
-
-                    qualstats_snapshot(self.wh, srvid, capture=cap)
-                else:
-                    snapshot(self.wh, spec, srvid, capture=cap)
-            except Exception as e:  # per-function error trapping
-                errors.append(f"powa_{spec.name}_snapshot: {e}")
+        for _prio, wave in itertools.groupby(order, key=lambda s: s.priority):
+            errors += self._overlap("snapshot", self._snapshot_one, list(wave),
+                                    server, captures, now)
 
         # conditional coalesce (powa--5.2.0.sql:3549-3604)
         phase = (meta["coalesce_seq"] + srvid % SMEAR_MODULUS) % server.powa_coalesce
         if phase == 0:
-            for spec in order:
-                try:
-                    aggregate(self.wh, spec, srvid)
-                    if spec.name == "qualstats":
-                        # constvalues half of powa_qualstats_aggregate
-                        # (powa--5.2.0.sql:7193-7233): six ranked arrays
-                        from .operators.qualstats import qualstats_aggregate
-
-                        qualstats_aggregate(self.wh, srvid)
-                except Exception as e:
-                    errors.append(f"powa_{spec.name}_aggregate: {e}")
+            errors += self._overlap("aggregate", self._pack, order, srvid)
             meta["aggts"] = now
         # conditional purge on the pass after a coalesce (3606-3661)
         elif phase == 1:
-            for spec in order:
-                try:
-                    purge(self.wh, spec, srvid, retention=server.retention, now=now)
-                    if spec.name == "qualstats":
-                        from .operators.qualstats import (
-                            purge_constvalues_history,
-                        )
-
-                        purge_constvalues_history(
-                            self.wh, srvid, server.retention, now=now
-                        )
-                except Exception as e:
-                    errors.append(f"powa_{spec.name}_purge: {e}")
+            errors += self._overlap("purge", self._purge_one, order, server,
+                                    now)
+            # sequenced after the spec purges: the databases purge
+            # cascades into the dictionary
             try:
                 dictionary.purge_statements(
                     self.wh, srvid, server.retention, now=now
@@ -333,6 +279,85 @@ class Orchestrator:
         self.txns.clear(srvid)
         return len(errors)
 
+    def _overlap(self, step: str, fn, specs, *args) -> list[str]:
+        """``fn(spec, *args)`` for every spec at once, each inside its
+        own error trap; returns the errors in ``specs`` order."""
+        def trapped(spec) -> str | None:
+            try:
+                fn(spec, *args)
+            except Exception as e:  # per-function error trapping
+                return f"powa_{spec.name}_{step}: {e}"
+            return None
+
+        calls = [functools.partial(trapped, s) for s in specs]
+        return [e for e in concurrently(self.wh.spark, *calls) if e]
+
+    def _snapshot_one(self, spec: DatasourceSpec, server: ServerConfig,
+                      captures: dict, now: dt.datetime) -> None:
+        """One datasource's snapshot step: capture, layout resolution,
+        scoping, then its snapshot operator."""
+        srvid = server.srvid
+        cap = captures.get(spec.name)
+        if cap is not None:
+            # a caller's frame joins the pass on the engine session (a
+            # cross-session plan runs on its left operand's session and
+            # conf)
+            cap = adopt(self.wh.spark, cap)
+        elif server.version is not None:
+            # resolve the server's layout epoch for this module (the
+            # reference's version-branched *_src functions,
+            # powa--5.2.0.sql:4315-5547)
+            from .sources.readers import read_staging
+            from .sources.versions import MODULE_SOURCES
+
+            source = MODULE_SOURCES.get(spec.name)
+            if source is not None:
+                cap = read_staging(
+                    self.wh, spec, srvid,
+                    server_version=server.version, source=source,
+                )
+        if (
+            spec.name == "wait_sampling"
+            and cap is not None
+            and "dbid" not in cap.columns
+        ):
+            # local-path raw profile samples: resolve dbid via the
+            # statements dictionary (J8, powa--5.2.0.sql:7315-7334)
+            from .operators.wait_sampling import resolve_wait_sampling
+
+            cap = resolve_wait_sampling(self.wh, srvid, cap)
+        cap = self._apply_db_module_scope(server, spec, srvid, cap)
+        if spec.name == "statements":
+            self._statements_snapshot(spec, srvid, cap, now)
+        elif spec.name == "qualstats":
+            # end-to-end wCTE pipeline: gate -> quals dedup -> per-qual
+            # rollup -> constvalues (powa--5.2.0.sql:7104-7184)
+            from .operators.qualstats import qualstats_snapshot
+
+            qualstats_snapshot(self.wh, srvid, capture=cap)
+        else:
+            snapshot(self.wh, spec, srvid, capture=cap)
+
+    def _pack(self, spec: DatasourceSpec, srvid: int) -> None:
+        aggregate(self.wh, spec, srvid)
+        if spec.name == "qualstats":
+            # constvalues half of powa_qualstats_aggregate
+            # (powa--5.2.0.sql:7193-7233): six ranked arrays
+            from .operators.qualstats import qualstats_aggregate
+
+            qualstats_aggregate(self.wh, srvid)
+
+    def _purge_one(self, spec: DatasourceSpec, server: ServerConfig,
+                   now: dt.datetime) -> None:
+        purge(self.wh, spec, server.srvid, retention=server.retention,
+              now=now)
+        if spec.name == "qualstats":
+            from .operators.qualstats import purge_constvalues_history
+
+            purge_constvalues_history(
+                self.wh, server.srvid, server.retention, now=now
+            )
+
     def _apply_db_module_scope(self, server: ServerConfig, spec, srvid: int,
                                cap):
         """Per-database db-module scoping: when powa_db_module_config
@@ -349,10 +374,6 @@ class Orchestrator:
             or server.db_modules[spec.name].get("dbnames") is None
         ):
             return cap
-        from pyspark.sql import functions as F
-
-        from .operators import databases
-
         dbnames = server.db_modules[spec.name]["dbnames"]
         if cap is None:
             from .sources.readers import read_staging

@@ -68,6 +68,31 @@ def adopt(spark: SparkSession, df: DataFrame) -> DataFrame:
     return DataFrame(jdf, spark)
 
 
+def concurrently(spark: SparkSession, *calls) -> list:
+    """Run independent thunks at once, at most ``defaultParallelism``
+    wide (an engine pass is a burst of tiny jobs whose latency is fixed
+    per-job cost); returns their results in call order and re-raises the
+    first failure once all have finished.  One thunk runs inline.
+    Workers inherit the caller's local properties (job group,
+    description), so the jobs stay on the caller's tag."""
+    if len(calls) <= 1:
+        return [c() for c in calls]
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    def inherit(c):
+        # one copy of the caller's properties per thunk: Spark SQL writes
+        # each query's execution id into them while it runs
+        wrap = inheritable_thread_target(spark)
+        return c if wrap is spark else wrap(c)  # spark: pinned mode off
+
+    width = min(len(calls), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=width) as pool:
+        futs = [pool.submit(inherit(c)) for c in calls]
+    return [f.result() for f in futs]
+
+
 def _default_driver_memory() -> str:
     """Half the host's memory, capped at 16g."""
     try:

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..storage import Warehouse
+from ..txn import StagedPass
 from .readers import SourceLayout, VersionedSource, resolve_versioned
 from .versions import _vs as _cat_vs  # the same registry builder
 
@@ -393,7 +394,9 @@ def catalog_snapshot(
             merged = keep.unionByName(staged, allowMissingColumns=True)
         else:
             merged = staged
-        wh.rewrite_srvid_partition(merged, table, None, srvid)
+        sp = StagedPass(wh, srvid)
+        sp.stage_replace(merged, table)
+        sp.publish()
         if catname == "pg_class":
             state = load_refresh(wh)
             for dbid in dbids:

@@ -50,8 +50,6 @@ _TYPE_MAP: dict[str, T.DataType] = {
 _NO_AGG_TYPES = {"timestamptz", "xid", "pg_lsn", "text", "name", "inet", "boolean"}
 # powa--5.2.0.sql:1020 — fields with no min/max ordering
 _NO_MINMAX_TYPES = {"xid", "boolean"}
-# rate typing: numeric stays numeric, everything else becomes double
-# (powa--5.2.0.sql:1122-1129)
 
 
 @dataclass(frozen=True)
@@ -79,12 +77,6 @@ class Counter:
         if self.rate_name:
             return self.rate_name
         return f"{self.name}_per_sec"
-
-    @property
-    def rate_type(self) -> T.DataType:
-        if self.dtype == "numeric":
-            return T.DecimalType(38, 6)
-        return T.DoubleType()
 
 
 @dataclass(frozen=True)
@@ -162,19 +154,6 @@ class DatasourceSpec:
         )
 
     @property
-    def db_record_schema(self) -> T.StructType:
-        """`<ds>_history_db_record` — aggregatable counters only
-        (powa--5.2.0.sql:1047-1056)."""
-        return T.StructType(
-            [T.StructField("ts", T.TimestampType(), False)]
-            + [
-                T.StructField(c.name, c.spark_type, True)
-                for c in self.counters
-                if c.aggregatable
-            ]
-        )
-
-    @property
     def minmax_schema(self) -> T.StructType:
         """`<ds>_history_record_minmax` — minus no-minmax fields
         (powa--5.2.0.sql:1067-1075)."""
@@ -184,32 +163,6 @@ class DatasourceSpec:
                 T.StructField(c.name, c.spark_type, True)
                 for c in self.counters
                 if c.has_minmax
-            ]
-        )
-
-    @property
-    def diff_schema(self) -> T.StructType:
-        """`<ds>_history_diff` — intvl + per-field deltas
-        (powa--5.2.0.sql:1077-1096)."""
-        return T.StructType(
-            [T.StructField("intvl", T.DoubleType(), True)]
-            + [
-                T.StructField(c.name, c.spark_type, True)
-                for c in self.counters
-                if c.aggregatable
-            ]
-        )
-
-    @property
-    def rate_schema(self) -> T.StructType:
-        """`<ds>_history_rate` — sec + per-sec doubles
-        (powa--5.2.0.sql:1098-1136)."""
-        return T.StructType(
-            [T.StructField("sec", T.LongType(), True)]
-            + [
-                T.StructField(c.per_sec_name, c.rate_type, True)
-                for c in self.counters
-                if c.aggregatable
             ]
         )
 

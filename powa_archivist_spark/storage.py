@@ -30,7 +30,6 @@ import threading
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 #: per-(root, table) write locks.  Concurrent Spark jobs appending to the
@@ -41,9 +40,9 @@ from pyspark.sql import types as T
 #: writes within this process serialize here.  Cross-PROCESS writers
 #: need a transactional table format (Delta/Iceberg) — documented scale
 #: path; the engine's deployment shape is one orchestrator driver.
-#: RLocks, not Locks: rewrite_srvid_partition holds the table lock
-#: across its whole drop+append swap while the inner append/drop
-#: re-acquire it on the same thread.  The dict is bounded in practice by
+#: RLocks, not Locks: a read or write holds the table lock while its
+#: manifest heal (txn.heal_table) re-acquires it on the same thread to
+#: fold pending ops.  The dict is bounded in practice by
 #: the fixed table vocabulary (specs x 3 layout tables per root).
 _WRITE_LOCKS: dict[tuple[str, str], threading.RLock] = {}
 _WRITE_LOCKS_GUARD = threading.Lock()
@@ -208,33 +207,6 @@ class Warehouse:
             os.replace(tmp, final)
             if os.path.isdir(old):
                 shutil.rmtree(old)
-
-    def rewrite_srvid_partition(self, df: DataFrame, table: str,
-                                schema: Optional[T.StructType],
-                                srvid: int) -> None:
-        """Replace one srvid partition with ``df`` where ``df`` is derived
-        from the partition being replaced: stage-then-swap via a scratch
-        table (a direct overwrite would clobber its own input mid-read).
-        Stays distributed — no driver collect.
-
-        The scratch name carries the srvid: the orchestrator lock is
-        per-srvid, so two servers' snapshots may rewrite the same table
-        concurrently, and a shared scratch would let one swap replace
-        the other's staged rows (server A drains its partition, then
-        appends server B's rows)."""
-        scratch = f"{table}__rewrite__srv{srvid}"
-        self.overwrite(df, scratch)
-        staged = self.read(scratch, schema)
-        # hold the TABLE lock across the whole drop+append swap so an
-        # append from another server's snapshot thread can't interleave
-        # with the half-swapped partition (ADVICE r4: all mutation paths
-        # serialize on the same per-table lock; RLock makes the nested
-        # append/drop re-acquisition safe)
-        with self._write_lock(table):
-            self.drop_srvid(table, srvid)
-            if staged.limit(1).count() > 0:
-                self.append(staged, table, partition_by=["srvid"])
-        self.drop_table(scratch)
 
     def drop_table(self, table: str) -> None:
         with self._write_lock(table):

@@ -39,7 +39,10 @@ import shutil
 import tempfile
 import threading
 
-from .session import adopt
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
+
+from .session import adopt, concurrently
 
 
 #: srvid lane for passes that are not tied to a monitored server — the
@@ -172,8 +175,9 @@ class StagedPass:
     (Delta/Iceberg) remains the swap-in that removes even that.
 
     Concurrency: stage dirs and manifests are per (srvid, pass); the
-    orchestrator's per-srvid lock serializes passes, so recover()'s
-    stale-stage sweep can only ever see leftovers of DEAD passes.
+    orchestrator's per-srvid lock serializes passes and sweeps before
+    it dispatches a pass's datasources, so recover()'s stale-stage
+    sweep can only ever see leftovers of DEAD passes.
     Fold ops additionally take the owning table's write lock, so a
     concurrent ``maintenance.compact`` (which holds the same lock for
     its list→trash→delete cycle) can never trash a file the fold moved
@@ -263,7 +267,10 @@ class StagedPass:
         }
 
     def stage_replace(self, df, table: str) -> None:
-        """Stage a full replace of the srvid partition of ``table``."""
+        """Stage a full replace of the srvid partition of ``table``.  An
+        empty ``df`` retires the partition instead of landing an empty
+        parquet file; the row count rides the write (Observation), so
+        the check runs no job of its own."""
         self._acl_check(table)
         df = adopt(self.wh.spark, df)
         idx = self._reserve_op()
@@ -271,7 +278,13 @@ class StagedPass:
             self.wh.path(table),
             f".__stageswap__srvid={self.srvid}__{self.pass_id}__{idx}",
         )
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         df.drop("srvid").write.mode("overwrite").parquet(d)
+        if obs.get["rows"] == 0:
+            # a stage with no parquet file publishes as a partition drop
+            for f in _staged_files(d):
+                os.remove(os.path.join(d, f))
         self._ops[idx] = {
             "kind": "replace", "table": table, "stage": d,
             "files": _staged_files(d),
@@ -373,19 +386,12 @@ class StagedPass:
         self._ops = []
 
     def stage_concurrently(self, *calls) -> None:
-        """Run independent ``stage_*`` thunks on worker threads so their
-        write jobs overlap (r14, guide §2.6 — a fold's sink writes are
-        bounded micro-jobs whose wall clock is fixed latency, and
-        Spark's scheduler happily runs them together).  ONLY for calls
-        touching DISTINCT tables: manifest op order is not deterministic
-        across workers, and recovery applies ops in list order — two ops
-        on one table must stay sequenced by the caller."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=max(2, len(calls))) as pool:
-            futs = [pool.submit(c) for c in calls]
-            for f in futs:
-                f.result()
+        """Run independent ``stage_*`` thunks at once so their write
+        jobs overlap.  ONLY for calls touching DISTINCT tables: manifest
+        op order is not deterministic across workers, and recovery
+        applies ops in list order — two ops on one table must stay
+        sequenced by the caller."""
+        concurrently(self.wh.spark, *calls)
 
     # ---- recovery --------------------------------------------------------
 
@@ -417,8 +423,12 @@ class StagedPass:
         to readers, but disk they'd otherwise leak; the orchestrator
         does this once per pass, not per spec (a full-tree walk is
         metadata-heavy on object stores).  Returns the number of intents
-        completed.  Runs under the caller's per-srvid serialization
-        (orchestrator lock)."""
+        completed.  The sweep runs under the per-srvid orchestrator lock
+        BEFORE a pass dispatches any worker (it would delete a live
+        sibling's stage dir).  The non-sweep calls inside ``snapshot()``/
+        ``qualstats_snapshot()`` run beside a wave's siblings and may
+        race a sibling's publish: safe, as fold ops are idempotent and
+        take the table lock."""
         txn_dir = os.path.join(wh.root, "_txn", f"srvid={srvid}")
         done = 0
         if os.path.isdir(txn_dir):
@@ -602,7 +612,12 @@ def _apply_ops(wh, ops: list[dict], intent_path: str | None = None) -> None:
                         if os.path.isdir(swapout):
                             shutil.rmtree(swapout)
                         os.replace(live, swapout)
-                    os.replace(stage, live)
+                    if op.get("files") == []:
+                        # empty replace: the partition is retired, no
+                        # empty dir goes live
+                        shutil.rmtree(stage)
+                    else:
+                        os.replace(stage, live)
                 # stage consumed (or was already): drop swapout leftover
                 if os.path.isdir(swapout):
                     shutil.rmtree(swapout)

@@ -73,6 +73,44 @@ def test_databases_purge_cascades_to_dictionary(spark, wh):
     assert [(r.queryid, r.dbid) for r in remaining] == [(200, 11)]
 
 
+def test_empty_dimension_rewrite_drops_the_partition(spark, wh):
+    """A dimension rewrite whose result is empty retires the server's
+    partition, as a drop would: no empty parquet file lands, and other
+    servers' rows stay."""
+    import os
+
+    cap = spark.createDataFrame(
+        [(100, 10, 5, "SELECT a", ts(0))],
+        "queryid long, dbid long, userid long, query string, ts timestamp",
+    )
+    for srvid in (1, 2):
+        dictionary.merge_statements(wh, srvid, cap, now=ts(0))
+    dictionary.purge_statements(wh, 1, dt.timedelta(hours=1),
+                                now=ts(0) + dt.timedelta(days=2))
+    assert not os.path.exists(
+        os.path.join(wh.path(dictionary.TABLE), "srvid=1"))
+    assert dictionary.read_statements(wh, 1).count() == 0
+    assert dictionary.read_statements(wh, 2).count() == 1
+
+
+def test_db_rollup_tables_are_read_with_the_rollup_types(spark):
+    """Coalesce and purge read the ``_db`` tables with a declared schema
+    instead of inferring it, so that schema must be the one the snapshot
+    rollup writes (``sum()`` widens counter types)."""
+    from powa_archivist_spark.operators.aggregate import _db_subspec
+    from powa_archivist_spark.operators.snapshot import db_rollup_agg
+    from powa_archivist_spark.specs import ALL_SPECS
+
+    for spec in ALL_SPECS.values():
+        if not spec.db_rollup:
+            continue
+        written = db_rollup_agg(
+            spark.createDataFrame([], spec.current_schema), spec).schema
+        declared = _db_subspec(spec).current_schema
+        assert ([(f.name, f.dataType) for f in written.fields]
+                == [(f.name, f.dataType) for f in declared.fields]), spec.name
+
+
 def test_compaction_reduces_files(spark, wh):
     for i in range(8):
         df = spark.createDataFrame(

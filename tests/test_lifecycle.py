@@ -816,3 +816,164 @@ def test_qualstats_coalesce_tick_runs_narrow_off_the_caller_conf(spark, wh):
     assert seen == {caller_conf}
     for srvid in (2, 3):
         assert orch.read_metas(srvid)["aggts"] is not None
+
+
+def sample_rows(spark, spec, srvid, t, base):
+    """One staging sample of ``spec`` with every column filled."""
+    import decimal
+
+    from pyspark.sql import types as T
+
+    def val(f):
+        if f.name == "srvid":
+            return srvid
+        if isinstance(f.dataType, T.TimestampType):
+            return t
+        if isinstance(f.dataType, (T.IntegerType, T.LongType)):
+            return base
+        if isinstance(f.dataType, T.DoubleType):
+            return float(base)
+        if isinstance(f.dataType, T.DecimalType):
+            return decimal.Decimal(base)
+        if isinstance(f.dataType, T.BooleanType):
+            return True
+        return "x"
+
+    return spark.createDataFrame(
+        [tuple(val(f) for f in spec.staging_schema.fields)],
+        spec.staging_schema,
+    )
+
+
+def _two_module_tick(spark, wh, snapshot_hook):
+    """One tick of two priority-10 modules with ``orchestrator.snapshot``
+    replaced by ``snapshot_hook(real, *args, **kwargs)``."""
+    from powa_archivist_spark import orchestrator as orch_mod
+
+    other = get_spec("pg_stat_archiver")
+    orch = Orchestrator(wh, specs={SPEC.name: SPEC, other.name: other})
+    real = orch_mod.snapshot
+    orch_mod.snapshot = lambda *a, **k: snapshot_hook(real, *a, **k)
+    try:
+        errs = orch.take_snapshot(
+            ServerConfig(srvid=0),
+            captures={SPEC.name: bgwriter_rows(spark, 0, ts(0), 1),
+                      other.name: sample_rows(spark, other, 0, ts(0), 1)},
+            now=ts(0),
+        )
+    finally:
+        orch_mod.snapshot = real
+    assert errs == 0, orch.read_metas(0)["errors"]
+    for spec in (SPEC, other):
+        assert wh.read(Warehouse.current(spec.name)).count() == 1
+
+
+def test_same_priority_datasources_snapshot_concurrently(spark, wh):
+    """A priority wave's datasources share no sink, so they reach their
+    snapshot operators at the same time: neither passes the barrier
+    until both are in (serial dispatch times the barrier out)."""
+    import threading
+
+    barrier = threading.Barrier(2, timeout=30)
+
+    def meet(real, *a, **k):
+        barrier.wait()
+        return real(*a, **k)
+
+    _two_module_tick(spark, wh, meet)
+
+
+def test_wave_workers_inherit_the_callers_job_group(spark, wh):
+    """A caller that tags a tick with a job group sees every job of it
+    under that group, the ones submitted from wave workers included.
+    Each worker holds its own copy of the caller's local properties:
+    Spark SQL writes every query's execution id into them."""
+    import threading
+
+    sc = spark.sparkContext
+    seen, props = [], set()
+
+    def record(real, *a, **k):
+        seen.append((sc.getLocalProperty("spark.jobGroup.id"),
+                     threading.get_ident()))
+        props.add(spark._jvm.System.identityHashCode(
+            sc._jsc.sc().getLocalProperties()))
+        return real(*a, **k)
+
+    sc.setJobGroup("tagged-tick", "a tagged two-module tick")
+    try:
+        _two_module_tick(spark, wh, record)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [g for g, _t in seen] == ["tagged-tick", "tagged-tick"]
+    # the snapshots ran on workers, not on the tagging thread
+    assert threading.get_ident() not in {t for _g, t in seen}
+    assert len(props) == 2
+
+
+def test_requires_statements_gates_on_the_same_ticks_statements(spark, wh):
+    """Waves keep priority order: a ``requires_statements`` datasource
+    (qualstats, priority 10) ticked with statements (priority -2) gates
+    on the queryids this very tick's statements snapshot merged into the
+    dictionary, while it overlaps with its own wave (bgwriter)."""
+    from powa_archivist_spark.operators import qualstats
+    from powa_archivist_spark.sources.readers import shim_to_schema
+    from powa_archivist_spark.specs import QUALSTATS_SPEC, STATEMENTS
+
+    orch = Orchestrator(wh, specs={
+        s.name: s for s in (STATEMENTS, QUALSTATS_SPEC, SPEC)})
+    stmts = shim_to_schema(
+        spark.createDataFrame(
+            [(1, ts(0), 100, 10, True, 5, "SELECT a", 3, 1.5)],
+            "srvid int, ts timestamp, queryid long, dbid long, "
+            "toplevel boolean, userid long, query string, calls long, "
+            "total_exec_time double",
+        ),
+        STATEMENTS.staging_schema,
+    )
+    quals = spark.createDataFrame(
+        [(1, ts(0), 7, 10, 5, 70 + q, 2, 10, 4, 1.5, 2.0, 100, ["42"],
+          [(1259, q, 96, "f")]) for q in range(3)],
+        qualstats.SRC_SCHEMA,
+    )
+    errs = orch.take_snapshot(
+        ServerConfig(srvid=1),
+        captures={STATEMENTS.name: stmts, QUALSTATS_SPEC.name: quals,
+                  SPEC.name: bgwriter_rows(spark, 1, ts(0), 1)},
+        now=ts(0),
+    )
+    assert errs == 0, orch.read_metas(1)["errors"]
+    assert wh.read(Warehouse.current(QUALSTATS_SPEC.name)).count() == 3
+    assert wh.read(Warehouse.current(SPEC.name)).count() == 1
+
+
+def test_failing_wave_sibling_keeps_dispatch_order_in_the_ledger(spark, wh):
+    """A failure in a wave never stops its siblings from committing, and
+    the error ledger lists failures in dispatch order even when the
+    first one fails last."""
+    import time
+
+    first, last = get_spec("pg_stat_archiver"), get_spec("pg_stat_database")
+    orch = Orchestrator(wh, specs={s.name: s for s in (first, SPEC, last)})
+
+    class Boom:
+        def __init__(self, delay):
+            self.delay = delay
+
+        @property
+        def _jdf(self):
+            time.sleep(self.delay)
+            raise RuntimeError("datasource exploded")
+
+    errs = orch.take_snapshot(
+        ServerConfig(srvid=0),
+        captures={first.name: Boom(2.0), last.name: Boom(0.0),
+                  SPEC.name: bgwriter_rows(spark, 0, ts(0), 1)},
+        now=ts(0),
+    )
+    assert errs == 2
+    ledger = orch.read_metas(0)["errors"]
+    assert [e.split(":")[0] for e in ledger] == [
+        f"powa_{first.name}_snapshot", f"powa_{last.name}_snapshot"]
+    assert wh.read(Warehouse.current(SPEC.name)).count() == 1

@@ -8,12 +8,32 @@ tests in tests/ cover the algebraic invariants on top of that.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries import t
 from . import dedup, multimodal, similarity, textstats
 from .spread import spread
+
+
+@contextmanager
+def scratch_warehouse(spark: SparkSession, prefix: str):
+    """A Warehouse on a fresh temp dir, deleted on exit together with
+    its replay-memo entries: a declared replay materializes its result
+    (``localCheckpoint``) before the scratch goes."""
+    from ..storage import Warehouse
+    from ..streaming.fold import invalidate
+
+    root = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield Warehouse(spark, root)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+        invalidate(root)
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2123,17 +2143,11 @@ def stream_cms_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch sketch and the oracle is the batch CMS oracle minus the exact
     recount (the ledger never stores raw keys — the same deliberate
     trade as stream_hll_profile)."""
-    import shutil
-    import tempfile
-
-    from ..storage import Warehouse
     from ..streaming.cms import cms_profile, process_cms_batch
 
     ev = t(spark, sf_dir, "events")
     probes = ev.select("user_id").distinct().orderBy("user_id").limit(20)
-    scratch = tempfile.mkdtemp(prefix="cms_profile_")
-    try:
-        wh = Warehouse(spark, scratch)
+    with scratch_warehouse(spark, "cms_profile_") as wh:
         for b in range(4):
             process_cms_batch(
                 wh, ev.filter(F.col("event_id") % 4 == b), b,
@@ -2144,8 +2158,6 @@ def stream_cms_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("event_type", "user_id")
             .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 ORACLE_STREAM_CMS_PROFILE = """
@@ -2296,16 +2308,10 @@ def stream_hll_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     MAX-merge associativity makes the result EQUAL to the one-pass
     batch sketch, so the oracle is the batch HLL oracle (no n_exact —
     the at-rest sketch deliberately never stores raw keys)."""
-    import shutil
-    import tempfile
-
-    from ..storage import Warehouse
     from ..streaming.profile import hll_profile, process_hll_batch
 
     ev = t(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="hll_profile_")
-    try:
-        wh = Warehouse(spark, scratch)
+    with scratch_warehouse(spark, "hll_profile_") as wh:
         for b in range(4):
             process_hll_batch(
                 wh, ev.filter(F.col("event_id") % 4 == b),
@@ -2316,8 +2322,6 @@ def stream_hll_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("event_type")
             .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def stream_novelty_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2329,18 +2333,12 @@ def stream_novelty_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     stat table alone.  With ascending arrival, first-arrival ownership
     equals min-id ownership, so the oracle is the batch novelty oracle
     (ORACLE_NGRAM_NOVELTY)."""
-    import shutil
-    import tempfile
-
-    from ..storage import Warehouse
     from ..streaming.novelty import novelty_profile, process_novelty_batch
 
     docs = t(spark, sf_dir, "documents")
     mx = docs.agg(F.max("doc_id").alias("m")).collect()[0].m
     step = (int(mx) + 4) // 4
-    scratch = tempfile.mkdtemp(prefix="novelty_ledger_")
-    try:
-        wh = Warehouse(spark, scratch)
+    with scratch_warehouse(spark, "novelty_ledger_") as wh:
         for b in range(4):
             process_novelty_batch(
                 wh,
@@ -2355,8 +2353,6 @@ def stream_novelty_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("source")
             .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def stream_kmeans_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2374,19 +2370,13 @@ def stream_kmeans_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled-Lloyd CENTERS on the 3-epoch subset + one argmin over ALL
     vectors + the rollup, with n_frozen counting epoch-3 rows (the
     staleness the operator watches to schedule the next refresh)."""
-    import shutil
-    import tempfile
-
-    from ..storage import Warehouse
     from ..streaming.clustering import (
         kmeans_ledger_profile,
         process_kmeans_batch,
     )
 
     emb = t(spark, sf_dir, "embeddings")
-    scratch = tempfile.mkdtemp(prefix="kmeans_ledger_")
-    try:
-        wh = Warehouse(spark, scratch)
+    with scratch_warehouse(spark, "kmeans_ledger_") as wh:
         for b in range(4):
             process_kmeans_batch(
                 wh, emb.filter(F.col("vec_id") % 4 == b), b,
@@ -2398,8 +2388,6 @@ def stream_kmeans_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("cluster")
             .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def _oracle_kmeans_ledger() -> str:
@@ -2442,19 +2430,13 @@ def stream_kmeans_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
     the epoch-2 Lloyd centers + the global argmin, then rolls the
     assignment view up to the same row: frozen rows are exactly epoch
     3's (vec_id % 4 = 3), trained_epoch 2, latest_epoch 3."""
-    import shutil
-    import tempfile
-
-    from ..storage import Warehouse
     from ..streaming.clustering import (
         kmeans_staleness,
         process_kmeans_batch,
     )
 
     emb = t(spark, sf_dir, "embeddings")
-    scratch = tempfile.mkdtemp(prefix="kmeans_stale_")
-    try:
-        wh = Warehouse(spark, scratch)
+    with scratch_warehouse(spark, "kmeans_stale_") as wh:
         for b in range(4):
             process_kmeans_batch(
                 wh, emb.filter(F.col("vec_id") % 4 == b), b,
@@ -2462,8 +2444,6 @@ def stream_kmeans_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
                 refresh=(b % 2 == 0),
             )
         return kmeans_staleness(wh).localCheckpoint()
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def _oracle_kmeans_staleness(threshold: float = 0.2) -> str:
@@ -2511,16 +2491,10 @@ def stream_kll_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result EQUAL to the one-shot batch sketch, so the oracle is
     the batch quantile oracle — the same relationship
     stream_hll_profile has to its batch HLL."""
-    import shutil
-    import tempfile
-
-    from ..storage import Warehouse
     from ..streaming.quantiles import process_quantile_batch, quantile_profile
 
     ev = t(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="kll_profile_")
-    try:
-        wh = Warehouse(spark, scratch)
+    with scratch_warehouse(spark, "kll_profile_") as wh:
         for b in range(4):
             process_quantile_batch(
                 wh, ev.filter(F.col("event_id") % 4 == b), b,
@@ -2531,8 +2505,6 @@ def stream_kll_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("event_type")
             .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 ORACLE_STREAM_HLL_PROFILE = """
@@ -3089,17 +3061,11 @@ def stream_near_dup_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     four chained CTEs apply the in-batch rule then the kept-ledger rule
     per batch.  This is the CORRECTNESS entry VERDICT r4 item 7 asked
     for — streaming parity enforced by value hash, not just pytest."""
-    import shutil
-    import tempfile
-
-    from ..storage import Warehouse
     from ..streaming.dedup import NearDupLedger, process_near_dup_batch
 
     docs = t(spark, sf_dir, "documents")
-    scratch = tempfile.mkdtemp(prefix="ndledger_")
     ledger = NearDupLedger()
-    try:
-        wh = Warehouse(spark, scratch)
+    with scratch_warehouse(spark, "ndledger_") as wh:
         for b in range(4):
             process_near_dup_batch(
                 wh, docs.filter(F.col("doc_id") % 4 == b), "kept_docs",
@@ -3109,9 +3075,6 @@ def stream_near_dup_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ledger directory can be deleted NOW instead of leaking one
         # tempdir per bench rep / oracle run (r5 code review)
         return wh.read("kept_docs").select("doc_id").localCheckpoint()
-    finally:
-        ledger.close()
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 ORACLE_STREAM_NEAR_DUP = f"""
@@ -3216,22 +3179,16 @@ def stream_components_ledger_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-independent recursive-CTE closure over the md5-minhash pair
     graph — the same min-label semantics ``dedup_components`` pins for
     the token-jaccard graph."""
-    import shutil
-    import tempfile
-
-    from ..storage import Warehouse
     from ..streaming.components import (ComponentsState,
                                         components_assignment,
                                         process_components_batch)
 
     docs = t(spark, sf_dir, "documents")
-    scratch = tempfile.mkdtemp(prefix="ccledger_")
     # ComponentsState (r14): the NearDupLedger bands+shingles cache
     # plus in-memory assign/remap views — no per-fold state-table
     # re-read/re-listing on the hot path
     ledger = ComponentsState()
-    try:
-        wh = Warehouse(spark, scratch)
+    with scratch_warehouse(spark, "ccledger_") as wh:
         for b in range(4):
             process_components_batch(
                 wh, docs.filter(F.col("doc_id") % 4 == b), b,
@@ -3241,9 +3198,6 @@ def stream_components_ledger_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "component",
             (F.col("doc_id") == F.col("component")).alias("is_kept"),
         ).localCheckpoint()
-    finally:
-        ledger.close()
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 ORACLE_STREAM_COMPONENTS = f"""
@@ -3801,15 +3755,8 @@ def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     compute is O(N x target), not the fixed-mod O(N^2/97) cliff
     (measured alpha 1.41 -> -0.04 for the fixed-batch upsert).  The
     oracle derives the same mod from the build-set COUNT(*)."""
-    import shutil
-    import tempfile
-
-    from ..storage import Warehouse
-
     emb = t(spark, sf_dir, "embeddings")
-    scratch = tempfile.mkdtemp(prefix="annupsert_")
-    try:
-        wh = Warehouse(spark, scratch)
+    with scratch_warehouse(spark, "annupsert_") as wh:
         build = emb.filter(F.col("vec_id") % 5 != 4)
         similarity.ivf_build(wh, build, n_cells_target=ANN_CELLS_TARGET)
         batch = emb.filter(F.col("vec_id") % 5 == 4).unionByName(
@@ -3827,8 +3774,6 @@ def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint()
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 ANN_CELLS_TARGET = 64
@@ -4049,10 +3994,6 @@ def stream_curation_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically, and appends to the sink.  The oracle replays the
     greedy batch semantics with one window: keeper = min (batch, id)
     per normalized-text digest among gate survivors."""
-    import shutil
-    import tempfile
-
-    from ..storage import Warehouse
     from ..streaming.curation import process_curation_batch
 
     docs = t(spark, sf_dir, "documents")
@@ -4063,9 +4004,7 @@ def stream_curation_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         "max_dup_2gram_frac": 0.55,
         "max_top_token_frac": 0.45,
     }
-    scratch = tempfile.mkdtemp(prefix="curation_")
-    try:
-        wh = Warehouse(spark, scratch)
+    with scratch_warehouse(spark, "curation_") as wh:
         for b in range(4):
             process_curation_batch(
                 wh, docs.filter(F.col("doc_id") % 4 == b), "curated",
@@ -4075,8 +4014,6 @@ def stream_curation_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             wh.read("curated").select("doc_id", "lang", "split")
             .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 ORACLE_STREAM_CURATION = r"""
@@ -4617,18 +4554,12 @@ def stream_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the stream_hll_profile associativity argument, PQ form).  Codes
     serialize to CSV for the driver's canonical compare
     (constvalues_history_pack discipline)."""
-    import shutil
-    import tempfile
-
-    from ..storage import Warehouse
     from ..streaming.pq_ingest import (
         pq_bootstrap, pq_codes, process_pq_batch,
     )
 
     emb = t(spark, sf_dir, "embeddings")
-    scratch = tempfile.mkdtemp(prefix="pq_ingest_")
-    try:
-        wh = Warehouse(spark, scratch)
+    with scratch_warehouse(spark, "pq_ingest_") as wh:
         pq_bootstrap(wh, emb.filter(F.col("vec_id") % 4 == 0),
                      m=8, n_codes_target=64)
         for b in (1, 2, 3):
@@ -4646,8 +4577,6 @@ def stream_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("vec_id")
             .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 ORACLE_STREAM_PQ = f"""
@@ -4858,15 +4787,8 @@ def ann_ivfpq_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalence pytest in tests/test_pipeline.py).  Reference analog:
     packed-history at-rest posture, powa--5.2.0.sql:2107-2123 +
     partition-pruned reads 7784-7786."""
-    import shutil
-    import tempfile
-
-    from ..storage import Warehouse
-
     emb = t(spark, sf_dir, "embeddings")
-    scratch = tempfile.mkdtemp(prefix="ivfpqidx_")
-    try:
-        wh = Warehouse(spark, scratch)
+    with scratch_warehouse(spark, "ivfpqidx_") as wh:
         similarity.ivfpq_index_build(
             wh, emb.filter(F.col("vec_id") % 5 != 4),
             m=8, n_cells_target=8, n_codes_target=64,
@@ -4876,8 +4798,6 @@ def ann_ivfpq_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
         return similarity.ivfpq_probe(
             wh, q, k=10, nprobe=2
         ).localCheckpoint()
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 ORACLE_IVFPQ_AT_REST = _oracle_ivfpq_topk(train="vec_id % 5 <> 4")
@@ -5039,15 +4959,8 @@ def ann_ivfpq_probe_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-neighbor displace a hit at higher nprobe).  ONE shared
     brute-force truth + one ADC scoring pass at max nprobe; each
     config is a cell_rank filter."""
-    import shutil
-    import tempfile
-
-    from ..storage import Warehouse
-
     emb = t(spark, sf_dir, "embeddings")
-    scratch = tempfile.mkdtemp(prefix="ivfpqtune_")
-    try:
-        wh = Warehouse(spark, scratch)
+    with scratch_warehouse(spark, "ivfpqtune_") as wh:
         similarity.ivfpq_index_build(
             wh, emb, m=8, n_cells_target=8, n_codes_target=64,
         )
@@ -5055,8 +4968,6 @@ def ann_ivfpq_probe_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
             wh, emb, query_ids=[0, 1, 2, 3, 4], k=10,
             nprobes=(1, 2, 4), m=8,
         ).localCheckpoint()
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def _oracle_ivfpq_probe_tuning(nprobes=(1, 2, 4), k: int = 10) -> str:
@@ -5623,16 +5534,10 @@ def stream_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrieval reads the ledger alone.  Disjoint-doc union (and summed
     integer stats) make the profile EQUAL to the one-shot batch BM25,
     so the oracle is the batch BM25 oracle."""
-    import shutil
-    import tempfile
-
-    from ..storage import Warehouse
     from ..streaming.retrieval import bm25_profile, process_postings_batch
 
     docs = t(spark, sf_dir, "documents")
-    scratch = tempfile.mkdtemp(prefix="bm25_ledger_")
-    try:
-        wh = Warehouse(spark, scratch)
+    with scratch_warehouse(spark, "bm25_ledger_") as wh:
         for bch in range(4):
             process_postings_batch(
                 wh, docs.filter(F.col("doc_id") % 4 == bch), bch,
@@ -5642,8 +5547,6 @@ def stream_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("query_id", "rank")
             .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def ann_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_coalesce(df: DataFrame, parts: int | None = None) -> DataFrame:
+def write_coalesce(df: DataFrame) -> DataFrame:
     """Collapse a bounded per-batch frame to a few write tasks (r13,
     guide §6 output sizing): the streaming folds' sink frames are
     unions of 32-partition checkpointed micro-frames — without a
@@ -34,20 +34,10 @@ def write_coalesce(df: DataFrame, parts: int | None = None) -> DataFrame:
     EVERY later fold's ledger read.  ``coalesce`` is a narrow merge of
     cached checkpoint blocks (no shuffle, no recompute); it never
     increases a frame's partition count, so an already-narrow frame
-    passes through unchanged.  Default = parallelism/8 write tasks
-    (4 on the local[32] harness), env-tunable for deployments whose
-    micro-batches are fatter."""
-    if parts is None:
-        import os
-
-        env = os.environ.get("SPARK_GRAFT_FOLD_WRITE_PARTITIONS")
-        # clamp non-positive env values (r14, ADVICE r13): '0' passed
-        # the truthiness check and produced coalesce(0), a plan-time
-        # error surfacing far from the knob
-        parts = max(1, int(env)) if env else max(
-            1, df.sparkSession.sparkContext.defaultParallelism // 8
-        )
-    return df.coalesce(parts)
+    passes through unchanged.  Parallelism/8 write tasks (4 on a
+    local[32] session)."""
+    return df.coalesce(
+        max(1, df.sparkSession.sparkContext.defaultParallelism // 8))
 
 
 def spread(df: DataFrame, key: str) -> DataFrame:

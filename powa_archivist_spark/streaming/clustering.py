@@ -10,8 +10,9 @@ map-shaped path), and periodically REFRESH the centers with a full
 integer-Lloyd pass over the at-rest vector table (the
 ``ivf_build``/``ann_index_upsert`` posture generalized to clustering).
 
-State tables (all folded through ONE txn.StagedPass manifest per batch,
-atomic at rest, crash-invisible to readers — the package-wide D1 shape):
+State tables (all folded through ONE manifest per batch by the
+ledger-fold runner, streaming/fold.py — atomic at rest, crash-invisible
+to readers):
 
   kmeans_vectors  (vec_id, v, epoch)                — quantized corpus
   kmeans_centers  (cluster, cv, trained_epoch)      — the frozen centers
@@ -28,10 +29,10 @@ the one-shot kmeans over the union after any prefix (tested).  Frozen
 assignments carry ``frozen=true`` — the staleness marker the profile
 reports (how much of the corpus has never been re-Lloyd'd).
 
-Replay protocol: a checkpoint-replayed epoch short-circuits on a
-``limit(1)`` epoch probe against the vectors table
-(streaming/quantiles.py's protocol) — a replayed batch cannot duplicate
-vectors, double-assign, or retrain on half-landed state.
+Replay protocol (streaming/fold.py documents it once): a
+checkpoint-replayed epoch short-circuits on the vectors table's epoch
+key — a replayed batch cannot duplicate vectors, double-assign, or
+retrain on half-landed state.
 
 Scale shape per batch at 100 TB: frozen-assign is one broadcast of k x
 dim longs onto the batch + one min_by partial agg — map-shaped, no
@@ -53,8 +54,8 @@ from pyspark.sql import functions as F
 
 from ..pipeline.similarity import assign_to_centers, kmeans, quantized
 from ..pipeline.spread import spread, write_coalesce
-from ..session import adopt
 from ..storage import Warehouse
+from .fold import fold, replace
 
 VECTORS_TABLE = "kmeans_vectors"
 CENTERS_TABLE = "kmeans_centers"
@@ -83,136 +84,91 @@ def process_kmeans_batch(
     freeze against) runs the full integer-Lloyd refresh over ALL at-rest
     vectors and replaces centers + the whole assignment view; otherwise
     the batch frozen-assigns against the current centers and appends."""
-    from ..txn import GLOBAL_LANE, StagedPass
+    epoch = F.lit(int(epoch_id)).cast("long")
 
-    from .epochs import epoch_replayed, landed
+    def build(wh, batch, sp):
+        # spread before the vector quantization map (r13, guide §2.5):
+        # serial one-split batches otherwise; probe-gated.  Lazy
+        # checkpoint (r14): the probe below materializes it, so the
+        # staged append and the refresh/frozen assignment read the
+        # blocks instead of re-running the exchange + quantize.
+        vecs = spread(batch, id_col).select(
+            F.col(id_col).alias("vec_id"),
+            quantized(F.col(vec_col)).alias("v"),
+        ).withColumn("epoch", epoch).localCheckpoint(eager=False)
 
-    wh = wh.engine()
-    batch = adopt(wh.spark, batch)
-    StagedPass.recover(wh, GLOBAL_LANE)
-    StagedPass.sweep_flat_stages(wh, vectors_table, centers_table,
-                                 assign_table)
-    # in-process replay memo (r13): a dict lookup instead of one
-    # limit(1) probe job per micro-batch; cold entries seed once
-    if epoch_replayed(wh, vectors_table, int(epoch_id)):
-        return False
+        # Structured Streaming can deliver EMPTY micro-batches.  Folding
+        # one is a no-op — and on the first-ever batch it would send
+        # kmeans() a zero-row frame (seed LIMIT 1 on nothing ->
+        # degenerate centers).  Skip unless an explicit refresh was
+        # requested AND there is history to refresh over — and then
+        # refresh directly over history without appending a zero-row run
+        # to the vectors ledger (r13, ADVICE r12: empty epochs never
+        # land in the ledger; a crash-replay of an empty refresh re-runs
+        # the deterministic Lloyd and replaces identical state).
+        is_empty = not vecs.take(1)
+        if is_empty and not (refresh and wh.exists(centers_table)):
+            if stats_out is not None:
+                stats_out["refreshed"] = False
+            return None
 
-    # spread before the vector quantization map (r13, guide §2.5):
-    # serial one-split batches otherwise; probe-gated.  Lazy checkpoint:
-    # the staged vectors append below is the materializing action, and
-    # the refresh/frozen assignment then reads the checkpointed blocks
-    # instead of re-running the exchange + quantize a second time.
-    vecs = spread(batch, id_col).select(
-        F.col(id_col).alias("vec_id"),
-        quantized(F.col(vec_col)).alias("v"),
-    ).withColumn(
-        "epoch", F.lit(int(epoch_id)).cast("long")
-    ).localCheckpoint(eager=False)  # r14 (ADVICE r13): the checkpoint
-    # the comment above promises was missing — without it the refresh /
-    # frozen-assign statements re-ran the exchange + quantize from the
-    # raw batch instead of reading the append-materialized blocks
-
-    # Structured Streaming can deliver EMPTY micro-batches (e.g. a
-    # trigger with no new files).  Folding one is a no-op — and on the
-    # first-ever batch it would send kmeans() a zero-row frame (seed
-    # LIMIT 1 on nothing -> degenerate centers).  Skip unless an
-    # explicit refresh was requested AND there is history to refresh
-    # over — and in THAT case refresh directly over history without
-    # appending a zero-row run to the vectors ledger (r13, ADVICE r12:
-    # empty epochs never land in the ledger, including refresh epochs;
-    # a crash-replay of an empty refresh re-runs the deterministic
-    # Lloyd and replaces identical state — idempotent either way, and
-    # the stream wrapper's epoch marker skips it entirely).  r14: the
-    # probe rides the vecs checkpoint — take(1) materializes the
-    # checkpointed quantized batch (engine passes scan all partitions
-    # in one job on the engine session), so the staged append and
-    # the refresh/frozen assignment below read blocks instead of
-    # re-running the exchange + quantize; one probe job either way.
-    is_empty = not vecs.take(1)
-    if is_empty and not (refresh and wh.exists(centers_table)):
-        if stats_out is not None:
-            stats_out["refreshed"] = False
-        return False
-
-    sp = StagedPass(wh, GLOBAL_LANE)
-    # the fold's staged writes touch DISTINCT tables and read only
-    # materialized state (the take(1) probe checkpointed the batch, the
-    # Lloyd refresh runs its actions before staging) — collect them and
-    # run overlapped (r14, guide §2.6; the components fold's pattern)
-    staged_calls = []
-    if not is_empty:
-        # write_coalesce (r13, guide §6): the spread exchange leaves the
-        # batch at cluster parallelism — staged as-is every fold appends
-        # ~32 KB-sized files that every later refresh re-lists and
-        # re-reads through the history scan
-        staged_calls.append(
-            lambda: sp.stage_append_flat(write_coalesce(vecs),
-                                         vectors_table))
-
-    must_refresh = refresh or not wh.exists(centers_table)
-    if must_refresh:
-        # full integer-Lloyd over the at-rest union (history + this
-        # batch — the staged vectors haven't published yet, so union
-        # the batch explicitly); deterministic => equals the one-shot
-        # batch kmeans over everything ingested through this epoch
-        all_vecs = vecs.select("vec_id", "v")
-        if wh.exists(vectors_table):
-            hist = wh.read(vectors_table).select("vec_id", "v")
-            all_vecs = hist if is_empty else hist.unionByName(all_vecs)
-        st: dict = {}
-        assign = kmeans(
-            all_vecs, k=k, init_rounds=init_rounds,
-            max_rounds=max_rounds, id_col="vec_id", vec_col="v",
-            stats_out=st, pre_quantized=True,
-        )
-        # k driver-local rows, created as ONE slice (r13): a plain
-        # createDataFrame is a defaultParallelism-slice LocalTableScan,
-        # which writes k files + empty tasks — and coalescing a
-        # LocalTableScan measured a multi-second fallback penalty, so
-        # the slice count is set at creation instead
-        centers = wh.spark.createDataFrame(
-            wh.spark.sparkContext.parallelize(
-                [(i, c, int(epoch_id))
-                 for i, c in enumerate(st["centers"])], 1),
-            "cluster long, cv array<bigint>, trained_epoch long",
-        )
-        staged_calls.append(
-            lambda: sp.stage_replace_flat(centers, centers_table))
-        staged_calls.append(lambda: sp.stage_replace_flat(
-            assign.select(
+        writes = {}
+        if not is_empty:
+            # write_coalesce (r13, guide §6): the spread exchange leaves
+            # the batch at cluster parallelism — staged as-is every fold
+            # appends tiny files every later refresh re-lists and re-reads
+            writes[vectors_table] = write_coalesce(vecs)
+        if refresh or not wh.exists(centers_table):
+            # full integer-Lloyd over the at-rest union (history + this
+            # batch — the staged vectors haven't published yet, so union
+            # the batch explicitly); deterministic => equals the one-shot
+            # batch kmeans over everything ingested through this epoch
+            all_vecs = vecs.select("vec_id", "v")
+            if wh.exists(vectors_table):
+                hist = wh.read(vectors_table).select("vec_id", "v")
+                all_vecs = hist if is_empty else hist.unionByName(all_vecs)
+            st: dict = {}
+            assign = kmeans(
+                all_vecs, k=k, init_rounds=init_rounds,
+                max_rounds=max_rounds, id_col="vec_id", vec_col="v",
+                stats_out=st, pre_quantized=True,
+            )
+            # k driver-local rows, created as ONE slice (r13): a plain
+            # createDataFrame is a defaultParallelism-slice
+            # LocalTableScan, which writes k files + empty tasks
+            centers = wh.spark.createDataFrame(
+                wh.spark.sparkContext.parallelize(
+                    [(i, c, int(epoch_id))
+                     for i, c in enumerate(st["centers"])], 1),
+                "cluster long, cv array<bigint>, trained_epoch long",
+            )
+            writes[centers_table] = replace(centers)
+            # the corpus-sized refresh REPLACE stays uncoalesced — its
+            # parallelism must scale with the at-rest table
+            writes[assign_table] = replace(assign.select(
                 "vec_id", "cluster", "d2_q",
-                F.lit(False).alias("frozen"),
-                F.lit(int(epoch_id)).cast("long").alias("epoch"),
-            ),
-            assign_table,
-        ))
-        if stats_out is not None:
-            stats_out.update(st)
-            stats_out["refreshed"] = True
-    else:
-        cents = wh.read(centers_table).select("cluster", "cv")
-        assign = assign_to_centers(
-            vecs.select("vec_id", "v"), cents, id_col="vec_id"
-        )
-        # frozen appends are batch-bounded: coalesce the write (the
-        # corpus-sized refresh REPLACE above stays uncoalesced — its
-        # parallelism must scale with the at-rest table)
-        staged_calls.append(lambda: sp.stage_append_flat(
-            write_coalesce(assign.select(
+                F.lit(False).alias("frozen"), epoch.alias("epoch"),
+            ))
+            if stats_out is not None:
+                stats_out.update(st)
+                stats_out["refreshed"] = True
+        else:
+            cents = wh.read(centers_table).select("cluster", "cv")
+            assign = assign_to_centers(
+                vecs.select("vec_id", "v"), cents, id_col="vec_id"
+            )
+            # frozen appends are batch-bounded: coalesce the write
+            writes[assign_table] = write_coalesce(assign.select(
                 "vec_id", "cluster", "d2_q",
-                F.lit(True).alias("frozen"),
-                F.lit(int(epoch_id)).cast("long").alias("epoch"),
-            )),
-            assign_table,
-        ))
-        if stats_out is not None:
-            stats_out["refreshed"] = False
-    sp.stage_concurrently(*staged_calls)
-    sp.publish()
-    if not is_empty:
-        # memo mirrors the TABLE: an empty refresh lands no vectors row
-        landed(wh, vectors_table, int(epoch_id))
-    return True
+                F.lit(True).alias("frozen"), epoch.alias("epoch"),
+            ))
+            if stats_out is not None:
+                stats_out["refreshed"] = False
+        return writes
+
+    return fold(wh, batch,
+                tables=(vectors_table, centers_table, assign_table),
+                key=(vectors_table, int(epoch_id)), build=build)
 
 
 def kmeans_assignment(wh: Warehouse,

@@ -12,11 +12,10 @@ register fold (streaming/profile.py), the merge is NOT idempotent — a
 replayed epoch would double-count every key it saw — so the fold
 follows the dedup-ledger shape:
 
-- the epoch's registers append through ONE txn.StagedPass manifest
-  (atomic at rest, crash-invisible to readers);
-- a replay short-circuit probes the table for the epoch id with a
-  ``limit(1)`` job (same protocol as streaming/pq_ingest.py) — a
-  checkpoint-replayed epoch whose rows landed is a no-op.
+each epoch's registers append through the ledger-fold runner
+(streaming/fold.py, which documents the replay protocol once): one
+manifest per epoch, and a checkpoint-replayed epoch whose rows landed
+is a no-op.
 
 At-rest size: epochs x groups x d x w rows.  ``compact_cms_profile``
 folds all epochs into a single summed epoch (addition is associative),
@@ -35,8 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..pipeline.sketches import cms_estimate, cms_registers
-from ..session import adopt
 from ..storage import Warehouse
+from .fold import compact_ledger, fold
 
 CMS_TABLE = "profile_cms_registers"
 
@@ -63,26 +62,12 @@ def process_cms_batch(
     """Fold one micro-batch's registers into the at-rest ledger;
     returns False when the epoch already landed (checkpoint replay —
     the short-circuit is load-bearing: SUM-merge is not idempotent)."""
-    from ..txn import GLOBAL_LANE, StagedPass
-
-    from .epochs import epoch_replayed, landed
-
-    wh = wh.engine()
-    batch = adopt(wh.spark, batch)
-    StagedPass.recover(wh, GLOBAL_LANE)
-    StagedPass.sweep_flat_stages(wh, table)
-    # in-process replay memo (r13): a dict lookup instead of one
-    # limit(1) probe job per micro-batch; cold entries seed once
-    if epoch_replayed(wh, table, int(epoch_id)):
-        return False
-    regs = cms_registers(batch, key_col, group_cols, d, w)
-    sp = StagedPass(wh, GLOBAL_LANE)
-    sp.stage_append_flat(
-        regs.withColumn("epoch", F.lit(int(epoch_id)).cast("long")), table
+    return fold(
+        wh, batch, tables=(table,), key=(table, int(epoch_id)),
+        build=lambda wh, batch, sp: {table: cms_registers(
+            batch, key_col, group_cols, d, w
+        ).withColumn("epoch", F.lit(int(epoch_id)).cast("long"))},
     )
-    sp.publish()
-    landed(wh, table, int(epoch_id))
-    return True
 
 
 def cms_profile(
@@ -110,25 +95,5 @@ def compact_cms_profile(
     table: str = CMS_TABLE,
 ) -> None:
     """Fold all at-rest epochs into one (epoch = max seen), re-bounding
-    the ledger to groups x d x w rows; the swap commits through one
-    manifest like every other replace."""
-    from ..txn import GLOBAL_LANE, StagedPass
-
-    wh = wh.engine()
-    StagedPass.recover(wh, GLOBAL_LANE)
-    if not wh.exists(table):
-        return
-    rows = wh.read(table)
-    top = rows.agg(F.max("epoch").alias("e")).collect()[0].e
-    if top is None:
-        # empty ledger: nothing to fold — a no-op beats staging a
-        # replace whose epoch cast would raise TypeError on None
-        return
-    merged = _merged_registers(rows, group_cols).withColumn(
-        "epoch", F.lit(int(top)).cast("long")
-    )
-    sp = StagedPass(wh, GLOBAL_LANE)
-    sp.stage_replace_flat(
-        merged.select(*rows.columns).localCheckpoint(), table
-    )
-    sp.publish()
+    the ledger to groups x d x w rows."""
+    compact_ledger(wh, table, lambda rows: _merged_registers(rows, group_cols))

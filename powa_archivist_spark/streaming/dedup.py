@@ -8,7 +8,7 @@ Two forms, matching how Spark wants this expressed:
   duplicate arriving later than the horizon is re-emitted — the standard
   trade of state size vs dedup window).  Pure Structured Streaming, one
   stateful operator, no external table.
-- :func:`stream_exact_dedup_ledger` — foreachBatch against a persistent
+- :func:`stream_exact_dedup_ledger` — micro-batch folds against a persistent
   digest ledger: each micro-batch anti-joins the seen-digest table, then
   appends the survivors' digests — UNBOUNDED dedup window at the cost of
   one broadcast-able join per batch.  This is the corpus-build shape: at
@@ -20,29 +20,29 @@ normalized text) so a corpus built from the stream equals the batch
 :func:`pipeline.dedup.exact_dedup` keep-set over the same data, modulo
 arrival order inside one micro-batch (resolved min-id like the batch op).
 
-Delivery: the ledger variants use the SAME committed-epoch markers as
-ingest.py, so a checkpoint-replayed epoch whose marker exists is a
-no-op; and since r7 the sink append and the ledger append of one
-micro-batch commit through ONE txn.StagedPass manifest, so a crash
-MID-epoch leaves either both visible (the replay's survivors anti-join
-to nothing) or neither (clean replay) — exactly-once at rest on plain
-parquet, the multi-statement-transaction equivalent.  At 100 TB store
-the ledger through :class:`BucketedDigestLedger` so the per-batch
-anti-join never re-shuffles the corpus-sized ledger side.
+Delivery: both ledger sinks (exact digests and near-dup bands) run
+through the ledger-fold runner (streaming/fold.py): a checkpoint-
+replayed epoch whose marker exists is a no-op, and the sink append and
+the ledger append of one micro-batch commit through ONE manifest, so a
+crash MID-epoch leaves either both visible (the replay's survivors
+anti-join to nothing) or neither (clean replay) — exactly-once at rest
+on plain parquet, the multi-statement-transaction equivalent.  At
+100 TB store the digest ledger through :class:`BucketedDigestLedger`
+so the per-batch anti-join never re-shuffles the corpus-sized ledger
+side.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..pipeline.dedup import normalized_text
 from ..pipeline.spread import spread, write_coalesce
-from ..session import adopt
 from ..storage import Warehouse
-from .ingest import with_epoch_marker as _with_epoch_marker
+from .fold import fold, stream_fold
 
 LEDGER_TABLE = "corpus_digest_ledger"
 
@@ -84,7 +84,7 @@ class BucketedDigestLedger:
     manifest commit and refreshes the catalog.
 
     Concurrency contract: one writer/reader loop per ledger (the
-    stream's serialized foreachBatch), matching every other global-lane
+    stream's serialized micro-batch loop), matching every other global-lane
     writer; crash leftovers are healed by recover() + sweep_stages().
     """
 
@@ -205,6 +205,17 @@ def dedup_batch_survivors(
     return firsts
 
 
+def digest_write(docs: DataFrame,
+                 digest_ledger: "BucketedDigestLedger | None" = None):
+    """The ``(table, write)`` fold write appending ``docs``' digests to
+    the flat digest ledger, or to ``digest_ledger`` when bucketed."""
+    hashes = docs.select("text_hash")
+    if digest_ledger is None:
+        return LEDGER_TABLE, hashes
+    return digest_ledger.table, lambda sp, _table: (
+        digest_ledger.stage_append(hashes, sp))
+
+
 def process_dedup_batch(
     wh: Warehouse, batch: DataFrame, sink_table: str,
     text_col: str = "text", id_col: str = "doc_id",
@@ -213,43 +224,27 @@ def process_dedup_batch(
 ) -> None:
     """One ledger pass: compute survivors (see
     :func:`dedup_batch_survivors`), append them to the sink + their
-    digests to the ledger — committed through ONE StagedPass manifest
-    (r7, ADVICE r6): a crash between the two appends previously left
-    survivors in the sink with their digests missing from the ledger,
-    so the epoch replay re-admitted the entire survivor set as
-    duplicates.  Now either both appends are visible (replay anti-joins
-    to nothing) or neither is (clean replay)."""
-    from ..txn import GLOBAL_LANE, StagedPass
-
-    wh = wh.engine()
-    batch = adopt(wh.spark, batch)
-    StagedPass.recover(wh, GLOBAL_LANE)
-    StagedPass.sweep_flat_stages(wh, sink_table, LEDGER_TABLE)
-    if digest_ledger is not None:
-        digest_ledger.sweep_stages()
-    firsts = dedup_batch_survivors(wh, batch, text_col, id_col,
-                                   broadcast_ledger, digest_ledger)
-    firsts = firsts.cache()
-    try:
-        if firsts.count() == 0:
-            return
-        sp = StagedPass(wh, GLOBAL_LANE)
-        # two distinct tables over the just-materialized cache —
-        # overlapped staged writes (r14, guide §2.6)
+    digests to the ledger — committed through ONE manifest (r7, ADVICE
+    r6): a crash between the two appends previously left survivors in
+    the sink with their digests missing from the ledger, so the epoch
+    replay re-admitted the entire survivor set as duplicates.  Now
+    either both appends are visible (replay anti-joins to nothing) or
+    neither is (clean replay)."""
+    def build(wh, batch, sp):
         if digest_ledger is not None:
-            second = lambda: digest_ledger.stage_append(  # noqa: E731
-                firsts.select("text_hash"), sp)
-        else:
-            second = lambda: sp.stage_append_flat(  # noqa: E731
-                firsts.select("text_hash"), LEDGER_TABLE)
-        sp.stage_concurrently(
-            lambda: sp.stage_append_flat(firsts.drop("text_hash"),
-                                         sink_table),
-            second,
-        )
-        sp.publish()
-    finally:
-        firsts.unpersist()
+            digest_ledger.sweep_stages()
+        # lazy checkpoint: the count materializes it, both staged
+        # writes then read the blocks
+        firsts = dedup_batch_survivors(
+            wh, batch, text_col, id_col, broadcast_ledger, digest_ledger
+        ).localCheckpoint(eager=False)
+        if firsts.count() == 0:
+            return None
+        return dict([(sink_table, firsts.drop("text_hash")),
+                      digest_write(firsts, digest_ledger)])
+
+    fold(wh, batch, tables=(sink_table, LEDGER_TABLE), key=None,
+         build=build)
 
 
 #: ONE combined near-dup ledger table (band rows + shingle rows, split by
@@ -265,11 +260,14 @@ class NearDupLedger:
 
     Threaded through consecutive :func:`process_near_dup_batch` calls it
     avoids re-reading (and re-listing) the growing ledger table every
-    micro-batch: after each batch the new combined ledger state is
-    ``localCheckpoint``-ed, so the next batch reads it from the block
-    manager through a leaf-sized plan.  The durable parquet ledger is
-    STILL appended every batch, so a restart — which starts with an
-    empty cache — reads identical state from disk.
+    micro-batch: each batch's kept delta is ``localCheckpoint``-ed, so
+    the next batch reads it from the block manager through a leaf-sized
+    plan.  The durable parquet ledger is STILL appended every batch, so
+    a restart — which starts with an empty cache — reads identical
+    state from disk.  It is the fold's driver-side ``state``
+    (streaming/fold.py): a delta joins the cache only after its pass
+    published, and a pass that recovery healed behind this process's
+    back empties the cache, which then re-seeds from the table.
 
     Why checkpoint instead of persist+union: the minhash expression
     trees are enormous, and a union-of-persisted-deltas ledger embeds
@@ -288,111 +286,65 @@ class NearDupLedger:
         #: rows — same layout as NEAR_DUP_LEDGER_TABLE; a lazy union of
         #: per-batch checkpointed deltas (k leaf nodes after k batches)
         self.combined: DataFrame | None = None
+        self._pending: DataFrame | None = None
 
-    def advance(self, combined_delta: DataFrame) -> DataFrame:
-        """Checkpoint one batch's kept delta (LAZY — r13: the caller
-        always follows with the durable parquet append, and that write
-        is the materializing action, so the delta is computed exactly
-        once while its batch-local parents are still cached, without
-        paying a separate checkpoint job first) and fold it into the
-        cached state.  Returns the checkpointed delta so the caller can
-        reuse it (the durable append reads it; later batches read the
-        materialized blocks)."""
-        delta = combined_delta.localCheckpoint(eager=False)
-        self.combined = (
-            delta if self.combined is None
-            else self.combined.unionByName(delta)
-        )
-        return delta
+    def begin(self, healed: int) -> None:
+        """Fold entry: drop a failed pass's pending delta, and the whole
+        cache when recovery just healed a pass."""
+        if healed:
+            self.close()
+        self._pending = None
+
+    def stage(self, delta: DataFrame) -> DataFrame:
+        """Checkpoint one batch's kept delta (LAZY — r13: the durable
+        append that follows is the materializing action, so the delta
+        is computed once while its batch-local parents are hot) and
+        hold it until :meth:`commit`.  Returns the checkpointed delta
+        for the durable append to read."""
+        self._pending = delta.localCheckpoint(eager=False)
+        return self._pending
+
+    def commit(self) -> None:
+        """Fold the published pass's delta into the cache."""
+        if self._pending is not None:
+            self.combined = (
+                self._pending if self.combined is None
+                else self.combined.unionByName(self._pending)
+            )
+            self._pending = None
 
     def close(self) -> None:
         self.combined = None
+        self._pending = None
 
 
-def process_near_dup_batch(
-    wh: Warehouse,
-    batch: DataFrame,
-    sink_table: str,
-    threshold: float = 0.8,
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_fn: str = "xxhash64",
-    ledger: NearDupLedger | None = None,
-) -> None:
-    """One near-dup ledger pass (cross-batch MinHash LSH dedup):
-
-    1. in-batch: minhash_dedup_pairs over the batch, min-id keeps;
-    2. cross-batch: survivors' band buckets equi-join the bands ledger
-       (the SAME join shape as the batch operator, with the ledger as
-       the other side), exact-jaccard verify against the kept docs'
-       persisted shingle arrays;
-    3. survivors append to the sink, their bands + shingles to the ONE
-       combined ledger table (single append job).
-
-    The ledger grows with the KEPT corpus only; both joins shuffle on
-    (band, bucket) / doc id — bounded keys, no cross join.  At 100 TB
-    the bands ledger is bucket-partitioned so a batch touches only its
-    colliding buckets' files."""
-    from ..pipeline.dedup import minhash_bands, shingle_arrays
-
-    wh = wh.engine()
-    batch = adopt(wh.spark, batch)
-    # eager localCheckpoint, not persist (r13): both frames feed many
-    # downstream statements, and with persist every action over them
-    # re-canonicalizes the full minhash expression tree on the driver
-    # for the cache lookup — measured as multi-second driver gaps per
-    # fold.  The checkpoint truncates lineage to a leaf; the data lands
-    # in the same block-manager storage (reclaimed by the
-    # ContextCleaner when the frames go out of scope).
-    # spread before the shingle transform (r13, guide §2.5) — see the
-    # components fold: serial one-split batches otherwise
-    sh_b = shingle_arrays(spread(batch, id_col), shingle_n, text_col,
-                          id_col).localCheckpoint()
-    # signatures + band buckets computed ONCE for the whole batch
-    # (round-5: the in-batch pair stage previously re-derived them via
-    # minhash_dedup_pairs and the ledger append derived them a second
-    # time for the survivors — one full signature pipeline per batch
-    # saved); every later stage reuses this checkpointed frame
-    # lazy checkpoint (r13): the first action (the sink append of the
-    # survivors) materializes the bands while sh_b's blocks are hot;
-    # the ledger delta then reads the checkpointed blocks.  Eager was
-    # one extra fixed-latency job per fold.
-    batch_bands = minhash_bands(
-        batch, num_perm, bands, shingle_n, text_col, id_col,
-        shingle_df=sh_b, hash_fn=hash_fn,
-    ).localCheckpoint(eager=False)
-
-    # kept-so-far ledger frames: cached across batches when the caller
-    # threads a NearDupLedger, else read from the combined parquet table
-    combined = None
+def kept_ledger(wh: Warehouse, ledger: NearDupLedger | None,
+                table: str) -> DataFrame | None:
+    """The combined bands+shingles state so far: the cache when warm,
+    else the table (seeding a cold cache — a restart over a non-empty
+    ledger must fold the on-disk baseline in NOW, or later batches
+    would dedup against post-restart deltas alone), else None."""
     if ledger is not None and ledger.combined is not None:
-        combined = ledger.combined
-    elif wh.exists(NEAR_DUP_LEDGER_TABLE):
-        combined = wh.read(NEAR_DUP_LEDGER_TABLE)
-        if ledger is not None:
-            # restart with a fresh cache over a non-empty parquet ledger
-            # (r6 code review): the on-disk baseline must fold into the
-            # cache NOW — advance() only unions deltas, so without this
-            # seed every batch after the next would dedup against the
-            # post-restart deltas alone and silently re-admit near-dups
-            # of the pre-restart corpus
-            ledger.combined = combined
+        return ledger.combined
+    if not wh.exists(table):
+        return None
+    combined = wh.read(table)
+    if ledger is not None:
+        ledger.combined = combined
+    return combined
 
-    # ONE unified candidate+verify pipeline (r13, guide §2.4): the
-    # in-batch band self-join (drop b when a < b verified) and the
-    # cross-batch ledger join (drop new when it matches any kept old)
-    # used to be two separate join+verify subtrees; both produce a
-    # NEW-side drop id, so the "other" side unions the batch itself
-    # (admitted only when other_id < new_id) with the kept-corpus
-    # ledger (admitted always).  Candidate sets, verify formula and the
-    # resulting drop set are identical to the two-subtree form —
-    # cross-batch candidates still come from ALL batch docs, not just
-    # in-batch survivors (a doc dropped by both rules is dropped either
-    # way).  One distinct before the verify join instead of two, one
-    # shingle-verify join tree instead of two.
+
+def verified_pairs(batch_bands: DataFrame, sh_b: DataFrame,
+                   combined: DataFrame | None, id_col: str,
+                   threshold: float) -> DataFrame:
+    """Verified (new_id, other_id) near-dup pairs of one batch.
+
+    One candidate+verify pipeline serves both rules (r13, guide §2.4):
+    the "other" side unions the batch itself (admitted only when
+    other_id < new_id — the in-batch rule) with the ``combined`` ledger
+    state (admitted always), so there is one distinct before the verify
+    join and one shingle-verify join tree.  Cross-batch candidates come
+    from ALL batch docs, not just in-batch survivors."""
     other_bands = batch_bands.select(
         "band", "bucket", F.col(id_col).alias("other_id"),
         F.lit(False).alias("is_old"),
@@ -421,62 +373,110 @@ def process_near_dup_batch(
     a = sh_b.select(F.col(id_col).alias("new_id"), F.col("sh").alias("a_sh"))
     inter = F.size(F.array_intersect("a_sh", "b_sh"))
     union = F.size("a_sh") + F.size("b_sh") - inter
-    # no .distinct() on the drop set: it only ever feeds a left_anti
-    # join, which is duplicate-insensitive — each removed distinct is a
-    # removed shuffle stage per micro-batch
-    drops = (
+    return (
         cands.join(a, "new_id")
         .join(other_sh, "other_id")
         .filter((inter / union) >= threshold)
-        .select(F.col("new_id").alias(id_col))
-    )
-    # survivor-count probe rides the sink append (r14, Observation
-    # API): the write job materializes every row anyway, so the count
-    # falls out of the same job and the separate cache-local count job
-    # per fold disappears
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    survivors = batch.join(drops, id_col, "left_anti").observe(
-        obs, F.count(F.lit(1)).alias("n")
     )
 
-    survivors = survivors.cache()
-    try:
-        # append FIRST: the write job materializes the cache (and the
-        # observation); an all-dup batch appends one empty file —
-        # harmless, the reader filters parquet files by row content
-        wh.append(survivors, sink_table)
+
+def ledger_rows(bands: DataFrame, sh: DataFrame, id_col: str) -> DataFrame:
+    """One batch's combined ledger delta: band rows and shingle rows in
+    one frame (band IS NULL discriminates on read), so the ledger takes
+    ONE append job.  write_coalesce INSIDE the checkpointed lineage
+    (r13, guide §6): the union of two parallelism-wide checkpointed
+    frames otherwise writes ~64 tiny files per fold, re-listed and
+    re-read by every later fold through the ledger."""
+    return write_coalesce(bands.select(
+        id_col, "band", "bucket",
+        F.lit(None).cast(dict(sh.dtypes)["sh"]).alias("sh"),
+    ).unionByName(
+        sh.select(
+            id_col,
+            F.lit(None).cast(dict(bands.dtypes)["band"]).alias("band"),
+            F.lit(None).cast(dict(bands.dtypes)["bucket"]).alias("bucket"),
+            "sh",
+        )
+    ))
+
+
+def process_near_dup_batch(
+    wh: Warehouse,
+    batch: DataFrame,
+    sink_table: str,
+    threshold: float = 0.8,
+    num_perm: int = 32,
+    bands: int = 8,
+    shingle_n: int = 3,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    hash_fn: str = "xxhash64",
+    ledger: NearDupLedger | None = None,
+) -> None:
+    """One near-dup ledger pass (cross-batch MinHash LSH dedup):
+
+    1. in-batch: minhash_dedup_pairs over the batch, min-id keeps;
+    2. cross-batch: survivors' band buckets equi-join the bands ledger
+       (the SAME join shape as the batch operator, with the ledger as
+       the other side), exact-jaccard verify against the kept docs'
+       persisted shingle arrays;
+    3. survivors append to the sink, their bands + shingles to the ONE
+       combined ledger table — both through one manifest, so a crash
+       can never leave sink rows whose ledger rows are missing (the
+       replay would re-admit those docs as duplicates).
+
+    The ledger grows with the KEPT corpus only; both joins shuffle on
+    (band, bucket) / doc id — bounded keys, no cross join.  At 100 TB
+    the bands ledger is bucket-partitioned so a batch touches only its
+    colliding buckets' files."""
+    from ..pipeline.dedup import minhash_bands, shingle_arrays
+
+    def build(wh, batch, sp):
+        # eager localCheckpoint, not persist (r13): both frames feed
+        # many downstream statements, and with persist every action over
+        # them re-canonicalizes the full minhash expression tree on the
+        # driver for the cache lookup.  spread before the shingle
+        # transform (r13, guide §2.5): serial one-split batches otherwise
+        sh_b = shingle_arrays(spread(batch, id_col), shingle_n, text_col,
+                              id_col).localCheckpoint()
+        # signatures + band buckets computed ONCE for the whole batch;
+        # lazy checkpoint (r13): the sink append materializes the bands
+        # while sh_b's blocks are hot, the ledger delta then reads them
+        batch_bands = minhash_bands(
+            batch, num_perm, bands, shingle_n, text_col, id_col,
+            shingle_df=sh_b, hash_fn=hash_fn,
+        ).localCheckpoint(eager=False)
+        # no .distinct() on the drop set: it only ever feeds a left_anti
+        # join, which is duplicate-insensitive
+        drops = verified_pairs(
+            batch_bands, sh_b,
+            kept_ledger(wh, ledger, NEAR_DUP_LEDGER_TABLE), id_col,
+            threshold,
+        ).select(F.col("new_id").alias(id_col))
+        survivors = batch.join(drops, id_col, "left_anti").localCheckpoint(
+            eager=False)
+        # survivor-count probe rides the sink append (r14, Observation
+        # API); the append goes FIRST: it materializes the survivors and
+        # the observation — an all-dup batch appends one empty file
+        obs = Observation()
+        sp.stage_append_flat(
+            survivors.observe(obs, F.count(F.lit(1)).alias("n")),
+            sink_table,
+        )
         if obs.get["n"] == 0:
-            return
+            return {}
         keep_ids = survivors.select(id_col)
-        delta_bands = batch_bands.join(keep_ids, id_col, "left_semi")
-        delta_sh = sh_b.join(keep_ids, id_col, "left_semi")
-        # ONE ledger append: band rows and shingle rows union into the
-        # combined table (band IS NULL discriminates on read)
-        sh_type = dict(sh_b.dtypes)["sh"]
-        # write_coalesce INSIDE the checkpointed lineage (r13, guide
-        # §6): the union of two 32-partition checkpointed frames
-        # otherwise writes ~64 tiny files per fold, re-listed and
-        # re-read by every later fold through the ledger
-        combined_delta = write_coalesce(delta_bands.select(
-            id_col, "band", "bucket", F.lit(None).cast(sh_type).alias("sh")
-        ).unionByName(
-            delta_sh.select(
-                id_col,
-                F.lit(None).cast(dict(batch_bands.dtypes)["band"]).alias("band"),
-                F.lit(None).cast(dict(batch_bands.dtypes)["bucket"]).alias("bucket"),
-                "sh",
-            )
-        ))
+        delta = ledger_rows(
+            batch_bands.join(keep_ids, id_col, "left_semi"),
+            sh_b.join(keep_ids, id_col, "left_semi"),
+            id_col,
+        )
         if ledger is not None:
-            # checkpoint the delta while its parents are still cached;
-            # the durable append then reads the checkpoint blocks
-            # instead of recomputing the delta
-            combined_delta = ledger.advance(combined_delta)
-        wh.append(combined_delta, NEAR_DUP_LEDGER_TABLE)
-    finally:
-        survivors.unpersist()
+            delta = ledger.stage(delta)
+        return {NEAR_DUP_LEDGER_TABLE: delta}
+
+    fold(wh, batch, tables=(sink_table, NEAR_DUP_LEDGER_TABLE), key=None,
+         build=build, state=ledger)
 
 
 def stream_near_dup_ledger(
@@ -487,33 +487,16 @@ def stream_near_dup_ledger(
     wh: Warehouse,
     sink_table: str = "corpus_docs_neardup",
     threshold: float = 0.8,
-    max_files_per_trigger: int = 16,
     ledger: NearDupLedger | None = None,
 ):
     """Streaming near-duplicate corpus builder: each micro-batch dedups
     in-batch AND against everything kept so far (LSH bands + shingle
     verify ledger).  Pass a :class:`NearDupLedger` to skip the per-batch
     ledger re-read (caller owns ``ledger.close()`` after the run)."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_glob)
-    )
-
-    marker_dir = os.path.join(checkpoint_dir, "epoch_markers")
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        _with_epoch_marker(
-            marker_dir, epoch_id,
-            lambda: process_near_dup_batch(wh, batch, sink_table, threshold,
-                                           ledger=ledger),
-        )
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return stream_fold(
+        spark, landing_glob, schema, checkpoint_dir,
+        lambda batch, epoch_id, gen: process_near_dup_batch(
+            wh, batch, sink_table, threshold, ledger=ledger),
     )
 
 
@@ -526,7 +509,6 @@ def stream_exact_dedup_ledger(
     sink_table: str = "corpus_docs",
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_files_per_trigger: int = 16,
     broadcast_ledger: bool = True,
     bucketed_ledger: bool = False,
 ):
@@ -536,26 +518,10 @@ def stream_exact_dedup_ledger(
     reads the digest-BUCKETED ledger with zero Exchange on the ledger
     side (only the batch shuffles; plan-pinned); ``broadcast_ledger=
     False`` is the intermediate shuffle-both-sides form."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_glob)
-    )
-
-    marker_dir = os.path.join(checkpoint_dir, "epoch_markers")
     dl = BucketedDigestLedger(wh) if bucketed_ledger else None
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        _with_epoch_marker(
-            marker_dir, epoch_id,
-            lambda: process_dedup_batch(wh, batch, sink_table, text_col,
-                                        id_col, broadcast_ledger,
-                                        digest_ledger=dl),
-        )
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return stream_fold(
+        spark, landing_glob, schema, checkpoint_dir,
+        lambda batch, epoch_id, gen: process_dedup_batch(
+            wh, batch, sink_table, text_col, id_col, broadcast_ledger,
+            digest_ledger=dl),
     )

@@ -52,23 +52,7 @@ from ..operators.snapshot import snapshot
 from ..specs import DatasourceSpec
 from ..session import adopt
 from ..storage import Warehouse
-
-
-def with_epoch_marker(marker_dir: str, epoch_id: int, apply_fn) -> None:
-    """Committed-epoch marker protocol, shared by every foreachBatch
-    sink in this package: skip if the epoch's marker exists, otherwise
-    apply then commit the marker atomically (tmp + rename).  One
-    implementation so the commit sequence cannot silently diverge
-    between the ingest and ledger paths (r5 code review)."""
-    marker = os.path.join(marker_dir, f"epoch-{epoch_id}.done")
-    if os.path.exists(marker):
-        return
-    apply_fn()
-    os.makedirs(marker_dir, exist_ok=True)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write("committed")
-    os.replace(tmp, marker)
+from .fold import with_epoch_marker
 
 
 def process_staged_batch(

@@ -19,12 +19,11 @@ arrival == min id and the profile equals the one-shot batch
 streaming-native meaning ("novel at ingest time"); the batch equality is
 the ordered case.
 
-Replay protocol: the per-doc stat rows and the new-owner rows land
-through ONE txn.StagedPass manifest (atomic at rest, crash-invisible to
-readers — the package-wide D1 shape), and a checkpoint-replayed epoch
-short-circuits on a ``limit(1)`` epoch probe (streaming/quantiles.py's
-protocol) — an appended-then-replayed batch cannot double-count a doc or
-steal a gram it already owns.
+Replay protocol (streaming/fold.py documents it once): the per-doc stat
+rows and the new-owner rows land through one manifest, and a
+checkpoint-replayed epoch short-circuits on the stat table's epoch key
+— an appended-then-replayed batch cannot double-count a doc or steal a
+gram it already owns.
 
 Scale shape per batch at 100 TB: one explode -> per-doc distinct (the
 batch), one gram-keyed min (batch owners, partial agg), one gram-keyed
@@ -43,8 +42,8 @@ from pyspark.sql import functions as F
 
 from ..pipeline.corpus import _word_ngrams
 from ..pipeline.spread import spread
-from ..session import adopt
 from ..storage import Warehouse
+from .fold import fold
 
 OWNERS_TABLE = "novelty_first_owner"
 STATS_TABLE = "novelty_doc_stats"
@@ -63,69 +62,54 @@ def process_novelty_batch(
     """Fold one micro-batch into the first-owner ledger + per-doc stat
     table; returns False when the epoch already landed (checkpoint
     replay)."""
-    from ..txn import GLOBAL_LANE, StagedPass
+    epoch = F.lit(int(epoch_id)).cast("long")
 
-    from .epochs import epoch_replayed, landed
+    def build(wh, batch, sp):
+        # spread before the gram explode (r13, guide §2.5) — see the
+        # postings fold: serial one-split batches otherwise
+        grams = (
+            _word_ngrams(spread(batch, id_col), n, text_col, id_col)
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
+        owners = grams.groupBy("gram").agg(
+            F.min(id_col).alias("first_doc"))
+        if wh.exists(owners_table):
+            owners = owners.join(
+                wh.read(owners_table).select("gram"), "gram", "left_anti"
+            )
+        # owners feeds the ledger append AND the per-doc novel rollup
+        # (concurrent writes over a shared lazy localCheckpoint
+        # serialize its materialization in the block manager; each side
+        # then reads the blocks)
+        owners = owners.localCheckpoint(eager=False)
+        novel = owners.groupBy(F.col("first_doc").alias(id_col)).agg(
+            F.count(F.lit(1)).alias("n_novel")
+        )
+        stats = (
+            batch.select(id_col)
+            .join(
+                grams.groupBy(id_col).agg(
+                    F.count(F.lit(1)).alias("n_grams")
+                ),
+                id_col, "left",
+            )
+            .join(novel, id_col, "left")
+            .select(
+                id_col,
+                F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
+                F.coalesce("n_novel", F.lit(0)).alias("n_novel"),
+                epoch.alias("epoch"),
+            )
+        )
+        return {
+            owners_table: owners.withColumn("epoch", epoch)
+            .select("gram", "first_doc", "epoch"),
+            stats_table: stats,
+        }
 
-    wh = wh.engine()
-    batch = adopt(wh.spark, batch)
-    StagedPass.recover(wh, GLOBAL_LANE)
-    StagedPass.sweep_flat_stages(wh, owners_table)
-    StagedPass.sweep_flat_stages(wh, stats_table)
-    # in-process replay memo (r13): a dict lookup instead of one
-    # limit(1) probe job per micro-batch; cold entries seed once
-    if epoch_replayed(wh, stats_table, int(epoch_id)):
-        return False
-    # spread before the gram explode (r13, guide §2.5) — see the
-    # postings fold: serial one-split batches otherwise
-    grams = (
-        _word_ngrams(spread(batch, id_col), n, text_col, id_col)
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    owners = grams.groupBy("gram").agg(F.min(id_col).alias("first_doc"))
-    if wh.exists(owners_table):
-        owners = owners.join(
-            wh.read(owners_table).select("gram"), "gram", "left_anti"
-        )
-    # owners feeds the ledger append AND the per-doc novel rollup
-    owners = owners.localCheckpoint(eager=False)
-    novel = owners.groupBy(F.col("first_doc").alias(id_col)).agg(
-        F.count(F.lit(1)).alias("n_novel")
-    )
-    stats = (
-        batch.select(id_col)
-        .join(
-            grams.groupBy(id_col).agg(
-                F.count(F.lit(1)).alias("n_grams")
-            ),
-            id_col, "left",
-        )
-        .join(novel, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
-            F.coalesce("n_novel", F.lit(0)).alias("n_novel"),
-            F.lit(int(epoch_id)).cast("long").alias("epoch"),
-        )
-    )
-    sp = StagedPass(wh, GLOBAL_LANE)
-    # two distinct tables over the shared owners/grams checkpoints —
-    # overlapped staged writes (r14, guide §2.6; concurrent actions on
-    # a shared lazy localCheckpoint serialize its materialization in
-    # the block manager, each side then reads the blocks)
-    sp.stage_concurrently(
-        lambda: sp.stage_append_flat(
-            owners.withColumn(
-                "epoch", F.lit(int(epoch_id)).cast("long")
-            ).select("gram", "first_doc", "epoch"),
-            owners_table,
-        ),
-        lambda: sp.stage_append_flat(stats, stats_table),
-    )
-    sp.publish()
-    landed(wh, stats_table, int(epoch_id))
-    return True
+    return fold(wh, batch, tables=(owners_table, stats_table),
+                key=(stats_table, int(epoch_id)), build=build)
 
 
 def novelty_profile(

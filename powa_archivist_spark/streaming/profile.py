@@ -26,7 +26,6 @@ live dir while writing the tmp dir — no self-clobber window).
 
 from __future__ import annotations
 
-import os
 from typing import Sequence
 
 from pyspark.sql import DataFrame
@@ -34,7 +33,7 @@ from pyspark.sql import DataFrame
 from ..pipeline.sketches import hll_estimate, hll_merge, hll_registers
 from ..session import adopt
 from ..storage import Warehouse
-from .ingest import with_epoch_marker as _with_epoch_marker
+from .fold import stream_fold
 
 HLL_TABLE = "profile_hll_registers"
 
@@ -75,28 +74,12 @@ def stream_hll_profile(
     key_col: str,
     group_cols: Sequence[str],
     p: int = 9,
-    max_files_per_trigger: int = 16,
 ):
-    """Structured Streaming wrapper: landing files -> foreachBatch
-    register fold, with the package's committed-epoch markers (replay
-    is harmless here — idempotent merge — the marker only skips wasted
-    work).  ``availableNow``: the query ends once the landing drains."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_glob)
-    )
-    marker_dir = os.path.join(checkpoint_dir, "epoch_markers")
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        _with_epoch_marker(
-            marker_dir, epoch_id,
-            lambda: process_hll_batch(wh, batch, key_col, group_cols, p),
-        )
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Structured Streaming wrapper (:func:`~.fold.stream_fold`):
+    landing files -> register fold.  Replay is harmless here —
+    idempotent merge — so the epoch marker only skips wasted work."""
+    return stream_fold(
+        spark, landing_glob, schema, checkpoint_dir,
+        lambda batch, epoch_id, gen: process_hll_batch(
+            wh, batch, key_col, group_cols, p),
     )

@@ -12,11 +12,10 @@ NOT idempotent — a replayed epoch would double-count its population and
 re-admit its survivors — so the fold follows the dedup-ledger shape,
 not the register-overwrite shape:
 
-- the epoch's sketch rows append through ONE txn.StagedPass manifest
-  (atomic at rest, crash-invisible to readers);
-- a replay short-circuit probes the table for the epoch id with a
-  ``limit(1)`` job (same protocol as streaming/pq_ingest.py) — a
-  checkpoint-replayed epoch whose rows landed is a no-op.
+each epoch's sketch rows append through the ledger-fold runner
+(streaming/fold.py, which documents the replay protocol once): one
+manifest per epoch, and a checkpoint-replayed epoch whose rows landed
+is a no-op.
 
 At-rest size: epochs x groups x ~k rows.  ``compact_profile`` folds
 all epochs into a single merged epoch (the sketch compaction is
@@ -40,8 +39,8 @@ from ..pipeline.sketches import (
     level_sample_quantiles,
     level_sample_sketch,
 )
-from ..session import adopt
 from ..storage import Warehouse
+from .fold import compact_ledger, fold
 
 KLL_TABLE = "profile_quantile_sketch"
 
@@ -80,26 +79,12 @@ def process_quantile_batch(
 ) -> bool:
     """Fold one micro-batch's sketch into the at-rest ledger; returns
     False when the epoch already landed (checkpoint replay)."""
-    from ..txn import GLOBAL_LANE, StagedPass
-
-    from .epochs import epoch_replayed, landed
-
-    wh = wh.engine()
-    batch = adopt(wh.spark, batch)
-    StagedPass.recover(wh, GLOBAL_LANE)
-    StagedPass.sweep_flat_stages(wh, table)
-    # in-process replay memo (r13): a dict lookup instead of one
-    # limit(1) probe job per micro-batch; cold entries seed once
-    if epoch_replayed(wh, table, int(epoch_id)):
-        return False
-    sk = level_sample_sketch(batch, value_col, id_col, group_cols, k)
-    sp = StagedPass(wh, GLOBAL_LANE)
-    sp.stage_append_flat(
-        sk.withColumn("epoch", F.lit(int(epoch_id)).cast("long")), table
+    return fold(
+        wh, batch, tables=(table,), key=(table, int(epoch_id)),
+        build=lambda wh, batch, sp: {table: level_sample_sketch(
+            batch, value_col, id_col, group_cols, k
+        ).withColumn("epoch", F.lit(int(epoch_id)).cast("long"))},
     )
-    sp.publish()
-    landed(wh, table, int(epoch_id))
-    return True
 
 
 def quantile_profile(
@@ -122,25 +107,6 @@ def compact_profile(
     table: str = KLL_TABLE,
 ) -> None:
     """Fold all at-rest epochs into one (epoch = max seen), re-bounding
-    the ledger to ~groups x k rows; the swap commits through one
-    manifest like every other replace."""
-    from ..txn import GLOBAL_LANE, StagedPass
-
-    wh = wh.engine()
-    StagedPass.recover(wh, GLOBAL_LANE)
-    if not wh.exists(table):
-        return
-    rows = wh.read(table)
-    top = rows.agg(F.max("epoch").alias("e")).collect()[0].e
-    if top is None:
-        # empty ledger: nothing to fold — a no-op beats staging a
-        # replace whose epoch cast would raise TypeError on None
-        return
-    merged = _merged_survivors(rows, group_cols, k).withColumn(
-        "epoch", F.lit(int(top)).cast("long")
-    )
-    sp = StagedPass(wh, GLOBAL_LANE)
-    sp.stage_replace_flat(
-        merged.select(*rows.columns).localCheckpoint(), table
-    )
-    sp.publish()
+    the ledger to ~groups x k rows."""
+    compact_ledger(wh, table,
+                   lambda rows: _merged_survivors(rows, group_cols, k))

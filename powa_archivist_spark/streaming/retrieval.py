@@ -14,11 +14,9 @@ Disjoint-union merge is not idempotent any more than the CMS sum is —
 a replayed epoch would duplicate every posting it carries — so the fold
 follows the ledger shape (streaming/cms.py, streaming/quantiles.py):
 
-- both frames append through ONE txn.StagedPass manifest (atomic at
-  rest, crash-invisible to readers);
-- a replay short-circuit probes the postings table for the epoch id
-  with a ``limit(1)`` job — a checkpoint-replayed epoch whose rows
-  landed is a no-op.
+both frames append through the ledger-fold runner (streaming/fold.py,
+which documents the replay protocol once): one manifest per epoch, and
+a checkpoint-replayed epoch whose postings landed is a no-op.
 
 The profile after ANY batch arrival order equals the ONE-SHOT batch
 BM25 over the union of the docs (tested bit-for-bit): the postings
@@ -40,8 +38,8 @@ from ..pipeline.textstats import (
     bm25_wand_from_index,
 )
 from ..pipeline.spread import spread
-from ..session import adopt
 from ..storage import Warehouse
+from .fold import fold
 
 POSTINGS_TABLE = "retrieval_postings"
 STATS_TABLE = "retrieval_corpus_stats"
@@ -60,41 +58,25 @@ def process_postings_batch(
     ledger; returns False when the epoch already landed (checkpoint
     replay — the short-circuit is load-bearing: a duplicated epoch
     would double its docs' postings and inflate n_docs)."""
-    from ..txn import GLOBAL_LANE, StagedPass
+    epoch = F.lit(int(epoch_id)).cast("long")
 
-    from .epochs import epoch_replayed, landed
+    def build(wh, batch, sp):
+        toks = F.split(F.col(text_col), " ")
+        # spread before the postings explode (r13, guide §2.5): a batch
+        # cut from few parquet splits runs the tokenize + explode +
+        # partial count serially otherwise; probe-gated no-op for
+        # many-file batches
+        post = bm25_postings(spread(batch, id_col), text_col,
+                             id_col).withColumn("epoch", epoch)
+        stats = batch.select(F.size(toks).alias("dlen")).agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("dlen").alias("sum_dlen"),
+        ).withColumn("epoch", epoch)
+        # independent frames (both derive straight from the batch scan)
+        return {table: post, stats_table: stats}
 
-    wh = wh.engine()
-    batch = adopt(wh.spark, batch)
-    StagedPass.recover(wh, GLOBAL_LANE)
-    StagedPass.sweep_flat_stages(wh, table)
-    StagedPass.sweep_flat_stages(wh, stats_table)
-    # in-process replay memo (r13): a dict lookup instead of one
-    # limit(1) probe job per micro-batch; cold entries seed once
-    if epoch_replayed(wh, table, int(epoch_id)):
-        return False
-    toks = F.split(F.col(text_col), " ")
-    # spread before the postings explode (r13, guide §2.5): a batch cut
-    # from few parquet splits runs the tokenize + explode + partial
-    # count serially otherwise; probe-gated no-op for many-file batches
-    post = bm25_postings(spread(batch, id_col), text_col,
-                         id_col).withColumn(
-        "epoch", F.lit(int(epoch_id)).cast("long")
-    )
-    stats = batch.select(F.size(toks).alias("dlen")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dlen").alias("sum_dlen"),
-    ).withColumn("epoch", F.lit(int(epoch_id)).cast("long"))
-    sp = StagedPass(wh, GLOBAL_LANE)
-    # independent frames (both derive straight from the batch scan),
-    # distinct tables — overlapped staged writes (r14, guide §2.6)
-    sp.stage_concurrently(
-        lambda: sp.stage_append_flat(post, table),
-        lambda: sp.stage_append_flat(stats, stats_table),
-    )
-    sp.publish()
-    landed(wh, table, int(epoch_id))
-    return True
+    return fold(wh, batch, tables=(table, stats_table),
+                key=(table, int(epoch_id)), build=build)
 
 
 def bm25_profile(

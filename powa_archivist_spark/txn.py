@@ -446,10 +446,10 @@ class StagedPass:
                     os.remove(p)
                 done += 1
         if done:
-            # epochs landed WITHOUT their fold's landed() call (the
+            # epochs landed WITHOUT their fold's memo registration (the
             # fold crashed after its commit point) — the streaming
             # replay memo must re-seed from the tables (r13)
-            from .streaming.epochs import invalidate
+            from .streaming.fold import invalidate
 
             invalidate(wh.root)
         if not sweep:
@@ -563,7 +563,7 @@ def heal_table(wh, table: str) -> int:
     if folded:
         # see StagedPass.recover: healed manifests can land epochs the
         # streaming replay memo never saw (r13)
-        from .streaming.epochs import invalidate
+        from .streaming.fold import invalidate
 
         invalidate(wh.root)
     return folded

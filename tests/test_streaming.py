@@ -18,6 +18,7 @@ from powa_archivist_spark.storage import Warehouse
 from powa_archivist_spark.streaming.ingest import drain, ingest_stream
 
 from .conftest import ts
+from .test_layout import SF
 
 SPEC = PG_STAT_BGWRITER
 
@@ -751,6 +752,61 @@ def test_near_dup_ledger_cache_survives_restart(spark, wh):
     kept = sorted(r.doc_id for r in wh.read("nd_sink").collect())
     assert kept == [0, 1, 2], kept
 
+def test_near_dup_batch_commit_is_atomic_and_replay_idempotent(spark, wh):
+    """The near-dup sink append and its bands+shingles ledger append
+    commit through ONE manifest: a crash before the commit point leaves
+    neither table (and the ledger cache untouched), a crash after it
+    shows readers both, and the replay of that batch adds no sink row
+    (the healed ledger already holds every doc of the batch)."""
+    from powa_archivist_spark import txn as txn_mod
+    from powa_archivist_spark.streaming.dedup import (
+        NEAR_DUP_LEDGER_TABLE,
+        NearDupLedger,
+        process_near_dup_batch,
+    )
+    from powa_archivist_spark.txn import StagedPass
+
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    other = "completely different words entirely unrelated content here now ok"
+    batch = spark.createDataFrame(
+        [(0, base), (1, other), (2, base + " x")], "doc_id long, text string"
+    )
+    led = NearDupLedger()
+
+    class Boom(RuntimeError):
+        pass
+
+    # (a) crash before the manifest rename: NOTHING visible
+    real_publish = StagedPass.publish
+    StagedPass.publish = lambda self: (_ for _ in ()).throw(Boom())
+    try:
+        with pytest.raises(Boom):
+            process_near_dup_batch(wh, batch, "nd_sink", ledger=led)
+    finally:
+        StagedPass.publish = real_publish
+    assert not wh.exists("nd_sink")
+    assert not wh.exists(NEAR_DUP_LEDGER_TABLE)
+    assert led.combined is None
+
+    # (b) crash after the commit point (zero ops folded): readers see
+    # BOTH tables; the cache still waits for a published pass
+    real_apply = txn_mod._apply_ops
+    txn_mod._apply_ops = lambda w, ops: (_ for _ in ()).throw(Boom())
+    try:
+        with pytest.raises(Boom):
+            process_near_dup_batch(wh, batch, "nd_sink", ledger=led)
+    finally:
+        txn_mod._apply_ops = real_apply
+    assert sorted(r.doc_id for r in wh.read("nd_sink").collect()) == [0, 1]
+    assert wh.read(NEAR_DUP_LEDGER_TABLE).count() > 0
+    assert led.combined is None
+
+    # (c) replay of the batch: recovery completes the pass, every doc
+    # near-dups its own ledger row — no sink row is re-admitted
+    process_near_dup_batch(wh, batch, "nd_sink", ledger=led)
+    assert sorted(r.doc_id for r in wh.read("nd_sink").collect()) == [0, 1]
+
+
 def test_stream_curation_pipeline(spark, wh):
     """Streaming curation e2e (gate -> cross-batch exact dedup -> split
     -> sink, rejects ledgered with reasons) through the real streaming
@@ -1094,10 +1150,46 @@ def test_stream_pq_ingest_runtime(spark, wh):
 
     # marker-less replay of a published epoch: the (gen, epoch)
     # short-circuit must see the rows and skip the append
-    gen = os.path.basename(ckpt.rstrip("/"))
+    with open(os.path.join(ckpt, "stream_gen.id")) as f:
+        gen = f.read().strip()
     process_pq_batch(wh, emb.filter(F.col("vec_id") % 4 == 1),
                      m=8, epoch_id=0, stream_gen=gen)
     assert pq_codes(wh).count() == n0
+
+
+def test_stream_pq_ingest_fresh_checkpoint_lands_new_vectors(spark, wh):
+    """A checkpoint wiped and recreated at the SAME path restarts epoch
+    ids at 0: the replay key's generation must change with it, or the
+    new run's epoch 0 matches the old run's published epoch 0 and its
+    vectors are silently skipped."""
+    import shutil
+
+    from powa_archivist_spark.streaming.pq_ingest import (
+        pq_bootstrap,
+        pq_codes,
+        stream_pq_ingest,
+    )
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").filter(
+        F.col("vec_id") < 40)
+    pq_bootstrap(wh, emb.filter(F.col("vec_id") % 4 == 0),
+                 m=8, n_codes_target=8)
+    ckpt = tempfile.mkdtemp(prefix="pqckpt_")
+    for run, b in enumerate((1, 2)):
+        landing = tempfile.mkdtemp(prefix="pqlanding_")
+        emb.filter(F.col("vec_id") % 4 == b).coalesce(1).write.parquet(
+            os.path.join(landing, "b"))
+        if run:
+            shutil.rmtree(ckpt)
+            os.makedirs(ckpt)
+        q = stream_pq_ingest(spark, landing + "/*", emb.schema, ckpt, wh,
+                             m=8)
+        q.processAllAvailable()
+        q.stop()
+    got = {r.vec_id for r in pq_codes(wh).collect()}
+    second = {r.vec_id
+              for r in emb.filter(F.col("vec_id") % 4 == 2).collect()}
+    assert second and second <= got, sorted(second - got)
 
 
 def test_bm25_postings_ledger_replay_and_one_shot_equality(spark, wh):
@@ -1550,3 +1642,86 @@ def test_components_ledger_cross_component_merge_via_remap(spark, wh):
     remap = {r.from_label: r.to_label
              for r in wh.read(COMP_REMAP_TABLE).collect()}
     assert remap == {5: 0}, remap
+
+
+def _land_replay_probe_epoch(fold_name, spark, wh):
+    """One epoch-keyed fold as a ``call(epoch)`` thunk over small
+    inputs; the caller lands epoch 0, then replays it."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet").filter(
+        F.col("doc_id") < 40).select("doc_id", "text")
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").filter(
+        F.col("vec_id") < 40)
+    ev = spark.read.parquet(f"{SF}/events.parquet").filter(
+        F.col("event_id") < 200)
+    if fold_name == "cms":
+        from powa_archivist_spark.streaming.cms import process_cms_batch
+
+        return lambda e: process_cms_batch(wh, ev, e, "user_id",
+                                           ["event_type"])
+    if fold_name == "quantiles":
+        from powa_archivist_spark.streaming.quantiles import (
+            process_quantile_batch)
+
+        return lambda e: process_quantile_batch(
+            wh, ev, e, "value", "event_id", ["event_type"])
+    if fold_name == "retrieval":
+        from powa_archivist_spark.streaming.retrieval import (
+            process_postings_batch)
+
+        return lambda e: process_postings_batch(wh, docs, e)
+    if fold_name == "novelty":
+        from powa_archivist_spark.streaming.novelty import (
+            process_novelty_batch)
+
+        return lambda e: process_novelty_batch(wh, docs, e)
+    if fold_name == "kmeans":
+        from powa_archivist_spark.streaming.clustering import (
+            process_kmeans_batch)
+
+        return lambda e: process_kmeans_batch(wh, emb, e, k=3,
+                                              init_rounds=2, max_rounds=6)
+    if fold_name == "components":
+        from powa_archivist_spark.streaming.components import (
+            process_components_batch)
+
+        return lambda e: process_components_batch(wh, docs, e)
+    if fold_name == "pq":
+        from powa_archivist_spark.streaming.pq_ingest import (
+            pq_bootstrap, process_pq_batch)
+
+        pq_bootstrap(wh, emb.filter(F.col("vec_id") % 4 == 0),
+                     m=8, n_codes_target=8)
+        return lambda e: process_pq_batch(wh, emb, m=8, epoch_id=e,
+                                          stream_gen="g")
+    from powa_archivist_spark.streaming.curation import (
+        process_curation_batch)
+
+    return lambda e: process_curation_batch(
+        wh, docs, "cur_sink", {"min_tokens": 20}, epoch_id=e,
+        stream_gen="g")
+
+
+@pytest.mark.parametrize("fold_name", [
+    "cms", "quantiles", "retrieval", "novelty", "kmeans", "components",
+    "pq", "curation",
+])
+def test_replayed_epoch_launches_no_spark_job(spark, wh, fold_name):
+    """The fold runner's replay probe is an in-process memo lookup: once
+    epoch 0 landed, folding epoch 0 again launches no Spark job at all —
+    no seed read, no build, no write."""
+    call = _land_replay_probe_epoch(fold_name, spark, wh)
+    sc = spark.sparkContext
+
+    def jobs_of(group, epoch):
+        sc.setJobGroup(group, f"{fold_name} epoch {epoch}")
+        try:
+            out = call(epoch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
+    _, landing_jobs = jobs_of(f"land-{fold_name}", 0)
+    assert landing_jobs, "the landing fold ran no job under its group"
+    out, replay_jobs = jobs_of(f"replay-{fold_name}", 0)
+    assert out in (False, None)
+    assert replay_jobs == [], replay_jobs

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.packing import pack
-from ..session import concurrently
+from ..session import concurrently, observe_rows
 from ..specs import DatasourceSpec
 from ..storage import Warehouse
 
@@ -58,21 +58,14 @@ def _aggregate_one(
         wh.read(current_table, spec.current_schema)
         .filter(F.col("srvid") == srvid)
     )
-    packed = pack(cur, spec).withColumn("range_day", F.to_date("range_end"))
-    # cache the packed output (~coalesce:1 smaller than current) so the
-    # count and the write don't each re-run the pack groupBy
-    packed = packed.persist()
-    try:
-        n = packed.count()
-        if n > 0:
-            wh.append(packed, history_table,
-                      partition_by=["srvid", "range_day"])
-    finally:
-        packed.unpersist()
+    packed, rows = observe_rows(
+        pack(cur, spec).withColumn("range_day", F.to_date("range_end")))
+    # an empty partitioned append writes no file
+    wh.append(packed, history_table, partition_by=["srvid", "range_day"])
     # drain the current partition (DELETE FROM *_current WHERE srvid —
     # powa--5.2.0.sql:6051-6056)
     wh.drop_srvid(current_table, srvid)
-    return n
+    return rows()
 
 
 def _db_subspec(spec: DatasourceSpec) -> DatasourceSpec:

@@ -12,10 +12,12 @@ capture:
                     constvalues_history_current (:7156-7166)
     cleanup      := drop the srvid staging partition (:7180-7182)
 
-Spark shape: the capture is cached once and fans out to the three writes
-(D1 multi-sink); the quals dictionary insert is an anti-join (J3, same
-pattern as the statements dictionary); the rollup is one map-side
-combinable groupBy.  The downstream jobs — packing, purge, reset and the
+Spark shape: the gated capture is cached and fans out to the three
+writes (D1 multi-sink), which run at once; ``v_rowcount`` is observed on
+the constvalues write (one row per capture row), so the gate's broadcast
+and the three writes are the pass's only jobs.  The quals dictionary
+insert is an anti-join (J3); the rollup is one map-side combinable
+groupBy.  The downstream jobs — packing, purge, reset and the
 constvalues top-20 ranking (operators/topk.py) — run off the same
 current tables through the generic spec machinery.
 """
@@ -28,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import observe_rows
 from ..specs import QUALSTATS_SPEC
 from ..storage import Warehouse
 from . import dictionary
@@ -106,15 +109,18 @@ def qualstats_snapshot(
     # statements gate (J2): qualstats rows must reference known
     # statements (:7116-7124)
     capture = dictionary.gate_to_statements(wh, srvid, capture)
+    # the gate's broadcast and the staging scan run once for all sinks
     capture = capture.cache()
     try:
-        n = capture.count()
-        if n > 0:
-            sp = StagedPass(wh, srvid)
-            _merge_missing_quals(wh, srvid, capture, sp)
-            _append_by_qual(wh, capture, sp)
-            _append_constvalues(wh, capture, sp)
-            sp.publish()
+        sp = StagedPass(wh, srvid)
+        missing = _missing_quals(wh, srvid, capture)
+        _, _, n = sp.stage_concurrently(
+            lambda: sp.stage_append(missing, QUALS_TABLE),
+            lambda: sp.stage_append(
+                _by_qual(capture), Warehouse.current(QUALSTATS_SPEC.name)),
+            lambda: sp.stage_append(_constvalues(capture), CONSTVALUES_TABLE),
+        )
+        sp.publish()
         if drop_staging and wh.exists(Warehouse.src_tmp(QUALSTATS_SPEC.name)):
             wh.drop_srvid(Warehouse.src_tmp(QUALSTATS_SPEC.name), srvid)
         return n
@@ -122,8 +128,8 @@ def qualstats_snapshot(
         capture.unpersist()
 
 
-def _merge_missing_quals(wh: Warehouse, srvid: int,
-                         capture: DataFrame, sp) -> None:
+def _missing_quals(wh: Warehouse, srvid: int,
+                   capture: DataFrame) -> DataFrame:
     """missing_quals (powa--5.2.0.sql:7126-7143): one dictionary row per
     (qualid, queryid, dbid, userid) holding the DISTINCT qual atoms.
     ``array_agg(DISTINCT q::qual_type)`` -> sort_array(collect_set(atom))
@@ -144,18 +150,19 @@ def _merge_missing_quals(wh: Warehouse, srvid: int,
         .filter(F.col("srvid") == srvid)
         .select(*QUAL_KEYS)
     )
-    missing = seen.join(existing, QUAL_KEYS, "left_anti")
-    if missing.limit(1).count() > 0:
-        sp.stage_append(missing, QUALS_TABLE)
+    # seen is already partitioned on the keys (groupBy), so a shuffled
+    # anti-join adds one stage to the write job where a broadcast of
+    # the dictionary would run a job of its own
+    return seen.join(existing.hint("shuffle_hash"), QUAL_KEYS, "left_anti")
 
 
-def _append_by_qual(wh: Warehouse, capture: DataFrame, sp) -> None:
+def _by_qual(capture: DataFrame) -> DataFrame:
     """by_qual (powa--5.2.0.sql:7145-7154): per-qual rollup — the
     uniquequalnodeid-level rows (one per plan-node instance) collapse to
     the qualnodeid level.  SUMs and AVGs are map-side combinable; the
     output lands in the generic spec's current table so packing / purge /
     diff-rate machinery applies unchanged."""
-    rolled = (
+    return (
         capture.groupBy(
             F.col("srvid").cast("int").alias("srvid"),
             F.col("qualnodeid").alias("qualid"),
@@ -174,14 +181,13 @@ def _append_by_qual(wh: Warehouse, capture: DataFrame, sp) -> None:
             "mean_err_estimate_ratio", "mean_err_estimate_num",
         )
     )
-    sp.stage_append(rolled, Warehouse.current(QUALSTATS_SPEC.name))
 
 
-def _append_constvalues(wh: Warehouse, capture: DataFrame, sp) -> None:
+def _constvalues(capture: DataFrame) -> DataFrame:
     """by_qual_with_const (powa--5.2.0.sql:7156-7166): raw rows with
     their constvalues, feeding the top-20 aggregation job
     (operators/topk.py)."""
-    rows = capture.select(
+    return capture.select(
         F.col("srvid").cast("int"),
         F.col("qualnodeid").alias("qualid"),
         "queryid", "dbid", "userid", "ts",
@@ -189,7 +195,6 @@ def _append_constvalues(wh: Warehouse, capture: DataFrame, sp) -> None:
         "mean_err_estimate_ratio", "mean_err_estimate_num",
         "constvalues",
     )
-    sp.stage_append(rows, CONSTVALUES_TABLE)
 
 
 def qualstats_aggregate(wh: Warehouse, srvid: int) -> int:
@@ -211,8 +216,8 @@ def qualstats_aggregate(wh: Warehouse, srvid: int) -> int:
     generic purge's partition-drop fast path applies."""
     from .topk import qualstats_constvalues_topk
 
-    # engine session: the persisted ranking below would otherwise plan
-    # every exchange at the analytics posture's 256 partitions
+    # engine session: the ranking below would otherwise plan every
+    # exchange at the analytics posture's 256 partitions
     wh = wh.engine()
     if not wh.exists(CONSTVALUES_TABLE):
         return 0
@@ -234,18 +239,12 @@ def qualstats_aggregate(wh: Warehouse, srvid: int) -> int:
         "most_used", "most_filtering", "least_filtering",
         "most_executed", "most_errestim_ratio", "most_errestim_num",
     ).withColumn("range_day", F.to_date("range_end"))
-    # cache the packed output (small: <= one row per qual) so the count
-    # and the write don't each re-run the 6-ranking window job
-    out = out.persist()
-    try:
-        n = out.count()
-        if n > 0:
-            wh.append(out, CONSTVALUES_HISTORY_TABLE,
-                      partition_by=["srvid", "range_day"])
-    finally:
-        out.unpersist()
+    # an empty partitioned append writes no file
+    out, rows = observe_rows(out)
+    wh.append(out, CONSTVALUES_HISTORY_TABLE,
+              partition_by=["srvid", "range_day"])
     wh.drop_srvid(CONSTVALUES_TABLE, srvid)
-    return n
+    return rows()
 
 
 def purge_constvalues_history(

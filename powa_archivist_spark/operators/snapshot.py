@@ -11,10 +11,13 @@ Reference: the generated ``<ds>_snapshot`` functions
     cleanup   := DELETE staging rows for srvid
 
 Spark shape: cache the capture once, run the dependent writes, then drop
-the staging partition.  The per-db rollup is materialized at write time on
-purpose ("first screens stay reactive" — powa--5.2.0.sql:4013-4015): at
-100 TB the rollup is a map-side-combine groupBy over the snapshot slice
-only, never a re-aggregation of history.
+the staging partition.  The captured row count is observed on the
+current-table append itself, so no count job runs; the rollup, overlap
+and replay branches all key off it.  The per-db rollup is materialized
+at write time on purpose ("first screens stay reactive" —
+powa--5.2.0.sql:4013-4015): at 100 TB the rollup is a map-side-combine
+groupBy over the snapshot slice only, never a re-aggregation of
+history.
 """
 
 from __future__ import annotations
@@ -140,8 +143,10 @@ def snapshot(
             new_rows = cap_a.join(
                 F.broadcast(ex_a), same_row, "left_anti"
             ).cache()
-            n = new_rows.count()
-            if n > 0:
+        n = sp.stage_append(new_rows, current_t)
+        if n > 0 and spec.db_rollup:
+            db_t = Warehouse.current_db(spec.name)
+            if new_rows is not capture:
                 # snapshot timestamps this batch SHARES with committed
                 # rows: their rollups must be recomputed, not appended
                 overlap_ts = [
@@ -150,38 +155,31 @@ def snapshot(
                     .join(existing.select("ts").distinct(), "ts", "left_semi")
                     .collect()
                 ]
-        else:
-            new_rows = capture
-            n = capture.count()
-        if n > 0:
-            sp.stage_append(new_rows, current_t)
-            if spec.db_rollup:
-                db_t = Warehouse.current_db(spec.name)
-                if overlap_ts:
-                    # post-append current slice for the overlapped ts,
-                    # WITHOUT reading the append back (it is not even
-                    # visible yet — staged): committed rows ∪ new rows
-                    updated = (
-                        existing.filter(F.col("ts").isin(overlap_ts))
-                        .unionByName(
-                            new_rows.filter(F.col("ts").isin(overlap_ts))
-                        )
+            if overlap_ts:
+                # post-append current slice for the overlapped ts,
+                # WITHOUT reading the append back (it is not even
+                # visible yet — staged): committed rows ∪ new rows
+                updated = (
+                    existing.filter(F.col("ts").isin(overlap_ts))
+                    .unionByName(
+                        new_rows.filter(F.col("ts").isin(overlap_ts))
                     )
-                    fresh = db_rollup_agg(updated, spec).unionByName(
-                        db_rollup_agg(
-                            new_rows.filter(~F.col("ts").isin(overlap_ts)),
-                            spec,
-                        )
+                )
+                fresh = db_rollup_agg(updated, spec).unionByName(
+                    db_rollup_agg(
+                        new_rows.filter(~F.col("ts").isin(overlap_ts)),
+                        spec,
                     )
-                    if wh.exists(db_t):
-                        kept = wh.read(db_t).filter(
-                            (F.col("srvid") == srvid)
-                            & ~F.col("ts").isin(overlap_ts)
-                        )
-                        fresh = kept.unionByName(fresh)
-                    sp.stage_replace(fresh, db_t)
-                else:
-                    sp.stage_append(db_rollup_agg(new_rows, spec), db_t)
+                )
+                if wh.exists(db_t):
+                    kept = wh.read(db_t).filter(
+                        (F.col("srvid") == srvid)
+                        & ~F.col("ts").isin(overlap_ts)
+                    )
+                    fresh = kept.unionByName(fresh)
+                sp.stage_replace(fresh, db_t)
+            else:
+                sp.stage_append(db_rollup_agg(new_rows, spec), db_t)
         elif idempotent and spec.db_rollup and wh.exists(current_t):
             # pure replay (capture non-empty, zero new rows): every row
             # is already committed in current, but the ROLLUP write for

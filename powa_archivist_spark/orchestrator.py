@@ -12,7 +12,8 @@ Reference: powa--5.2.0.sql:3450-3710 + the bgworker timer loop
    pass (powa--5.2.0.sql:3509-3547).  Priority is the only order needed,
    so dispatch runs in priority waves: a wave's datasources share no sink
    and snapshot concurrently, and the ledger keeps dispatch order.
-   Coalesce and purge run every datasource at once.
+   Coalesce and purge run every datasource at once, and the qualstats
+   pack's quals and constvalues halves at once too.
 4. conditional coalesce when ``(coalesce_seq + srvid % 20) % coalesce == 0``
    — the % 20 smears maintenance of many servers across passes
    (powa--5.2.0.sql:3549-3604).
@@ -339,13 +340,15 @@ class Orchestrator:
             snapshot(self.wh, spec, srvid, capture=cap)
 
     def _pack(self, spec: DatasourceSpec, srvid: int) -> None:
-        aggregate(self.wh, spec, srvid)
+        calls = [lambda: aggregate(self.wh, spec, srvid)]
         if spec.name == "qualstats":
             # constvalues half of powa_qualstats_aggregate
-            # (powa--5.2.0.sql:7193-7233): six ranked arrays
+            # (powa--5.2.0.sql:7193-7233): six ranked arrays; it shares
+            # no table with the quals half, so the two pack at once
             from .operators.qualstats import qualstats_aggregate
 
-            qualstats_aggregate(self.wh, srvid)
+            calls.append(lambda: qualstats_aggregate(self.wh, srvid))
+        concurrently(self.wh.spark, *calls)
 
     def _purge_one(self, spec: DatasourceSpec, server: ServerConfig,
                    now: dt.datetime) -> None:

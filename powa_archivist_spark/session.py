@@ -5,7 +5,8 @@ from __future__ import annotations
 import os
 import threading
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 #: the engine-pass posture, fixed once per engine session (see
 #: engine_session); shuffle partitions are added at build time
@@ -66,6 +67,15 @@ def adopt(spark: SparkSession, df: DataFrame) -> DataFrame:
     jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
         spark._jsparkSession, df._jdf.logicalPlan())
     return DataFrame(jdf, spark)
+
+
+def observe_rows(df: DataFrame):
+    """``df`` with its row count observed on the job that runs it, and a
+    thunk that reads the count once that job has finished: the count
+    rides the write instead of running a job of its own."""
+    obs = Observation()
+    return (df.observe(obs, F.count(F.lit(1)).alias("rows")),
+            lambda: obs.get["rows"])
 
 
 def concurrently(spark: SparkSession, *calls) -> list:

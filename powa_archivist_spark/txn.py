@@ -39,10 +39,7 @@ import shutil
 import tempfile
 import threading
 
-from pyspark.sql import Observation
-from pyspark.sql import functions as F
-
-from .session import adopt, concurrently
+from .session import adopt, concurrently, observe_rows
 
 
 #: srvid lane for passes that are not tied to a monitored server — the
@@ -229,22 +226,35 @@ class StagedPass:
         if chk is not None:
             chk(table)
 
-    def stage_append(self, df, table: str) -> None:
-        """Stage an append to the srvid partition of ``table``.  ``df``
-        must carry the srvid column (dropped here: partition dirs encode
-        it, matching what a partitionBy append writes)."""
-        self._acl_check(table)
-        df = adopt(self.wh.spark, df)
-        idx = self._reserve_op()
-        d = os.path.join(
-            self._part_dir(table),
-            f".__stage__{self.pass_id}__{idx}",
-        )
+    def _write_counted(self, df, d: str) -> int:
+        """Write ``df`` (srvid dropped) to stage dir ``d``; returns the
+        rows written, observed on the write job itself."""
+        df, rows = observe_rows(adopt(self.wh.spark, df))
         df.drop("srvid").write.mode("overwrite").parquet(d)
-        self._ops[idx] = {
-            "kind": "append", "table": table, "stage": d,
-            "files": _staged_files(d),
-        }
+        return rows()
+
+    def stage_append(self, df, table: str) -> int:
+        """Stage an append to the srvid partition of ``table``; returns
+        the rows staged.  ``df`` must carry the srvid column (dropped
+        here: partition dirs encode it, matching what a partitionBy
+        append writes).  An empty ``df`` lands nothing: no file, no op,
+        no stage dir."""
+        self._acl_check(table)
+        idx = self._reserve_op()
+        part = self._part_dir(table)
+        d = os.path.join(part, f".__stage__{self.pass_id}__{idx}")
+        n = self._write_counted(df, d)
+        if n == 0:
+            shutil.rmtree(d)
+            with contextlib.suppress(OSError):
+                os.rmdir(part)  # the partition only if nothing is in it
+            self._ops[idx] = {}  # nothing to publish
+        else:
+            self._ops[idx] = {
+                "kind": "append", "table": table, "stage": d,
+                "files": _staged_files(d),
+            }
+        return n
 
     def stage_append_flat(self, df, table: str) -> None:
         """Stage an append to an UNPARTITIONED table (streaming sinks,
@@ -266,22 +276,19 @@ class StagedPass:
             "files": _staged_files(d),
         }
 
-    def stage_replace(self, df, table: str) -> None:
-        """Stage a full replace of the srvid partition of ``table``.  An
-        empty ``df`` retires the partition instead of landing an empty
-        parquet file; the row count rides the write (Observation), so
-        the check runs no job of its own."""
+    def stage_replace(self, df, table: str) -> int:
+        """Stage a full replace of the srvid partition of ``table`` as
+        one parquet file; returns the rows staged.  An empty ``df``
+        retires the partition instead of landing an empty parquet
+        file."""
         self._acl_check(table)
-        df = adopt(self.wh.spark, df)
         idx = self._reserve_op()
         d = os.path.join(
             self.wh.path(table),
             f".__stageswap__srvid={self.srvid}__{self.pass_id}__{idx}",
         )
-        obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        df.drop("srvid").write.mode("overwrite").parquet(d)
-        if obs.get["rows"] == 0:
+        n = self._write_counted(df.coalesce(1), d)
+        if n == 0:
             # a stage with no parquet file publishes as a partition drop
             for f in _staged_files(d):
                 os.remove(os.path.join(d, f))
@@ -289,6 +296,7 @@ class StagedPass:
             "kind": "replace", "table": table, "stage": d,
             "files": _staged_files(d),
         }
+        return n
 
     def stage_append_tree(
         self, df, table: str, partition_by: list[str],
@@ -366,13 +374,14 @@ class StagedPass:
         """Commit point: the single manifest rename.  The fold that
         follows is a convenience (readers would self-heal anyway via
         :func:`heal_table`); removing the manifest retires the pass."""
-        if not self._ops:
-            return
         if any(op is None for op in self._ops):
             raise RuntimeError(
                 "publish() with an unfinished staged op — a concurrent "
                 "stage_* call failed or is still running"
             )
+        self._ops = [op for op in self._ops if op]  # {}: an empty append
+        if not self._ops:
+            return
         os.makedirs(self._txn_dir, exist_ok=True)
         fd, tmp = tempfile.mkstemp(dir=self._txn_dir, suffix=".tmp")
         with os.fdopen(fd, "w") as f:
@@ -385,13 +394,14 @@ class StagedPass:
             os.remove(self._intent_path())
         self._ops = []
 
-    def stage_concurrently(self, *calls) -> None:
+    def stage_concurrently(self, *calls) -> list:
         """Run independent ``stage_*`` thunks at once so their write
-        jobs overlap.  ONLY for calls touching DISTINCT tables: manifest
-        op order is not deterministic across workers, and recovery
-        applies ops in list order — two ops on one table must stay
-        sequenced by the caller."""
-        concurrently(self.wh.spark, *calls)
+        jobs overlap; returns their results in call order.  ONLY for
+        calls touching DISTINCT tables: manifest op order is not
+        deterministic across workers, and recovery applies ops in list
+        order — two ops on one table must stay sequenced by the
+        caller."""
+        return concurrently(self.wh.spark, *calls)
 
     # ---- recovery --------------------------------------------------------
 
@@ -591,7 +601,6 @@ def _apply_ops(wh, ops: list[dict], intent_path: str | None = None) -> None:
                 return
             if table_kind == "append":
                 if os.path.isdir(stage):
-                    os.makedirs(part_dir, exist_ok=True)
                     for f in os.listdir(stage):
                         if f.endswith(".parquet"):
                             # staged part-file names are uuid-unique; a

@@ -93,6 +93,25 @@ def test_empty_dimension_rewrite_drops_the_partition(spark, wh):
     assert dictionary.read_statements(wh, 2).count() == 1
 
 
+def test_dimension_rewrite_lands_one_file_per_partition(spark, wh):
+    """A dimension rewrite replaces the server's partition with ONE
+    parquet file, however many shuffle partitions its merge spreads the
+    keys over."""
+    import os
+
+    cap = spark.createDataFrame(
+        [(100 + q, 10 + q % 3, 5, f"SELECT {q}", ts(0)) for q in range(40)],
+        "queryid long, dbid long, userid long, query string, ts timestamp",
+    )
+    dictionary.merge_statements(wh, 1, cap, now=ts(0))
+    dictionary.merge_statements(wh, 1, cap.limit(20), now=ts(5))
+    part = os.path.join(wh.path(dictionary.TABLE), "srvid=1")
+    files = [f for f in os.listdir(part)
+             if f.endswith(".parquet") and not f.startswith(".")]
+    assert len(files) == 1, files
+    assert dictionary.read_statements(wh, 1).count() == 40
+
+
 def test_db_rollup_tables_are_read_with_the_rollup_types(spark):
     """Coalesce and purge read the ``_db`` tables with a declared schema
     instead of inferring it, so that schema must be the one the snapshot

@@ -602,6 +602,46 @@ def test_staged_publish_recovery_at_every_rename(spark, wh):
         crash_at += 1
     assert crash_at >= 4  # intent + >=1 file move + >=2 swap renames
 
+def test_empty_staged_append_lands_nothing(spark, wh):
+    """An empty staged append lands no parquet file, no op and no srvid
+    partition dir, and a staged append returns the rows it staged.  The
+    same holds one level up: a coalesce over an empty srvid slice of a
+    current table that other servers populate lands no history file."""
+    import glob
+    import os
+
+    from powa_archivist_spark.operators.aggregate import aggregate
+    from powa_archivist_spark.operators.snapshot import snapshot
+    from powa_archivist_spark.txn import StagedPass
+
+    sp = StagedPass(wh, 1)
+    empty = spark.createDataFrame([], "srvid int, v long")
+    full = spark.createDataFrame([(1, 10), (1, 11)], "srvid int, v long")
+    staged = (sp.stage_append(empty, "t_empty"),
+              sp.stage_append(full, "t_full"))
+    sp.publish()
+    assert not wh.exists("t_empty")
+    assert not os.path.isdir(os.path.join(wh.path("t_empty"), "srvid=1"))
+    assert sorted(r.v for r in wh.read("t_full").collect()) == [10, 11]
+    assert staged == (0, 2)
+
+    for srvid in (0, 2):
+        snapshot(wh, SPEC, srvid, capture=bgwriter_rows(spark, srvid, ts(0), 1))
+    assert aggregate(wh, SPEC, 2) == 1
+    hist = wh.path(Warehouse.history(SPEC.name))
+
+    def files():
+        return sorted(glob.glob(os.path.join(hist, "**", "*.parquet"),
+                                recursive=True))
+
+    before = files()
+    assert before
+    assert aggregate(wh, SPEC, 1) == 0
+    assert files() == before
+    assert not os.path.isdir(os.path.join(hist, "srvid=1"))
+    assert wh.read(Warehouse.current(SPEC.name)).count() == 1
+
+
 def test_staged_pass_rejects_delimiter_pass_ids(wh):
     """r6 code review: pass ids carrying the '__' field delimiter (or a
     path separator) would reassemble the wrong live path at recovery."""
@@ -715,6 +755,52 @@ def test_chaos_random_crashes_converge_to_clean_run(spark, wh):
         shutil.rmtree(d_chaos, ignore_errors=True)
 
 
+def _group_jobs(sc, group):
+    """The settled Spark jobs that ran under job group ``group``."""
+    import time
+
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while True:
+        jobs = [tracker.getJobInfo(j)
+                for j in tracker.getJobIdsForGroup(group)]
+        if jobs and all(j is not None and j.status != "RUNNING"
+                        for j in jobs):
+            return jobs
+        assert time.time() < deadline, f"{group} jobs never settled"
+        time.sleep(0.2)
+
+
+def _qualstats_tick(spark, orch, srvid, i):
+    """One qualstats tick of three quals; coalesce is every 3rd pass."""
+    from powa_archivist_spark.operators import qualstats
+
+    cap = spark.createDataFrame(
+        [(srvid, ts(i * 5), 7, 10, 5, 70 + q, 2 + i, 10 + i, 4, 1.5,
+          2.0, 100, [str(40 + q + i)], [(1259, q, 96, "f")])
+         for q in range(3)],
+        qualstats.SRC_SCHEMA,
+    )
+    return orch.take_snapshot(
+        ServerConfig(srvid=srvid, powa_coalesce=3),
+        captures={qualstats.QUALSTATS_SPEC.name: cap}, now=ts(i * 5),
+    )
+
+
+def _known_statement(spark, wh, srvid):
+    from powa_archivist_spark.operators import dictionary
+
+    dictionary.merge_statements(
+        wh, srvid,
+        spark.createDataFrame(
+            [(100, 10, 5, "SELECT a", ts(0))],
+            "queryid long, dbid long, userid long, query string, "
+            "ts timestamp",
+        ),
+        now=ts(0),
+    )
+
+
 def test_qualstats_coalesce_tick_runs_narrow_off_the_caller_conf(spark, wh):
     """A tick is a burst of tiny jobs, so every job of a qualstats
     coalesce tick must plan at cluster parallelism: no stage may run the
@@ -725,7 +811,7 @@ def test_qualstats_coalesce_tick_runs_narrow_off_the_caller_conf(spark, wh):
     import threading
     import time
 
-    from powa_archivist_spark.operators import dictionary, qualstats
+    from powa_archivist_spark.operators import qualstats
     from powa_archivist_spark.specs import QUALSTATS_SPEC
 
     aqe_key = "spark.sql.adaptive.enabled"
@@ -735,27 +821,10 @@ def test_qualstats_coalesce_tick_runs_narrow_off_the_caller_conf(spark, wh):
     orch = Orchestrator(wh, specs={QUALSTATS_SPEC.name: QUALSTATS_SPEC})
 
     def tick(srvid, i):
-        cap = spark.createDataFrame(
-            [(srvid, ts(i * 5), 7, 10, 5, 70 + q, 2 + i, 10 + i, 4, 1.5,
-              2.0, 100, [str(40 + q + i)], [(1259, q, 96, "f")])
-             for q in range(3)],
-            qualstats.SRC_SCHEMA,
-        )
-        return orch.take_snapshot(
-            ServerConfig(srvid=srvid, powa_coalesce=3),
-            captures={QUALSTATS_SPEC.name: cap}, now=ts(i * 5),
-        )
+        return _qualstats_tick(spark, orch, srvid, i)
 
     for srvid in (1, 2, 3):
-        dictionary.merge_statements(
-            wh, srvid,
-            spark.createDataFrame(
-                [(100, 10, 5, "SELECT a", ts(0))],
-                "queryid long, dbid long, userid long, query string, "
-                "ts timestamp",
-            ),
-            now=ts(0),
-        )
+        _known_statement(spark, wh, srvid)
 
     # srvid 1 coalesces on its 2nd pass: (2 + 1 % 20) % 3 == 0
     assert tick(1, 0) == 0
@@ -771,15 +840,7 @@ def test_qualstats_coalesce_tick_runs_narrow_off_the_caller_conf(spark, wh):
     assert qualstats.constvalues_history(wh, 1).count() == 3
 
     tracker = sc.statusTracker()
-    deadline = time.time() + 30
-    while True:
-        jobs = [tracker.getJobInfo(j)
-                for j in tracker.getJobIdsForGroup(group)]
-        if jobs and all(j is not None and j.status != "RUNNING"
-                        for j in jobs):
-            break
-        assert time.time() < deadline, "tick jobs never settled"
-        time.sleep(0.2)
+    jobs = _group_jobs(sc, group)
     stages = [tracker.getStageInfo(s) for j in jobs for s in j.stageIds]
     tasks = {s.stageId: s.numTasks for s in stages if s is not None}
     assert tasks and max(tasks.values()) < wide, tasks
@@ -816,6 +877,47 @@ def test_qualstats_coalesce_tick_runs_narrow_off_the_caller_conf(spark, wh):
     assert seen == {caller_conf}
     for srvid in (2, 3):
         assert orch.read_metas(srvid)["aggts"] is not None
+
+
+def test_qualstats_coalesce_tick_job_budget(spark, wh, monkeypatch):
+    """A tick moves a few rows, so its cost is its Spark jobs.  Row
+    counts and emptiness ride the writes (Observations), and the pass's
+    independent writes run at once: a qualstats coalesce tick runs at
+    most 6 jobs, of which ``qualstats_snapshot`` runs at most 4 (the
+    statements gate's broadcast and the three sink writes)."""
+    from powa_archivist_spark.operators import qualstats
+    from powa_archivist_spark.specs import QUALSTATS_SPEC
+
+    sc = spark.sparkContext
+    orch = Orchestrator(wh, specs={QUALSTATS_SPEC.name: QUALSTATS_SPEC})
+    _known_statement(spark, wh, 1)
+    assert _qualstats_tick(spark, orch, 1, 0) == 0
+
+    real = qualstats.qualstats_snapshot
+
+    def grouped(*a, **k):
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup("qualstats-snapshot-budget", "qualstats_snapshot")
+        try:
+            return real(*a, **k)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+
+    monkeypatch.setattr(qualstats, "qualstats_snapshot", grouped)
+    sc.setJobGroup("coalesce-tick-budget", "qualstats coalesce tick")
+    try:
+        assert _qualstats_tick(spark, orch, 1, 1) == 0, \
+            orch.read_metas(1)["errors"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert orch.read_metas(1)["aggts"] is not None
+    assert qualstats.constvalues_history(wh, 1).count() == 3
+
+    snap = len(_group_jobs(sc, "qualstats-snapshot-budget"))
+    rest = len(_group_jobs(sc, "coalesce-tick-budget"))
+    assert snap <= 4, (snap, rest)
+    assert snap + rest <= 6, (snap, rest)
 
 
 def sample_rows(spark, spec, srvid, t, base):

@@ -7,7 +7,9 @@ work, driver-side loops).
 
 At sf0.1 the data is tiny, so per-query time is dominated by job count
 x per-job overhead plus driver gaps; this tool shows which of the two
-to attack and which phase (job description / call site) owns it.
+to attack and which phase (call site) owns it.  A query's jobs are the
+ones tagged with its job description (``profile:<query>``), worker-
+thread jobs included; jobs of the next query never count.
 
 Usage:
   python tools/profile_jobs.py [--sf SF_DIR] [--top N] q1 [q2 ...]
@@ -89,12 +91,12 @@ def main() -> int:
         jid = ev["Job ID"]
         if ev["Event"] == "SparkListenerJobStart":
             props = ev.get("Properties", {}) or {}
+            stages = ev.get("Stage Infos", [])
             jobs[jid] = {
                 "start": ev["Submission Time"] / 1000.0,
                 "desc": props.get("spark.job.description", ""),
-                "ntasks": sum(
-                    s.get("Number of Tasks", 0)
-                    for s in ev.get("Stage Infos", [])),
+                "site": stages[0].get("Stage Name", "") if stages else "",
+                "ntasks": sum(s.get("Number of Tasks", 0) for s in stages),
                 "nstages": len(ev.get("Stage IDs", [])),
             }
         else:
@@ -104,7 +106,7 @@ def main() -> int:
     for qname, (t0, wall) in results.items():
         qjobs = sorted(
             (j for j in jobs.values()
-             if j.get("end") and t0 <= j["start"] <= t0 + wall + 1),
+             if j.get("end") and j["desc"] == f"profile:{qname}"),
             key=lambda j: j["start"])
         print(f"\n==== {qname}: wall {wall:.2f}s, {len(qjobs)} jobs")
         tot_job = sum(j["end"] - j["start"] for j in qjobs)
@@ -119,13 +121,13 @@ def main() -> int:
               f"{sum(gaps) + max(tail, 0):.2f}s (tail {max(tail, 0):.2f}s)")
         rows = [
             (j["end"] - j["start"], gaps[i], j["nstages"], j["ntasks"],
-             j["desc"][:60])
+             j["site"][:60])
             for i, j in enumerate(qjobs)
         ]
         rows.sort(key=lambda r: -(r[0] + r[1]))
-        print("     dur    gap  stages tasks  desc")
-        for dur, gap, nst, nt, desc in rows[:args.top]:
-            print(f"   {dur:6.2f} {gap:6.2f} {nst:5d} {nt:6d}  {desc}")
+        print("     dur    gap  stages tasks  call site")
+        for dur, gap, nst, nt, site in rows[:args.top]:
+            print(f"   {dur:6.2f} {gap:6.2f} {nst:5d} {nt:6d}  {site}")
     print(f"\nevent log dir: {evdir}")
     return 0
 

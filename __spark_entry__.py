@@ -24,112 +24,22 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from powa_archivist_spark.pipeline.queries import PIPELINE_QUERIES  # noqa: E402
 from powa_archivist_spark.queries import CORE_QUERIES  # noqa: E402
 
-# The driver's hard correctness gate replays the FIRST 50 entries of
-# ``queries()`` (dict insertion order).  Round 9 keeps the r8 rotation
-# protocol (VERDICT r8 task 8): the window carries the flagship, every
-# query whose DECLARED FORM changed this round, and the round's new
-# additions; each newcomer displaces a prior-round driver-green row,
-# named at its displacement site below.  Displaced entries stay
-# enforced by tests/test_oracle_full.py (full-surface value-hash
-# replay in pytest) and ORACLE_FULL.txt.
-#
-# r10 changed forms (re-gate): docs_bm25_topk + stream_bm25_index
-# (bounded per-partition top-k pre-prune before the ranking window,
-# VERDICT r9 task 1 — both already in the window), dedup_components_
-# smallvocab + dedup_keep_list (distinct-mask count guard on the
-# bitmask probe route, task 3 — both already in the window).  r10 new:
-# docs_bm25_wand (block-max WAND serving path, task 4) displaces
-# emb_diversity_select (r8-gate green, stays replayed per-commit by
-# tests/test_oracle_full); emb_kmeans (k-means|| + Lloyd to
-# convergence, task 6) displaces knn_cosine_blocked (r7-gate green,
-# same standing replay).  Late-r10 additions — docs_rrf_hybrid (RRF
-# hybrid retrieval), docs_bm25_rm3 (RM3 pseudo-relevance feedback),
-# docs_ngram_novelty (per-source first-occurrence novelty),
-# emb_kmeans_profile (cluster balance report), emb_kmeans_semdedup
-# (SemDeDup within-cluster pairwise) — displace ivf_refined_centroids,
-# multimodal_meta, multimodal_frames, token_counts and lang_id (all
-# r7/r8-gate green; all stay replayed per-commit by
-# tests/test_oracle_full and ORACLE_FULL.txt).  dedup_minhash_recall
-# (measured LSH candidate recall vs exact shingle-jaccard truth) and
-# stream_novelty_ledger (at-rest first-owner novelty ledger) displace
-# corpus_quality_ensemble and salted_rollup (r8/r9-gate green, same
-# standing replay).  dedup_lsh_tuning (the band-config tuning curve)
-# and ann_ivf_recall (closes the ANN recall matrix) displace
-# corpus_decontam_excise and corpus_bpe_encode (r8-gate green, same
-# standing replay).  events_kll_windowed (the windowed quantile form
-# completing the windowed sketch triple) displaces ann_pq_recall
-# (r8-gate green, same standing replay).
-#
-# r9 changed forms: dedup_components (route-fixed prefix over distinct
-# sets), dedup_jaccard_pairs + dedup_keep_list (set-collapsed pair
-# machinery upstream), emb_near_dup + emb_semantic_dedup (count-probe
-# LSH guard), corpus_source_profile (de-broadcast dup set),
-# corpus_ngram_ppl (fused model build).  r9 new: dedup_components_
-# smallvocab, events_kll_quantiles, stream_kll_profile.
+# The correctness gate replays the first 50 entries of ``queries()``
+# (this order, then every other declared query); a newcomer placed
+# here displaces the last gated row.
 _GATE_ORDER = [
-    # --- flagship (always gated) ---
     "q01_pricing_summary",
-    # --- new in r13 ---
-    # stream_components_ledger (at-rest incremental connected-components
-    # dedup ledger, VERDICT r12 task 4) displaces corpus_chunks (r8-gate
-    # green); ann_ivfpq_probe_tuning (nprobe curve over the AT-REST
-    # IVF-PQ index, task 6) displaces ann_index_upsert (r8-gate green —
-    # the LSM upsert machinery stays transitively driver-verified
-    # through ann_ivfpq_at_rest below, whose oracle replays the
-    # upsert==rebuild equivalence).  Both displaced rows stay replayed
-    # per-commit by tests/test_oracle_full and ORACLE_FULL.txt.
-    # r13 changed forms already in the window, re-gated in place: the
-    # PPJoin stages are dictionary-encoded (dedup.py _encode_token_sets)
-    # — dedup_components, dedup_jaccard_pairs, dedup_keep_list,
-    # dedup_components_smallvocab (all below); ann_ivfpq_at_rest's
-    # probe snapshots base∪delta up front and its build delegates to
-    # ivfpq_encode (same plan, single implementation).
     "stream_components_ledger",
     "ann_ivfpq_probe_tuning",
-    # --- new in r12 ---
-    # ann_ivfpq_at_rest (at-rest IVF-PQ index lifecycle, VERDICT r11
-    # task 4) displaces emb_semantic_dedup_lsh (r8-gate green);
-    # ann_nprobe_tuning (IVF operating-point curve, task 5) displaces
-    # events_hll_windowed (r8-gate green); stream_kmeans_staleness
-    # (ledger refresh-due signal, task 6) displaces
-    # stream_curation_corpus (r8-gate green).
     "ann_ivfpq_at_rest",
     "ann_nprobe_tuning",
     "stream_kmeans_staleness",
-    # --- changed forms in r12 (re-gate) ---
-    # The minhash verify stage's length-prune tolerance became
-    # size-relative (ADVICE r11 — dedup.py _verify_shingle_pairs), a
-    # declared-form change for every query routed through it:
-    # dedup_minhash_lsh re-enters displacing corpus_token_budget_select
-    # (r8-gate green) and multimodal_binary_near_dup re-enters
-    # displacing corpus_mixture_sample (r7-gate green); dedup_keep_list
-    # and dedup_minhash_recall already sit in the window below.
-    # corpus_pack_ffd's assignment checksum changed to
-    # (doc_id+1)*(bin_id+1) (ADVICE r11) — already in the r11 section.
-    # All five displaced rows stay replayed per-commit by
-    # tests/test_oracle_full and ORACLE_FULL.txt.
     "dedup_minhash_lsh",
     "multimodal_binary_near_dup",
-    # --- new in r11 ---
-    # ann_ivfpq_recall (closes the ANN recall matrix, VERDICT r10 task
-    # 3) displaces knn_ivfpq_topk (r8-gate green — and its FULL top-k
-    # oracle replays verbatim inside ann_ivfpq_recall's composed
-    # oracle, so the chain stays driver-verified transitively);
-    # corpus_pack_ffd (first-fit-decreasing packing, task 5) displaces
-    # stream_pq_index (r8-gate green); stream_kmeans_ledger
-    # (incremental k-means at rest, task 7) displaces emb_hard_negatives
-    # (r8-gate green).  ann_pq_recall ENTERS the window as an r11
-    # changed form (now measures the pure-PQ chain it is named for) and
-    # displaces knn_pq_topk (r8-gate green — its full oracle likewise
-    # replays inside ann_pq_recall's).  All four displaced rows stay
-    # replayed per-commit by tests/test_oracle_full and ORACLE_FULL.txt.
-    # docs_rrf_hybrid + docs_bm25_rm3 changed form in r11 too (WAND
-    # routing, task 4) — both already sit in the r10 section below.
     "ann_ivfpq_recall",
     "corpus_pack_ffd",
     "stream_kmeans_ledger",
     "ann_pq_recall",
-    # --- new in r10 ---
     "docs_bm25_wand",
     "emb_kmeans",
     "docs_rrf_hybrid",
@@ -142,7 +52,6 @@ _GATE_ORDER = [
     "dedup_lsh_tuning",
     "ann_ivf_recall",
     "events_kll_windowed",
-    # --- changed in r9 (re-gate) ---
     "dedup_components",
     "dedup_jaccard_pairs",
     "dedup_keep_list",
@@ -150,20 +59,6 @@ _GATE_ORDER = [
     "emb_semantic_dedup",
     "corpus_source_profile",
     "corpus_ngram_ppl",
-    # --- new in r9.  The eight fresh slots this round (five re-gated
-    # changed forms above beyond corpus_source_profile/corpus_ngram_ppl
-    # which were already in the r8 window, plus the three new queries
-    # here) displace eight r8-gate-green rows: events_hll_distinct,
-    # emb_outliers, corpus_fuzzy_decontam, corpus_source_caps,
-    # corpus_curriculum, corpus_pmi_bigrams, multimodal_cdc_dedup,
-    # corpus_classifier_filter; docs_substring_dedup (late r9)
-    # displaces stream_hll_profile (r8-gate green);
-    # source_overlap_kmv + knn_sq_topk + ann_sq_recall +
-    # corpus_ngram_ppl_interp (late r9) displace
-    # emb_semantic_dedup_lsh, events_hll_windowed,
-    # stream_curation_corpus and corpus_token_budget_select (all
-    # r8-gate green; all stay replayed per-commit by
-    # tests/test_oracle_full) ---
     "dedup_components_smallvocab",
     "events_kll_quantiles",
     "stream_kll_profile",
@@ -172,18 +67,6 @@ _GATE_ORDER = [
     "knn_sq_topk",
     "ann_sq_recall",
     "corpus_ngram_ppl_interp",
-    # events_cms_counts (late r9, Count-Min frequency sketch) displaces
-    # corpus_mixture_sample (r7-gate green; stays replayed per-commit
-    # by tests/test_oracle_full); stream_cms_profile (its at-rest
-    # streaming ledger) displaces corpus_quality_gate (r8-gate green);
-    # docs_bm25_topk (fixed-point BM25 retrieval) displaces
-    # corpus_vocab_topk (r7-gate green); ann_mrl_recall (truncated-dim
-    # recall eval) displaces corpus_shuffle_shards (r8-gate green);
-    # corpus_group_sample (bottom-k mergeable per-source sample)
-    # displaces corpus_prep_funnel (r7-gate green); stream_bm25_index
-    # (the postings ledger) displaces dedup_winnow_pairs (r7-gate
-    # green); events_cms_windowed + docs_heavy_tokens_by_source
-    # displace text_tfidf_topk and pii_scrub_stats (both r7-gate green)
     "events_cms_counts",
     "stream_cms_profile",
     "docs_bm25_topk",
@@ -192,13 +75,9 @@ _GATE_ORDER = [
     "stream_bm25_index",
     "events_cms_windowed",
     "docs_heavy_tokens_by_source",
-    # --- r8 window held over (r8-gate green; kept so the heavy
-    # pipeline additions stay continuously driver-verified) ---
     "multimodal_resize",
     "multimodal_features",
     "corpus_token_stats",
-    # corpus_chunks / ann_index_upsert displaced r13 (see the r13
-    # section at the top)
     "corpus_chunks",
     "ann_index_upsert",
     "corpus_segment_dedup",
@@ -206,32 +85,22 @@ _GATE_ORDER = [
     "corpus_dsir_select",
     "docs_dup_spans",
     "corpus_bpe_merges",
-    # knn_pq_topk / stream_pq_index / knn_ivfpq_topk / emb_hard_negatives
-    # displaced r11 (see the r11 section at the top)
     "corpus_bpe_encode",
     "corpus_decontam_excise",
     "corpus_quality_ensemble",
-    # --- core: windows / frames / rollup analytics ---
     "salted_rollup",
-    # --- pipeline: sketches / similarity tail ---
     "ivf_refined_centroids",
-    # --- pipeline: multimodal ---
     "multimodal_meta",
     "multimodal_frames",
-    # --- pipeline: text analysis ---
     "token_counts",
     "lang_id",
     "pii_scrub_stats",
     "text_tfidf_topk",
     "dedup_winnow_pairs",
-    # --- pipeline: corpus curation ---
     "corpus_prep_funnel",
     "corpus_shuffle_shards",
     "corpus_vocab_topk",
     "corpus_quality_gate",
-    # corpus_mixture_sample / corpus_token_budget_select /
-    # stream_curation_corpus / emb_semantic_dedup_lsh /
-    # events_hll_windowed displaced r12 (see the r12 section at the top)
 ]
 
 _MERGED = {**CORE_QUERIES, **PIPELINE_QUERIES}

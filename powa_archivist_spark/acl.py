@@ -66,6 +66,14 @@ CONFIG_TABLES = frozenset({
     "powa_catalogs", "powa_catalog_src_queries",
 })
 
+#: streaming-ledger tables holding document CONTENT — literal tokens and
+#: word n-grams, quantized embeddings and their PQ codes or centroids.
+#: The ``ann_``/``corpus_`` tables classify by prefix (see privileges).
+CONTENT_TABLES = frozenset({
+    "kmeans_vectors", "kmeans_centers", "pq_codes", "pq_codebook",
+    "retrieval_postings", "novelty_first_owner",
+})
+
 READ, WRITE = "read", "write"
 
 
@@ -75,11 +83,13 @@ def privileges(role: str, table: str) -> frozenset[str]:
 
     The LLM-pipeline tables classify by the same content rule the
     reference applies to constvalues (:7628-7633): the corpus ledgers
-    (raw shingle arrays, document digests) and the ANN index tables
-    (embeddings) carry literal document CONTENT, so
-    ``powa_read_all_metrics`` — the metrics-only role — is excluded
-    from them exactly like from constvalues, while
-    ``powa_read_all_data`` reads them all."""
+    (raw shingle arrays, document digests), the ANN index tables
+    (embeddings) and the ``CONTENT_TABLES`` streaming ledgers
+    (embeddings, PQ codes, tokens, n-grams) carry literal document
+    CONTENT, so ``powa_read_all_metrics`` — the metrics-only role — is
+    excluded from them exactly like from constvalues, while
+    ``powa_read_all_data`` reads them all.  Every staged write under
+    an ``AclWarehouse`` calls this: it stays O(1)."""
     if role not in POWA_ROLES:
         raise ValueError(f"unknown powa role {role!r}")
     is_staging = table.endswith("_src_tmp")
@@ -87,6 +97,7 @@ def privileges(role: str, table: str) -> frozenset[str]:
         "qualstats_constvalues" in table
         or table.startswith("corpus_")
         or table.startswith("ann_")
+        or table in CONTENT_TABLES
     )
     if role == "powa_admin":
         return frozenset({READ, WRITE})
@@ -109,14 +120,16 @@ def warehouse_tables() -> list[str]:
     """Every table name this engine can create — the grant-matrix
     domain (the reference grants over ``pg_class`` relations of the
     powa schema; this is the lakehouse analog).  Spec-derived history
-    tables, the dictionaries, qualstats, catalogs, the streaming dedup
-    ledgers, the ANN at-rest index, and the config-class registry
-    views."""
+    tables, the dictionaries, qualstats, catalogs, the streaming
+    ledgers, every table of both at-rest ANN indexes, and the
+    config-class registry views."""
     from .operators import databases, dictionary, qualstats
-    from .pipeline.similarity import ANN_CELLS_TABLE, ANN_CENTROIDS_TABLE
+    from .pipeline.similarity import IVF, IVFPQ
     from .sources.catalog import CATALOGS, catalog_staging, catalog_table
     from .specs import ALL_SPECS
-    from .streaming.dedup import LEDGER_TABLE, NEAR_DUP_LEDGER_TABLE
+    from .streaming import (clustering, cms, components, curation, dedup,
+                            novelty, pq_ingest, profile, quantiles,
+                            retrieval)
 
     names: set[str] = set(CONFIG_TABLES)
     for spec in ALL_SPECS.values():
@@ -132,10 +145,27 @@ def warehouse_tables() -> list[str]:
         qualstats.QUALS_TABLE,
         qualstats.CONSTVALUES_TABLE,
         qualstats.CONSTVALUES_HISTORY_TABLE,
-        LEDGER_TABLE,
-        NEAR_DUP_LEDGER_TABLE,
-        ANN_CELLS_TABLE,
-        ANN_CENTROIDS_TABLE,
+        dedup.LEDGER_TABLE,
+        dedup.NEAR_DUP_LEDGER_TABLE,
+        curation.REJECT_TABLE,
+        clustering.VECTORS_TABLE,
+        clustering.CENTERS_TABLE,
+        clustering.ASSIGN_TABLE,
+        pq_ingest.PQ_CODEBOOK_TABLE,
+        pq_ingest.PQ_CODES_TABLE,
+        retrieval.POSTINGS_TABLE,
+        retrieval.STATS_TABLE,
+        components.COMP_LEDGER_TABLE,
+        components.COMP_EDGES_TABLE,
+        components.COMP_ASSIGN_TABLE,
+        components.COMP_REMAP_TABLE,
+        profile.HLL_TABLE,
+        cms.CMS_TABLE,
+        quantiles.KLL_TABLE,
+        novelty.OWNERS_TABLE,
+        novelty.STATS_TABLE,
+        *IVF.tables,
+        *IVFPQ.tables,
     }
     for catname, _minv in CATALOGS:
         names.add(catalog_table(catname))

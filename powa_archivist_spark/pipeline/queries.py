@@ -3742,7 +3742,7 @@ FROM judged
 
 def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ANN index maintenance (r6): build the at-rest IVF
-    index on 80% of the corpus, then ivf_upsert one batch carrying BOTH
+    index on 80% of the corpus, then upsert one batch carrying BOTH
     new vectors (vec_id % 5 == 4) and re-embedded existing ones
     (vec_id % 50 == 0, vector reversed) — the replaced ids must move to
     their new argmax cell and the untouched cells keep their files.
@@ -3758,14 +3758,14 @@ def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     with scratch_warehouse(spark, "annupsert_") as wh:
         build = emb.filter(F.col("vec_id") % 5 != 4)
-        similarity.ivf_build(wh, build, n_cells_target=ANN_CELLS_TARGET)
+        similarity.IVF.build(wh, build, n_cells_target=ANN_CELLS_TARGET)
         batch = emb.filter(F.col("vec_id") % 5 == 4).unionByName(
             emb.filter(F.col("vec_id") % 50 == 0)
             .withColumn("embedding", F.reverse("embedding"))
         )
-        similarity.ivf_upsert(wh, batch)
+        similarity.IVF.upsert(wh, batch)
         out = (
-            similarity.ivf_cells(wh)
+            similarity.IVF.cells(wh)
             .groupBy(F.col("cell_id").cast("long").alias("cell_id"))
             .agg(
                 F.count(F.lit(1)).alias("n_vecs"),
@@ -3786,7 +3786,7 @@ WITH q AS (
   FROM embeddings
 ), m AS (
   -- sized build: mod = ceil(N_build / target), same arithmetic as
-  -- ivf_build(n_cells_target={ANN_CELLS_TARGET})
+  -- IVF.build(n_cells_target={ANN_CELLS_TARGET})
   SELECT GREATEST(1, CAST(CEIL(COUNT(*) / {ANN_CELLS_TARGET}.0) AS BIGINT))
            AS cmod
   FROM embeddings WHERE vec_id % 5 <> 4
@@ -4457,11 +4457,11 @@ def knn_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity.pq_train/pq_encode/pq_search for the 100 TB broadcast
     plan shapes."""
     emb = t(spark, sf_dir, "embeddings")
-    # SIZED codebook (the ivf_build lesson): ~64 codes per subspace
+    # SIZED codebook (the sized IVF build lesson): ~64 codes per subspace
     # regardless of corpus size, so per-vector encode cost is constant;
     # the oracle derives the same mod from COUNT(*)
     # the codebook (bounded dim) and the codes table (the INDEX —
-    # production writes it to the warehouse like ivf_build's cells) are
+    # production writes it to the warehouse like the IVF index cells) are
     # lazily checkpointed: search references each twice, and without a
     # materialization barrier the train subtree re-executes per
     # reference (measured alpha 1.73 at sf3 un-checkpointed vs flat
@@ -4774,10 +4774,10 @@ ORACLE_IVFPQ_TOPK = _oracle_ivfpq_topk()
 def ann_ivfpq_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The at-rest IVF-PQ index lifecycle (r12, VERDICT r11 task 4 —
     the index a deployment actually serves): build on 80% of the corpus
-    (``ivfpq_index_build`` — code rows partitioned by cell, frozen
-    centroid + codebook dims, id Bloom), ``ivfpq_upsert`` the remaining
+    (``IVFPQ.build`` — code rows partitioned by cell, frozen
+    centroid + codebook dims, id Bloom), ``IVFPQ.upsert`` the remaining
     20% as a fresh-id batch against the FROZEN quantizers (sorted LSM
-    delta run, Bloom-gated), then ``ivfpq_probe`` 5 queries — the scan
+    delta run, Bloom-gated), then ``IVFPQ.probe`` 5 queries — the scan
     prunes to the probed cells' partitions (plan-pinned in
     tests/test_plans.py) and reads ~32x-compressed codes, never raw
     vectors.  Frozen-quantizer determinism makes the probe an exact
@@ -4789,13 +4789,13 @@ def ann_ivfpq_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruned reads 7784-7786."""
     emb = t(spark, sf_dir, "embeddings")
     with scratch_warehouse(spark, "ivfpqidx_") as wh:
-        similarity.ivfpq_index_build(
+        similarity.IVFPQ.build(
             wh, emb.filter(F.col("vec_id") % 5 != 4),
             m=8, n_cells_target=8, n_codes_target=64,
         )
-        similarity.ivfpq_upsert(wh, emb.filter(F.col("vec_id") % 5 == 4))
+        similarity.IVFPQ.upsert(wh, emb.filter(F.col("vec_id") % 5 == 4))
         q = emb.filter(F.col("vec_id").isin([0, 1, 2, 3, 4]))
-        return similarity.ivfpq_probe(
+        return similarity.IVFPQ.probe(
             wh, q, k=10, nprobe=2
         ).localCheckpoint()
 
@@ -4947,7 +4947,7 @@ ORACLE_NPROBE_TUNING = _oracle_nprobe_tuning()
 
 def ann_ivfpq_probe_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The nprobe operating-point curve over the AT-REST IVF-PQ index
-    (r13, VERDICT r12 task 6 — similarity.ivfpq_probe_tuning):
+    (r13, VERDICT r12 task 6 — similarity.IvfIndex.probe_tuning):
     ``ann_nprobe_tuning`` measures the in-memory assignment; a
     deployment tunes against the index it SERVES, where the cost axes
     are pruned partitions read (``n_cells``) and compressed code rows
@@ -4961,10 +4961,10 @@ def ann_ivfpq_probe_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     config is a cell_rank filter."""
     emb = t(spark, sf_dir, "embeddings")
     with scratch_warehouse(spark, "ivfpqtune_") as wh:
-        similarity.ivfpq_index_build(
+        similarity.IVFPQ.build(
             wh, emb, m=8, n_cells_target=8, n_codes_target=64,
         )
-        return similarity.ivfpq_probe_tuning(
+        return similarity.IVFPQ.probe_tuning(
             wh, emb, query_ids=[0, 1, 2, 3, 4], k=10,
             nprobes=(1, 2, 4), m=8,
         ).localCheckpoint()

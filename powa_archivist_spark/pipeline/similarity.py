@@ -2,16 +2,29 @@
 
 - brute-force top-k: exact baseline, quantized-integer dot product so the
   ranking is bitwise deterministic and oracle-checkable;
-- LSH-bucketed variant (random hyperplane signs): the scale path — buckets
-  bound the candidate set, turning the O(Q x N) cross join into an equi
-  join on (bucket), with multi-probe via several independent tables.
+- LSH-bucketed variant (random hyperplane signs): buckets bound the
+  candidate set, turning the O(Q x N) cross join into an equi join on
+  (bucket), with multi-probe via several independent tables;
+- IVF: sampled (optionally Lloyd-refined) coarse cells, a broadcast
+  ``max_by`` assignment, and a per-query probe of the ``nprobe`` best
+  cells.  One scorer rescores a probe's candidates with either codec:
+  ``raw`` (the quantized vector, exact dot) or ``pq`` (product-quantized
+  residual codes, asymmetric lookup-table distance).  The same pieces
+  serve the in-memory searches (``knn_ivf``, ``pq_search``,
+  ``ivfpq_search``), the nprobe tuning curves, and the at-rest
+  :class:`IvfIndex` (``IVF`` raw, ``IVFPQ`` pq): cell-partitioned
+  parquet with LSM delta runs, an id Bloom, and one staged manifest per
+  build, upsert or compaction;
+- k-means, scalar quantization, diversity selection and the recall
+  audit on the same exact integer grid.
 
-All JVM-side (zip_with / aggregate); no Python in the hot path.
+All JVM-side (zip_with / aggregate) except the blocked numpy kernels.
 """
 
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -49,9 +62,7 @@ def knn_bruteforce(
     """Exact top-k by integer-quantized dot product (== cosine ranking for
     unit-normalized embeddings).  Queries are broadcast; one pass over the
     corpus; per-query top-k via window rank with id tie-break."""
-    q = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), quantized(F.col(vec_col)).alias("qv")
-    )
+    q = _query_vecs(emb, id_col, vec_col, query_ids)
     c = emb.select(
         F.col(id_col).alias("neighbor_id"), quantized(F.col(vec_col)).alias("cv")
     )
@@ -61,14 +72,7 @@ def knn_bruteforce(
     scored = pairs.select(
         "query_id", "neighbor_id", int_dot(F.col("qv"), F.col("cv")).alias("dot_q")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("dot_q"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot_q", "rank")
-    )
+    return _top_k(scored, k, "dot_q")
 
 
 def embedding_near_dup_pairs(
@@ -591,6 +595,103 @@ def kmeans_semdedup(emb: DataFrame, min_dot_q: int, k: int = 8,
     )
 
 
+def _ceil_mod(n: int, target: int) -> int:
+    """The sampling stride that holds a seed sample near ``target`` of
+    ``n`` rows: ceil(n / target), at least 1.  A FIXED stride grows the
+    sample linearly with the corpus and every assignment against it
+    quadratically (the sf1->sf3 alpha 1.41 cliff, PERF.md); the sized
+    stride keeps the per-vector cost constant."""
+    return max(1, -(-n // target))
+
+
+def _seed_cells(emb: DataFrame, centroid_mod: int, id_col: str,
+                vec_col: str) -> DataFrame:
+    """Deterministic coarse centroids, reproducible without RNG or
+    iterative k-means: the ``id % centroid_mod == 0`` slice, quantized
+    — (cell_id, cv)."""
+    return emb.filter(F.col(id_col) % centroid_mod == 0).select(
+        F.col(id_col).alias("cell_id"), quantized(F.col(vec_col)).alias("cv")
+    )
+
+
+def _query_vecs(emb: DataFrame, id_col: str, vec_col: str,
+                query_ids: list[int] | None = None) -> DataFrame:
+    """(query_id, qv): the quantized query side, optionally the
+    ``query_ids`` slice of ``emb``."""
+    if query_ids is not None:
+        emb = emb.filter(F.col(id_col).isin(list(query_ids)))
+    return emb.select(
+        F.col(id_col).alias("query_id"), quantized(F.col(vec_col)).alias("qv")
+    )
+
+
+def _top_k(scored: DataFrame, k: int, score: str,
+           asc: bool = False) -> DataFrame:
+    """Per-query top-``k`` of (query_id, neighbor_id, score) rows by
+    ``score`` (descending unless ``asc``), ties to the smaller neighbor
+    id — one window partitioned per query, never global."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.asc(score) if asc else F.desc(score), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", score, "rank")
+    )
+
+
+def _coarse_assign(vecs: DataFrame, cents: DataFrame, id_col: str,
+                   carry: tuple[str, ...] = ("v",)) -> DataFrame:
+    """Argmax-dot cell of every quantized (id, v) row against the
+    broadcast (cell_id, cv) table: ONE ``max_by`` aggregation keyed on
+    ``(dot_c, -cell_id)`` — map-side combinable, no window sort and no
+    K-times data amplification through a shuffle (the scored rows
+    collapse to one per vector before any exchange).  Ties resolve to
+    the smallest cell id.  Returns (id, cell_id, *carry); ``carry``
+    names ``v`` and/or ``dot_c``."""
+    scored = vecs.crossJoin(F.broadcast(cents)).select(
+        id_col, "cell_id", *[c for c in carry if c != "dot_c"],
+        int_dot(F.col("v"), F.col("cv")).alias("dot_c"),
+    )
+    best = F.max_by(
+        F.struct("cell_id", *carry),
+        F.struct(F.col("dot_c"), (-F.col("cell_id")).alias("neg_cell")),
+    )
+    return scored.groupBy(id_col).agg(best.alias("best")).select(
+        id_col, "best.*"
+    )
+
+
+def _floored_mean(rows: DataFrame, keys: list[str], vec: str) -> DataFrame:
+    """Per-``keys`` dimension-wise mean of the ``vec`` arrays ON THE
+    QUANTIZED INTEGER GRID: int64 sums (exact, order-independent)
+    divided per dimension and floored, so unlike a float mean the
+    result does not depend on aggregation order and a SQL oracle
+    replays it.  One posexplode -> (keys, dim) SUM/COUNT groupBy, then
+    one sorted collect_list reassembling the vectors — two
+    map-side-combinable aggregations over bounded keys.  Returns
+    (keys..., cv)."""
+    by_dim = rows.select(
+        *keys, F.posexplode(vec).alias("dim", "x")
+    ).groupBy(*keys, "dim").agg(
+        F.sum("x").alias("sx"), F.count(F.lit(1)).alias("n")
+    )
+    return (
+        by_dim.withColumn(
+            "cx", F.floor(F.col("sx") / F.col("n")).cast("long")
+        )
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct(F.col("dim"), F.col("cx")))
+                ),
+                lambda s: s.getField("cx"),
+            ).alias("cv")
+        )
+    )
+
+
 def ivf_assign(
     emb: DataFrame,
     centroid_mod: int = 97,
@@ -598,34 +699,12 @@ def ivf_assign(
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantization with deterministic centroid sampling
-    (``vec_id % centroid_mod == 0`` — reproducible without RNG or
-    iterative k-means).  Returns (centroids, assignments).
-
-    Assignment = argmax dot(centroid, vec) over the broadcast centroid
-    table, picked with a ``max_by`` aggregation keyed on
-    ``(dot_c, -cell_id)`` — map-side combinable partial aggregation, no
-    window sort and no K-times data amplification through a shuffle (the
-    scored rows collapse to one per vector before any exchange).  Ties
-    resolve to the smallest cell id, same as the reference ordering.  At
-    scale the cell id becomes a partition column so a probe touches only
-    its cells' files."""
-    cents = emb.filter(F.col(id_col) % centroid_mod == 0).select(
-        F.col(id_col).alias("cell_id"), quantized(F.col(vec_col)).alias("cv")
-    )
-    vecs = emb.select(F.col(id_col), quantized(F.col(vec_col)).alias("v"))
-    scored = vecs.crossJoin(F.broadcast(cents)).select(
-        id_col, "v", "cell_id", int_dot(F.col("v"), F.col("cv")).alias("dot_c")
-    )
-    best = F.max_by(
-        F.struct(F.col("cell_id"), F.col("v")),
-        F.struct(F.col("dot_c"), (-F.col("cell_id")).alias("neg_cell")),
-    ).alias("best")
-    assign = (
-        scored.groupBy(id_col)
-        .agg(best)
-        .select(id_col, "best.cell_id", "best.v")
-    )
-    return cents, assign
+    (:func:`_seed_cells`).  Returns (centroids, assignments) — the
+    assignment is the broadcast ``max_by`` of :func:`_coarse_assign`,
+    (id, cell_id, v).  At scale the cell id becomes a partition column
+    so a probe touches only its cells' files (:class:`IvfIndex`)."""
+    cents = _seed_cells(emb, centroid_mod, id_col, vec_col)
+    return cents, ivf_encode(emb, cents, id_col=id_col, vec_col=vec_col)
 
 
 def ivf_refine(
@@ -636,519 +715,100 @@ def ivf_refine(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Lloyd-refined IVF centroids — the iterative-algorithm shape in
-    pure DataFrame ops, deterministic to the bit:
-
-    each iteration re-assigns every vector to its argmax-dot centroid
-    (:func:`ivf_assign` semantics) and recomputes each cell's centroid
-    as the dimension-wise mean of its members ON THE QUANTIZED INTEGER
-    GRID — int64 sums (exact, order-independent) divided per dimension
-    and floored, so unlike float k-means the result does not depend on
-    aggregation order and a SQL oracle can replay every iteration.
+    pure DataFrame ops, deterministic to the bit: each iteration
+    re-assigns every vector to its argmax-dot centroid
+    (:func:`_coarse_assign`) and recomputes each cell's centroid as the
+    floored integer-grid mean of its members (:func:`_floored_mean`), so
+    a SQL oracle can replay every iteration.
 
     Plan per iteration: one broadcast-scored max_by assignment (no
-    window) + one posexplode -> (cell, dim) SUM/COUNT groupBy -> one
-    sorted collect_list reassembling the centroid vectors.  Shuffle keys
-    are (vec) then (cell, dim) — both bounded, no skew amplification:
-    at 100 TB each iteration is two map-side-combinable aggregations.
+    window) + the two bounded-key aggregations of the mean — at 100 TB
+    each iteration is map-side-combinable aggregations only.
 
     Returns (cell_id, cv) like the ``cents`` frame of :func:`ivf_assign`;
     empty cells drop out (their members re-home next iteration)."""
-    cents = emb.filter(F.col(id_col) % centroid_mod == 0).select(
-        F.col(id_col).alias("cell_id"), quantized(F.col(vec_col)).alias("cv")
-    )
+    cents = _seed_cells(emb, centroid_mod, id_col, vec_col)
     vecs = emb.select(F.col(id_col), quantized(F.col(vec_col)).alias("v"))
     for _ in range(iters):
-        scored = vecs.crossJoin(F.broadcast(cents)).select(
-            id_col, "v", "cell_id",
-            int_dot(F.col("v"), F.col("cv")).alias("dot_c"),
-        )
-        assign = (
-            scored.groupBy(id_col)
-            .agg(
-                F.max_by(
-                    F.struct(F.col("cell_id"), F.col("v")),
-                    F.struct(
-                        F.col("dot_c"), (-F.col("cell_id")).alias("neg_cell")
-                    ),
-                ).alias("best")
-            )
-            .select("best.cell_id", "best.v")
-        )
-        by_dim = assign.select(
-            "cell_id", F.posexplode("v").alias("dim", "x")
-        ).groupBy("cell_id", "dim").agg(
-            F.sum("x").alias("sx"), F.count(F.lit(1)).alias("n")
-        )
-        cents = (
-            by_dim.withColumn(
-                "cx", F.floor(F.col("sx") / F.col("n")).cast("long")
-            )
-            .groupBy("cell_id")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("dim"), F.col("cx")))
-                    ),
-                    lambda s: s.getField("cx"),
-                ).alias("cv")
-            )
+        cents = _floored_mean(
+            _coarse_assign(vecs, cents, id_col), ["cell_id"], "v"
         )
     return cents
 
 
-ANN_CELLS_TABLE = "ann_ivf_cells"
-ANN_CENTROIDS_TABLE = "ann_ivf_centroids"
-#: LSM-style upsert runs (r7, VERDICT r6 task 4): each upsert appends
-#: ONE flat file of (cell_id, id, v) rows sorted by cell_id, instead of
-#: rewriting a file into every target cell's partition dir — the
-#: partitioned write's per-file committer overhead scales with
-#: min(batch, n_cells) and dominated the fixed-batch upsert (measured
-#: 2.2 s for 500 rows into 191 leaf dirs vs 0.2 s flat).  Probes read
-#: base ∪ delta (the sort makes the delta's row-group stats prune by
-#: cell); :func:`ivf_compact_delta` folds grown deltas back into the
-#: base partitions.
-ANN_DELTA_TABLE = "ann_ivf_delta"
-#: constant-size Bloom filter over every id ever inserted (r7): the
-#: upsert's replaced-id discovery — the one index-wide scan — is
-#: skipped entirely when the filter proves a batch's ids are all fresh
-#: (the common ingest case).  False positives only cost the scan that
-#: would otherwise always run; bits are never cleared (replaced ids
-#: stay set — harmless FPs) and a full ivf_build resets it.
-ANN_ID_BLOOM_TABLE = "ann_ivf_id_bloom"
-ID_BLOOM_M_BITS = 1 << 22
-ID_BLOOM_K = 4
-def _bloom_word():
-    return F.expr("shiftleft(CAST(1 AS BIGINT), bit)")
-
-
-def _id_bloom_probes(ids: DataFrame, id_col: str) -> DataFrame:
-    seeded = ids.select(
-        F.col(id_col),
-        F.explode(
-            F.array(*[F.lit(i) for i in range(ID_BLOOM_K)])
-        ).alias("seed"),
-    )
-    pos = F.pmod(
-        F.xxhash64(F.col("seed"), F.col(id_col)), F.lit(ID_BLOOM_M_BITS)
-    )
-    return seeded.select(
-        F.col(id_col),
-        F.floor(pos / 32).cast("long").alias("word_idx"),
-        F.pmod(pos, 32).cast("int").alias("bit"),
-    )
-
-
-def _id_bloom_words(ids: DataFrame, id_col: str) -> DataFrame:
-    return (
-        _id_bloom_probes(ids, id_col)
-        .groupBy("word_idx")
-        .agg(F.bit_or(_bloom_word()).alias("word"))
-    )
-
-
-def _cells_union(wh, cells_table: str, delta_table: str) -> DataFrame:
-    """A cell-keyed index's logical row set: base partitions ∪ delta
-    runs.  The upsert maintains the no-duplicate-id invariant across
-    both, so readers just union.  Shared by the IVF index and the
-    IVF-PQ index (r12) — the payload columns differ (raw quantized
-    vector vs PQ codes), the layout contract is identical."""
-    base = wh.read(cells_table)
-    if wh.exists(delta_table):
-        base = base.select("cell_id", *[c for c in base.columns
-                                        if c != "cell_id"]).unionByName(
-            wh.read(delta_table)
-        )
-    return base
-
-
-def ivf_cells(wh) -> DataFrame:
-    """The IVF index's logical cell assignment (base ∪ delta)."""
-    return _cells_union(wh, ANN_CELLS_TABLE, ANN_DELTA_TABLE)
-
-
-def ivf_build(
-    wh,
-    emb: DataFrame,
-    centroid_mod: int = 97,
-    refine_iters: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells_target: int | None = None,
-) -> None:
-    """Materialize the IVF index AT REST: the assignment table is
-    partitioned BY CELL, so a probe's scan prunes to its cells' files —
-    the parquet analog of an inverted-file index (this is the '100 TB
-    path' the in-memory :func:`knn_ivf` docstring promises).
-
-    ``refine_iters`` Lloyd-refines the sampled centroids first
-    (:func:`ivf_refine`).
-
-    A FIXED ``centroid_mod`` means the cell count grows linearly with
-    the corpus, making the assignment crossJoin O(N^2 / mod) — the
-    sf1->sf3 bench measured exactly that cliff (alpha 1.41, PERF.md).
-    Pass ``n_cells_target`` to hold the cell count roughly constant
-    (mod = ceil(N / target), one count job): assignment compute is then
-    O(N x target) — the standard IVF sizing (cells ~ sqrt(N) or a fixed
-    budget), and what a production build should always use."""
-    if n_cells_target is not None:
-        n = emb.count()
-        centroid_mod = max(1, -(-n // n_cells_target))
-    if refine_iters > 0:
-        cents = ivf_refine(emb, refine_iters, centroid_mod, id_col, vec_col)
-    else:
-        cents, _ = ivf_assign(emb, centroid_mod, id_col, vec_col)
-    vecs = emb.select(F.col(id_col), quantized(F.col(vec_col)).alias("v"))
-    scored = vecs.crossJoin(F.broadcast(cents)).select(
-        id_col, "v", "cell_id", int_dot(F.col("v"), F.col("cv")).alias("dot_c")
-    )
-    assign = (
-        scored.groupBy(id_col)
-        .agg(
-            F.max_by(
-                F.struct(F.col("cell_id"), F.col("v")),
-                F.struct(F.col("dot_c"), (-F.col("cell_id")).alias("neg")),
-            ).alias("best")
-        )
-        .select(F.col("best.cell_id").alias("cell_id"), id_col, "best.v")
-    )
-    wh.overwrite(assign, ANN_CELLS_TABLE, partition_by=["cell_id"])
-    wh.overwrite(cents, ANN_CENTROIDS_TABLE)
-    wh.drop_table(ANN_DELTA_TABLE)  # a rebuild supersedes pending runs
-    wh.overwrite(
-        _id_bloom_words(emb.select(id_col), id_col), ANN_ID_BLOOM_TABLE
-    )
-
-
-# r14 (VERDICT r13 task 4, BENCH_STAGES_ANN_r14.json): the upsert is
-# batch-bounded BY DESIGN (run append + Bloom-gated touched-cell
-# rewrite), i.e. an engine maintenance pass, not an analytics query —
-# it runs on the engine session (narrow exchanges, no per-exchange AQE
-# stage jobs, single-job bounded probes); the full-corpus
-# ivf_build/ivfpq_index_build keep the analytics posture.
-def ivf_upsert(
-    wh,
-    new_emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    assume_new_ids: bool = False,
-    compact_delta_runs: int = 16,
-) -> None:
-    """Incrementally maintain the at-rest IVF index: assign a NEW batch
-    of vectors to the EXISTING centroids and fold it into the cells
-    table — the continuous-ingest path (a corpus grows daily; rebuilding
-    the whole index per batch is a full-corpus job, this touches only
-    the batch and its target cells).
-
-    Upsert semantics: a re-sent ``vec_id`` replaces its old row (the
-    vector may have been re-embedded), even when the new vector lands
-    in a DIFFERENT cell.  Plan: broadcast-scored ``max_by`` assignment
-    of the batch (same arithmetic as the build, so probe results are
-    indistinguishable from a full rebuild), then an LSM-style write
-    (r7, VERDICT r6 task 4 — upsert IO is now proportional to the
-    BATCH, not to min(batch, n_cells) partition-dir rewrites):
-
-    - the batch lands as ONE flat sorted run appended to
-      ``ANN_DELTA_TABLE`` (sorted by cell so probes prune its row
-      groups);
-    - only base cells HOLDING A REPLACED id rewrite
-      (stage_replace_tree, partition-pruned, bounded by the batch);
-      replaced ids already sitting in the delta rewrite the (small)
-      delta instead;
-    - when the delta accumulates ``compact_delta_runs`` run files,
-      :func:`ivf_compact_delta` folds it into the base partitions —
-      one staged pass, one file per touched cell.
-
-    All ops of one upsert commit through a single txn.StagedPass
-    manifest: a crash at any point leaves readers on the intact
-    pre-batch index or the complete post-batch one, never a replaced id
-    present in two places.  Interrupted publishes are healed here (and
-    by any reader) before the next batch.
-
-    Centroids stay FIXED — standard IVF practice (drift re-clustering
-    is a periodic full ``ivf_build``); the assignment is exact w.r.t.
-    the current centroids either way.
-
-    ``assume_new_ids=True`` is the append-only ingest fast path: the
-    replaced-id discovery is a semi-join SCAN of the whole index's
-    narrow (cell_id, id) columns (ids spread across every cell, so
-    partition pruning can't help), and a caller that KNOWS its ids are
-    fresh (monotonic ingest keys) skips it — the upsert is then just
-    the run append."""
-    from ..txn import GLOBAL_LANE, StagedPass
-
-    wh = wh.engine()
-    new_emb = adopt(wh.spark, new_emb)
-    # complete any interrupted index publish first (idempotent, cheap —
-    # readers would self-heal anyway via the manifest, this also sweeps
-    # dead stage trees)
-    StagedPass.recover(wh, GLOBAL_LANE, sweep=True)
-    cents = wh.read(ANN_CENTROIDS_TABLE)
-    vecs = new_emb.select(
-        F.col(id_col), quantized(F.col(vec_col)).alias("v")
-    )
-    # score WITHOUT carrying the vector through the x n_cells scored
-    # frame (the struct copy of 64 longs per (id, cell) row dominated
-    # the partial aggregation as the centroid count grew); the winning
-    # cell joins its vector back from the small batch frame afterwards
-    scored = vecs.crossJoin(F.broadcast(cents)).select(
-        id_col, "cell_id", int_dot(F.col("v"), F.col("cv")).alias("dot_c")
-    )
-    best_cell = (
-        scored.groupBy(id_col)
-        .agg(
-            F.max_by(
-                F.col("cell_id"),
-                F.struct(F.col("dot_c"), (-F.col("cell_id")).alias("neg")),
-            ).alias("cell_id")
-        )
-    )
-    assign = best_cell.join(vecs, id_col).select("cell_id", id_col, "v")
-    _lsm_upsert(
-        wh, assign, id_col,
-        cells_table=ANN_CELLS_TABLE,
-        delta_table=ANN_DELTA_TABLE,
-        bloom_table=ANN_ID_BLOOM_TABLE,
-        assume_new_ids=assume_new_ids,
-        compact_delta_runs=compact_delta_runs,
-    )
-
-
-def _lsm_upsert(
-    wh,
-    assign: DataFrame,
-    id_col: str,
-    *,
-    cells_table: str,
-    delta_table: str,
-    bloom_table: str,
-    assume_new_ids: bool,
-    compact_delta_runs: int,
-) -> None:
-    """The LSM-style index fold shared by the IVF and IVF-PQ at-rest
-    indexes (factored r12): given the batch's final (cell_id, id,
-    payload...) rows — raw quantized vectors for IVF, PQ codes for
-    IVF-PQ — append them as ONE sorted run, rewrite only base cells
-    holding a replaced id (Bloom-gated discovery), fold the delta when
-    it grows.  All of one upsert commits through a single StagedPass
-    manifest; see :func:`ivf_upsert` for the full semantics."""
-    from ..txn import GLOBAL_LANE, StagedPass
-
-    cols = ["cell_id", id_col] + [
-        c for c in assign.columns if c not in ("cell_id", id_col)
-    ]
-    assign = assign.select(*cols).persist()
-    run = assign.coalesce(1).sortWithinPartitions("cell_id")
-    try:
-        batch_ids = assign.select(id_col)
-        # maintain the id Bloom in the SAME pass: new filter = old words
-        # OR the batch's words (constant m_bits/32 rows either way).
-        # Missing filter (pre-r7 index): seed it from the full id set
-        # once — a narrow scan the filter then amortizes away.
-        if wh.exists(bloom_table):
-            old_bloom = wh.read(bloom_table)
-        else:
-            old_bloom = _id_bloom_words(
-                _cells_union(wh, cells_table, delta_table).select(id_col),
-                id_col,
-            )
-        new_bloom = (
-            old_bloom.unionByName(_id_bloom_words(batch_ids, id_col))
-            .groupBy("word_idx")
-            .agg(F.bit_or("word").alias("word"))
-        )
-        if assume_new_ids:
-            sp = StagedPass(wh, GLOBAL_LANE)
-            sp.stage_append_flat(run, delta_table)
-            sp.stage_replace_flat(new_bloom, bloom_table)
-            sp.publish()
-            _compact_delta(wh, compact_delta_runs, cells_table, delta_table)
-            return
-        sp = StagedPass(wh, GLOBAL_LANE)
-        # Bloom gate for the replaced-id discovery: when every batch id
-        # probes NEGATIVE (all-fresh ingest, the common case), the
-        # index-wide discovery scan is skipped outright.  A positive —
-        # real or false — falls through to the scan, which is the
-        # correctness authority either way.
-        maybe_present = True
-        if wh.exists(bloom_table):
-            hit = (
-                F.col("word").isNotNull()
-                & (F.col("word").bitwiseAND(_bloom_word()) != 0)
-            )
-            maybe_present = (
-                _id_bloom_probes(batch_ids, id_col)
-                .join(F.broadcast(wh.read(bloom_table)),
-                      "word_idx", "left")
-                .groupBy(id_col)
-                .agg(F.bool_and(hit).alias("in_bloom"))
-                .filter("in_bloom")
-                .limit(1).count() > 0
-            )
-        stale_ids: set = set()
-        if maybe_present:
-            # base cells holding a replaced id rewrite (bounded by the
-            # batch, partition-pruned via a literal IN-filter); the
-            # discovery is the one index-wide pass, column-pruned to
-            # the narrow (cell_id, id) columns — payloads are not read
-            base = wh.read(cells_table)
-            stale_cells = (
-                base.join(F.broadcast(batch_ids), id_col, "left_semi")
-                .select("cell_id").distinct()
-            )
-            stale_ids = {r.cell_id for r in stale_cells.collect()}
-        if stale_ids:
-            kept = (
-                base.filter(
-                    F.col("cell_id").isin([int(c) for c in stale_ids])
-                )
-                .join(F.broadcast(batch_ids), id_col, "left_anti")
-                .select(*cols)
-                .persist()
-            )
-            try:
-                # a stale cell whose members were ALL replaced emits no
-                # rewrite rows — record it as an explicit drop so its
-                # old files retire atomically with everything else
-                kept_cells = {
-                    r.cell_id
-                    for r in kept.select("cell_id").distinct().collect()
-                }
-                sp.stage_replace_tree(
-                    kept,
-                    cells_table,
-                    partition_by=["cell_id"],
-                    drops=[f"cell_id={c}"
-                           for c in sorted(stale_ids - kept_cells)],
-                )
-            finally:
-                kept.unpersist()
-        # replaced ids sitting in the delta rewrite the (small) delta;
-        # gated by the same Bloom verdict — all-fresh batches skip it
-        if maybe_present and wh.exists(delta_table):
-            delta = wh.read(delta_table)
-            has_stale_delta = (
-                delta.join(F.broadcast(batch_ids), id_col, "left_semi")
-                .limit(1).count() > 0
-            )
-            if has_stale_delta:
-                sp.stage_replace_flat(
-                    delta.join(F.broadcast(batch_ids), id_col, "left_anti")
-                    .coalesce(1).sortWithinPartitions("cell_id"),
-                    delta_table,
-                )
-        sp.stage_append_flat(run, delta_table)
-        sp.stage_replace_flat(new_bloom, bloom_table)
-        sp.publish()
-        _compact_delta(wh, compact_delta_runs, cells_table, delta_table)
-    finally:
-        assign.unpersist()
-
-
-def _compact_delta(wh, min_runs: int, cells_table: str,
-                   delta_table: str) -> bool:
-    """Fold the delta's run files back into the base cell partitions
-    when ``min_runs`` or more have accumulated (0 forces a fold).  ONE
-    staged pass: an append-tree of the delta rows into their cells (one
-    file per touched cell via a repartition on the cell key) plus a
-    flat replace of the delta with empty — committed atomically, so
-    readers never see a row in both places.
-
-    The run-count probe goes through the READER path (r13, VERDICT r12
-    task 5): ``wh.read`` resolves pending StagedPass manifests first
-    and builds its file index through the Hadoop FS abstraction, so the
-    probe counts the manifest-resolved run files on ANY filesystem the
-    warehouse sits on (each upsert appends exactly one sorted run
-    file), instead of a POSIX ``os.listdir`` that only worked on a
-    local disk.  ``inputFiles()`` is driver-side metadata off the
-    already-built index — no Spark job."""
-    from ..txn import GLOBAL_LANE, StagedPass
-
-    if not wh.exists(delta_table):
-        return False
-    delta = wh.read(delta_table)
-    if len(delta.inputFiles()) < max(1, min_runs):
-        return False
-    sp = StagedPass(wh, GLOBAL_LANE)
-    sp.stage_append_tree(
-        delta.repartition(F.col("cell_id")),
-        cells_table,
-        partition_by=["cell_id"],
-    )
-    sp.stage_replace_flat(
-        wh.spark.createDataFrame([], delta.schema), delta_table
-    )
-    sp.publish()
-    return True
-
-
-def ivf_compact_delta(wh, min_runs: int = 16) -> bool:
-    """Fold the IVF delta into its base cells (see
-    :func:`_compact_delta`)."""
-    return _compact_delta(wh, min_runs, ANN_CELLS_TABLE, ANN_DELTA_TABLE)
-
-
-def ivf_probe(
-    wh,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query the at-rest IVF index: pick each query's nprobe best cells
-    against the (tiny, broadcast) centroid table, then scan ONLY those
-    cells' partitions of the assignment table.
-
-    The probed cell ids are collected to build the partition predicate —
-    bounded by queries x nprobe, never by the corpus."""
-    cents = wh.read(ANN_CENTROIDS_TABLE)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), quantized(F.col(vec_col)).alias("qv")
-    )
+def _probe_cells(q: DataFrame, cents: DataFrame, nprobe: int,
+                 residual: bool = False) -> DataFrame:
+    """Each query's ``nprobe`` best cells by (dot desc, cell_id asc)
+    against the broadcast centroid table: one window partitioned per
+    query over |q| x cells rows, whose row number is the cell's probe
+    rank.  Returns (query_id, cell_id, cell_rank, qv); with ``residual``
+    (the PQ codec) ``qv`` is the query minus the cell's centroid, the
+    vector its lookup table is built from."""
     qc = q.crossJoin(F.broadcast(cents)).select(
-        "query_id", "qv", "cell_id",
+        "query_id", "qv", "cell_id", *(["cv"] if residual else []),
         int_dot(F.col("qv"), F.col("cv")).alias("dot_c"),
     )
-    top_cells = qc.groupBy("query_id").agg(
-        F.slice(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("dot_c"),
-                        (-F.col("cell_id")).alias("neg_cell"),
-                        F.col("cell_id"),
-                    )
-                ),
-                asc=False,
-            ),
-            1,
-            nprobe,
-        ).alias("top")
-    )
-    probes = top_cells.select(
-        "query_id", F.explode("top.cell_id").alias("cell_id")
-    )
-    cell_ids = sorted({r.cell_id for r in probes.distinct().collect()})
-    # base partitions prune to the probed cells; the delta's sorted runs
-    # prune by row-group stats on the same filter
-    cells = ivf_cells(wh).filter(F.col("cell_id").isin(cell_ids))
-    cand = (
-        F.broadcast(probes.join(q, "query_id"))
-        .join(cells, "cell_id")
-        .filter(F.col(id_col) != F.col("query_id"))
-    )
-    scored = cand.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        int_dot(F.col("qv"), F.col("v")).alias("dot_q"),
-    )
     w = Window.partitionBy("query_id").orderBy(
-        F.desc("dot_q"), F.asc("neighbor_id")
+        F.desc("dot_c"), F.asc("cell_id")
     )
+    qv = (F.zip_with("qv", "cv", lambda x, y: x - y) if residual
+          else F.col("qv"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot_q", "rank")
+        qc.withColumn("cell_rank", F.row_number().over(w))
+        .filter(F.col("cell_rank") <= nprobe)
+        .select("query_id", "cell_id", "cell_rank", qv.alias("qv"))
+    )
+
+
+def _score(probes: DataFrame, rows: DataFrame, id_col: str,
+           codebook: DataFrame | None = None, m: int = 8,
+           keys: tuple[str, ...] = ("cell_id",),
+           with_rank: bool = False) -> DataFrame:
+    """Score every (query, candidate) pair sharing ``keys`` — the one
+    scorer behind every IVF / PQ search, curve and at-rest probe.
+
+    ``probes`` is (query_id, *keys, qv[, cell_rank]) and ``rows`` the
+    candidates (id, *keys, v | codes); queries never score themselves.
+
+    - raw (``codebook`` None): the exact quantized dot ``dot_q`` — the
+      bounded probes broadcast onto the candidate stream;
+    - PQ: asymmetric distance ``adist_q`` (ADC) — ``qv`` splits into
+      ``m`` subvectors, each (query, subspace, code) gets one int64 L2
+      lookup-table entry, and a candidate's distance is the SUM of its
+      codes' entries.  The LUT broadcasts onto the exploded code
+      stream; the per-pair sum partial-aggregates before its exchange.
+
+    ``with_rank`` carries the probe's ``cell_rank`` (single-valued per
+    pair: a candidate lives in exactly one cell).  Returns (query_id,
+    neighbor_id[, cell_rank], dot_q | adist_q)."""
+    rank = ["cell_rank"] if with_rank else []
+    if codebook is None:
+        return (
+            F.broadcast(probes).join(rows, list(keys))
+            .filter(F.col(id_col) != F.col("query_id"))
+            .select(
+                "query_id", F.col(id_col).alias("neighbor_id"), *rank,
+                int_dot(F.col("qv"), F.col("v")).alias("dot_q"),
+            )
+        )
+    lut = _subvec_rows(
+        probes, F.col("qv"), m, ["query_id", *keys, *rank], "qsv"
+    ).join(F.broadcast(codebook), "sub").select(
+        "query_id", *keys, *rank, "sub", "code",
+        int_l2(F.col("qsv"), F.col("cv")).alias("d2"),
+    )
+    code_rows = rows.select(
+        F.col(id_col).alias("neighbor_id"), *keys,
+        F.posexplode("codes").alias("sub", "code"),
+    ).withColumn("sub", F.col("sub").cast("int"))
+    aggs = [F.sum("d2").alias("adist_q")]
+    if with_rank:
+        aggs.append(F.min("cell_rank").alias("cell_rank"))
+    return (
+        code_rows.join(F.broadcast(lut), [*keys, "sub", "code"])
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .groupBy("query_id", "neighbor_id")
+        .agg(*aggs)
     )
 
 
@@ -1172,9 +832,9 @@ def knn_ivf(
     ``mod 97`` sampling bit-for-bit; without the sizing, cells grow as
     n/97 and the broadcast assignment crossJoin does n x n/97 work —
     the quadratic the ann_ivf_recall second-decade measurement exposed
-    (alpha 2.23 sf1->sf3).  ivf_build's at-rest path has held cells
-    fixed since r7 (n_cells_target); this brings the one-shot searcher
-    onto the same posture.
+    (alpha 2.23 sf1->sf3).  The at-rest build has held cells fixed since
+    r7 (n_cells_target); this brings the one-shot searcher onto the
+    same posture.
 
     ORACLE COUPLING (ADVICE r10): the SQL oracle (ORACLE_KNN_IVF)
     hardcodes ``vec_id % 97`` — bit-equal to this default only while
@@ -1183,48 +843,136 @@ def knn_ivf(
     if centroid_mod is None:
         centroid_mod = max(97, emb.count() // n_cells_target)
     cents, assign = ivf_assign(emb, centroid_mod, id_col, vec_col)
-    q = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), quantized(F.col(vec_col)).alias("qv")
+    probes = _probe_cells(
+        _query_vecs(emb, id_col, vec_col, query_ids), cents, nprobe
     )
-    qc = q.crossJoin(F.broadcast(cents)).select(
-        "query_id", "qv", "cell_id", int_dot(F.col("qv"), F.col("cv")).alias("dot_c")
+    return _top_k(_score(probes, assign, id_col), k, "dot_q")
+
+
+def _nprobe_curve(scored: DataFrame, exact: DataFrame,
+                  nprobes: tuple[int, ...], k: int, score: str, asc: bool,
+                  probes: DataFrame | None = None) -> DataFrame:
+    """One operating-point row per ``nprobe`` from ONE scoring pass at
+    the largest nprobe: ``scored`` is (query_id, neighbor_id,
+    cell_rank, score) and ``exact`` the brute-force truth.
+
+    Candidate sets are NESTED in nprobe and every config ranks by the
+    same (score, neighbor_id) order, so one running-count window pass
+    yields each row's rank within every config's subset at once, and
+    one conditional aggregate replaces all per-config counts (r14: the
+    per-config loop unioned |nprobes| legs of count/window/semi-join
+    subtrees re-reading the scored checkpoint).  Values are identical:
+    rank_i of a qualifying row == row_number over the cell_rank<=np_i
+    filter, and sum(when(qual,1)) == filter+count.
+
+    Row: (nprobe, n_truth, n_cand, n_hit, recall).  Given the probed
+    ``probes`` (the at-rest curve), each row adds the cost axes
+    ``n_cells`` (query, cell) partition reads and ``n_cand_hit`` /
+    ``cand_recall`` — true neighbors whose cell was scanned at all."""
+    def count(cond):
+        return F.coalesce(F.sum(F.when(cond, F.lit(1)).cast("long")),
+                          F.lit(0).cast("long"))
+
+    at_rest = probes is not None
+    wrun = (
+        Window.partitionBy("query_id")
+        .orderBy(F.asc(score) if asc else F.desc(score),
+                 F.asc("neighbor_id"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # top-nprobe cells per query via sort_array over a collected struct
-    # list — one groupBy, no window (same aggregation-not-window shape as
-    # ivf_assign; the list is centroid-count bounded, sorted desc by
-    # (dot_c, -cell_id) so ties resolve to the smallest cell id)
-    top_cells = qc.groupBy("query_id").agg(
-        F.slice(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("dot_c"),
-                        (-F.col("cell_id")).alias("neg_cell"),
-                        F.col("cell_id"),
-                    )
-                ),
-                asc=False,
-            ),
-            1,
-            nprobe,
-        ).alias("top")
+    ranked = scored.join(
+        F.broadcast(exact.select(
+            "query_id", "neighbor_id", F.lit(1).alias("is_truth")
+        )),
+        ["query_id", "neighbor_id"], "left",
+    ).select(
+        "cell_rank", "is_truth",
+        *[
+            F.sum(F.when(F.col("cell_rank") <= np_, 1).otherwise(0))
+            .over(wrun).alias(f"rank_{i}")
+            for i, np_ in enumerate(nprobes)
+        ],
     )
-    probes = top_cells.select(
-        "query_id", F.explode("top.cell_id").alias("cell_id")
-    ).join(F.broadcast(q), "query_id")
-    cand = probes.join(
-        assign.select(F.col(id_col).alias("neighbor_id"), "cell_id", "v"),
-        "cell_id",
-    ).filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = cand.select(
-        "query_id", "neighbor_id", int_dot(F.col("qv"), F.col("v")).alias("dot_q")
+    truth = F.col("is_truth") == 1
+    aggs = []
+    for i, np_ in enumerate(nprobes):
+        qual = F.col("cell_rank") <= np_
+        aggs.append(count(qual).alias(f"n_cand_{i}"))
+        if at_rest:
+            aggs.append(count(qual & truth).alias(f"n_cand_hit_{i}"))
+        aggs.append(count(qual & truth & (F.col(f"rank_{i}") <= k))
+                    .alias(f"n_hit_{i}"))
+    merged = ranked.agg(*aggs)
+    if at_rest:
+        merged = merged.crossJoin(probes.agg(*[
+            count(F.col("cell_rank") <= np_).alias(f"n_cells_{i}")
+            for i, np_ in enumerate(nprobes)
+        ]))
+    merged = merged.crossJoin(
+        exact.agg(F.count(F.lit(1)).alias("n_truth"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_q"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot_q", "rank")
+
+    def row(i, np_):
+        def c(name):
+            return F.col(f"{name}_{i}")
+        fields = [F.lit(np_).cast("long").alias("nprobe")]
+        if at_rest:
+            fields.append(c("n_cells").alias("n_cells"))
+        fields += [F.col("n_truth").alias("n_truth"),
+                   c("n_cand").alias("n_cand")]
+        if at_rest:
+            fields += [c("n_cand_hit").alias("n_cand_hit"),
+                       (c("n_cand_hit") / F.col("n_truth"))
+                       .alias("cand_recall")]
+        return F.struct(*fields, c("n_hit").alias("n_hit"),
+                        (c("n_hit") / F.col("n_truth")).alias("recall"))
+
+    return merged.select(
+        F.explode(F.array(*[row(i, np_) for i, np_ in enumerate(nprobes)]))
+        .alias("r")
+    ).select("r.*")
+
+
+def ivf_nprobe_tuning(
+    emb: DataFrame,
+    query_ids: list[int],
+    k: int = 10,
+    nprobes: tuple[int, ...] = (1, 2, 4),
+    centroid_mod: int | None = None,
+    n_cells_target: int = 64,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The IVF operating-point curve (r12, VERDICT r11 task 5): measured
+    recall AND scan cost at each ``nprobe`` against ONE shared exact
+    brute-force truth — the ANN sibling of :func:`dedup.lsh_tuning`,
+    and the number a deployment picks its nprobe from.  One row per
+    config: (nprobe, n_truth, n_cand, n_hit, recall); ``n_cand`` is the
+    candidate rows actually scored (the probe's IO/compute bill),
+    ``recall`` the fraction of true top-k recovered.
+
+    SHARED WORK, like lsh_tuning: the truth relation, the coarse
+    assignment, and the candidate scoring run ONCE — each query's cells
+    carry their probe rank, every candidate is scored at the LARGEST
+    nprobe, and each config is a ``cell_rank <= nprobe`` filter over the
+    already-scored rows (:func:`_nprobe_curve`).  Because cells are
+    rescanned with the EXACT ranking metric, candidate sets are nested
+    in nprobe and recall is provably non-decreasing (pytest-pinned).
+
+    Plan (100 TB): one corpus pass for the truth (queries broadcast),
+    one for the assignment, probed-cell-bounded scoring; the per-config
+    windows partition per query, never globally."""
+    if centroid_mod is None:
+        centroid_mod = max(97, emb.count() // n_cells_target)
+    exact = knn_bruteforce(emb, query_ids, k, id_col, vec_col) \
+        .localCheckpoint(eager=False)
+    cents, assign = ivf_assign(emb, centroid_mod, id_col, vec_col)
+    probes = _probe_cells(
+        _query_vecs(emb, id_col, vec_col, query_ids), cents, max(nprobes)
     )
+    scored = _score(probes, assign, id_col, with_rank=True) \
+        .localCheckpoint(eager=False)
+    return _nprobe_curve(scored, exact, nprobes, k, "dot_q", asc=False)
 
 
 def _quantize_np(vec_series):
@@ -1380,12 +1128,7 @@ def knn_bruteforce_blocked(
         emb.sparkSession.sparkContext.defaultParallelism
     )
     local = blocks.mapInPandas(fn, "query_id long, neighbor_id long, dot_q long")
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_q"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot_q", "rank")
-    )
+    return _top_k(local, k, "dot_q")
 
 
 def lsh_bucket(vec, planes: list[list[float]]):
@@ -1519,12 +1262,7 @@ def knn_lsh(
         # a pair can collide in several probed buckets; dot_q is
         # deterministic so the distinct collapses exact duplicates
         scored = scored.distinct()
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_q"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot_q", "rank")
-    )
+    return _top_k(scored, k, "dot_q")
 
 
 def embedding_outliers(
@@ -1541,32 +1279,19 @@ def embedding_outliers(
 
     All arithmetic follows :func:`ivf_refine`'s exact-integer
     convention: centroids are dimension-wise floored means ON THE
-    QUANTIZED GRID (int64 sums — order-independent, engine-portable),
-    distances are exact int64 dots, so the SQL oracle replays
-    everything including ties (id tie-break).
+    QUANTIZED GRID (:func:`_floored_mean` — int64 sums,
+    order-independent, engine-portable), distances are exact int64
+    dots, so the SQL oracle replays everything including ties (id
+    tie-break).
 
-    Plan shape: one posexplode -> (label, dim) SUM/COUNT groupBy (two
-    map-side-combinable aggregations) -> sorted collect_list
-    reassembles each centroid; the centroid dim is label-bounded and
+    Plan shape: the mean's two map-side-combinable aggregations
+    reassemble each centroid; the centroid dim is label-bounded and
     **broadcast**; the final pick is a window partitioned by label
     (bounded fan-in), never a global sort."""
     vecs = emb.select(
         F.col(label_col), F.col(id_col), quantized(F.col(vec_col)).alias("v")
     )
-    dims = vecs.select(
-        label_col, F.posexplode("v").alias("dim", "x")
-    )
-    cent_dims = dims.groupBy(label_col, "dim").agg(
-        F.floor(
-            F.sum("x").cast("double") / F.count("*")
-        ).cast("long").alias("cx")
-    )
-    cents = cent_dims.groupBy(label_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "cx"))),
-            lambda s: s["cx"],
-        ).alias("cv")
-    )
+    cents = _floored_mean(vecs, [label_col], "v")
     scored = vecs.join(F.broadcast(cents), label_col).select(
         label_col, id_col, int_dot(F.col("v"), F.col("cv")).alias("dot_c")
     )
@@ -1655,7 +1380,7 @@ def hard_negatives(
     stream (map-side scoring, no corpus shuffle); the per-query top-k
     is a window partitioned by query_id — never global.  When the
     query slice outgrows a broadcast, mine in label-blocked batches or
-    route through :func:`knn_lsh` / :func:`ivf_probe` with a
+    route through :func:`knn_lsh` / :meth:`IvfIndex.probe` with a
     post-filter on the label — the candidate generation machinery is
     shared."""
     q = emb
@@ -1689,123 +1414,6 @@ def hard_negatives(
     )
 
 
-def ivf_nprobe_tuning(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    nprobes: tuple[int, ...] = (1, 2, 4),
-    centroid_mod: int | None = None,
-    n_cells_target: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The IVF operating-point curve (r12, VERDICT r11 task 5): measured
-    recall AND scan cost at each ``nprobe`` against ONE shared exact
-    brute-force truth — the ANN sibling of :func:`dedup.lsh_tuning`,
-    and the number a deployment picks its nprobe from.  One row per
-    config: (nprobe, n_truth, n_cand, n_hit, recall); ``n_cand`` is the
-    candidate rows actually scored (the probe's IO/compute bill),
-    ``recall`` the fraction of true top-k recovered.
-
-    SHARED WORK, like lsh_tuning: the truth relation, the coarse
-    assignment, and the candidate scoring run ONCE — each query's cells
-    carry their probe rank, every candidate is scored at the LARGEST
-    nprobe, and each config is a filter (``cell_rank <= nprobe``) plus
-    a per-query top-k over the already-scored rows.  Because cells are
-    rescanned with the EXACT ranking metric, candidate sets are nested
-    in nprobe and recall is provably non-decreasing (pytest-pinned).
-
-    Plan (100 TB): one corpus pass for the truth (queries broadcast),
-    one for the assignment, probed-cell-bounded scoring; the per-config
-    windows partition per query, never globally."""
-    if centroid_mod is None:
-        centroid_mod = max(97, emb.count() // n_cells_target)
-    exact = knn_bruteforce(emb, query_ids, k, id_col, vec_col) \
-        .localCheckpoint(eager=False)
-    cents, assign = ivf_assign(emb, centroid_mod, id_col, vec_col)
-    q = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), quantized(F.col(vec_col)).alias("qv")
-    )
-    qc = q.crossJoin(F.broadcast(cents)).select(
-        "query_id", "qv", "cell_id",
-        int_dot(F.col("qv"), F.col("cv")).alias("dot_c"),
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.desc("dot_c"), F.asc("cell_id")
-    )
-    probes = (
-        qc.withColumn("cell_rank", F.row_number().over(wc))
-        .filter(F.col("cell_rank") <= max(nprobes))
-        .select("query_id", "qv", "cell_id", "cell_rank")
-    )
-    cand = (
-        F.broadcast(probes)
-        .join(assign.select(F.col(id_col).alias("neighbor_id"),
-                            "cell_id", "v"), "cell_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id", "neighbor_id", "cell_rank",
-            int_dot(F.col("qv"), F.col("v")).alias("dot_q"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    # Fused curve evaluation (r14, guide §1.2/§2.4): the old per-config
-    # loop unioned |nprobes| legs of (count agg x crossJoin x window
-    # top-k x truth semi-join) — 9+ aggregate subtrees re-reading the
-    # cand checkpoint.  Candidate sets are NESTED in nprobe and every
-    # config shares one ordering (dot_q desc, neighbor_id asc; unique
-    # per (query, neighbor)), so one running-count window pass yields
-    # each row's rank WITHIN every config's subset at once, and one
-    # conditional aggregate replaces all the per-config counts.  Values
-    # are identical: rank_i of a qualifying row == row_number over the
-    # cell_rank<=np_i filter, and sum(when(qual,1)) == filter+count.
-    truth_flag = exact.select(
-        "query_id", "neighbor_id", F.lit(1).alias("is_truth")
-    )
-    wrun = (
-        Window.partitionBy("query_id")
-        .orderBy(F.desc("dot_q"), F.asc("neighbor_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ranked = cand.join(
-        F.broadcast(truth_flag), ["query_id", "neighbor_id"], "left"
-    ).select(
-        "cell_rank", "is_truth",
-        *[
-            F.sum(F.when(F.col("cell_rank") <= np_, 1).otherwise(0))
-            .over(wrun).alias(f"rank_{i}")
-            for i, np_ in enumerate(nprobes)
-        ],
-    )
-    aggs = []
-    for i, np_ in enumerate(nprobes):
-        qual = F.col("cell_rank") <= np_
-        aggs += [
-            F.coalesce(F.sum(F.when(qual, F.lit(1)).cast("long")),
-                       F.lit(0).cast("long")).alias(f"n_cand_{i}"),
-            F.coalesce(
-                F.sum(F.when(qual & (F.col("is_truth") == 1)
-                             & (F.col(f"rank_{i}") <= k),
-                             F.lit(1)).cast("long")),
-                F.lit(0).cast("long")).alias(f"n_hit_{i}"),
-        ]
-    merged = ranked.agg(*aggs).crossJoin(
-        exact.agg(F.count(F.lit(1)).alias("n_truth"))
-    )
-    return merged.select(
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(np_).cast("long").alias("nprobe"),
-                F.col("n_truth").alias("n_truth"),
-                F.col(f"n_cand_{i}").alias("n_cand"),
-                F.col(f"n_hit_{i}").alias("n_hit"),
-                (F.col(f"n_hit_{i}") / F.col("n_truth")).alias("recall"),
-            )
-            for i, np_ in enumerate(nprobes)
-        ])).alias("r")
-    ).select("r.*")
-
-
 def _pq_subvecs(vcol: Column, m: int) -> Column:
     """Split a quantized vector into ``m`` equal subvectors:
     array<struct<sub:int, sv:array<long>>>.  The subspace width comes
@@ -1821,15 +1429,47 @@ def _pq_subvecs(vcol: Column, m: int) -> Column:
     )
 
 
-def _l2_q(a: Column, b: Column) -> Column:
-    """Exact integer squared L2 between quantized subvectors — the PQ
-    assignment metric (dot ranking is only distance-equivalent for
-    whole unit vectors; SUBvector norms vary, so encode must minimize
-    true L2).  Max value d_m * (2 QUANT)^2 ~ 3.2e13 for d_m=8: int64."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+def _subvec_rows(df: DataFrame, vcol: Column, m: int, keep: list[str],
+                 sv: str = "sv") -> DataFrame:
+    """One row per (``keep``..., subspace) of ``vcol``'s ``m``
+    subvectors: (keep..., sub, <sv>)."""
+    return df.select(
+        *keep, F.explode(_pq_subvecs(vcol, m)).alias("p")
+    ).select(*keep, F.col("p.sub").alias("sub"), F.col("p.sv").alias(sv))
+
+
+def _nearest_code(rows: DataFrame, codebook: DataFrame, keys: list[str],
+                  carry: tuple[str, ...] = ()) -> DataFrame:
+    """Per (keys, sub) subvector row ``sv``: the (sub, code, cv)
+    codebook entry of least exact int64 L2, ties to the lower code —
+    the PQ assignment metric (dot ranking is only distance-equivalent
+    for whole unit vectors; SUBvector norms vary).  Map-side against the
+    broadcast codebook; the ``min_by`` partial-aggregates before its
+    exchange.  Returns (keys..., sub, code, *carry)."""
+    best = F.min_by(F.struct("code", *carry),
+                    F.struct(F.col("d2"), F.col("code")))
+    return (
+        rows.join(F.broadcast(codebook), "sub")
+        .select(*keys, "sub", "code", *carry,
+                int_l2(F.col("sv"), F.col("cv")).alias("d2"))
+        .groupBy(*keys, "sub")
+        .agg(best.alias("best"))
+        .select(*keys, "sub", "best.*")
+    )
+
+
+def _pq_codes(rows: DataFrame, vcol: Column, codebook: DataFrame, m: int,
+              keys: list[str]) -> DataFrame:
+    """Encode each row's ``vcol`` as its ``m`` nearest codes, ordered by
+    subspace: (keys..., codes array<long>) — the compressed index rows."""
+    best = _nearest_code(_subvec_rows(rows, vcol, m, keys), codebook, keys)
+    return best.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(
+                F.collect_list(F.struct(F.col("sub"), F.col("code")))
+            ),
+            lambda s: s.getField("code"),
+        ).alias("codes")
     )
 
 
@@ -1848,11 +1488,12 @@ def pq_train(
     corpus-scale index live in executor memory while the raw vectors
     stay on disk.  Per subspace, centroids seed from the deterministic
     id-mod slice (``ivf_refine``'s discipline) and take ONE Lloyd round
-    ON THE QUANTIZED INTEGER GRID: int64 L2 assignment (ties -> lower
-    code), dimension-wise floored means — order-independent, so a SQL
-    oracle replays training to the bit.
+    ON THE QUANTIZED INTEGER GRID: int64 L2 assignment
+    (:func:`_nearest_code`, ties -> lower code), floored integer means
+    (:func:`_floored_mean`) — order-independent, so a SQL oracle
+    replays training to the bit.
 
-    SIZING (the ivf_build / k-scaled-LSH lesson, PERF.md): pass
+    SIZING (the sized IVF build / k-scaled-LSH lesson, PERF.md): pass
     ``n_codes_target`` to derive ``centroid_mod = ceil(N / target)``
     from the corpus count, holding the codebook — and therefore the
     per-vector encode cost — CONSTANT as the corpus grows; a fixed mod
@@ -1869,51 +1510,16 @@ def pq_train(
     (sub, code, dim) SUM/COUNT groupBy (map-side combinable) + one
     bounded reassembly groupBy.  No windows, no corpus self-join."""
     if n_codes_target is not None:
-        n = emb.count()
-        centroid_mod = max(1, -(-n // n_codes_target))  # ceil(N/target)
+        centroid_mod = _ceil_mod(emb.count(), n_codes_target)
     # quantize=False: vec_col is already on the integer grid (e.g. the
-    # RESIDUAL vectors of ivfpq_build)
+    # RESIDUAL vectors of the IVF-PQ training)
     v = quantized(F.col(vec_col)) if quantize else F.col(vec_col)
-    sv = _spread(emb, id_col).select(
-        F.col(id_col), F.explode(_pq_subvecs(v, m)).alias("p")
-    ).select(F.col(id_col), F.col("p.sub").alias("sub"),
-             F.col("p.sv").alias("sv"))
+    sv = _subvec_rows(_spread(emb, id_col), v, m, [id_col])
     seeds = sv.filter(F.col(id_col) % centroid_mod == 0).select(
-        "sub", F.col(id_col).alias("code"), F.col("sv").alias("cv0")
+        "sub", F.col(id_col).alias("code"), F.col("sv").alias("cv")
     )
-    assigned = (
-        sv.join(F.broadcast(seeds), "sub")
-        .select(
-            id_col, "sub", "sv", "code",
-            _l2_q(F.col("sv"), F.col("cv0")).alias("d2"),
-        )
-        .groupBy(id_col, "sub")
-        .agg(F.min_by(
-            F.struct(F.col("code"), F.col("sv")),
-            F.struct(F.col("d2"), F.col("code")),
-        ).alias("best"))
-        .select("sub", F.col("best.code").alias("code"),
-                F.col("best.sv").alias("sv"))
-    )
-    by_dim = assigned.select(
-        "sub", "code", F.posexplode("sv").alias("dim", "x")
-    ).groupBy("sub", "code", "dim").agg(
-        F.sum("x").alias("sx"), F.count(F.lit(1)).alias("n")
-    )
-    return (
-        by_dim.withColumn(
-            "cx", F.floor(F.col("sx") / F.col("n")).cast("long")
-        )
-        .groupBy("sub", "code")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("dim"), F.col("cx")))
-                ),
-                lambda s: s.getField("cx"),
-            ).alias("cv")
-        )
-    )
+    assigned = _nearest_code(sv, seeds, [id_col], carry=("sv",))
+    return _floored_mean(assigned, ["sub", "code"], "sv")
 
 
 def pq_encode(
@@ -1930,31 +1536,7 @@ def pq_encode(
     the per-(id, sub) argmin partial-aggregates before the single
     per-id exchange; codes reassemble ordered by subspace."""
     v = quantized(F.col(vec_col)) if quantize else F.col(vec_col)
-    sv = _spread(emb, id_col).select(
-        F.col(id_col), F.explode(_pq_subvecs(v, m)).alias("p")
-    ).select(F.col(id_col), F.col("p.sub").alias("sub"),
-             F.col("p.sv").alias("sv"))
-    best = (
-        sv.join(F.broadcast(codebook), "sub")
-        .select(
-            id_col, "sub", "code",
-            _l2_q(F.col("sv"), F.col("cv")).alias("d2"),
-        )
-        .groupBy(id_col, "sub")
-        .agg(F.min_by(F.col("code"),
-                      F.struct(F.col("d2"), F.col("code"))).alias("code"))
-    )
-    return (
-        best.groupBy(id_col)
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("sub"), F.col("code")))
-                ),
-                lambda s: s.getField("code"),
-            ).alias("codes")
-        )
-    )
+    return _pq_codes(_spread(emb, id_col), v, codebook, m, [id_col])
 
 
 def pq_search(
@@ -1967,45 +1549,105 @@ def pq_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Asymmetric-distance PQ search (ADC): each query precomputes one
-    int64 L2 entry per (subspace, code) — the lookup table — and every
-    encoded vector's approximate distance is the SUM of its codes' LUT
-    entries.  Top-``k`` per query, ascending distance, ties -> lower
-    neighbor id; queries never compare against themselves.
+    """Asymmetric-distance PQ search (ADC, :func:`_score` with no cell
+    key): top-``k`` per query by ascending summed lookup-table
+    distance, ties -> lower neighbor id; queries never compare against
+    themselves.  The raw vectors are only read for the QUERY side: the
+    corpus pays the codes table alone (the 32x-compressed
+    representation)."""
+    q = _query_vecs(emb, id_col, vec_col, query_ids)
+    return _top_k(_score(q, encoded, id_col, codebook, m, keys=()),
+                  k, "adist_q", asc=True)
 
-    Plan (100 TB): the LUT (|queries| x m x |codes| rows) broadcasts
-    onto the exploded code stream; the per-(query, vector) sum
-    partial-aggregates before its exchange; ranking is a window
-    partitioned per query — never global.  The raw vectors are only
-    read for the QUERY side: the corpus pays the codes table alone
-    (the 32x-compressed representation)."""
-    q = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
-        F.explode(_pq_subvecs(quantized(F.col(vec_col)), m)).alias("p"),
-    ).select("query_id", F.col("p.sub").alias("sub"),
-             F.col("p.sv").alias("qv"))
-    lut = q.join(F.broadcast(codebook), "sub").select(
-        "query_id", "sub", "code",
-        _l2_q(F.col("qv"), F.col("cv")).alias("d2"),
+
+def _train(
+    emb: DataFrame,
+    pq: bool,
+    centroid_mod: int = 97,
+    n_cells_target: int | None = None,
+    refine_iters: int = 0,
+    m: int = 8,
+    n_codes_target: int = 64,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> tuple[DataFrame, DataFrame | None]:
+    """Train an IVF index's quantizers: (cents, codebook).
+
+    The coarse cells are the sampled slice (stride ``centroid_mod``, or
+    ceil(N / ``n_cells_target``) from one count), Lloyd-refined
+    ``refine_iters`` times.  The PQ codec (``pq``) adds the FAISS
+    IVFADC residual codebook: each vector's RESIDUAL (v - its cell
+    centroid) concentrates near the origin, so the same code budget
+    quantizes it far more precisely than the raw vector; the codebook
+    is sized to ~``n_codes_target`` codes per subspace off the same
+    count.  Everything stays on the exact integer grid, so the whole
+    training replays in SQL.  ``codebook`` is None for the raw codec.
+
+    The centroid dim is bounded and lazily checkpointed (it feeds the
+    assignment broadcast, the residuals and the caller's write); the
+    codebook is checkpointed eagerly so the encode and the caller's
+    write reuse ONE training execution."""
+    n = emb.count() if pq or n_cells_target is not None else 0
+    if n_cells_target is not None:
+        centroid_mod = _ceil_mod(n, n_cells_target)
+    cents = (
+        ivf_refine(emb, refine_iters, centroid_mod, id_col, vec_col)
+        if refine_iters > 0
+        else _seed_cells(emb, centroid_mod, id_col, vec_col)
+    ).localCheckpoint(eager=False)
+    if not pq:
+        return cents, None
+    vecs = _spread(emb, id_col).select(
+        F.col(id_col), quantized(F.col(vec_col)).alias("v")
     )
-    code_rows = encoded.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.posexplode("codes").alias("sub", "code"),
-    ).withColumn("sub", F.col("sub").cast("int"))
-    scored = (
-        code_rows.join(F.broadcast(lut), ["sub", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d2").alias("adist_q"))
+    # pass the SIZING MOD, not n_codes_target (r13): the residual frame
+    # has exactly n rows, so pq_train's own sizing count would re-run
+    # the whole coarse-assign + residual lineage to re-derive it
+    codebook = pq_train(
+        _residuals(_coarse_assign(vecs, cents, id_col), cents, id_col),
+        m=m, centroid_mod=_ceil_mod(n, n_codes_target),
+        id_col=id_col, vec_col="rv", quantize=False,
+    ).localCheckpoint(eager=True)
+    return cents, codebook
+
+
+def _residuals(assign: DataFrame, cents: DataFrame,
+               id_col: str) -> DataFrame:
+    """(id, cell_id, rv): each assigned (id, cell_id, v) row minus its
+    cell centroid — exact integer subtraction after one broadcast join."""
+    return assign.join(F.broadcast(cents), "cell_id").select(
+        id_col, "cell_id",
+        F.zip_with("v", "cv", lambda x, y: x - y).alias("rv"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adist_q"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adist_q", "rank")
-    )
+
+
+def ivf_encode(
+    emb: DataFrame,
+    cents: DataFrame,
+    codebook: DataFrame | None = None,
+    m: int = 8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Encode a batch against FROZEN quantizers: (id, cell_id, v) for
+    the raw codec (``codebook`` None — the quantized vector itself),
+    (id, cell_id, codes) for the PQ codec (the residual's codes).  The
+    same integer argmax/argmin arithmetic and tie rules as a build, so
+    an upsert is indistinguishable from a rebuild at probe time.
+
+    Plan (100 TB): coarse assignment is the broadcast max_by (no
+    window); residuals are a map-side zip_with; the per-(id, sub) code
+    argmin partial-aggregates before the single per-id exchange.  The
+    PQ codec's subspace fan-out is CPU-heavy, so its scan is spread to
+    cluster parallelism first."""
+    if codebook is not None:
+        emb = _spread(emb, id_col)
+    vecs = emb.select(F.col(id_col), quantized(F.col(vec_col)).alias("v"))
+    assign = _coarse_assign(vecs, cents, id_col)
+    if codebook is None:
+        return assign
+    return _pq_codes(_residuals(assign, cents, id_col), F.col("rv"),
+                     codebook, m, [id_col, "cell_id"])
 
 
 def ivfpq_build(
@@ -2016,74 +1658,25 @@ def ivfpq_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """IVF-PQ index construction (the FAISS IVFADC recipe — the
-    billion-scale standard): a SIZED coarse quantizer partitions the
-    corpus into cells, and a SIZED product quantizer encodes each
-    vector's RESIDUAL (v - its cell centroid) — residuals concentrate
-    near the origin, so the same code budget quantizes them far more
-    precisely than raw vectors.  Everything stays on the exact integer
-    grid (quantized dots for the coarse argmax, int64 L2 for the PQ
-    argmin, exact residual subtraction), so the whole build replays in
-    SQL.
+    """In-memory IVF-PQ index (the FAISS IVFADC recipe — the
+    billion-scale standard): the sized coarse quantizer and residual
+    codebook of :func:`_train`, then every vector encoded by
+    :func:`ivf_encode` — the same encoder an at-rest upsert uses, so
+    upsert==rebuild equivalence holds by construction.
 
     Returns (cents, codebook, index):
     - cents (cell_id, cv) — the coarse dim, n_cells_target-bounded;
     - codebook (sub, code, cv) — the residual PQ dim,
       m x n_codes_target-bounded;
     - index (vec_id, cell_id, codes) — one compressed row per vector
-      (the only corpus-sized output; at scale it partitions by
-      cell_id exactly like ivf_build's cells table).
-
-    Plan (100 TB): coarse assignment is the audited broadcast max_by
-    (no window); residuals are a map-side zip_with after one broadcast
-    centroid join; PQ train/encode reuse :func:`pq_train` /
-    :func:`pq_encode` shapes on the residual rows."""
-    n = emb.count()
-    cell_mod = max(1, -(-n // n_cells_target))
-    cents = emb.filter(F.col(id_col) % cell_mod == 0).select(
-        F.col(id_col).alias("cell_id"), quantized(F.col(vec_col)).alias("cv")
-    ).localCheckpoint(eager=False)  # bounded dim, reused by 3 consumers
-    vecs = _spread(emb, id_col).select(
-        F.col(id_col), quantized(F.col(vec_col)).alias("v")
+      (the only corpus-sized output; at rest it partitions by cell_id,
+      :class:`IvfIndex`)."""
+    cents, codebook = _train(
+        emb, pq=True, n_cells_target=n_cells_target, m=m,
+        n_codes_target=n_codes_target, id_col=id_col, vec_col=vec_col,
     )
-    scored = vecs.crossJoin(F.broadcast(cents)).select(
-        id_col, "v", "cell_id",
-        int_dot(F.col("v"), F.col("cv")).alias("dot_c"),
-    )
-    assign = (
-        scored.groupBy(id_col)
-        .agg(F.max_by(
-            F.struct(F.col("cell_id"), F.col("v")),
-            F.struct(F.col("dot_c"), (-F.col("cell_id")).alias("neg")),
-        ).alias("best"))
-        .select(id_col, "best.cell_id", "best.v")
-    )
-    resid = assign.join(F.broadcast(cents), "cell_id").select(
-        id_col, "cell_id",
-        F.zip_with("v", "cv", lambda x, y: x - y).alias("rv"),
-    )
-    # pass the SIZING MOD through instead of n_codes_target (r13): the
-    # residual frame has exactly n rows (one per vector), so pq_train's
-    # internal sizing count would re-execute the whole coarse-assign +
-    # residual lineage just to re-derive the same ceil(n/target) — a
-    # full corpus pass saved per build.  The trained codebook is a
-    # BOUNDED dim (m x codes rows); checkpoint it eagerly so the encode
-    # below and the caller's codebook write both reuse ONE training
-    # execution instead of re-running it per action (guide §5 caching:
-    # reused AND expensive to recompute).
-    codebook = pq_train(
-        resid, m=m,
-        centroid_mod=max(1, -(-n // n_codes_target)),
-        id_col=id_col, vec_col="rv", quantize=False,
-    ).localCheckpoint(eager=True)
-    # ONE encode implementation (r13, ADVICE r12): the build's index
-    # rows come from the same :func:`ivfpq_encode` an upsert uses, so
-    # upsert==rebuild equivalence holds by construction, not by keeping
-    # two copies bit-identical.  Same physical plan as inlining: the
-    # residual lineage already re-derives the coarse assignment, so
-    # delegating adds no extra pass.
-    index = ivfpq_encode(emb, cents, codebook, m=m,
-                         id_col=id_col, vec_col=vec_col)
+    index = ivf_encode(emb, cents, codebook, m=m,
+                       id_col=id_col, vec_col=vec_col)
     return cents, codebook, index
 
 
@@ -2100,484 +1693,498 @@ def ivfpq_search(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ (ADC) search: each query probes its ``nprobe``
-    best-coarse-dot cells, builds one residual lookup table per probed
-    cell (int64 L2 of the query residual against every codebook
-    centroid), and scores ONLY the probed cells' index rows by summing
-    their codes' LUT entries.  Top-``k`` ascending, ties -> lower id.
+    best-coarse-dot cells (:func:`_probe_cells`), builds one residual
+    lookup table per probed cell, and scores ONLY the probed cells'
+    index rows (:func:`_score`).  Top-``k`` ascending, ties -> lower id.
 
-    Plan (100 TB): coarse probing is window-ranked over |q| x cells
-    broadcast-scored rows; the LUT (|q| x nprobe x m x codes rows)
-    broadcasts onto the index's exploded code stream, whose scan at
-    scale is PARTITION-PRUNED to the probed cells (index partitions by
-    cell_id); the per-(query, neighbor) sum partial-aggregates before
-    its exchange; final ranking windows per query."""
-    q = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
-        quantized(F.col(vec_col)).alias("qv"),
+    Plan (100 TB): coarse probing is window-ranked per query over
+    |q| x cells broadcast-scored rows; the LUT (|q| x nprobe x m x codes
+    rows) broadcasts onto the index's exploded code stream, whose scan
+    at rest is PARTITION-PRUNED to the probed cells; final ranking
+    windows per query."""
+    probes = _probe_cells(
+        _query_vecs(emb, id_col, vec_col, query_ids), cents, nprobe,
+        residual=True,
     )
-    qs = q.crossJoin(F.broadcast(cents)).select(
-        "query_id", "qv", "cell_id",
-        int_dot(F.col("qv"), F.col("cv")).alias("dot_c"),
-        F.col("cv"),
+    return _top_k(_score(probes, index, id_col, codebook, m),
+                  k, "adist_q", asc=True)
+
+
+#: constant-size Bloom filter over every id ever inserted into an at-rest
+#: index (r7): the upsert's replaced-id discovery — the one index-wide
+#: scan — is skipped entirely when the filter proves a batch's ids are
+#: all fresh (the common ingest case).  False positives only cost the
+#: scan that would otherwise always run; bits are never cleared
+#: (replaced ids stay set — harmless FPs) and a rebuild resets it.
+ID_BLOOM_M_BITS = 1 << 22
+ID_BLOOM_K = 4
+
+
+def _bloom_word():
+    return F.expr("shiftleft(CAST(1 AS BIGINT), bit)")
+
+
+def _id_bloom_probes(ids: DataFrame, id_col: str) -> DataFrame:
+    seeded = ids.select(
+        F.col(id_col),
+        F.explode(
+            F.array(*[F.lit(i) for i in range(ID_BLOOM_K)])
+        ).alias("seed"),
     )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.desc("dot_c"), F.asc("cell_id")
+    pos = F.pmod(
+        F.xxhash64(F.col("seed"), F.col(id_col)), F.lit(ID_BLOOM_M_BITS)
     )
-    probes = (
-        qs.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select(
-            "query_id", "cell_id",
-            F.zip_with("qv", "cv", lambda x, y: x - y).alias("qr"),
-        )
+    return seeded.select(
+        F.col(id_col),
+        F.floor(pos / 32).cast("long").alias("word_idx"),
+        F.pmod(pos, 32).cast("int").alias("bit"),
     )
-    qsub = probes.select(
-        "query_id", "cell_id",
-        F.explode(_pq_subvecs(F.col("qr"), m)).alias("p"),
-    ).select("query_id", "cell_id", F.col("p.sub").alias("sub"),
-             F.col("p.sv").alias("qsv"))
-    lut = qsub.join(F.broadcast(codebook), "sub").select(
-        "query_id", "cell_id", "sub", "code",
-        _l2_q(F.col("qsv"), F.col("cv")).alias("d2"),
-    )
-    code_rows = index.select(
-        F.col(id_col).alias("neighbor_id"), "cell_id",
-        F.posexplode("codes").alias("sub", "code"),
-    ).withColumn("sub", F.col("sub").cast("int"))
-    scored = (
-        code_rows.join(F.broadcast(lut), ["cell_id", "sub", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d2").alias("adist_q"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adist_q"), F.asc("neighbor_id")
-    )
+
+
+def _id_bloom_words(ids: DataFrame, id_col: str) -> DataFrame:
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adist_q", "rank")
+        _id_bloom_probes(ids, id_col)
+        .groupBy("word_idx")
+        .agg(F.bit_or(_bloom_word()).alias("word"))
     )
 
 
-#: At-rest IVF-PQ index (r12, VERDICT r11 task 4) — the index a
-#: deployment actually serves: PQ codes partitioned BY CELL so a probe
-#: scans nprobe partition dirs of ~32x-compressed rows, plus the same
-#: LSM delta + id-Bloom machinery the IVF index uses (shared via
-#: _lsm_upsert/_compact_delta).  Reference analog: the packed-history
-#: at-rest posture (powa--5.2.0.sql:2107-2123) with partition-pruned
-#: reads (powa--5.2.0.sql:7784-7786).
-ANNPQ_CELLS_TABLE = "ann_ivfpq_cells"
-ANNPQ_CENTROIDS_TABLE = "ann_ivfpq_centroids"
-ANNPQ_CODEBOOK_TABLE = "ann_ivfpq_codebook"
-ANNPQ_DELTA_TABLE = "ann_ivfpq_delta"
-ANNPQ_ID_BLOOM_TABLE = "ann_ivfpq_id_bloom"
+@dataclass(frozen=True)
+class IvfIndex:
+    """An IVF index AT REST — the index a deployment serves — with a
+    ``raw`` codec (quantized vectors, exact dot rescoring) or a ``pq``
+    codec (residual PQ codes, ADC scoring; ~32x smaller rows).
 
+    Layout, per index ``name`` (tables ``ann_<name>_<part>``):
 
-def ivfpq_encode(
-    emb: DataFrame,
-    cents: DataFrame,
-    codebook: DataFrame,
-    m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Encode a batch against a FROZEN coarse quantizer + residual
-    codebook: (id, cell_id, codes) — bit-identical to the rows
-    :func:`ivfpq_build` emits for the same vectors (same integer
-    argmax/argmin arithmetic, same tie rules), which is what makes an
-    upsert indistinguishable from a rebuild at probe time.
+    - ``cells``: (cell_id, id, v | codes) partitioned BY CELL, so a
+      probe's scan prunes to its nprobe cells' files — the parquet
+      analog of an inverted file;
+    - ``centroids`` (and ``codebook`` for pq): the frozen quantizers;
+    - ``delta``: LSM-style upsert runs (r7, VERDICT r6 task 4) — each
+      upsert appends ONE flat file of rows sorted by cell_id instead of
+      rewriting a file into every target cell's partition dir (the
+      partitioned write's per-file committer overhead scaled with
+      min(batch, n_cells): 2.2 s for 500 rows into 191 leaf dirs vs
+      0.2 s flat).  Probes read base ∪ delta (the sort makes the
+      delta's row-group stats prune by cell); :meth:`compact` folds
+      grown deltas back into the base partitions;
+    - ``id_bloom``: the id Bloom filter gating the upsert's replaced-id
+      discovery (see ``ID_BLOOM_M_BITS``).
 
-    Plan (100 TB): coarse assignment is the broadcast max_by (no
-    window); residuals are a map-side zip_with; the per-(id, sub) code
-    argmin partial-aggregates before the single per-id exchange."""
-    vecs = _spread(emb, id_col).select(
-        F.col(id_col), quantized(F.col(vec_col)).alias("v")
-    )
-    scored = vecs.crossJoin(F.broadcast(cents)).select(
-        id_col, "v", "cell_id",
-        int_dot(F.col("v"), F.col("cv")).alias("dot_c"),
-    )
-    assign = (
-        scored.groupBy(id_col)
-        .agg(F.max_by(
-            F.struct(F.col("cell_id"), F.col("v")),
-            F.struct(F.col("dot_c"), (-F.col("cell_id")).alias("neg")),
-        ).alias("best"))
-        .select(id_col, "best.cell_id", "best.v")
-    )
-    resid = assign.join(F.broadcast(cents), "cell_id").select(
-        id_col, "cell_id",
-        F.zip_with("v", "cv", lambda x, y: x - y).alias("rv"),
-    )
-    rsub = resid.select(
-        F.col(id_col), F.col("cell_id"),
-        F.explode(_pq_subvecs(F.col("rv"), m)).alias("p"),
-    ).select(id_col, "cell_id", F.col("p.sub").alias("sub"),
-             F.col("p.sv").alias("sv"))
-    best = (
-        rsub.join(F.broadcast(codebook), "sub")
-        .select(
-            id_col, "cell_id", "sub", "code",
-            _l2_q(F.col("sv"), F.col("cv")).alias("d2"),
+    Every write — build, upsert, compaction — commits through ONE
+    ``txn.StagedPass`` manifest, so readers see the whole pre-write
+    index or the whole post-write one.  Reference analog: the packed
+    history's at-rest posture (powa--5.2.0.sql:2107-2123) with
+    partition-pruned reads (powa--5.2.0.sql:7784-7786)."""
+
+    name: str
+    codec: str  # "raw" | "pq"
+
+    def table(self, part: str) -> str:
+        return f"ann_{self.name}_{part}"
+
+    @property
+    def tables(self) -> tuple[str, ...]:
+        """Every table this index writes."""
+        parts = ["cells", "centroids", "delta", "id_bloom"]
+        if self.codec == "pq":
+            parts.insert(2, "codebook")
+        return tuple(self.table(p) for p in parts)
+
+    @property
+    def payload(self) -> str:
+        return "codes" if self.codec == "pq" else "v"
+
+    def _codebook(self, wh) -> DataFrame | None:
+        return wh.read(self.table("codebook")) if self.codec == "pq" else None
+
+    def _score_order(self) -> tuple[str, bool]:
+        return ("adist_q", True) if self.codec == "pq" else ("dot_q", False)
+
+    def cells(self, wh) -> DataFrame:
+        """The index's logical rows: base partitions ∪ delta runs.  The
+        upsert keeps the no-duplicate-id invariant across both, so
+        readers just union."""
+        base = wh.read(self.table("cells"))
+        if wh.exists(self.table("delta")):
+            base = base.select(
+                "cell_id", *[c for c in base.columns if c != "cell_id"]
+            ).unionByName(wh.read(self.table("delta")))
+        return base
+
+    def build(
+        self,
+        wh,
+        emb: DataFrame,
+        centroid_mod: int = 97,
+        n_cells_target: int | None = None,
+        refine_iters: int = 0,
+        m: int = 8,
+        n_codes_target: int = 64,
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+    ) -> None:
+        """(Re)build the index from ``emb``: train the quantizers
+        (:func:`_train` — ``refine_iters`` Lloyd rounds on the sampled
+        cells; ``m`` / ``n_codes_target`` size the pq codebook), encode
+        every vector, and commit cells, quantizers, a fresh id Bloom and
+        the retirement of any pending delta runs through ONE staged
+        manifest: a crash before the commit leaves readers and the next
+        upsert on the complete previous index (never new cells beside
+        old centroids, or an old Bloom missing ids the new cells hold).
+
+        A FIXED ``centroid_mod`` means the cell count grows linearly
+        with the corpus, making the assignment crossJoin O(N^2 / mod) —
+        the sf1->sf3 bench measured exactly that cliff (alpha 1.41,
+        PERF.md).  Pass ``n_cells_target`` to hold the cell count
+        roughly constant (mod = ceil(N / target), one count job):
+        assignment compute is then O(N x target) — the standard IVF
+        sizing, and what a production build should always use.
+
+        The build is a full-corpus job: it stages on the caller's
+        session (analytics posture), not the per-batch engine one."""
+        from ..txn import GLOBAL_LANE, StagedPass
+
+        # an interrupted earlier write must not fold in after this one
+        StagedPass.recover(wh, GLOBAL_LANE, sweep=True)
+        cents, codebook = _train(
+            emb, pq=self.codec == "pq", centroid_mod=centroid_mod,
+            n_cells_target=n_cells_target, refine_iters=refine_iters,
+            m=m, n_codes_target=n_codes_target, id_col=id_col,
+            vec_col=vec_col,
         )
-        .groupBy(id_col, "cell_id", "sub")
-        .agg(F.min_by(F.col("code"),
-                      F.struct(F.col("d2"), F.col("code"))).alias("code"))
-    )
-    return (
-        best.groupBy(id_col, "cell_id")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("sub"), F.col("code")))
-                ),
-                lambda s: s.getField("code"),
-            ).alias("codes")
+        rows = ivf_encode(emb, cents, codebook, m=m, id_col=id_col,
+                          vec_col=vec_col)
+        cells_dir = wh.path(self.table("cells"))
+        old_cells = (sorted(os.listdir(cells_dir))
+                     if os.path.isdir(cells_dir) else [])
+        sp = StagedPass(wh, GLOBAL_LANE, engine=False)
+        sp.stage_replace_tree(
+            rows.select("cell_id", id_col, self.payload),
+            self.table("cells"), partition_by=["cell_id"],
+            drops=[d for d in old_cells if d.startswith("cell_id=")],
         )
-        .select(id_col, "cell_id", "codes")
-    )
-
-
-def ivfpq_index_build(
-    wh,
-    emb: DataFrame,
-    m: int = 8,
-    n_cells_target: int = 8,
-    n_codes_target: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF-PQ index AT REST: train coarse cells + the
-    residual codebook (:func:`ivfpq_build`), persist the code rows
-    partitioned BY CELL (a probe's scan prunes to its nprobe cells'
-    files, and those files hold ~32x-compressed codes, not vectors —
-    the memory story AND the IO story compose), plus the frozen
-    centroid/codebook dims and a fresh id Bloom.  A rebuild supersedes
-    any pending delta runs."""
-    cents, cb, index = ivfpq_build(
-        emb, m=m, n_cells_target=n_cells_target,
-        n_codes_target=n_codes_target, id_col=id_col, vec_col=vec_col,
-    )
-    wh.overwrite(
-        index.select("cell_id", F.col(id_col), "codes"),
-        ANNPQ_CELLS_TABLE, partition_by=["cell_id"],
-    )
-    wh.overwrite(cents, ANNPQ_CENTROIDS_TABLE)
-    wh.overwrite(cb, ANNPQ_CODEBOOK_TABLE)
-    wh.drop_table(ANNPQ_DELTA_TABLE)  # a rebuild supersedes pending runs
-    wh.overwrite(
-        _id_bloom_words(emb.select(id_col), id_col), ANNPQ_ID_BLOOM_TABLE
-    )
-
-
-def ivfpq_cells(wh) -> DataFrame:
-    """The IVF-PQ index's logical code rows (base ∪ delta)."""
-    return _cells_union(wh, ANNPQ_CELLS_TABLE, ANNPQ_DELTA_TABLE)
-
-
-def ivfpq_upsert(
-    wh,
-    new_emb: DataFrame,
-    m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    assume_new_ids: bool = False,
-    compact_delta_runs: int = 16,
-) -> None:
-    """Incrementally maintain the at-rest IVF-PQ index: encode a NEW
-    batch against the FROZEN centroids + codebook and fold it in with
-    the shared LSM machinery (:func:`_lsm_upsert` — sorted delta run,
-    Bloom-gated replaced-id rewrite of touched base cells only, delta
-    compaction).  Upsert IO is proportional to the BATCH; centroids and
-    codebook stay fixed (drift re-training is a periodic full
-    :func:`ivfpq_index_build`), so the encode is exact w.r.t. the
-    current quantizers and a probe after N upserts returns exactly what
-    a full rebuild with the same quantizers would."""
-    from ..txn import GLOBAL_LANE, StagedPass
-
-    wh = wh.engine()
-    new_emb = adopt(wh.spark, new_emb)
-    StagedPass.recover(wh, GLOBAL_LANE, sweep=True)
-    cents = wh.read(ANNPQ_CENTROIDS_TABLE)
-    cb = wh.read(ANNPQ_CODEBOOK_TABLE)
-    assign = ivfpq_encode(
-        new_emb, cents, cb, m=m, id_col=id_col, vec_col=vec_col
-    ).select("cell_id", id_col, "codes")
-    _lsm_upsert(
-        wh, assign, id_col,
-        cells_table=ANNPQ_CELLS_TABLE,
-        delta_table=ANNPQ_DELTA_TABLE,
-        bloom_table=ANNPQ_ID_BLOOM_TABLE,
-        assume_new_ids=assume_new_ids,
-        compact_delta_runs=compact_delta_runs,
-    )
-
-
-def ivfpq_compact_delta(wh, min_runs: int = 16) -> bool:
-    """Fold the IVF-PQ delta into its base cells (see
-    :func:`_compact_delta`)."""
-    return _compact_delta(wh, min_runs, ANNPQ_CELLS_TABLE,
-                          ANNPQ_DELTA_TABLE)
-
-
-def ivfpq_probe(
-    wh,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
-    m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query the at-rest IVF-PQ index: each query picks its ``nprobe``
-    best cells against the (tiny, broadcast) centroid table, builds one
-    residual LUT per probed cell, and ADC-scores ONLY those cells'
-    partitions of the codes table — the same arithmetic as
-    :func:`ivfpq_search`, so a probe replays it bit-for-bit.
-
-    The probed cell ids are collected to build the partition predicate —
-    bounded by queries x nprobe, never by the corpus.  Base partitions
-    prune to the probed cells; the delta's sorted runs prune by
-    row-group stats on the same filter.
-
-    Snapshot discipline (r13, ADVICE r12): the base∪delta union is
-    taken ONCE, up front, before the cell-pick job runs — ``wh.read``
-    resolves the file listing at DataFrame creation, so an upsert that
-    commits a new delta run DURING the cell-pick collect does not split
-    the probe's view (it scores the pre-probe snapshot throughout).
-    Residual assumption, documented: a COMPACTION that deletes delta
-    files while this probe is still executing can fail the scan —
-    deployments that compact concurrently with serving must serialize
-    compaction against in-flight probes (the same single-compactor rule
-    every LSM serve path carries)."""
-    cells_all = ivfpq_cells(wh)
-    cents = wh.read(ANNPQ_CENTROIDS_TABLE)
-    cb = wh.read(ANNPQ_CODEBOOK_TABLE)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), quantized(F.col(vec_col)).alias("qv")
-    )
-    qs = q.crossJoin(F.broadcast(cents)).select(
-        "query_id", "qv", "cell_id",
-        int_dot(F.col("qv"), F.col("cv")).alias("dot_c"),
-        F.col("cv"),
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.desc("dot_c"), F.asc("cell_id")
-    )
-    probes = (
-        qs.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select(
-            "query_id", "cell_id",
-            F.zip_with("qv", "cv", lambda x, y: x - y).alias("qr"),
+        sp.stage_replace_flat(cents, self.table("centroids"))
+        if codebook is not None:
+            sp.stage_replace_flat(codebook, self.table("codebook"))
+        sp.stage_replace_flat(
+            _id_bloom_words(emb.select(id_col), id_col),
+            self.table("id_bloom"),
         )
-    )
-    cell_ids = sorted(
-        {r.cell_id for r in probes.select("cell_id").distinct().collect()}
-    )
-    cells = cells_all.filter(F.col("cell_id").isin(cell_ids))
-    qsub = probes.select(
-        "query_id", "cell_id",
-        F.explode(_pq_subvecs(F.col("qr"), m)).alias("p"),
-    ).select("query_id", "cell_id", F.col("p.sub").alias("sub"),
-             F.col("p.sv").alias("qsv"))
-    lut = qsub.join(F.broadcast(cb), "sub").select(
-        "query_id", "cell_id", "sub", "code",
-        _l2_q(F.col("qsv"), F.col("cv")).alias("d2"),
-    )
-    code_rows = cells.select(
-        F.col(id_col).alias("neighbor_id"), "cell_id",
-        F.posexplode("codes").alias("sub", "code"),
-    ).withColumn("sub", F.col("sub").cast("int"))
-    scored = (
-        code_rows.join(F.broadcast(lut), ["cell_id", "sub", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d2").alias("adist_q"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adist_q"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adist_q", "rank")
-    )
+        sp.stage_retire_flat(self.table("delta"))
+        sp.publish()
 
+    # r14 (VERDICT r13 task 4, BENCH_STAGES_ANN_r14.json): the upsert is
+    # batch-bounded BY DESIGN (run append + Bloom-gated touched-cell
+    # rewrite), i.e. an engine maintenance pass, not an analytics query —
+    # it runs on the engine session (narrow exchanges, no per-exchange
+    # AQE stage jobs, single-job bounded probes); the full-corpus build
+    # keeps the analytics posture.
+    def upsert(
+        self,
+        wh,
+        new_emb: DataFrame,
+        m: int = 8,
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+        assume_new_ids: bool = False,
+        compact_delta_runs: int = 16,
+    ) -> None:
+        """Incrementally maintain the index: encode a NEW batch against
+        the FROZEN quantizers (:func:`ivf_encode`) and fold it in — the
+        continuous-ingest path (rebuilding per batch is a full-corpus
+        job; this touches only the batch and its target cells).
 
-def ivfpq_probe_tuning(
-    wh,
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    nprobes: tuple[int, ...] = (1, 2, 4),
-    m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    plan_out: dict | None = None,
-) -> DataFrame:
-    """The nprobe operating-point curve over the AT-REST IVF-PQ index
-    (r13, VERDICT r12 task 6): :func:`ivf_nprobe_tuning` measures the
-    in-memory assignment, but a deployment tunes nprobe against the
-    index it SERVES — where the real cost axis is pruned partitions
-    read and compressed code rows scored per config.  One row per
-    nprobe: (nprobe, n_cells, n_truth, n_cand, n_cand_hit,
-    cand_recall, n_hit, recall) — ``n_cells`` is (query, cell)
-    partition reads, ``n_cand`` the code rows ADC-scored (the IO and
-    compute bill), ``cand_recall`` the fraction of true neighbors
-    whose cell was scanned at all, ``recall`` the end-to-end ADC top-k
-    recall.
+        Upsert semantics: a re-sent id replaces its old row (the vector
+        may have been re-embedded), even when it lands in a DIFFERENT
+        cell.  The LSM-style write (r7 — upsert IO is proportional to
+        the BATCH, not to min(batch, n_cells) partition-dir rewrites):
 
-    SHARED WORK, like the assignment curve: truth, cell ranking, and
-    ADC scoring run ONCE at the largest nprobe; each config is a
-    ``cell_rank`` filter over the already-scored rows.  Candidate sets
-    are therefore nested, so ``n_cells``/``n_cand``/``cand_recall``
-    are provably non-decreasing in nprobe (pytest-pinned) —
-    ``cand_recall`` is also the ceiling an exact re-rank of the probe's
-    shortlist could reach.  End-to-end ``recall`` ranks by the
-    approximate ADC distance, so a closer-by-ADC non-neighbor entering
-    at higher nprobe can in principle displace a hit — the measured
-    number is reported, not assumed monotone (the honesty gap between
-    this curve and the exact-rescoring assignment curve IS the
-    information a deployment needs).
+        - the batch lands as ONE flat run appended to the delta, sorted
+          by cell so probes prune its row groups;
+        - only base cells HOLDING A REPLACED id rewrite
+          (stage_replace_tree, partition-pruned, bounded by the batch);
+          replaced ids already in the delta rewrite the (small) delta;
+        - when the delta accumulates ``compact_delta_runs`` run files,
+          :meth:`compact` folds it into the base partitions.
 
-    Plan (100 TB): the probe machinery is :func:`ivfpq_probe` verbatim
-    — pruned partitions of 32x-compressed codes, broadcast LUT, no
-    corpus-sized exchange; per-config windows partition per query."""
-    cells_all = ivfpq_cells(wh)
-    cents = wh.read(ANNPQ_CENTROIDS_TABLE)
-    cb = wh.read(ANNPQ_CODEBOOK_TABLE)
-    exact = knn_bruteforce(emb, list(query_ids), k, id_col, vec_col) \
-        .localCheckpoint(eager=False)
-    q = emb.filter(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("query_id"), quantized(F.col(vec_col)).alias("qv")
-    )
-    qs = q.crossJoin(F.broadcast(cents)).select(
-        "query_id", "qv", "cell_id",
-        int_dot(F.col("qv"), F.col("cv")).alias("dot_c"),
-        F.col("cv"),
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.desc("dot_c"), F.asc("cell_id")
-    )
-    probes = (
-        qs.withColumn("cell_rank", F.row_number().over(wp))
-        .filter(F.col("cell_rank") <= max(nprobes))
-        .select(
-            "query_id", "cell_id", "cell_rank",
-            F.zip_with("qv", "cv", lambda x, y: x - y).alias("qr"),
+        All ops of one upsert commit through a single txn.StagedPass
+        manifest: a crash at any point leaves readers on the intact
+        pre-batch index or the complete post-batch one, never a replaced
+        id present in two places.  Interrupted publishes are healed here
+        (and by any reader) before the next batch.
+
+        Quantizers stay FIXED — standard IVF practice (drift re-training
+        is a periodic :meth:`build`); the encode is exact w.r.t. the
+        current quantizers, so a probe after N upserts returns exactly
+        what a rebuild with the same quantizers would.
+
+        ``assume_new_ids=True`` is the append-only ingest fast path: the
+        replaced-id discovery is a semi-join SCAN of the whole index's
+        narrow (cell_id, id) columns (ids spread across every cell, so
+        partition pruning can't help), and a caller that KNOWS its ids
+        are fresh (monotonic ingest keys) skips it — the upsert is then
+        just the run append."""
+        from ..txn import GLOBAL_LANE, StagedPass
+
+        wh = wh.engine()
+        new_emb = adopt(wh.spark, new_emb)
+        # complete any interrupted index publish first (idempotent,
+        # cheap — readers would self-heal anyway via the manifest, this
+        # also sweeps dead stage trees)
+        StagedPass.recover(wh, GLOBAL_LANE, sweep=True)
+        cells_t, delta_t, bloom_t = (
+            self.table("cells"), self.table("delta"), self.table("id_bloom")
         )
-        .localCheckpoint(eager=False)
-    )
-    cell_ids = sorted(
-        {r.cell_id for r in probes.select("cell_id").distinct().collect()}
-    )
-    cells = cells_all.filter(F.col("cell_id").isin(cell_ids))
-    qsub = probes.select(
-        "query_id", "cell_id", "cell_rank",
-        F.explode(_pq_subvecs(F.col("qr"), m)).alias("p"),
-    ).select("query_id", "cell_id", "cell_rank",
-             F.col("p.sub").alias("sub"), F.col("p.sv").alias("qsv"))
-    lut = qsub.join(F.broadcast(cb), "sub").select(
-        "query_id", "cell_id", "cell_rank", "sub", "code",
-        _l2_q(F.col("qsv"), F.col("cv")).alias("d2"),
-    )
-    code_rows = cells.select(
-        F.col(id_col).alias("neighbor_id"), "cell_id",
-        F.posexplode("codes").alias("sub", "code"),
-    ).withColumn("sub", F.col("sub").cast("int"))
-    # a neighbor lives in exactly ONE cell (the index's no-duplicate-id
-    # invariant), so its cell_rank per query is single-valued — min()
-    # is exact, not a choice
-    scored_plan = (
-        code_rows.join(F.broadcast(lut), ["cell_id", "sub", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d2").alias("adist_q"),
-             F.min("cell_rank").alias("cell_rank"))
-    )
-    if plan_out is not None:
-        # the once-executed scoring subtree for the plan pin (pruned
-        # partition reads per config).  Wrapped in a no-op filter so the
-        # seam owns a FRESH QueryExecution: localCheckpoint(eager=False)
-        # finalizes the parent's adaptive plan (measured on PySpark
-        # 4.1), which strips the per-scan detail a pin inspects.
-        plan_out["scored"] = scored_plan.filter(F.lit(True))
-    scored = scored_plan.localCheckpoint(eager=False)
-    # Fused curve evaluation (r14, guide §1.2/§2.4): the old per-config
-    # loop unioned |nprobes| legs of 5 aggregate subtrees each (n_cells
-    # / n_cand / n_cand_hit / n_hit / n_truth crossJoins plus a window
-    # top-k per leg) — 15+ jobs re-reading the scored checkpoint.
-    # Candidate sets are NESTED in nprobe and every config ranks by the
-    # same (adist_q asc, neighbor_id asc) order (unique per (query,
-    # neighbor) after the groupBy), so ONE running-count window pass
-    # yields each row's rank within every config's subset, and one
-    # conditional aggregate replaces all per-config counts.  Values are
-    # identical: rank_i of a qualifying row == row_number over the
-    # cell_rank<=np_i filter, and sum(when(qual,1)) == filter+count.
-    truth_flag = exact.select(
-        "query_id", "neighbor_id", F.lit(1).alias("is_truth")
-    )
-    wrun = (
-        Window.partitionBy("query_id")
-        .orderBy(F.asc("adist_q"), F.asc("neighbor_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ranked = scored.join(
-        F.broadcast(truth_flag), ["query_id", "neighbor_id"], "left"
-    ).select(
-        "cell_rank", "is_truth",
-        *[
-            F.sum(F.when(F.col("cell_rank") <= np_, 1).otherwise(0))
-            .over(wrun).alias(f"rank_{i}")
-            for i, np_ in enumerate(nprobes)
-        ],
-    )
-    aggs = []
-    for i, np_ in enumerate(nprobes):
-        qual = F.col("cell_rank") <= np_
-        aggs += [
-            F.coalesce(F.sum(F.when(qual, F.lit(1)).cast("long")),
-                       F.lit(0).cast("long")).alias(f"n_cand_{i}"),
-            F.coalesce(
-                F.sum(F.when(qual & (F.col("is_truth") == 1),
-                             F.lit(1)).cast("long")),
-                F.lit(0).cast("long")).alias(f"n_cand_hit_{i}"),
-            F.coalesce(
-                F.sum(F.when(qual & (F.col("is_truth") == 1)
-                             & (F.col(f"rank_{i}") <= k),
-                             F.lit(1)).cast("long")),
-                F.lit(0).cast("long")).alias(f"n_hit_{i}"),
-        ]
-    cell_aggs = [
-        F.coalesce(
-            F.sum(F.when(F.col("cell_rank") <= np_, F.lit(1))
-                  .cast("long")),
-            F.lit(0).cast("long")).alias(f"n_cells_{i}")
-        for i, np_ in enumerate(nprobes)
-    ]
-    merged = (
-        ranked.agg(*aggs)
-        .crossJoin(probes.agg(*cell_aggs))
-        .crossJoin(exact.agg(F.count(F.lit(1)).alias("n_truth")))
-    )
-    return merged.select(
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(np_).cast("long").alias("nprobe"),
-                F.col(f"n_cells_{i}").alias("n_cells"),
-                F.col("n_truth").alias("n_truth"),
-                F.col(f"n_cand_{i}").alias("n_cand"),
-                F.col(f"n_cand_hit_{i}").alias("n_cand_hit"),
-                (F.col(f"n_cand_hit_{i}") / F.col("n_truth"))
-                .alias("cand_recall"),
-                F.col(f"n_hit_{i}").alias("n_hit"),
-                (F.col(f"n_hit_{i}") / F.col("n_truth")).alias("recall"),
+        cols = ["cell_id", id_col, self.payload]
+        assign = ivf_encode(
+            new_emb, wh.read(self.table("centroids")), self._codebook(wh),
+            m=m, id_col=id_col, vec_col=vec_col,
+        ).select(*cols).persist()
+        run = assign.coalesce(1).sortWithinPartitions("cell_id")
+        try:
+            batch_ids = assign.select(id_col)
+            # maintain the id Bloom in the SAME pass: new filter = old
+            # words OR the batch's words (constant m_bits/32 rows either
+            # way).  Missing filter (pre-r7 index): seed it from the full
+            # id set once — a narrow scan the filter then amortizes away.
+            if wh.exists(bloom_t):
+                old_bloom = wh.read(bloom_t)
+            else:
+                old_bloom = _id_bloom_words(
+                    self.cells(wh).select(id_col), id_col
+                )
+            new_bloom = (
+                old_bloom.unionByName(_id_bloom_words(batch_ids, id_col))
+                .groupBy("word_idx")
+                .agg(F.bit_or("word").alias("word"))
             )
-            for i, np_ in enumerate(nprobes)
-        ])).alias("r")
-    ).select("r.*")
+            sp = StagedPass(wh, GLOBAL_LANE)
+            # Bloom gate for the replaced-id discovery: when every batch
+            # id probes NEGATIVE (all-fresh ingest, the common case), the
+            # index-wide discovery scan is skipped outright.  A positive
+            # — real or false — falls through to the scan, which is the
+            # correctness authority either way.
+            maybe_present = not assume_new_ids
+            if maybe_present and wh.exists(bloom_t):
+                hit = (
+                    F.col("word").isNotNull()
+                    & (F.col("word").bitwiseAND(_bloom_word()) != 0)
+                )
+                maybe_present = (
+                    _id_bloom_probes(batch_ids, id_col)
+                    .join(F.broadcast(wh.read(bloom_t)), "word_idx", "left")
+                    .groupBy(id_col)
+                    .agg(F.bool_and(hit).alias("in_bloom"))
+                    .filter("in_bloom")
+                    .limit(1).count() > 0
+                )
+            stale_ids: set = set()
+            if maybe_present:
+                # base cells holding a replaced id rewrite (bounded by
+                # the batch, partition-pruned via a literal IN-filter);
+                # the discovery is the one index-wide pass, column-pruned
+                # to the narrow (cell_id, id) columns — payloads are not
+                # read
+                base = wh.read(cells_t)
+                stale_cells = (
+                    base.join(F.broadcast(batch_ids), id_col, "left_semi")
+                    .select("cell_id").distinct()
+                )
+                stale_ids = {r.cell_id for r in stale_cells.collect()}
+            if stale_ids:
+                kept = (
+                    base.filter(
+                        F.col("cell_id").isin([int(c) for c in stale_ids])
+                    )
+                    .join(F.broadcast(batch_ids), id_col, "left_anti")
+                    .select(*cols)
+                    .persist()
+                )
+                try:
+                    # a stale cell whose members were ALL replaced emits
+                    # no rewrite rows — record it as an explicit drop so
+                    # its old files retire atomically with everything else
+                    kept_cells = {
+                        r.cell_id
+                        for r in kept.select("cell_id").distinct().collect()
+                    }
+                    sp.stage_replace_tree(
+                        kept, cells_t, partition_by=["cell_id"],
+                        drops=[f"cell_id={c}"
+                               for c in sorted(stale_ids - kept_cells)],
+                    )
+                finally:
+                    kept.unpersist()
+            # replaced ids sitting in the delta rewrite the (small)
+            # delta; gated by the same Bloom verdict — all-fresh batches
+            # skip it
+            if maybe_present and wh.exists(delta_t):
+                delta = wh.read(delta_t)
+                has_stale_delta = (
+                    delta.join(F.broadcast(batch_ids), id_col, "left_semi")
+                    .limit(1).count() > 0
+                )
+                if has_stale_delta:
+                    sp.stage_replace_flat(
+                        delta.join(F.broadcast(batch_ids), id_col,
+                                   "left_anti")
+                        .coalesce(1).sortWithinPartitions("cell_id"),
+                        delta_t,
+                    )
+            sp.stage_append_flat(run, delta_t)
+            sp.stage_replace_flat(new_bloom, bloom_t)
+            sp.publish()
+            self.compact(wh, compact_delta_runs)
+        finally:
+            assign.unpersist()
+
+    def compact(self, wh, min_runs: int = 16) -> bool:
+        """Fold the delta's run files back into the base cell partitions
+        when ``min_runs`` or more have accumulated (0 forces a fold).
+        ONE staged pass: an append-tree of the delta rows into their
+        cells (one file per touched cell via a repartition on the cell
+        key) plus a flat replace of the delta with empty — committed
+        atomically, so readers never see a row in both places.
+
+        The run-count probe goes through the READER path (r13, VERDICT
+        r12 task 5): ``wh.read`` resolves pending StagedPass manifests
+        first and builds its file index through the Hadoop FS
+        abstraction, so the probe counts the manifest-resolved run files
+        on ANY filesystem the warehouse sits on (each upsert appends
+        exactly one sorted run file).  ``inputFiles()`` is driver-side
+        metadata off the already-built index — no Spark job."""
+        from ..txn import GLOBAL_LANE, StagedPass
+
+        delta_t = self.table("delta")
+        if not wh.exists(delta_t):
+            return False
+        delta = wh.read(delta_t)
+        if len(delta.inputFiles()) < max(1, min_runs):
+            return False
+        sp = StagedPass(wh, GLOBAL_LANE)
+        sp.stage_append_tree(
+            delta.repartition(F.col("cell_id")),
+            self.table("cells"),
+            partition_by=["cell_id"],
+        )
+        sp.stage_replace_flat(
+            wh.spark.createDataFrame([], delta.schema), delta_t
+        )
+        sp.publish()
+        return True
+
+    def _probed(self, wh, queries: DataFrame, nprobe: int, m: int,
+                id_col: str, vec_col: str,
+                with_rank: bool = False) -> tuple[DataFrame, DataFrame]:
+        """(probes, scored): each query's ``nprobe`` best cells against
+        the (tiny, broadcast) centroid table, then :func:`_score` over
+        ONLY those cells' rows.  The probed cell ids are collected to
+        build the partition predicate — bounded by queries x nprobe,
+        never by the corpus: base partitions prune to the probed cells,
+        the delta's sorted runs prune by row-group stats on the same
+        filter.
+
+        Snapshot discipline (r13, ADVICE r12): the base∪delta union is
+        taken ONCE, up front, before the cell-pick job runs —
+        ``wh.read`` resolves the file listing at DataFrame creation, so
+        an upsert that commits a new delta run DURING the cell-pick
+        collect does not split the probe's view.  Residual assumption,
+        documented: a COMPACTION that deletes delta files while a probe
+        is still executing can fail the scan — deployments that compact
+        concurrently with serving must serialize compaction against
+        in-flight probes (the single-compactor rule every LSM serve path
+        carries)."""
+        cells = self.cells(wh)
+        probes = _probe_cells(
+            _query_vecs(queries, id_col, vec_col),
+            wh.read(self.table("centroids")), nprobe,
+            residual=self.codec == "pq",
+        ).localCheckpoint(eager=False)
+        cell_ids = sorted(
+            {r.cell_id for r in probes.select("cell_id").distinct().collect()}
+        )
+        scored = _score(
+            probes, cells.filter(F.col("cell_id").isin(cell_ids)), id_col,
+            self._codebook(wh), m, with_rank=with_rank,
+        )
+        return probes, scored
+
+    def probe(
+        self,
+        wh,
+        queries: DataFrame,
+        k: int = 10,
+        nprobe: int = 2,
+        m: int = 8,
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+    ) -> DataFrame:
+        """Query the index: top-``k`` per query over its ``nprobe``
+        probed cells (:meth:`_probed`) — exact ``dot_q`` for the raw
+        codec, ADC ``adist_q`` for pq; the same arithmetic as the
+        in-memory :func:`knn_ivf` / :func:`ivfpq_search`, so a probe
+        replays them bit-for-bit."""
+        _, scored = self._probed(wh, queries, nprobe, m, id_col, vec_col)
+        return _top_k(scored, k, *self._score_order())
+
+    def probe_tuning(
+        self,
+        wh,
+        emb: DataFrame,
+        query_ids: list[int],
+        k: int = 10,
+        nprobes: tuple[int, ...] = (1, 2, 4),
+        m: int = 8,
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+        plan_out: dict | None = None,
+    ) -> DataFrame:
+        """The nprobe operating-point curve over the index AT REST (r13,
+        VERDICT r12 task 6): :func:`ivf_nprobe_tuning` measures the
+        in-memory assignment, but a deployment tunes nprobe against the
+        index it SERVES — where the real cost axis is pruned partitions
+        read and candidate rows scored per config.  One row per nprobe:
+        (nprobe, n_cells, n_truth, n_cand, n_cand_hit, cand_recall,
+        n_hit, recall) — see :func:`_nprobe_curve`.
+
+        SHARED WORK: truth, cell ranking, and scoring run ONCE at the
+        largest nprobe; each config is a ``cell_rank`` filter over the
+        already-scored rows.  Candidate sets are therefore nested, so
+        ``n_cells``/``n_cand``/``cand_recall`` are provably
+        non-decreasing in nprobe (pytest-pinned) — ``cand_recall`` is
+        also the ceiling an exact re-rank of the probe's shortlist could
+        reach.  The pq codec's end-to-end ``recall`` ranks by the
+        approximate ADC distance, so a closer-by-ADC non-neighbor
+        entering at higher nprobe can in principle displace a hit — the
+        measured number is reported, not assumed monotone.
+
+        Plan (100 TB): the probe machinery is :meth:`_probed` verbatim —
+        pruned partitions, broadcast LUT, no corpus-sized exchange;
+        per-config windows partition per query.  ``plan_out["scored"]``
+        receives the once-executed scoring subtree for plan pins."""
+        exact = knn_bruteforce(emb, list(query_ids), k, id_col, vec_col) \
+            .localCheckpoint(eager=False)
+        probes, scored = self._probed(
+            wh, emb.filter(F.col(id_col).isin(list(query_ids))),
+            max(nprobes), m, id_col, vec_col, with_rank=True,
+        )
+        if plan_out is not None:
+            # wrapped in a no-op filter so the seam owns a FRESH
+            # QueryExecution: localCheckpoint(eager=False) finalizes the
+            # parent's adaptive plan (measured on PySpark 4.1), which
+            # strips the per-scan detail a pin inspects
+            plan_out["scored"] = scored.filter(F.lit(True))
+        return _nprobe_curve(
+            scored.localCheckpoint(eager=False), exact, nprobes, k,
+            *self._score_order(), probes=probes,
+        )
+
+
+#: the two at-rest indexes; their on-disk names predate the codec split
+IVF = IvfIndex("ivf", "raw")
+IVFPQ = IvfIndex("ivfpq", "pq")
 
 
 def ann_recall_at_k(
@@ -2659,24 +2266,11 @@ def diversity_select(
     cell_id (bounded per-cell fan-in by the sized cells); the member
     count rides the same partitioning, so Catalyst reuses one exchange
     for both."""
-    n = emb.count()
-    cell_mod = max(1, -(-n // n_cells_target))
-    cents = emb.filter(F.col(id_col) % cell_mod == 0).select(
-        F.col(id_col).alias("cell_id"), quantized(F.col(vec_col)).alias("cv")
+    cents = _seed_cells(
+        emb, _ceil_mod(emb.count(), n_cells_target), id_col, vec_col
     )
     vecs = emb.select(F.col(id_col), quantized(F.col(vec_col)).alias("v"))
-    scored = vecs.crossJoin(F.broadcast(cents)).select(
-        id_col, "v", "cell_id",
-        int_dot(F.col("v"), F.col("cv")).alias("dot_c"),
-    )
-    assign = (
-        scored.groupBy(id_col)
-        .agg(F.max_by(
-            F.struct(F.col("cell_id"), F.col("dot_c")),
-            F.struct(F.col("dot_c"), (-F.col("cell_id")).alias("neg")),
-        ).alias("best"))
-        .select(id_col, "best.cell_id", "best.dot_c")
-    )
+    assign = _coarse_assign(vecs, cents, id_col, carry=("dot_c",))
     w = Window.partitionBy("cell_id").orderBy(
         F.desc("dot_c"), F.asc(id_col)
     )
@@ -2789,11 +2383,4 @@ def sq_search(
             term, F.lit(0).cast("long"), lambda acc, x: acc + x
         ).alias("sq_dist"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("sq_dist"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sq_dist", "rank")
-    )
+    return _top_k(scored, k, "sq_dist", asc=True)

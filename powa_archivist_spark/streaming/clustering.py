@@ -8,7 +8,7 @@ every SemDeDup / IVF-cell maintenance loop runs: assign each arriving
 batch to FROZEN centers (one broadcast min_by aggregation — the cheap
 map-shaped path), and periodically REFRESH the centers with a full
 integer-Lloyd pass over the at-rest vector table (the
-``ivf_build``/``ann_index_upsert`` posture generalized to clustering).
+``IVF.build``/``ann_index_upsert`` posture generalized to clustering).
 
 State tables (all folded through ONE manifest per batch by the
 ledger-fold runner, streaming/fold.py — atomic at rest, crash-invisible
@@ -40,7 +40,7 @@ history read.  Refresh is the batch kmeans' own posture (broadcast
 min_by assignment + (cluster, dim) bounded-key update, k x dim longs to
 the driver per round) over the at-rest vectors — scheduled, not
 per-batch; the vectors table is the same asymptote every ANN index
-already pays (ivf_cells keeps full quantized vectors per cell).
+already pays (``IVF.cells`` keeps full quantized vectors per cell).
 
 Reference analog: powa's snapshot/coalesce split (frequent cheap
 appends, periodic aggregate repack — powa--5.2.0.sql snapshot vs

@@ -181,12 +181,15 @@ class StagedPass:
     in after its listing (ADVICE r6).
     """
 
-    def __init__(self, wh, srvid: int, pass_id: str | None = None) -> None:
+    def __init__(self, wh, srvid: int, pass_id: str | None = None,
+                 engine: bool = True) -> None:
         import uuid
 
         # every staged write runs on the engine session; frames handed
-        # in from elsewhere are re-homed there (adopt)
-        self.wh = wh.engine()
+        # in from elsewhere are re-homed there (adopt).  ``engine=False``
+        # keeps the caller's session: a full-corpus build's shuffles
+        # need the analytics posture, not the per-batch engine one
+        self.wh = wh.engine() if engine else wh
         self.srvid = srvid
         self.pass_id = pass_id or uuid.uuid4().hex[:12]
         # the stage-dir naming uses "__" as its field delimiter and
@@ -321,6 +324,23 @@ class StagedPass:
             "token": token, "children": _staged_children(d),
         }
 
+    def stage_retire_flat(self, table: str) -> None:
+        """Stage the retirement of an UNPARTITIONED table's content: a
+        flat replace that lands no file, so after publish the table
+        reads as absent (``Warehouse.exists`` is False).  No Spark job;
+        nothing is staged when the table has no dir."""
+        self._acl_check(table)
+        if not os.path.isdir(self.wh.path(table)):
+            return
+        idx = self._reserve_op()
+        token = f"{self.pass_id}__{idx}"
+        d = os.path.join(self.wh.path(table), f".__stageflatswap__{token}")
+        os.makedirs(d)
+        self._ops[idx] = {
+            "kind": "replace_flat", "table": table, "stage": d,
+            "token": token, "files": [],
+        }
+
     def stage_replace_flat(self, df, table: str) -> None:
         """Stage a full content replace of an UNPARTITIONED table (the
         ANN delta run table).  The op records the staged file names so
@@ -349,7 +369,10 @@ class StagedPass:
         single-manifest commit, so readers see the whole tree replace
         atomically.  Used by the ANN IVF upsert (ADVICE r6: the previous
         dynamic-partition overwrite read the table it was overwriting
-        and left a crash window holding replaced ids in two cells)."""
+        and left a crash window holding replaced ids in two cells).
+        A leaf the staged tree rewrites is never dropped, so passing
+        every live leaf as ``drops`` makes a full-table replace (the
+        ANN index rebuild)."""
         self._acl_check(table)
         df = adopt(self.wh.spark, df)
         idx = self._reserve_op()
@@ -359,10 +382,11 @@ class StagedPass:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(d)
+        children = _staged_children(d)
         self._ops[idx] = {
             "kind": "replace_tree", "table": table, "stage": d,
-            "token": token, "drops": list(drops),
-            "children": _staged_children(d),
+            "token": token, "drops": sorted(set(drops) - set(children)),
+            "children": children,
         }
 
     # ---- publish ---------------------------------------------------------
@@ -664,7 +688,7 @@ def _apply_ops(wh, ops: list[dict], intent_path: str | None = None) -> None:
                 # replay, reader heal racing the publisher's fold) must
                 # not retire again, or it would trash files a LATER op
                 # in the same manifest appended to this table (the
-                # ivf_upsert replace-then-append pattern); those run
+                # ANN upsert replace-then-append pattern); those run
                 # files are not in `own` and would be silently lost.
                 if os.path.isdir(stage):
                     if os.path.isdir(live_root):

@@ -169,12 +169,26 @@ def test_grants_cover_every_creatable_table(spark):
     content rule classifies the pipeline tables like constvalues."""
     from powa_archivist_spark.acl import warehouse_tables
 
+    from powa_archivist_spark.acl import CONTENT_TABLES
+    from powa_archivist_spark.pipeline.similarity import IVF, IVFPQ
+
     tables = warehouse_tables()
     # the new r5/r6 tables are in the inventory
     for t in ("corpus_digest_ledger", "corpus_neardup_ledger",
               "ann_ivf_cells", "ann_ivf_centroids", "powa_statements",
               "powa_qualstats_constvalues_history"):
         assert t in tables, t
+    # every table of both at-rest ANN indexes, and the streaming ledgers
+    for t in (*IVF.tables, *IVFPQ.tables, "corpus_rejects",
+              "kmeans_vectors", "kmeans_centers", "kmeans_assign",
+              "pq_codebook", "pq_codes", "retrieval_postings",
+              "retrieval_corpus_stats", "components_ledger",
+              "components_edges", "components_assign", "components_remap",
+              "profile_hll_registers", "profile_cms_registers",
+              "profile_quantile_sketch", "novelty_first_owner",
+              "novelty_doc_stats"):
+        assert t in tables, t
+    assert CONTENT_TABLES <= set(tables)
     g = grants_df(spark)  # defaults to the full inventory
     assert g.count() == len(tables) * len(POWA_ROLES)
 
@@ -189,6 +203,24 @@ def test_grants_cover_every_creatable_table(spark):
         assert rows[(t, "powa_admin")] == ["read", "write"]
     # config registry stays read-only for the snapshot role
     assert rows[("powa_servers", "powa_snapshot")] == ["read"]
+
+
+def test_metrics_role_cannot_read_embedding_ledgers(spark, wh):
+    """The streaming k-means vectors (quantized embeddings) and the PQ
+    codes are document content like the ANN index tables: the
+    metrics-only role gets PermissionError on them through
+    AclWarehouse, the data role reads them, and the ledgers that hold
+    only ids or aggregates stay readable to the metrics role."""
+    setup_powa_roles(wh, BINDINGS)
+    for t in ("kmeans_vectors", "pq_codes", "pq_codebook",
+              "kmeans_centers", "retrieval_postings",
+              "novelty_first_owner"):
+        with pytest.raises(PermissionError):
+            AclWarehouse(wh, "grafana").read(t)
+        assert privileges("powa_read_all_data", t) == {"read"}
+    for t in ("kmeans_assign", "components_assign", "retrieval_corpus_stats",
+              "profile_hll_registers"):
+        assert privileges("powa_read_all_metrics", t) == {"read"}
 
 
 def test_role_groups_and_rebind_visibility(spark, wh):

@@ -705,7 +705,7 @@ def test_knn_lsh_multiprobe_recall_dominates(spark):
 
 
 def test_ivf_at_rest_matches_in_memory_and_prunes(spark, wh):
-    """ivf_build + ivf_probe: the at-rest index returns the SAME rows as
+    """IVF.build + IVF.probe: the at-rest index returns the SAME rows as
     the in-memory knn_ivf (same centroids, tiebreaks, quantization), and
     the probe scan partition-prunes to the probed cells only."""
     from powa_archivist_spark.plans import inspect as pi
@@ -718,8 +718,8 @@ def test_ivf_at_rest_matches_in_memory_and_prunes(spark, wh):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     qids = [0, 1, 2]
 
-    similarity.ivf_build(wh, emb, centroid_mod=31)
-    probe = similarity.ivf_probe(
+    similarity.IVF.build(wh, emb, centroid_mod=31)
+    probe = similarity.IVF.probe(
         wh, emb.filter(emb.vec_id.isin(qids)), k=5, nprobe=2
     )
     # inspect BEFORE executing: after collect, AQE's explain moves node
@@ -1137,8 +1137,8 @@ def test_ivf_upsert_matches_full_rebuild(spark, wh):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     build = emb.filter("vec_id % 5 != 4")
-    similarity.ivf_build(wh, build)
-    cells_dir = wh.path(similarity.ANN_CELLS_TABLE)
+    similarity.IVF.build(wh, build)
+    cells_dir = wh.path(similarity.IVF.table("cells"))
 
     # snapshot per-cell file mtimes before the upsert
     def leaf_files():
@@ -1158,11 +1158,11 @@ def test_ivf_upsert_matches_full_rebuild(spark, wh):
             "embedding", F.reverse("embedding")
         )
     )
-    similarity.ivf_upsert(wh, batch)
+    similarity.IVF.upsert(wh, batch)
 
     got = sorted(
         (r.cell_id, r.vec_id, tuple(r.v))
-        for r in similarity.ivf_cells(wh).collect()
+        for r in similarity.IVF.cells(wh).collect()
     )
     # reference: full re-assignment of the post-upsert vector set
     # against the same centroids
@@ -1171,7 +1171,7 @@ def test_ivf_upsert_matches_full_rebuild(spark, wh):
             "embedding", F.reverse("embedding")
         )
     )
-    cents = wh.read(similarity.ANN_CENTROIDS_TABLE)
+    cents = wh.read(similarity.IVF.table("centroids"))
     vecs = post.select("vec_id", similarity.quantized(F.col("embedding")).alias("v"))
     scored = vecs.crossJoin(F.broadcast(cents)).select(
         "vec_id", "v", "cell_id",
@@ -1192,7 +1192,7 @@ def test_ivf_upsert_matches_full_rebuild(spark, wh):
     # untouched cells kept their original files
     after = leaf_files()
     batch_cells = {f"cell_id={r.cell_id}" for r in
-                   similarity.ivf_cells(wh)
+                   similarity.IVF.cells(wh)
                    .join(batch.select("vec_id"), "vec_id", "left_semi")
                    .select("cell_id").distinct().collect()}
     untouched = set(before) - batch_cells
@@ -1252,26 +1252,29 @@ def test_token_budget_select_prefix_property(spark):
     assert [out[i].selected for i in (1, 2, 3, 4)] == [True, True, False, True]
     assert out[2].cum_tokens == 12 and out[3].cum_tokens == 18
 
-def test_ivf_upsert_append_only_fast_path(spark, wh):
+@pytest.mark.parametrize("codec", ["raw", "pq"])
+def test_ivf_upsert_append_only_fast_path(spark, wh, codec):
     """assume_new_ids=True skips the replaced-id scan and appends the
-    batch's cells — result equals the default path for fresh ids."""
+    batch's cells — result equals the default path for fresh ids.
+    Both codecs: the cell assignment is the same coarse argmax."""
     from pyspark.sql import functions as F
 
     from powa_archivist_spark.pipeline import similarity
 
+    index = _ann_index(codec)
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    similarity.ivf_build(wh, emb.filter("vec_id % 5 != 4"))
+    index.build(wh, emb.filter("vec_id % 5 != 4"))
     batch = emb.filter("vec_id % 5 = 4")
-    similarity.ivf_upsert(wh, batch, assume_new_ids=True)
+    index.upsert(wh, batch, assume_new_ids=True)
     got = {
         (r.cell_id, r.vec_id)
-        for r in similarity.ivf_cells(wh).collect()
+        for r in index.cells(wh).collect()
     }
     assert {r.vec_id for r in batch.select("vec_id").collect()} <= {
         v for _c, v in got
     }
     # equivalence with the full-assignment reference
-    cents = wh.read(similarity.ANN_CENTROIDS_TABLE)
+    cents = wh.read(index.table("centroids"))
     vecs = emb.select(
         "vec_id", similarity.quantized(F.col("embedding")).alias("v")
     )
@@ -1289,14 +1292,15 @@ def test_ivf_upsert_append_only_fast_path(spark, wh):
     }
     assert got == want
 
-def test_ivf_upsert_clears_emptied_cell(spark, wh):
+@pytest.mark.parametrize("codec", ["raw", "pq"])
+def test_ivf_upsert_clears_emptied_cell(spark, wh, codec):
     """Code-review r6: dynamic partition overwrite writes nothing for a
     partition absent from the output, so a cell whose ONLY member moved
     away must be dropped explicitly — otherwise the replaced id's stale
     row survives and the index holds it twice."""
     from pyspark.sql import functions as F
 
-    from powa_archivist_spark.pipeline import similarity
+    index = _ann_index(codec)
 
     e1 = [1.0] + [0.0] * 7
     e2 = [0.0, 1.0] + [0.0] * 6
@@ -1305,18 +1309,18 @@ def test_ivf_upsert_clears_emptied_cell(spark, wh):
         [(0, e1), (97, e2)] + [(i, near2) for i in (1, 2, 3)],
         "vec_id long, embedding array<float>",
     )
-    similarity.ivf_build(wh, emb)
+    index.build(wh, emb)
     cells = {(r.cell_id, r.vec_id)
-             for r in similarity.ivf_cells(wh).collect()}
+             for r in index.cells(wh).collect()}
     assert (0, 0) in cells  # id 0 alone in its own cell
 
     # re-embed id 0 so it argmaxes into cell 97
     batch = spark.createDataFrame(
         [(0, e2)], "vec_id long, embedding array<float>"
     )
-    similarity.ivf_upsert(wh, batch)
+    index.upsert(wh, batch)
     after = [(r.cell_id, r.vec_id)
-             for r in similarity.ivf_cells(wh).collect()]
+             for r in index.cells(wh).collect()]
     ids = [v for _c, v in after]
     assert ids.count(0) == 1, f"stale duplicate of id 0: {sorted(after)}"
     assert (97, 0) in set(after)
@@ -1393,7 +1397,8 @@ def test_winnow_pairs_detects_shared_passages(spark):
     assert capped == []
 
 
-def test_ivf_upsert_crash_atomicity(spark, wh):
+@pytest.mark.parametrize("codec", ["raw", "pq"])
+def test_ivf_upsert_crash_atomicity(spark, wh, codec):
     """r7 (ADVICE r6): the upsert's cell rewrite commits through a
     staged-tree pass.  A crash BEFORE the manifest rename leaves the
     intact pre-batch index; a crash AFTER it (mid-fold) leaves readers
@@ -1403,16 +1408,16 @@ def test_ivf_upsert_crash_atomicity(spark, wh):
     from pyspark.sql import functions as F
 
     from powa_archivist_spark import txn as txn_mod
-    from powa_archivist_spark.pipeline import similarity
     from powa_archivist_spark.txn import GLOBAL_LANE, StagedPass
 
+    index = _ann_index(codec)
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    similarity.ivf_build(wh, emb.filter("vec_id % 5 != 4"))
+    index.build(wh, emb.filter("vec_id % 5 != 4"))
 
     def snapshot_cells():
         return sorted(
-            (r.cell_id, r.vec_id, tuple(r.v))
-            for r in similarity.ivf_cells(wh).collect()
+            (r.cell_id, r.vec_id, tuple(r[index.payload]))
+            for r in index.cells(wh).collect()
         )
 
     pre = snapshot_cells()
@@ -1429,7 +1434,7 @@ def test_ivf_upsert_crash_atomicity(spark, wh):
     real_publish = StagedPass.publish
     StagedPass.publish = lambda self: (_ for _ in ()).throw(Boom())
     try:
-        similarity.ivf_upsert(wh, batch)
+        index.upsert(wh, batch)
     except Boom:
         pass
     finally:
@@ -1445,7 +1450,7 @@ def test_ivf_upsert_crash_atomicity(spark, wh):
 
     txn_mod._apply_ops = no_fold
     try:
-        similarity.ivf_upsert(wh, batch)
+        index.upsert(wh, batch)
     except Boom:
         pass
     finally:
@@ -1458,11 +1463,12 @@ def test_ivf_upsert_crash_atomicity(spark, wh):
     StagedPass.recover(wh, GLOBAL_LANE, sweep=True)
     assert snapshot_cells() == post
     # idempotent replay converges
-    similarity.ivf_upsert(wh, batch)
+    index.upsert(wh, batch)
     assert snapshot_cells() == post
 
 
-def test_ivf_upsert_replay_keeps_batch_replacing_delta_ids(spark, wh):
+@pytest.mark.parametrize("codec", ["raw", "pq"])
+def test_ivf_upsert_replay_keeps_batch_replacing_delta_ids(spark, wh, codec):
     """r8 (ADVICE r7, high): a batch replacing ids that sit in the DELTA
     stages replace_flat(delta-minus-batch) AND append_flat(run) on the
     SAME table in one manifest.  On a crash-replay (manifest applied but
@@ -1476,13 +1482,14 @@ def test_ivf_upsert_replay_keeps_batch_replacing_delta_ids(spark, wh):
     from powa_archivist_spark.pipeline import similarity
     from powa_archivist_spark.txn import GLOBAL_LANE, StagedPass
 
+    index = _ann_index(codec)
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    similarity.ivf_build(wh, emb.filter("vec_id % 5 != 4"))
+    index.build(wh, emb.filter("vec_id % 5 != 4"))
     # batch 1: fresh ids -> they land in the delta as one run
     batch1 = emb.filter("vec_id % 5 = 4")
-    similarity.ivf_upsert(wh, batch1)
+    index.upsert(wh, batch1)
     delta_ids = {
-        r.vec_id for r in wh.read(similarity.ANN_DELTA_TABLE)
+        r.vec_id for r in wh.read(index.table("delta"))
         .select("vec_id").collect()
     }
     batch2 = batch1.withColumn("embedding", F.reverse("embedding"))
@@ -1501,7 +1508,7 @@ def test_ivf_upsert_replay_keeps_batch_replacing_delta_ids(spark, wh):
 
     txn_mod._apply_ops = apply_then_die
     try:
-        similarity.ivf_upsert(wh, batch2)
+        index.upsert(wh, batch2)
     except Boom:
         pass
     finally:
@@ -1515,8 +1522,8 @@ def test_ivf_upsert_replay_keeps_batch_replacing_delta_ids(spark, wh):
 
     def snapshot_cells():
         return sorted(
-            (r.cell_id, r.vec_id, tuple(r.v))
-            for r in similarity.ivf_cells(wh).collect()
+            (r.cell_id, r.vec_id, tuple(r[index.payload]))
+            for r in index.cells(wh).collect()
         )
 
     post = snapshot_cells()
@@ -1528,13 +1535,86 @@ def test_ivf_upsert_replay_keeps_batch_replacing_delta_ids(spark, wh):
     assert b2_ids <= set(got_ids), "replay trashed the batch's run files"
     # reversed embedding really took effect (replace, not stale keep)
     one = sorted(b2_ids)[0]
-    want = [
-        tuple(similarity_quantize(r.embedding))
-        for r in batch2.filter(F.col("vec_id") == one).collect()
-    ][0]
+    one_vec = batch2.filter(F.col("vec_id") == one)
+    if codec == "raw":
+        want = [
+            tuple(similarity_quantize(r.embedding))
+            for r in one_vec.collect()
+        ][0]
+    else:
+        want = [
+            tuple(r.codes) for r in similarity.ivf_encode(
+                one_vec, wh.read(index.table("centroids")),
+                wh.read(index.table("codebook")),
+            ).collect()
+        ][0]
     got = [v for _c, i, v in snapshot_cells() if i == one][0]
     assert got == want
     assert not glob.glob(os.path.join(wh.root, "_txn", "*", "*.intent"))
+
+
+@pytest.mark.parametrize("codec", ["raw", "pq"])
+def test_ivf_rebuild_crash_leaves_previous_index(spark, wh, codec,
+                                                 monkeypatch):
+    """A rebuild swaps cells, quantizers, the id Bloom and the pending
+    delta through ONE staged manifest.  A crash after its first table
+    write and before the commit leaves readers on the complete
+    pre-rebuild index (never new cells beside old centroids, or an old
+    Bloom missing ids the new cells hold), and a following upsert of
+    ids only the aborted rebuild held lands each of them once."""
+    from pyspark.sql import DataFrameWriter
+
+    index = _ann_index(codec)
+    vecs = np.random.default_rng(7).normal(size=(300, 16))
+    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    index.build(wh, emb.filter("vec_id % 5 != 4"))
+    index.upsert(wh, emb.filter("vec_id % 10 = 4"))  # a pending delta run
+
+    def snapshot():
+        out = {"cells": sorted(map(repr, index.cells(wh).collect()))}
+        for t in index.tables:
+            if t != index.table("cells"):
+                out[t] = sorted(map(repr, wh.read(t).collect()))
+        return out
+
+    pre = snapshot()
+    assert pre[index.table("delta")], "precondition: a pending delta"
+
+    class Boom(RuntimeError):
+        pass
+
+    real_parquet = DataFrameWriter.parquet
+    written = []
+
+    def first_write_then_die(self, path, *a, **k):
+        if written:
+            raise Boom()
+        written.append(path)
+        return real_parquet(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", first_write_then_die)
+    with pytest.raises(Boom):
+        # other cells (stride 31) over a corpus that adds vec_id % 10 = 9
+        index.build(wh, emb.filter("vec_id % 5 != 3"), centroid_mod=31)
+    monkeypatch.undo()
+    assert written, "the rebuild crashed before any table write"
+    assert snapshot() == pre, "a crashed rebuild leaked into reads"
+
+    # ids the aborted rebuild held and the live Bloom never saw
+    index.upsert(wh, emb.filter("vec_id % 10 = 9"))
+    ids = [r.vec_id for r in index.cells(wh).select("vec_id").collect()]
+    assert len(ids) == len(set(ids)), "an id sits in two places"
+    assert {r.vec_id for r in emb.filter("vec_id % 10 = 9").collect()} \
+        <= set(ids)
+
+
+def _ann_index(codec):
+    """The at-rest index of one codec: raw (IVF) or pq (IVF-PQ)."""
+    return similarity.IVF if codec == "raw" else similarity.IVFPQ
 
 
 def similarity_quantize(vec):
@@ -1743,7 +1823,7 @@ def test_multimodal_real_codec_decodes_fixture(spark):
 
 def test_ivf_compact_delta_preserves_index(spark, wh):
     """r7: folding the delta's runs into the base cells preserves the
-    logical index exactly (same rows via ivf_cells), empties the delta,
+    logical index exactly (same rows via IVF.cells), empties the delta,
     keeps probe results identical — and a crash mid-fold leaves readers
     on a consistent view (manifest-resolved), with no vector visible in
     both places."""
@@ -1754,25 +1834,25 @@ def test_ivf_compact_delta_preserves_index(spark, wh):
     from powa_archivist_spark.txn import GLOBAL_LANE, StagedPass
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    similarity.ivf_build(wh, emb.filter("vec_id % 3 != 2"))
+    similarity.IVF.build(wh, emb.filter("vec_id % 3 != 2"))
     for gen in (1, 2):
         batch = emb.filter("vec_id % 3 = 2").select(
             (F.col("vec_id") + F.lit(1_000_000 * gen)).alias("vec_id"),
             "embedding",
         )
-        similarity.ivf_upsert(wh, batch)
+        similarity.IVF.upsert(wh, batch)
 
     def snap():
         return sorted(
             (r.cell_id, r.vec_id, tuple(r.v))
-            for r in similarity.ivf_cells(wh).collect()
+            for r in similarity.IVF.cells(wh).collect()
         )
 
     before = snap()
-    assert wh.read(similarity.ANN_DELTA_TABLE).count() > 0
+    assert wh.read(similarity.IVF.table("delta")).count() > 0
     queries = emb.filter("vec_id in (0, 3)")
     probe_before = sorted(
-        map(tuple, similarity.ivf_probe(wh, queries, k=5).collect())
+        map(tuple, similarity.IVF.probe(wh, queries, k=5).collect())
     )
 
     # crash mid-fold: manifest committed, nothing applied — readers
@@ -1783,7 +1863,7 @@ def test_ivf_compact_delta_preserves_index(spark, wh):
     real_apply = txn_mod._apply_ops
     txn_mod._apply_ops = lambda w, ops: (_ for _ in ()).throw(Boom())
     try:
-        similarity.ivf_compact_delta(wh, min_runs=0)
+        similarity.IVF.compact(wh, min_runs=0)
     except Boom:
         pass
     finally:
@@ -1795,11 +1875,11 @@ def test_ivf_compact_delta_preserves_index(spark, wh):
     # recovery + a clean fold converge
     StagedPass.recover(wh, GLOBAL_LANE, sweep=True)
     assert snap() == before
-    similarity.ivf_compact_delta(wh, min_runs=0)
+    similarity.IVF.compact(wh, min_runs=0)
     assert snap() == before
-    assert wh.read(similarity.ANN_DELTA_TABLE).count() == 0
+    assert wh.read(similarity.IVF.table("delta")).count() == 0
     assert sorted(
-        map(tuple, similarity.ivf_probe(wh, queries, k=5).collect())
+        map(tuple, similarity.IVF.probe(wh, queries, k=5).collect())
     ) == probe_before
 
 
@@ -1814,26 +1894,26 @@ def test_compact_delta_run_probe_reads_manifest_resolved_files(spark, wh):
     from powa_archivist_spark.pipeline import similarity
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    similarity.ivf_build(wh, emb.filter("vec_id % 3 = 0"))
+    similarity.IVF.build(wh, emb.filter("vec_id % 3 = 0"))
     for gen in (1, 2):
         batch = emb.filter("vec_id % 3 = 1").select(
             (F.col("vec_id") + F.lit(1_000_000 * gen)).alias("vec_id"),
             "embedding",
         )
-        similarity.ivf_upsert(wh, batch, assume_new_ids=True,
+        similarity.IVF.upsert(wh, batch, assume_new_ids=True,
                               compact_delta_runs=100)
-    assert not similarity.ivf_compact_delta(wh, min_runs=3)
-    assert wh.read(similarity.ANN_DELTA_TABLE).count() > 0
+    assert not similarity.IVF.compact(wh, min_runs=3)
+    assert wh.read(similarity.IVF.table("delta")).count() > 0
 
     batch3 = emb.filter("vec_id % 3 = 1").select(
         (F.col("vec_id") + F.lit(3_000_000)).alias("vec_id"), "embedding",
     )
-    similarity.ivf_upsert(wh, batch3, assume_new_ids=True,
+    similarity.IVF.upsert(wh, batch3, assume_new_ids=True,
                           compact_delta_runs=100)
-    total = similarity.ivf_cells(wh).count()
-    assert similarity.ivf_compact_delta(wh, min_runs=3)
-    assert wh.read(similarity.ANN_DELTA_TABLE).count() == 0
-    assert similarity.ivf_cells(wh).count() == total
+    total = similarity.IVF.cells(wh).count()
+    assert similarity.IVF.compact(wh, min_runs=3)
+    assert wh.read(similarity.IVF.table("delta")).count() == 0
+    assert similarity.IVF.cells(wh).count() == total
 
 
 def test_hll_distinct_accuracy_and_partition_invariance(spark):
@@ -3741,14 +3821,14 @@ def test_ivfpq_at_rest_upsert_equals_rebuild_with_frozen_quantizers(
         "/root/testdata/sf0.001/embeddings.parquet"
     ).filter("vec_id < 400")
     build = emb.filter("vec_id % 5 != 4")
-    S.ivfpq_index_build(wh, build, m=8, n_cells_target=8,
+    S.IVFPQ.build(wh, build, m=8, n_cells_target=8,
                         n_codes_target=64)
     q = emb.filter("vec_id in (0, 1, 2, 3)")
 
     # probe == in-memory search over the same (deterministic) artifacts
     cents, cb, index = S.ivfpq_build(build, m=8, n_cells_target=8,
                                      n_codes_target=64)
-    got = sorted(map(tuple, S.ivfpq_probe(wh, q, k=5, nprobe=2).collect()))
+    got = sorted(map(tuple, S.IVFPQ.probe(wh, q, k=5, nprobe=2).collect()))
     want = sorted(map(tuple, S.ivfpq_search(
         build, cents, cb, index, query_ids=[0, 1, 2, 3], k=5, nprobe=2,
     ).collect()))
@@ -3759,26 +3839,26 @@ def test_ivfpq_at_rest_upsert_equals_rebuild_with_frozen_quantizers(
     batch = emb.filter("vec_id % 5 = 4").unionByName(
         emb.filter("vec_id % 50 = 0")
         .withColumn("embedding", F.reverse("embedding")))
-    S.ivfpq_upsert(wh, batch)
+    S.IVFPQ.upsert(wh, batch)
     final = emb.filter("vec_id % 50 != 0").unionByName(
         emb.filter("vec_id % 50 = 0")
         .withColumn("embedding", F.reverse("embedding")))
-    idx_full = S.ivfpq_encode(final, cents, cb, m=8)
-    got2 = sorted(map(tuple, S.ivfpq_probe(wh, q, k=5, nprobe=2).collect()))
+    idx_full = S.ivf_encode(final, cents, cb, m=8)
+    got2 = sorted(map(tuple, S.IVFPQ.probe(wh, q, k=5, nprobe=2).collect()))
     want2 = sorted(map(tuple, S.ivfpq_search(
         emb, cents, cb, idx_full, query_ids=[0, 1, 2, 3], k=5, nprobe=2,
     ).collect()))
     assert got2 == want2
 
     # replaced ids live in exactly one place across base ∪ delta
-    n = S.ivfpq_cells(wh).count()
-    assert n == S.ivfpq_cells(wh).select("vec_id").distinct().count()
+    n = S.IVFPQ.cells(wh).count()
+    assert n == S.IVFPQ.cells(wh).select("vec_id").distinct().count()
     assert n == final.count()
 
     # compaction folds the delta without changing any probe result
-    assert S.ivfpq_compact_delta(wh, 0)
-    assert not wh.read(S.ANNPQ_DELTA_TABLE).count()
-    got3 = sorted(map(tuple, S.ivfpq_probe(wh, q, k=5, nprobe=2).collect()))
+    assert S.IVFPQ.compact(wh, 0)
+    assert not wh.read(S.IVFPQ.table("delta")).count()
+    got3 = sorted(map(tuple, S.IVFPQ.probe(wh, q, k=5, nprobe=2).collect()))
     assert got3 == got2
 
 
@@ -3818,10 +3898,10 @@ def test_ivfpq_probe_tuning_monotone_candidates_allcells_endpoint(spark, wh):
     emb = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
     ).filter("vec_id < 400")
-    S.ivfpq_index_build(wh, emb, m=8, n_cells_target=8, n_codes_target=64)
-    n_cells_total = wh.read(S.ANNPQ_CELLS_TABLE) \
+    S.IVFPQ.build(wh, emb, m=8, n_cells_target=8, n_codes_target=64)
+    n_cells_total = wh.read(S.IVFPQ.table("cells")) \
         .select("cell_id").distinct().count()
-    out = S.ivfpq_probe_tuning(
+    out = S.IVFPQ.probe_tuning(
         wh, emb, query_ids=[0, 1, 2, 3, 4], k=10,
         nprobes=(1, 2, n_cells_total), m=8,
     ).orderBy("nprobe").collect()
@@ -3835,9 +3915,9 @@ def test_ivfpq_probe_tuning_monotone_candidates_allcells_endpoint(spark, wh):
     assert out[-1].n_cand_hit == out[-1].n_truth == 50
     # end-to-end ADC recall at all cells equals the pure full-scan ADC
     # top-k recall over the same frozen artifacts
-    cents = wh.read(S.ANNPQ_CENTROIDS_TABLE)
-    cb = wh.read(S.ANNPQ_CODEBOOK_TABLE)
-    idx = S.ivfpq_encode(emb, cents, cb, m=8)
+    cents = wh.read(S.IVFPQ.table("centroids"))
+    cb = wh.read(S.IVFPQ.table("codebook"))
+    idx = S.ivf_encode(emb, cents, cb, m=8)
     exact = S.knn_bruteforce(emb, [0, 1, 2, 3, 4], k=10)
     full = S.ivfpq_search(emb, cents, cb, idx, [0, 1, 2, 3, 4], k=10,
                           nprobe=n_cells_total, m=8)

@@ -443,7 +443,7 @@ def test_no_unbounded_global_window_anywhere(spark):
 
 
 def test_ivf_probe_prunes_base_partitions_with_delta(spark, wh):
-    """r7 LSM layout: ivf_probe over base+delta still PRUNES the base
+    """r7 LSM layout: IVF.probe over base+delta still PRUNES the base
     scan to the probed cells' partition dirs (PartitionFilters carries
     cell_id) and pushes the cell filter into the delta's flat scan
     (row-group pruning via the per-run sort)."""
@@ -452,15 +452,15 @@ def test_ivf_probe_prunes_base_partitions_with_delta(spark, wh):
     from powa_archivist_spark.pipeline import similarity
 
     emb = spark.read.parquet(SF + "/embeddings.parquet")
-    similarity.ivf_build(wh, emb.filter("vec_id % 3 != 2"))
-    similarity.ivf_upsert(
+    similarity.IVF.build(wh, emb.filter("vec_id % 3 != 2"))
+    similarity.IVF.upsert(
         wh,
         emb.filter("vec_id % 3 = 2").select(
             (F.col("vec_id") + F.lit(1_000_000)).alias("vec_id"),
             "embedding",
         ),
     )
-    out = similarity.ivf_probe(wh, emb.filter("vec_id in (0, 3)"), k=5)
+    out = similarity.IVF.probe(wh, emb.filter("vec_id in (0, 3)"), k=5)
     part = " ".join(pi.partition_filters(out))
     assert "cell_id" in part, "base scan lost cell partition pruning"
     pushed = " ".join(pi.pushed_filters(out))
@@ -966,7 +966,7 @@ def test_kmeans_semdedup_pairwise_is_cluster_keyed(spark):
 
 def test_ivfpq_probe_prunes_base_partitions_with_delta(spark, wh):
     """r12: the at-rest IVF-PQ index keeps the IVF index's layout
-    contract — ivfpq_probe over base+delta PRUNES the base scan to the
+    contract — IVFPQ.probe over base+delta PRUNES the base scan to the
     probed cells' partition dirs (PartitionFilters carries cell_id) and
     pushes the cell filter into the delta's flat scan (row-group
     pruning via the per-run sort); the codes table never feeds a
@@ -976,8 +976,9 @@ def test_ivfpq_probe_prunes_base_partitions_with_delta(spark, wh):
     from powa_archivist_spark.pipeline import similarity
 
     emb = spark.read.parquet(SF + "/embeddings.parquet")
-    similarity.ivfpq_index_build(wh, emb.filter("vec_id % 3 != 2"))
-    similarity.ivfpq_upsert(
+    similarity.IVFPQ.build(wh, emb.filter("vec_id % 3 != 2"),
+                           n_cells_target=8)
+    similarity.IVFPQ.upsert(
         wh,
         emb.filter("vec_id % 3 = 2").select(
             (F.col("vec_id") + F.lit(1_000_000)).alias("vec_id"),
@@ -985,7 +986,7 @@ def test_ivfpq_probe_prunes_base_partitions_with_delta(spark, wh):
         ),
         assume_new_ids=True,
     )
-    out = similarity.ivfpq_probe(wh, emb.filter("vec_id in (0, 3)"), k=5)
+    out = similarity.IVFPQ.probe(wh, emb.filter("vec_id in (0, 3)"), k=5)
     part = " ".join(pi.partition_filters(out))
     assert "cell_id" in part, "base scan lost cell partition pruning"
     pushed = " ".join(pi.pushed_filters(out))
@@ -995,7 +996,7 @@ def test_ivfpq_probe_prunes_base_partitions_with_delta(spark, wh):
 
 def test_ivfpq_probe_tuning_prunes_reads_per_config(spark, wh):
     """r13 (VERDICT r12 task 6): the at-rest nprobe-tuning curve scores
-    through ivfpq_probe's pruned path — the codes scan carries the
+    through IVFPQ.probe's pruned path — the codes scan carries the
     cell_id partition filter (base) and pushed filter (delta), the LUT
     broadcasts, and no stage is a cartesian product."""
     from pyspark.sql import functions as F
@@ -1003,8 +1004,9 @@ def test_ivfpq_probe_tuning_prunes_reads_per_config(spark, wh):
     from powa_archivist_spark.pipeline import similarity
 
     emb = spark.read.parquet(SF + "/embeddings.parquet")
-    similarity.ivfpq_index_build(wh, emb.filter("vec_id % 3 != 2"))
-    similarity.ivfpq_upsert(
+    similarity.IVFPQ.build(wh, emb.filter("vec_id % 3 != 2"),
+                           n_cells_target=8)
+    similarity.IVFPQ.upsert(
         wh,
         emb.filter("vec_id % 3 = 2").select(
             (F.col("vec_id") + F.lit(1_000_000)).alias("vec_id"),
@@ -1013,7 +1015,7 @@ def test_ivfpq_probe_tuning_prunes_reads_per_config(spark, wh):
         assume_new_ids=True,
     )
     seam: dict = {}
-    out = similarity.ivfpq_probe_tuning(
+    out = similarity.IVFPQ.probe_tuning(
         wh, emb, query_ids=[0, 3], k=5, nprobes=(1, 2), plan_out=seam,
     )
     scored = seam["scored"]  # the once-executed ADC scoring subtree

@@ -20,6 +20,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 import sys
 import time
 from pathlib import Path
@@ -129,7 +130,7 @@ def _ann_upsert_setup(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     # production IVF sizing: hold the cell count fixed so the upsert's
     # assignment cost doesn't inherit the corpus's linear cell growth
-    similarity.ivf_build(wh, emb, n_cells_target=200)
+    similarity.IVF.build(wh, emb, n_cells_target=200)
     batch = (
         spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
         .orderBy("vec_id").limit(500)
@@ -152,7 +153,7 @@ def _ann_upsert_run(spark, ctx):
     batch = ctx["batch"].select(
         (F.col("vec_id") + F.lit(offset)).alias("vec_id"), "embedding"
     )
-    similarity.ivf_upsert(ctx["wh"], batch)
+    similarity.IVF.upsert(ctx["wh"], batch)
 
 
 def _ivfpq_upsert_setup(spark, sf_dir):
@@ -173,8 +174,8 @@ def _ivfpq_upsert_setup(spark, sf_dir):
 
     wh = Warehouse(spark, tempfile.mkdtemp(prefix="ivfpq_upsert_bench_"))
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    similarity.ivfpq_index_build(wh, emb, m=8, n_cells_target=200,
-                                 n_codes_target=64)
+    similarity.IVFPQ.build(wh, emb, m=8, n_cells_target=200,
+                           n_codes_target=64)
     batch = (
         spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
         .orderBy("vec_id").limit(500)
@@ -194,7 +195,7 @@ def _ivfpq_upsert_run(spark, ctx):
     batch = ctx["batch"].select(
         (F.col("vec_id") + F.lit(offset)).alias("vec_id"), "embedding"
     )
-    similarity.ivfpq_upsert(ctx["wh"], batch)
+    similarity.IVFPQ.upsert(ctx["wh"], batch)
 
 
 #: staged entries: (setup(spark, sf_dir) -> ctx, run(spark, ctx)) —
@@ -263,10 +264,13 @@ def main() -> int:
         if name in STAGED_QUERIES:
             setup, runner = STAGED_QUERIES[name]
             ctx = setup(spark, sf_dir)
-            runner(spark, ctx)                  # warm the staged path
-            t0 = time.time()
-            runner(spark, ctx)
-            return time.time() - t0
+            try:
+                runner(spark, ctx)              # warm the staged path
+                t0 = time.time()
+                runner(spark, ctx)
+                return time.time() - t0
+            finally:
+                shutil.rmtree(ctx["wh"].root, ignore_errors=True)
         t0 = time.time()
         qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         return time.time() - t0

@@ -130,11 +130,12 @@ def _at_rest_serving_plans(spark, sf_dir: str) -> list[str]:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
             "doc_id", "text"
         )
-        similarity.ivfpq_index_build(wh, emb.filter("vec_id % 5 != 4"))
-        similarity.ivfpq_upsert(wh, emb.filter("vec_id % 5 = 4"))
+        similarity.IVFPQ.build(wh, emb.filter("vec_id % 5 != 4"),
+                               n_cells_target=8)
+        similarity.IVFPQ.upsert(wh, emb.filter("vec_id % 5 = 4"))
         q = emb.filter("vec_id in (0, 1, 2)")
         seam: dict = {}
-        similarity.ivfpq_probe_tuning(
+        similarity.IVFPQ.probe_tuning(
             wh, emb, query_ids=[0, 1, 2], k=5, nprobes=(1, 2),
             plan_out=seam,
         )
@@ -143,9 +144,9 @@ def _at_rest_serving_plans(spark, sf_dir: str) -> list[str]:
         process_components_batch(wh, docs.filter("doc_id % 2 = 0"), 0)
         process_components_batch(wh, docs.filter("doc_id % 2 = 1"), 1)
         serving = [
-            ("ivfpq_probe (base+delta, pruned to probed cells)",
-             similarity.ivfpq_probe(wh, q, k=5, nprobe=2)),
-            ("ivfpq_probe_tuning scoring pass (shared, pruned)",
+            ("IVFPQ.probe (base+delta, pruned to probed cells)",
+             similarity.IVFPQ.probe(wh, q, k=5, nprobe=2)),
+            ("IVFPQ.probe_tuning scoring pass (shared, pruned)",
              seam["scored"]),
             ("kmeans_staleness (two bounded aggregates)",
              kmeans_staleness(wh)),

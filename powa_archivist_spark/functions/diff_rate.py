@@ -6,8 +6,13 @@ The reference generates, per datasource, a ``<ds>_mi`` function + a custom
 >= 1 second, powa--5.2.0.sql:1176-1223).  powa-web applies them between
 adjacent records of an entity's time series.
 
-Spark-native equivalent: pure Catalyst column expressions applied after a
-``lag()`` window — no Python UDFs, stays inside whole-stage codegen.
+Spark-native equivalent, generated from the spec as SQL text the way the
+reference generates its operator SQL: ONE
+``lag(struct(unix_timestamp(ts) AS _ts, <agg counters>))`` over the
+(srvid, keys) entity window carries every counter's predecessor at once,
+and the deltas or rates are one ``selectExpr`` over it.  A frame costs a
+few JVM calls instead of a ``lag`` Column per counter, and stays inside
+whole-stage codegen (no Python UDFs).
 
 Counter-reset handling: the reference does NOT handle counter resets
 (negative deltas after ``pg_stat_*_reset``); we optionally clamp negative
@@ -17,10 +22,12 @@ implicitly.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..specs import DatasourceSpec
+from ..specs import DatasourceSpec, ident
 
 
 def epoch_seconds(col: Column | str) -> Column:
@@ -42,81 +49,64 @@ def epoch_micros(col: Column | str) -> Column:
     return F.unix_micros(c.cast("timestamp"))
 
 
-def entity_window(spec: DatasourceSpec, order_cols: list[str] | None = None) -> Window:
-    """Per-entity time ordering: partition by (srvid, keys), order by ts."""
-    return Window.partitionBy("srvid", *spec.key_names).orderBy(
-        *(order_cols or ["ts"])
-    )
+_TS = "unix_timestamp(CAST(ts AS TIMESTAMP))"  # NTZ-safe epoch seconds
+_SEC = f"({_TS} - _prev._ts)"
 
 
-def _delta(cur: Column, prev: Column, clamp_resets: bool) -> Column:
-    d = cur - prev
-    if clamp_resets:
-        return F.when(d < 0, F.lit(None)).otherwise(d)
-    return d
+@functools.cache
+def _lagged(spec: DatasourceSpec) -> tuple[str, str]:
+    """Every input column plus ``_prev``, the entity's previous record."""
+    prev = ", ".join([f"{_TS} AS _ts", *(ident(c.name) for c in spec.agg_counters)])
+    keys = ", ".join(map(ident, ["srvid", *spec.key_names]))
+    return "*", (f"lag(struct({prev})) OVER (PARTITION BY {keys} ORDER BY ts)"
+                 " AS _prev")
 
 
-def diff_exprs(
-    spec: DatasourceSpec,
-    w: Window,
-    clamp_resets: bool = False,
-) -> list[Column]:
-    """Columns implementing ``<ds>_mi`` (powa--5.2.0.sql:1139-1173).
+def _delta(name: str, clamp_resets: bool) -> str:
+    d = f"({ident(name)} - _prev.{ident(name)})"
+    return f"CASE WHEN {d} < 0 THEN NULL ELSE {d} END" if clamp_resets else d
 
-    ``intvl`` = seconds between consecutive snapshots; one ``<f>`` delta per
-    aggregatable counter.  Rows with no predecessor get NULLs (the reference
-    simply has no output pair for them).
-    """
-    ts_s = F.unix_timestamp(F.col("ts").cast("timestamp"))  # NTZ-safe
-    out = [(ts_s - F.lag(ts_s).over(w)).cast("double").alias("intvl")]
+
+@functools.cache
+def _diffs(spec: DatasourceSpec, clamp_resets: bool) -> tuple[str, ...]:
+    """``<ds>_mi`` (powa--5.2.0.sql:1139-1173): ``intvl`` = seconds between
+    consecutive snapshots, one ``<f>`` delta per aggregatable counter.
+    Rows with no predecessor get NULLs (the reference simply has no
+    output pair for them)."""
+    return ("srvid", *map(ident, spec.key_names), "ts",
+            f"CAST({_SEC} AS DOUBLE) AS intvl",
+            *(f"{_delta(c.name, clamp_resets)} AS {ident(c.name)}"
+              for c in spec.agg_counters))
+
+
+@functools.cache
+def _rates(spec: DatasourceSpec, clamp_resets: bool) -> tuple[str, ...]:
+    """``<ds>_div`` (powa--5.2.0.sql:1176-1223): ``sec = extract(epoch from
+    a.ts - b.ts)``, clamped to >= 1 (reference clamps `CASE WHEN sec = 0
+    THEN 1`); per-sec fields are ``(a.f - b.f) / sec`` as double (numeric
+    stays decimal)."""
+    sec = f"CASE WHEN {_SEC} < 1 THEN 1 ELSE {_SEC} END"
+    out = ["srvid", *map(ident, spec.key_names), "ts",
+           f"CAST({_SEC} AS BIGINT) AS sec"]
     for c in spec.agg_counters:
-        out.append(
-            _delta(F.col(c.name), F.lag(c.name).over(w), clamp_resets)
-            .alias(c.name)
-        )
-    return out
-
-
-def rate_exprs(
-    spec: DatasourceSpec,
-    w: Window,
-    clamp_resets: bool = False,
-) -> list[Column]:
-    """Columns implementing ``<ds>_div`` (powa--5.2.0.sql:1176-1223).
-
-    ``sec = extract(epoch from a.ts - b.ts)``, clamped to >= 1 (reference
-    clamps `CASE WHEN sec = 0 THEN 1`); per-sec fields are
-    ``(a.f - b.f) / sec`` as double (numeric stays decimal).
-    """
-    ts_s = F.unix_timestamp(F.col("ts").cast("timestamp"))  # NTZ-safe
-    raw_sec = ts_s - F.lag(ts_s).over(w)
-    sec = F.when(raw_sec < 1, F.lit(1)).otherwise(raw_sec)
-    out = [raw_sec.cast("long").alias("sec")]
-    for c in spec.agg_counters:
-        d = _delta(F.col(c.name), F.lag(c.name).over(w), clamp_resets)
+        d = _delta(c.name, clamp_resets)
         if c.dtype == "numeric":
-            expr = (d / sec).cast("decimal(38,6)")
+            rate = f"CAST({d} / {sec} AS DECIMAL(38,6))"
         else:
-            expr = d.cast("double") / sec.cast("double")
-        out.append(expr.alias(c.per_sec_name))
-    return out
+            rate = f"CAST({d} AS DOUBLE) / CAST({sec} AS DOUBLE)"
+        out.append(f"{rate} AS {ident(c.per_sec_name)}")
+    return tuple(out)
 
 
 def with_diff(
     df: DataFrame, spec: DatasourceSpec, clamp_resets: bool = False
 ) -> DataFrame:
     """Entity series -> (srvid, keys, ts, intvl, deltas...)."""
-    w = entity_window(spec)
-    return df.select(
-        "srvid", *spec.key_names, "ts", *diff_exprs(spec, w, clamp_resets)
-    )
+    return df.selectExpr(*_lagged(spec)).selectExpr(*_diffs(spec, clamp_resets))
 
 
 def with_rate(
     df: DataFrame, spec: DatasourceSpec, clamp_resets: bool = False
 ) -> DataFrame:
     """Entity series -> (srvid, keys, ts, sec, per-sec rates...)."""
-    w = entity_window(spec)
-    return df.select(
-        "srvid", *spec.key_names, "ts", *rate_exprs(spec, w, clamp_resets)
-    )
+    return df.selectExpr(*_lagged(spec)).selectExpr(*_rates(spec, clamp_resets))

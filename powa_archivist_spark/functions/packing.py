@@ -22,46 +22,40 @@ Spark notes (SURVEY.md §4 watch-outs):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..specs import DatasourceSpec
+from ..specs import DatasourceSpec, ident
 
 
-def record_struct(spec: DatasourceSpec) -> Column:
-    """ts-first record struct (ts first => sort_array orders by ts)."""
-    return F.struct(F.col("ts"), *[F.col(c.name) for c in spec.counters])
+def _summary(fn: str, spec: DatasourceSpec) -> str:
+    fields = [f"{fn}(ts) AS ts", *(f"{fn}({ident(c.name)}) AS {ident(c.name)}"
+                                   for c in spec.minmax_counters)]
+    return f"struct({', '.join(fields)}) AS {fn}s_in_range"
+
+
+@functools.cache
+def _pack_text(spec: DatasourceSpec) -> tuple[str, ...]:
+    # ts-first record struct (ts first => sort_array orders by ts)
+    record = ", ".join(["ts", *(ident(c.name) for c in spec.counters)])
+    return (f"sort_array(collect_list(struct({record}))) AS records",
+            "min(ts) AS range_start", "max(ts) AS range_end",
+            _summary("min", spec), _summary("max", spec))
 
 
 def pack_exprs(spec: DatasourceSpec) -> list[Column]:
     """Aggregate expressions for the coalesce groupBy."""
-    return [
-        F.sort_array(F.collect_list(record_struct(spec))).alias("records"),
-        F.min("ts").alias("range_start"),
-        F.max("ts").alias("range_end"),
-        F.struct(
-            F.min("ts").alias("ts"),
-            *[F.min(c.name).alias(c.name) for c in spec.minmax_counters],
-        ).alias("mins_in_range"),
-        F.struct(
-            F.max("ts").alias("ts"),
-            *[F.max(c.name).alias(c.name) for c in spec.minmax_counters],
-        ).alias("maxs_in_range"),
-    ]
+    return [F.expr(e) for e in _pack_text(spec)]
 
 
 def pack(df: DataFrame, spec: DatasourceSpec) -> DataFrame:
     """current rows -> packed history rows (one per entity)."""
-    cols = ["srvid", *spec.key_names]
-    return df.groupBy(*cols).agg(*pack_exprs(spec)).select(
-        "srvid",
-        *spec.key_names,
-        "range_start",
-        "range_end",
-        "records",
-        "mins_in_range",
-        "maxs_in_range",
-    )
+    keys = ["srvid", *spec.key_names]
+    return df.groupBy(*keys).agg(*pack_exprs(spec)).selectExpr(
+        *map(ident, keys), "range_start", "range_end", "records",
+        "mins_in_range", "maxs_in_range")
 
 
 def range_overlap(ts_from: Column, ts_to: Column) -> Column:
@@ -85,9 +79,8 @@ def unpack(df: DataFrame, spec: DatasourceSpec,
     """
     if ts_from is not None and ts_to is not None:
         df = df.filter(range_overlap(ts_from, ts_to))
-    out = df.select(
-        "srvid", *spec.key_names, F.explode("records").alias("r")
-    ).select("srvid", *spec.key_names, "r.*")
+    keys = ["srvid", *map(ident, spec.key_names)]
+    out = df.selectExpr(*keys, "explode(records) AS r").selectExpr(*keys, "r.*")
     if ts_from is not None and ts_to is not None:
         out = out.filter((F.col("ts") >= ts_from) & (F.col("ts") <= ts_to))
     return out

@@ -15,13 +15,14 @@ plus the diff/rate derivation between consecutive records (§2.8).
 from __future__ import annotations
 
 import datetime as dt
+from dataclasses import replace
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.diff_rate import with_diff, with_rate
 from ..functions.packing import unpack
-from ..specs import DatasourceSpec
+from ..specs import DatasourceSpec, ident
 from ..storage import Warehouse
 
 
@@ -34,19 +35,16 @@ def stat_get_history(
 ) -> DataFrame:
     """current-slice UNION ALL unpacked-history-slice, flat rows."""
     lo, hi = F.lit(ts_from), F.lit(ts_to)
-    cols = ["srvid", *spec.key_names, "ts", *spec.counter_names]
-
+    # the current schema is already (srvid, keys, ts, counters)
     cur = (
         wh.read(Warehouse.current(spec.name), spec.current_schema)
-        .filter(F.col("srvid") == srvid)
-        .filter((F.col("ts") >= lo) & (F.col("ts") <= hi))
-        .select(*cols)
+        .where(f"srvid = {int(srvid)}")
+        .where((F.col("ts") >= lo) & (F.col("ts") <= hi))
     )
-    hist = wh.read(Warehouse.history(spec.name), spec.history_schema).filter(
-        F.col("srvid") == srvid
+    hist = wh.read(Warehouse.history(spec.name), spec.history_schema).where(
+        f"srvid = {int(srvid)}"
     )
-    unpacked = unpack(hist, spec, lo, hi).select(*cols)
-    return cur.unionByName(unpacked)
+    return cur.unionByName(unpack(hist, spec, lo, hi))
 
 
 def stat_get_rates(
@@ -60,9 +58,7 @@ def stat_get_rates(
     """Per-entity per-sec rates between consecutive snapshots — the `/`
     operator applied over the unpack-read (powa--5.2.0.sql:1176-1223)."""
     series = stat_get_history(wh, spec, srvid, ts_from, ts_to)
-    return with_rate(series, spec, clamp_resets=clamp_resets).filter(
-        F.col("sec").isNotNull()
-    )
+    return with_rate(series, spec, clamp_resets).where("sec IS NOT NULL")
 
 
 def stat_get_sample(
@@ -81,30 +77,19 @@ def stat_get_sample(
 
     One shuffle: ``row_number`` and the per-entity ``count`` share the
     same partition keys, so Catalyst evaluates both window frames over a
-    single exchange+sort; the rate ``lag`` then reuses that
-    partitioning.  At 100 TB the range filter prunes partitions before
+    single exchange+sort; the rate's one struct ``lag`` then reuses
+    that partitioning.  At 100 TB the range filter prunes partitions before
     the exchange and each entity's series is tiny — the shuffle is keyed
     on (srvid, entity), never on ts.
     """
-    from pyspark.sql import Window
-
     series = stat_get_history(wh, spec, srvid, ts_from, ts_to)
-    keys = ["srvid", *spec.key_names]
-    w_ord = Window.partitionBy(*keys).orderBy("ts")
-    w_all = Window.partitionBy(*keys)
-    sampled = (
-        series.withColumn("number", F.row_number().over(w_ord))
-        .withColumn("total", F.count(F.lit(1)).over(w_all))
-        .filter(
-            F.col("number")
-            % (F.floor(F.col("total") / F.lit(n_samples)) + F.lit(1))
-            == 0
-        )
-        .drop("number", "total")
-    )
-    return with_rate(sampled, spec, clamp_resets=clamp_resets).filter(
-        F.col("sec").isNotNull()
-    )
+    keys = ", ".join(map(ident, ["srvid", *spec.key_names]))
+    sampled = series.selectExpr(
+        "*",
+        f"row_number() OVER (PARTITION BY {keys} ORDER BY ts) AS _number",
+        f"count(1) OVER (PARTITION BY {keys}) AS _total",
+    ).where(f"_number % (floor(_total / {int(n_samples)}) + 1) = 0")
+    return with_rate(sampled, spec, clamp_resets).where("sec IS NOT NULL")
 
 
 def top_consumers(
@@ -132,29 +117,28 @@ def top_consumers(
     top-Ks).  Never a single-partition sort over unbounded input."""
     if metric not in spec.counter_names:
         raise KeyError(f"{metric!r} is not a counter of {spec.name}")
+    # read and diff only ``metric``: the one struct lag would otherwise
+    # carry every counter through the entity shuffle
+    spec = replace(spec, counters=tuple(
+        c for c in spec.counters if c.name == metric))
     series = stat_get_history(wh, spec, srvid, ts_from, ts_to)
-    diffed = with_diff(series, spec, clamp_resets=clamp_resets)
     consumed = (
-        diffed.filter(F.col("intvl").isNotNull())
+        with_diff(series, spec, clamp_resets).where("intvl IS NOT NULL")
         .groupBy("srvid", *spec.key_names)
-        .agg(
-            F.sum(metric).alias("consumed"),
-            F.count(F.lit(1)).alias("n_samples"),
-        )
+        .agg(F.expr(f"sum({ident(metric)}) AS consumed"),
+             F.expr("count(1) AS n_samples"))
     )
-    order = [F.desc("consumed"), *[F.asc(c) for c in spec.key_names]]
+    keys = ", ".join(map(ident, spec.key_names))
+    order = ", ".join(["consumed DESC",
+                       *(f"{ident(c)} ASC" for c in spec.key_names)])
     n_salt = 32
-    w_salt = Window.partitionBy("srvid", "_salt").orderBy(*order)
     pruned = (
-        consumed.withColumn(
-            "_salt", F.pmod(F.xxhash64(*spec.key_names), F.lit(n_salt))
-        )
-        .withColumn("_r", F.row_number().over(w_salt))
-        .filter(F.col("_r") <= k)
+        consumed.selectExpr("*", f"pmod(xxhash64({keys}), {n_salt}) AS _salt")
+        .selectExpr("*", "row_number() OVER "
+                    f"(PARTITION BY srvid, _salt ORDER BY {order}) AS _r")
+        .where(f"_r <= {int(k)}")
         .drop("_salt", "_r")
     )
-    w = Window.partitionBy("srvid").orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return pruned.selectExpr(
+        "*", f"row_number() OVER (PARTITION BY srvid ORDER BY {order}) AS `rank`"
+    ).where(f"`rank` <= {int(k)}")

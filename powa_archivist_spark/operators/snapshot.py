@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..specs import DatasourceSpec
+from ..specs import DatasourceSpec, cast_to, ident
 from ..storage import Warehouse
 
 
@@ -33,7 +33,8 @@ def db_rollup_agg(df: DataFrame, spec: DatasourceSpec) -> DataFrame:
     """SUM of every aggregatable counter GROUP BY (srvid, dbid, ts)
     (powa--5.2.0.sql:4070-4093).  Partial aggregation (map-side combine) is
     automatic for sum(); no extra shuffle beyond the one groupBy."""
-    sums = [F.sum(c.name).alias(c.name) for c in spec.agg_counters]
+    sums = [F.expr(f"sum({ident(c.name)}) AS {ident(c.name)}")
+            for c in spec.agg_counters]
     return df.groupBy("srvid", spec.dbid_col, "ts").agg(*sums)
 
 
@@ -114,13 +115,8 @@ def snapshot(
     # counters, NTZ timestamps) would otherwise append mixed-type
     # parquet files next to the spec-typed ones and break every later
     # read of the partition
-    cur_types = {f.name: f.dataType for f in spec.current_schema.fields}
-    capture = capture.select(
-        *[
-            F.col(name).cast(cur_types[name]).alias(name)
-            for name in ["srvid", *spec.key_names, "ts", *spec.counter_names]
-        ]
-    )
+    capture = capture.selectExpr(
+        *[cast_to(ident(f.name), f) for f in spec.current_schema.fields])
     if spec.requires_statements:
         from . import dictionary
 
@@ -136,10 +132,8 @@ def snapshot(
                 .filter(F.col("srvid") == srvid)
             )
             cap_a, ex_a = capture.alias("c"), existing.alias("e")
-            same_row = None
-            for cname in capture.columns:
-                eq = F.col(f"c.{cname}").eqNullSafe(F.col(f"e.{cname}"))
-                same_row = eq if same_row is None else (same_row & eq)
+            same_row = F.expr(" AND ".join(
+                f"c.{ident(n)} <=> e.{ident(n)}" for n in capture.columns))
             new_rows = cap_a.join(
                 F.broadcast(ex_a), same_row, "left_anti"
             ).cache()

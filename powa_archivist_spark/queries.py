@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from .specs import Counter, DatasourceSpec, Key
 from .functions.packing import pack, unpack
-from .functions.diff_rate import epoch_micros, epoch_seconds, rate_exprs
+from .functions.diff_rate import epoch_micros, epoch_seconds
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

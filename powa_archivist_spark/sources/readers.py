@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..specs import DatasourceSpec
+from ..specs import DatasourceSpec, cast_to, ident
 
 # powa--5.2.0.sql:3879 — utility statements excluded from capture
 UTILITY_RE = (
@@ -70,17 +70,20 @@ class SourceLayout:
             # context columns stamped by the collector, never versioned:
             # srvid/ts on module staging, dbid on catalog staging
             if f.name in ("srvid", "ts", "dbid") and f.name in present:
-                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
+                cols.append(cast_to(ident(f.name), f))
             elif (f.name in self.columns or f.name in self.renames) \
                     and src in present:
-                cols.append(F.col(src).cast(f.dataType).alias(f.name))
-            elif f.name in self.defaults:
-                cols.append(
-                    F.lit(self.defaults[f.name]).cast(f.dataType).alias(f.name)
-                )
+                cols.append(cast_to(ident(src), f))
             else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        return df.select(*cols)
+                cols.append(cast_to(_literal(self.defaults.get(f.name)), f))
+        return df.selectExpr(*cols)
+
+
+def _literal(v: object) -> str:
+    """SQL text of a layout default: bool, int, str or None."""
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return "NULL" if v is None else str(v).upper()
 
 
 @dataclass
@@ -109,27 +112,23 @@ def resolve_versioned(src: VersionedSource, server_version: int) -> object:
     return max(eligible, key=lambda v: v.min_version).payload
 
 
-def _default_for(dtype: T.DataType):
+def _default_for(dtype: T.DataType) -> str:
     """Typed shim default: numeric counters read as 0, everything else
     NULL (matches the reference's per-branch shims, e.g.
     ``0::bigint AS jit_functions`` / ``NULL::pg_lsn``)."""
     if isinstance(dtype, (T.LongType, T.IntegerType, T.DoubleType,
                           T.FloatType, T.DecimalType, T.ShortType)):
-        return F.lit(0).cast(dtype)
-    return F.lit(None).cast(dtype)
+        return "0"
+    return "NULL"
 
 
 def shim_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Project ``df`` onto ``schema``: cast matching columns, pad missing
     ones with typed defaults, drop extras."""
-    present = {f.name: f.dataType for f in df.schema.fields}
-    cols = []
-    for f in schema.fields:
-        if f.name in present:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        else:
-            cols.append(_default_for(f.dataType).alias(f.name))
-    return df.select(*cols)
+    present = set(df.columns)
+    return df.selectExpr(*[
+        cast_to(ident(f.name) if f.name in present else _default_for(f.dataType), f)
+        for f in schema.fields])
 
 
 def statements_filters(
@@ -172,9 +171,8 @@ def read_staging(
             # on pg15-, powa--5.2.0.sql:4897-4918)
             return wh.spark.createDataFrame([], spec.staging_schema)
         if isinstance(payload, SourceLayout):
-            return payload.project(df, spec.staging_schema).filter(
-                F.col("srvid") == srvid
-            )
+            return payload.project(df, spec.staging_schema).where(
+                f"srvid = {int(srvid)}")
         if isinstance(payload, dict):
             # a rename map names only the versioned columns; the
             # collector context columns (srvid/ts, dbid for catalog
@@ -187,14 +185,8 @@ def read_staging(
                 if c in present and c not in mapped_srcs
                 and c not in payload
             ]
-            df = df.select(
-                *context,
-                *[
-                    F.col(src).alias(dst)
-                    for dst, src in payload.items()
-                    if src in present
-                ],
-            )
-    return shim_to_schema(df, spec.staging_schema).filter(
-        F.col("srvid") == srvid
-    )
+            df = df.selectExpr(*map(ident, context), *[
+                f"{ident(src)} AS {ident(dst)}"
+                for dst, src in payload.items() if src in present])
+    return shim_to_schema(df, spec.staging_schema).where(
+        f"srvid = {int(srvid)}")

@@ -215,6 +215,18 @@ class DatasourceSpec:
         return [c.name for c in self.counters]
 
 
+# Spec-wide expressions are built as SQL text, one string per column, and
+# cross into the JVM in one selectExpr instead of ~10 calls per Column.
+def ident(name: str) -> str:
+    """``name`` as a quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def cast_to(expr: str, field: T.StructField) -> str:
+    """SQL text of ``expr`` cast to ``field``'s type, named ``field``."""
+    return f"CAST({expr} AS {field.dataType.simpleString()}) AS {ident(field.name)}"
+
+
 def _c(names: str, dtype: str = "bigint") -> list[Counter]:
     return [Counter(n, dtype) for n in names.split()]
 

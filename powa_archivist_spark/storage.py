@@ -32,6 +32,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .specs import ident
+
 #: per-(root, table) write locks.  Concurrent Spark jobs appending to the
 #: SAME path share <path>/_temporary under FileOutputCommitter — the
 #: first job's commit cleanup deletes the other's in-flight task files,
@@ -152,7 +154,7 @@ class Warehouse:
             return (
                 self.spark.read.schema(reader_schema)
                 .parquet(self.path(table))
-                .select(*[f.name for f in schema.fields])
+                .selectExpr(*[ident(f.name) for f in schema.fields])
             )
         return self.spark.read.parquet(self.path(table))
 

@@ -164,6 +164,91 @@ def test_stat_get_sample_single_window_shuffle(spark, wh):
     assert pi.exchange_count(df) == 1
 
 
+def _statements_warehouse(spark, wh):
+    """5 statements entities x 12 snapshots: the first 8 packed into
+    history, the last 4 in current, so every read takes both paths."""
+    import decimal
+
+    from pyspark.sql import types as T
+
+    from powa_archivist_spark.specs import get_spec
+
+    spec = get_spec("statements")
+    keys = set(spec.key_names)
+    base = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
+
+    def val(f, e, i):
+        if f.name == "srvid":
+            return 1
+        if f.name == "ts":
+            return base + dt.timedelta(minutes=5 * i)
+        n = e if f.name in keys else 7 * i + e
+        t = f.dataType
+        if isinstance(t, T.BooleanType):
+            return n % 2 == 0
+        if isinstance(t, T.DecimalType):
+            return decimal.Decimal(n)
+        return float(n) if isinstance(t, T.DoubleType) else n
+
+    df = spark.createDataFrame(
+        [tuple(val(f, e, i) for f in spec.current_schema.fields)
+         for e in range(5) for i in range(12)],
+        spec.current_schema,
+    )
+    cut = base + dt.timedelta(minutes=40)
+    wh.append(df.filter(F.col("ts") >= cut), Warehouse.current(spec.name),
+              partition_by=["srvid"])
+    wh.append(pack(df.filter(F.col("ts") < cut), spec),
+              Warehouse.history(spec.name), partition_by=["srvid"])
+    return spec, base, base + dt.timedelta(days=1)
+
+
+def _read_frames(wh, spec, lo, hi):
+    from powa_archivist_spark.operators import read as R
+
+    return {
+        "stat_get_sample": lambda: R.stat_get_sample(wh, spec, 1, lo, hi),
+        "stat_get_rates": lambda: R.stat_get_rates(wh, spec, 1, lo, hi),
+        "top_consumers": lambda: R.top_consumers(wh, spec, 1, lo, hi, "calls"),
+    }
+
+
+def test_read_operators_keep_their_exchange_counts(spark, wh):
+    """operators.read.stat_get_sample: row_number, count and the one
+    struct lag share the (srvid, keys) partitioning, so the read plans
+    exactly one exchange; top_consumers keeps its three (entity window,
+    salted top-K, per-srvid rank)."""
+    frames = _read_frames(wh, *_statements_warehouse(spark, wh))
+    assert pi.exchange_count(frames["stat_get_sample"]()) == 1
+    assert pi.exchange_count(frames["top_consumers"]()) == 3
+
+
+def test_read_frames_build_in_few_jvm_calls(spark, wh, monkeypatch):
+    """Building a read frame over the 34-counter statements spec crosses
+    into the JVM a few hundred times at most: one struct lag and
+    spec-wide SQL text, not ~10 calls per counter Column (the per-Column
+    builders took 2628 calls for stat_get_sample)."""
+    from py4j import java_gateway
+
+    frames = _read_frames(wh, *_statements_warehouse(spark, wh))
+    for build in frames.values():
+        build()  # first builds may resolve JVM classes once
+    calls = [0]
+    real_call = java_gateway.JavaMember.__call__
+
+    def counting(self, *args):
+        calls[0] += 1
+        return real_call(self, *args)
+
+    monkeypatch.setattr(java_gateway.JavaMember, "__call__", counting)
+    used = {}
+    for name, build in frames.items():
+        calls[0] = 0
+        build()
+        used[name] = calls[0]
+    assert all(n <= 300 for n in used.values()), used
+
+
 def test_constvalues_pack_shares_one_ranking_shuffle(spark, wh):
     """The six constvalues rankings all partition on the same qual key:
     the window stage adds exactly ONE exchange over the pre-agg (plus

@@ -8,18 +8,20 @@ max_examples is kept small — every example runs real Spark jobs.
 from __future__ import annotations
 
 import datetime as dt
+import decimal
 from itertools import combinations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from powa_archivist_spark.functions.diff_rate import with_rate
+from powa_archivist_spark.functions.diff_rate import with_diff, with_rate
 from powa_archivist_spark.functions.packing import pack, unpack
 from powa_archivist_spark.pipeline import dedup
 from powa_archivist_spark.queries import EVENTS_SPEC
+from powa_archivist_spark.specs import Counter, DatasourceSpec, Key
 
 BASE = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
 
@@ -106,6 +108,96 @@ def test_rate_matches_manual(spark, rows):
     for k, (sec, rate) in want.items():
         assert got[k][0] == sec
         assert got[k][1] == pytest.approx(rate, abs=1e-12)
+
+
+# one counter of each rate shape: numeric stays decimal, the rest double
+MIXED_SPEC = DatasourceSpec(
+    name="mixed",
+    keys=(Key("k", "bigint"),),
+    counters=(Counter("n", "numeric"), Counter("d", "double"),
+              Counter("c", "bigint")),
+)
+
+_count = st.one_of(st.none(), st.integers(min_value=0, max_value=10**6))
+
+mixed_strategy = st.lists(
+    st.tuples(
+        st.integers(min_value=1, max_value=2),       # k (entity)
+        st.integers(min_value=0, max_value=20_000),  # ts offset, ms
+        _count,                                      # n: numeric
+        st.one_of(st.none(), st.floats(min_value=0, max_value=1e6)),  # d
+        _count,                                      # c: bigint
+    ),
+    min_size=1,
+    max_size=20,
+    unique_by=lambda r: (r[0], r[1]),
+)
+
+# resets on n and d, a null on each counter, and two samples 400 ms apart
+# (same epoch second: sec is 0 and the rate divides by the clamped 1)
+MIXED_EXAMPLE = [
+    (1, 0, 100, 1.5, 10), (1, 400, 50, 0.5, None), (1, 5_000, 80, None, 30),
+    (1, 65_000, 200, 4.0, 35), (2, 1_000, None, 2.0, 7), (2, 3_000, 5, 1.0, 9),
+]
+
+
+def _mixed_want(rows, clamp_resets):
+    """Hand-computed ``-`` and ``/`` of consecutive samples per entity,
+    keyed by (k, ts): (intvl, deltas...) and (sec, rates...)."""
+    diff, rate = {}, {}
+    for k in {r[0] for r in rows}:
+        ent = sorted((r for r in rows if r[0] == k), key=lambda r: r[1])
+        for a, b in zip(ent, ent[1:]):
+            raw = b[1] // 1000 - a[1] // 1000  # unix_timestamp: whole secs
+            sec = max(raw, 1)
+            deltas = []
+            for x, y in zip(a[2:], b[2:]):
+                d = None if x is None or y is None else y - x
+                deltas.append(None if clamp_resets and d is not None and d < 0
+                              else d)
+            dn, dd, dc = deltas
+            ts = (BASE + dt.timedelta(milliseconds=b[1])).replace(tzinfo=None)
+            diff[(k, ts)] = (float(raw), dn, dd, dc)
+            rate[(k, ts)] = (
+                raw,
+                None if dn is None else (decimal.Decimal(dn) / sec).quantize(
+                    decimal.Decimal("0.000001"), decimal.ROUND_HALF_UP),
+                None if dd is None else dd / sec,
+                None if dc is None else dc / sec,
+            )
+    return diff, rate
+
+
+def _approx(vals):
+    return tuple(v if v is None else pytest.approx(v, rel=1e-12) for v in vals)
+
+
+@given(rows=mixed_strategy)
+@example(rows=MIXED_EXAMPLE)
+@SLOW
+def test_diff_and_rate_match_manual(spark, rows):
+    df = spark.createDataFrame(
+        [(0, k, BASE + dt.timedelta(milliseconds=ms),
+          None if n is None else decimal.Decimal(n), d, c)
+         for k, ms, n, d, c in rows],
+        "srvid int, k long, ts timestamp, n decimal(38,0), d double, c long",
+    )
+    for clamp in (False, True):
+        want_diff, want_rate = _mixed_want(rows, clamp)
+        diffed = with_diff(df, MIXED_SPEC, clamp).filter("intvl IS NOT NULL")
+        rated = with_rate(df, MIXED_SPEC, clamp).filter("sec IS NOT NULL")
+        assert [f.dataType.simpleString() for f in diffed.schema.fields] == [
+            "int", "bigint", "timestamp", "double", "decimal(38,0)",
+            "double", "bigint"]
+        assert [f.dataType.simpleString() for f in rated.schema.fields] == [
+            "int", "bigint", "timestamp", "bigint", "decimal(38,6)",
+            "double", "double"]
+        got_diff = {(r.k, r.ts): (r.intvl, r.n, r.d, r.c)
+                    for r in diffed.collect()}
+        got_rate = {(r.k, r.ts): (r.sec, r.n_per_sec, r.d_per_sec,
+                                  r.c_per_sec) for r in rated.collect()}
+        assert got_diff == {k: _approx(v) for k, v in want_diff.items()}
+        assert got_rate == {k: _approx(v) for k, v in want_rate.items()}
 
 
 doc_strategy = st.lists(

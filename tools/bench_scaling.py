@@ -8,8 +8,10 @@ alpha ~ 1.0 is linear (ideal for scan/agg/join work), < 1 means fixed
 overhead still dominates at sf0.1, > ~1.15 is a red flag (super-linear
 — the shape that breaks at 100 TB) and gets a PERF.md root-cause.
 
-Writes BENCH_SCALING.json (committed artifact); bench.py folds it into
-BENCH_FULL.json under "scaling" so the driver's artifact carries it.
+An unlabelled run merges its entries into BENCH_SCALING.json (committed
+artifact) and stamps it with the run's own scale factors; bench.py folds
+it into BENCH_FULL.json under "scaling".  A ``--label`` run only prints
+its record and leaves the artifact alone.
 
 Usage: python tools/bench_scaling.py [query ...]
 Env:   SPARK_GRAFT_SF1_DIR (default <repo>/.scaled/sf1)
@@ -213,6 +215,7 @@ def main() -> int:
     # arbitrary derived SF (r7 task 7: sf1 -> sf3 second-decade check)
     big_dir = None
     big_sf = 1.0
+    base_sf = 0.1
     label = None
     base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     while args and args[0].startswith("--"):
@@ -224,17 +227,12 @@ def main() -> int:
         elif flag == "--base-dir":
             base_dir = args.pop(0)
         elif flag == "--base-sf":
-            pass_base_sf = args.pop(0)  # recorded below via label
-            base_sf = float(pass_base_sf)
+            base_sf = float(args.pop(0))
         elif flag == "--label":
             label = args.pop(0)
         else:
             print(f"unknown flag {flag}", file=sys.stderr)
             return 2
-    try:
-        base_sf
-    except NameError:
-        base_sf = 0.1
     only = args or DEFAULT_QUERIES
     sf1_dir = big_dir or os.environ.get(
         "SPARK_GRAFT_SF1_DIR", str(REPO / ".scaled" / "sf1")
@@ -305,20 +303,20 @@ def main() -> int:
             file=sys.stderr, flush=True,
         )
 
-    path = REPO / "BENCH_SCALING.json"
-    prior = {}
-    if path.exists():
-        with open(path) as f:
-            prior = json.load(f).get("queries", {})
     rec = {
         "protocol": "n=1 warmed, alpha=log(t_big/t_base)/log(rows_factor)",
-        "sf_base": 0.1,
-        "sf_big": 1.0,
-        "rows_factor": 10,
-        "queries": {**prior, **out},
+        "sf_base": base_sf,
+        "sf_big": big_sf,
+        "rows_factor": rows_factor,
+        "queries": out,
     }
-    with open(path, "w") as f:
-        json.dump(rec, f, indent=1)
+    if label is None:
+        path = REPO / "BENCH_SCALING.json"
+        if path.exists():
+            with open(path) as f:
+                rec["queries"] = {**json.load(f).get("queries", {}), **out}
+        with open(path, "w") as f:
+            json.dump(rec, f, indent=1)
     print(json.dumps(rec))
     return 0
 

@@ -43,6 +43,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import local_frame
 from .storage import Warehouse
 
 POWA_ROLES = (
@@ -336,6 +337,5 @@ def grants_df(
         for t in tables
         for r in POWA_ROLES
     ]
-    return spark.createDataFrame(
-        rows, "table string, role string, privileges array<string>"
-    )
+    return local_frame(spark, rows,
+                       "table string, role string, privileges array<string>")

@@ -114,9 +114,10 @@ def top_consumers(
     than entities/n_salt rows; only the salt-local top-K survive, so the
     final per-srvid rank window sees at most k*n_salt rows regardless of
     entity cardinality (global top-K is a subset of the union of per-salt
-    top-Ks).  Never a single-partition sort over unbounded input."""
-    if metric not in spec.counter_names:
-        raise KeyError(f"{metric!r} is not a counter of {spec.name}")
+    top-Ks).  Never a single-partition sort over unbounded input.  A
+    keyless datasource has one entity per srvid: no salt phase."""
+    if metric not in {c.name for c in spec.agg_counters}:
+        raise KeyError(f"{metric!r}: no aggregatable counter of {spec.name}")
     # read and diff only ``metric``: the one struct lag would otherwise
     # carry every counter through the entity shuffle
     spec = replace(spec, counters=tuple(
@@ -132,7 +133,7 @@ def top_consumers(
     order = ", ".join(["consumed DESC",
                        *(f"{ident(c)} ASC" for c in spec.key_names)])
     n_salt = 32
-    pruned = (
+    pruned = consumed if not keys else (
         consumed.selectExpr("*", f"pmod(xxhash64({keys}), {n_salt}) AS _salt")
         .selectExpr("*", "row_number() OVER "
                     f"(PARTITION BY srvid, _salt ORDER BY {order}) AS _r")

@@ -39,7 +39,7 @@ from .operators import databases, dictionary
 from .operators.aggregate import aggregate
 from .operators.purge import DEFAULT_RETENTION, purge, reset
 from .operators.snapshot import snapshot
-from .session import adopt, concurrently
+from .session import adopt, concurrently, local_frame
 from .specs import ALL_SPECS, DatasourceSpec
 from .storage import Warehouse
 from .txn import StagedPass, TxnLog
@@ -133,7 +133,7 @@ class Orchestrator:
                     continue
                 m = self.read_metas(int(fname.split("=")[1].split(".")[0]))
                 rows.append(tuple(m[f.name] for f in schema.fields))
-        return self._caller.spark.createDataFrame(rows, schema)
+        return local_frame(self._caller.spark, rows, schema)
 
     def _write_metas(self, meta: dict) -> None:
         out = dict(meta)

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .dedup import cross_engine_hash64, exact_dedup, near_dup_keep
 from .spread import spread
 
@@ -685,9 +686,7 @@ def mixture_sample(
         raise ValueError("mixture rates must be >= 0")
     spark = docs.sparkSession
     rate_rows = [(s, float(r)) for s, r in rates.items()]
-    dim = spark.createDataFrame(
-        rate_rows, f"{source_col} string, _rate double"
-    )
+    dim = local_frame(spark, rate_rows, f"{source_col} string, _rate double")
     with_rate = docs.join(F.broadcast(dim), source_col, "left").withColumn(
         "_rate", F.coalesce("_rate", F.lit(float(default_rate)))
     )
@@ -1116,9 +1115,8 @@ def bpe_merges(docs: DataFrame, n_merges: int = 6,
             F.replace(F.col("s"), F.lit(old), F.lit(new)).alias("s"),
         )
 
-    return spark.createDataFrame(
-        merges, "rank long, left string, right string, pair_count long"
-    )
+    return local_frame(
+        spark, merges, "rank long, left string, right string, pair_count long")
 
 
 def bpe_apply(docs: DataFrame, n_merges: int = 6,

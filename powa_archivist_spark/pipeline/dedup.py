@@ -24,6 +24,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # scan-parallelism floor before the shingle/gram explode stages (r13,
 # guide §2.5/§6): a one-row-group corpus is ONE split, so without it
 # the tokenize/shingle/minhash map work runs on a single core; no-op
@@ -1445,10 +1447,9 @@ def connected_components(
     n_cedges = cedges.limit(driver_cap + 1).count()
     if n_cedges <= driver_cap:
         lab = min_label_union_find(cedges.collect())
-        labels = pairs.sparkSession.createDataFrame(
-            [(int(n), int(v)) for n, v in sorted(lab.items())],
-            "node long, label long",
-        )
+        labels = local_frame(pairs.sparkSession, [
+            (int(n), int(v)) for n, v in sorted(lab.items())],
+            "node long, label long")
         return _cc_expand(labels, sup, nodes, id_col)
 
     labels = (

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 # (r13) so the text stack shares one implementation with the ANN
 # scoring fan-out (here the amplification is the 63x broadcast-codebook
 # row blowup; there it is the gram/shingle explode)
-from ..session import adopt
+from ..session import adopt, local_frame
 from .spread import spread as _spread
 
 QUANT = 1_000_000  # 1e6 quantization: 64-dim unit vectors -> dot < 6.5e13
@@ -155,10 +155,9 @@ def _centers_1row(spark, centers: list[tuple[int, list[int]]]) -> DataFrame:
     driver-side compile time exceeded the shuffle it saved, measured
     27 s -> 70 s on emb_kmeans).  Broadcasting one row is the cheapest
     exchange Spark has."""
-    return spark.createDataFrame(
-        [([(int(cid), [int(x) for x in cv]) for cid, cv in centers],)],
-        "cents array<struct<cluster:bigint,cv:array<bigint>>>",
-    )
+    return local_frame(spark, [([(int(cid), [int(x) for x in cv])
+                                 for cid, cv in centers],)],
+                       "cents array<struct<cluster:bigint,cv:array<bigint>>>")
 
 
 def _best_center(vcol, k: int):
@@ -2070,7 +2069,7 @@ class IvfIndex:
             partition_by=["cell_id"],
         )
         sp.stage_replace_flat(
-            wh.spark.createDataFrame([], delta.schema), delta_t
+            local_frame(wh.spark, [], delta.schema), delta_t
         )
         sp.publish()
         return True

@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # scan-parallelism floor before CPU-heavy tokenize/gram-explode stages
 # (r13, guide §2.5/§6): a one-row-group corpus is ONE split, so without
 # it the whole quality stack runs its map work on a single core;
@@ -1455,9 +1457,7 @@ def _bm25_workload(term: DataFrame, n_queries: int,
             for j in range(terms_per_query)
             if q + j * stride < len(top_toks)
         ]
-    return term.sparkSession.createDataFrame(
-        rows, "query_id long, tok string"
-    )
+    return local_frame(term.sparkSession, rows, "query_id long, tok string")
 
 
 def _impact_fp(k1: float, b: float) -> Column:

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from .specs import Counter, DatasourceSpec, Key
 from .functions.packing import pack, unpack
 from .functions.diff_rate import epoch_micros, epoch_seconds
+from .session import local_frame
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1511,15 +1512,14 @@ def wait_sampling_snapshot_resolved(spark: SparkSession, sf_dir: str) -> DataFra
     t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     databases_snapshot(
         wh, 1,
-        spark.createDataFrame(
-            [(0, "db0"), (1, "db1"), (2, "db2")], "oid long, datname string"
-        ),
+        local_frame(spark, [(0, "db0"), (1, "db1"), (2, "db2")],
+                    "oid long, datname string"),
         now=t0,
     )
     databases_snapshot(  # db2 disappears -> soft-deleted (dropped)
         wh, 1,
-        spark.createDataFrame([(0, "db0"), (1, "db1")],
-                              "oid long, datname string"),
+        local_frame(spark, [(0, "db0"), (1, "db1")],
+                    "oid long, datname string"),
         now=t0 + dt.timedelta(hours=1),
     )
     ev = t(spark, sf_dir, "events")

@@ -7,6 +7,7 @@ import threading
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 #: the engine-pass posture, fixed once per engine session (see
 #: engine_session); shuffle partitions are added at build time
@@ -67,6 +68,21 @@ def adopt(spark: SparkSession, df: DataFrame) -> DataFrame:
     jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
         spark._jsparkSession, df._jdf.logicalPlan())
     return DataFrame(jdf, spark)
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-side ``rows`` as a JVM ``LocalRelation`` of ``schema``
+    (StructType or DDL) via Arrow: empty prunes at plan time, and no task
+    runs a Python worker (a row-list ``createDataFrame`` is a PythonRDD)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*map(schema.toInternal, rows))) or [()] * len(arrow)
+    arrays = [pa.array(c, f.type) for c, f in zip(cols, arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
 
 
 def observe_rows(df: DataFrame):
@@ -178,6 +194,8 @@ def get_spark(app_name: str = "powa_archivist_spark",
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # no call-site capture (a stack walk + py4j calls) per Column call
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory())

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from ..specs import DatasourceSpec, cast_to, ident
 
 # powa--5.2.0.sql:3879 — utility statements excluded from capture
@@ -169,7 +170,7 @@ def read_staging(
             # server older than every layout epoch: the reference returns
             # an empty dataset (``WHERE false`` branches, e.g. pg_stat_io
             # on pg15-, powa--5.2.0.sql:4897-4918)
-            return wh.spark.createDataFrame([], spec.staging_schema)
+            return local_frame(wh.spark, [], spec.staging_schema)
         if isinstance(payload, SourceLayout):
             return payload.project(df, spec.staging_schema).where(
                 f"srvid = {int(srvid)}")

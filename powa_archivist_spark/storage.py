@@ -32,6 +32,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .session import engine_session, local_frame
 from .specs import ident
 
 #: per-(root, table) write locks.  Concurrent Spark jobs appending to the
@@ -76,8 +77,6 @@ class Warehouse:
         (:func:`~.session.engine_session`): same root and write locks,
         engine-pass posture.  Snapshot, coalesce, purge and fold passes
         run on it; reads stay on the caller's session."""
-        from .session import engine_session
-
         eng = engine_session(self.spark)
         if eng is self.spark:
             return self
@@ -123,7 +122,7 @@ class Warehouse:
     # ---- IO --------------------------------------------------------------
 
     def read(self, table: str, schema: Optional[T.StructType] = None) -> DataFrame:
-        """Read a table; empty DataFrame with the right schema if absent.
+        """Read a table; absent, it is a plan-time-empty ``LocalRelation``.
 
         Holds the table write lock across manifest-heal + Spark's eager
         file listing (``spark.read.parquet`` builds its file index at
@@ -137,7 +136,7 @@ class Warehouse:
         if not self.exists(table):
             if schema is None:
                 raise FileNotFoundError(f"table {table} missing and no schema given")
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         if schema is not None:
             # give the READER the schema (null-normalized: parquet reads
             # are always nullable and a NOT NULL nested field is invalid

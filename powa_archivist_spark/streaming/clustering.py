@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from ..pipeline.similarity import assign_to_centers, kmeans, quantized
 from ..pipeline.spread import spread, write_coalesce
+from ..session import local_frame
 from ..storage import Warehouse
 from .fold import fold, replace
 
@@ -133,15 +134,13 @@ def process_kmeans_batch(
                 max_rounds=max_rounds, id_col="vec_id", vec_col="v",
                 stats_out=st, pre_quantized=True,
             )
-            # k driver-local rows, created as ONE slice (r13): a plain
-            # createDataFrame is a defaultParallelism-slice
-            # LocalTableScan, which writes k files + empty tasks
-            centers = wh.spark.createDataFrame(
-                wh.spark.sparkContext.parallelize(
-                    [(i, c, int(epoch_id))
-                     for i, c in enumerate(st["centers"])], 1),
+            # k driver-local rows in ONE file: a local frame scans in
+            # up to defaultParallelism slices
+            centers = local_frame(
+                wh.spark,
+                [(i, c, int(epoch_id)) for i, c in enumerate(st["centers"])],
                 "cluster long, cv array<bigint>, trained_epoch long",
-            )
+            ).coalesce(1)
             writes[centers_table] = replace(centers)
             # the corpus-sized refresh REPLACE stays uncoalesced — its
             # parallelism must scale with the at-rest table

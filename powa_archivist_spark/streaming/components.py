@@ -71,6 +71,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..pipeline.spread import spread, write_coalesce
+from ..session import local_frame
 from ..storage import Warehouse
 from .dedup import NearDupLedger, kept_ledger, ledger_rows, verified_pairs
 from .fold import fold, replace, stream_fold
@@ -306,13 +307,9 @@ def process_components_batch(
             delta_rows = sorted(
                 (int(n), int(v)) for n, v in lab.items() if n != v
             )
-            # one slice (r13): the plain form is a 32-slice
-            # LocalTableScan whose non-broadcast uses below each pay
-            # empty tasks
-            delta_map = wh.spark.createDataFrame(
-                wh.spark.sparkContext.parallelize(delta_rows, 1),
-                _REMAP_SCHEMA,
-            )
+            # one slice: the remap rows it adds below land in one file
+            delta_map = local_frame(wh.spark, delta_rows,
+                                    _REMAP_SCHEMA).coalesce(1)
             delta_empty = not delta_rows
         else:
             cedges = cedges.select(
@@ -369,7 +366,7 @@ def process_components_batch(
             if old_remap_view is not None:
                 old_remap = old_remap_view
             else:
-                old_remap = wh.spark.createDataFrame([], _REMAP_SCHEMA)
+                old_remap = local_frame(wh.spark, [], _REMAP_SCHEMA)
             jumped = (
                 old_remap.join(
                     F.broadcast(delta_map.select(

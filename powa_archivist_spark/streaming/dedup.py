@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..pipeline.dedup import normalized_text
 from ..pipeline.spread import spread, write_coalesce
+from ..session import local_frame
 from ..storage import Warehouse
 from .fold import fold, stream_fold
 
@@ -122,7 +123,7 @@ class BucketedDigestLedger:
             from ..layout import write_bucketed
 
             write_bucketed(
-                self.spark.createDataFrame([], "text_hash string"),
+                local_frame(self.spark, [], "text_hash string"),
                 self.table, ["text_hash"], self.n_buckets,
             )
 

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from powa_archivist_spark.functions.packing import pack, unpack
@@ -164,16 +166,14 @@ def test_stat_get_sample_single_window_shuffle(spark, wh):
     assert pi.exchange_count(df) == 1
 
 
-def _statements_warehouse(spark, wh):
-    """5 statements entities x 12 snapshots: the first 8 packed into
-    history, the last 4 in current, so every read takes both paths."""
+def _spec_warehouse(spark, wh, spec):
+    """5 entities (1 for a keyless spec) x 12 snapshots on srvid 1: the
+    first 8 packed into history, the last 4 in current, so every read
+    takes both paths."""
     import decimal
 
     from pyspark.sql import types as T
 
-    from powa_archivist_spark.specs import get_spec
-
-    spec = get_spec("statements")
     keys = set(spec.key_names)
     base = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
 
@@ -188,11 +188,15 @@ def _statements_warehouse(spark, wh):
             return n % 2 == 0
         if isinstance(t, T.DecimalType):
             return decimal.Decimal(n)
+        if isinstance(t, T.StringType):
+            return f"v{n}"
+        if isinstance(t, T.TimestampType):
+            return base + dt.timedelta(seconds=n)
         return float(n) if isinstance(t, T.DoubleType) else n
 
     df = spark.createDataFrame(
         [tuple(val(f, e, i) for f in spec.current_schema.fields)
-         for e in range(5) for i in range(12)],
+         for e in range(5 if keys else 1) for i in range(12)],
         spec.current_schema,
     )
     cut = base + dt.timedelta(minutes=40)
@@ -203,13 +207,19 @@ def _statements_warehouse(spark, wh):
     return spec, base, base + dt.timedelta(days=1)
 
 
-def _read_frames(wh, spec, lo, hi):
+def _statements_warehouse(spark, wh):
+    from powa_archivist_spark.specs import get_spec
+
+    return _spec_warehouse(spark, wh, get_spec("statements"))
+
+
+def _read_frames(wh, spec, lo, hi, metric="calls"):
     from powa_archivist_spark.operators import read as R
 
     return {
         "stat_get_sample": lambda: R.stat_get_sample(wh, spec, 1, lo, hi),
         "stat_get_rates": lambda: R.stat_get_rates(wh, spec, 1, lo, hi),
-        "top_consumers": lambda: R.top_consumers(wh, spec, 1, lo, hi, "calls"),
+        "top_consumers": lambda: R.top_consumers(wh, spec, 1, lo, hi, metric),
     }
 
 
@@ -247,6 +257,115 @@ def test_read_frames_build_in_few_jvm_calls(spark, wh, monkeypatch):
         build()
         used[name] = calls[0]
     assert all(n <= 300 for n in used.values()), used
+
+
+def test_every_read_operator_runs_on_every_spec(spark, wh):
+    """Every read operator builds and collects for every datasource over
+    a small warehouse, keyless ones included: their one entity per srvid
+    needs no salted top-K phase."""
+    from powa_archivist_spark.operators import read as R
+    from powa_archivist_spark.specs import ALL_SPECS
+
+    for spec in ALL_SPECS.values():
+        spec, lo, hi = _spec_warehouse(spark, wh, spec)
+        n = 5 if spec.key_names else 1
+        frames = _read_frames(wh, spec, lo, hi, spec.agg_counters[0].name)
+        frames["stat_get_history"] = \
+            lambda: R.stat_get_history(wh, spec, 1, lo, hi)
+        got = {name: len(build().collect()) for name, build in frames.items()}
+        assert got == {"stat_get_history": 12 * n, "stat_get_rates": 11 * n,
+                       "stat_get_sample": 11 * n, "top_consumers": n}, \
+            (spec.name, got)
+
+
+def test_top_consumers_refuses_a_non_aggregatable_metric(wh):
+    """Only an aggregatable counter has a consumption to rank: a text,
+    timestamp or lsn field, or no counter at all, is a KeyError before
+    anything plans."""
+    from powa_archivist_spark.operators import read as R
+    from powa_archivist_spark.specs import ALL_SPECS
+
+    lo = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
+    for spec, metric in [(ALL_SPECS["pg_stat_archiver"], "last_archived_time"),
+                         (ALL_SPECS["pg_stat_activity"], "application_name"),
+                         (ALL_SPECS["statements"], "no_such_counter")]:
+        with pytest.raises(KeyError):
+            R.top_consumers(wh, spec, 1, lo, lo, metric)
+
+
+def _runs_python(df) -> bool:
+    return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_engine_frames_run_no_python_worker(spark, wh):
+    """Absent tables and driver-built rows plan as JVM local relations:
+    no frame on the engine's read and capture paths puts a Python worker
+    (a PythonRDD) in its lineage."""
+    from powa_archivist_spark.acl import grants_df
+    from powa_archivist_spark.operators import read as R
+    from powa_archivist_spark.orchestrator import Orchestrator
+    from powa_archivist_spark.sources.readers import read_staging
+    from powa_archivist_spark.sources.versions import MODULE_SOURCES
+    from powa_archivist_spark.specs import ALL_SPECS, MODULE_SPECS
+
+    spec, io = ALL_SPECS["statements"], MODULE_SPECS["pg_stat_io"]
+    lo = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
+    hi = lo + dt.timedelta(days=1)
+    orch = Orchestrator(wh)
+    orch._write_metas({"srvid": 1, "coalesce_seq": 3, "snapts": lo,
+                       "aggts": None, "purgets": hi, "errors": ["x"]})
+    frames = {
+        "read": wh.read("absent_table", spec.current_schema),
+        "read_staging": read_staging(wh, spec, 1),
+        "read_metas_df": orch.read_metas_df(),
+        "grants_df": grants_df(spark),
+        **{n: b() for n, b in _read_frames(wh, spec, lo, hi).items()},
+        "stat_get_history": R.stat_get_history(wh, spec, 1, lo, hi),
+    }
+    wh.append(spark.createDataFrame(
+        [(1, lo, "client backend", "relation", "normal")],
+        "srvid int, ts timestamp, backend_type string, object string, "
+        "context string"), Warehouse.src_tmp(io.name), partition_by=["srvid"])
+    frames["read_staging_too_old"] = read_staging(
+        wh, io, 1, server_version=150004, source=MODULE_SOURCES[io.name])
+    assert not [n for n, df in frames.items() if _runs_python(df)]
+    assert frames["read_metas_df"].collect()[0].errors == ["x"]
+
+
+def test_absent_current_table_prunes_its_union_branch(spark, wh):
+    """stat_get_history over history with no current table plans no
+    Union: the absent side is an empty local relation, dropped at plan
+    time (the reference's empty current slice costs nothing either)."""
+    import shutil
+
+    from powa_archivist_spark.operators import read as R
+
+    spec, lo, hi = _statements_warehouse(spark, wh)
+    shutil.rmtree(wh.path(Warehouse.current(spec.name)))
+    df = R.stat_get_history(wh, spec, 1, lo, hi)
+    assert "Union" not in df._jdf.queryExecution().optimizedPlan().toString()
+    assert df.count() == 8 * 5
+
+
+def test_driver_rows_become_frames_only_through_local_frame():
+    """Every frame the engine builds from driver-side rows goes through
+    session.local_frame: a row-list createDataFrame or an RDD
+    parallelize would put a Python worker on the path."""
+    import inspect
+    from pathlib import Path
+
+    from powa_archivist_spark import session
+
+    root = Path(session.__file__).parent
+    hits = []
+    for p in sorted(root.rglob("*.py")):
+        text = p.read_text()
+        if p == Path(session.__file__):
+            text = text.replace(inspect.getsource(session.local_frame), "")
+        hits += [f"{p.relative_to(root)}:{i}"
+                 for i, line in enumerate(text.splitlines(), 1)
+                 if "createDataFrame(" in line or ".parallelize(" in line]
+    assert not hits, hits
 
 
 def test_constvalues_pack_shares_one_ranking_shuffle(spark, wh):

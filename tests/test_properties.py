@@ -844,3 +844,62 @@ def test_cms_sum_merge_equals_one_shot_and_never_undercounts(
     truth = Counter(keys)
     for k, est in one.items():
         assert est >= truth.get(k, 0)
+
+
+_OFFSETS = st.sampled_from([dt.timezone.utc,
+                            dt.timezone(dt.timedelta(hours=5, minutes=30)),
+                            dt.timezone(-dt.timedelta(hours=8))])
+_WHEN = dict(min_value=dt.datetime(1971, 1, 2), max_value=dt.datetime(2100, 1, 1))
+_LONGS = st.integers(min_value=-2**63, max_value=2**63 - 1)
+_TEXT = st.text(st.characters(blacklist_categories=("Cs",)), max_size=6)
+_LOCAL_SCHEMA = (
+    "k bigint NOT NULL, i int, b bigint, d double, n decimal(38,0), s string, "
+    "tz timestamp, naive timestamp, tags array<string>, ids array<bigint>, "
+    "rec struct<x: bigint, at: timestamp, tags: array<string>>"
+)
+local_rows = st.lists(st.tuples(
+    _LONGS,
+    st.none() | st.integers(min_value=-2**31, max_value=2**31 - 1),
+    st.none() | _LONGS,
+    st.none() | st.floats(allow_nan=False),
+    st.none() | st.integers(min_value=1 - 10**38, max_value=10**38 - 1)
+    .map(decimal.Decimal),
+    st.none() | _TEXT,
+    st.none() | st.datetimes(timezones=_OFFSETS, **_WHEN),
+    st.none() | st.datetimes(**_WHEN),
+    st.none() | st.lists(st.none() | _TEXT, max_size=3),
+    st.none() | st.lists(st.none() | _LONGS, max_size=3),
+    st.none() | st.tuples(st.none() | _LONGS,
+                          st.none() | st.datetimes(**_WHEN),
+                          st.none() | st.lists(_TEXT, max_size=2)),
+), max_size=6)
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+@given(rows=local_rows)
+@example(rows=[])
+@SLOW
+def test_local_frame_matches_row_list_create(spark, tz, rows):
+    """session.local_frame (Arrow -> JVM LocalRelation) builds the same
+    frame as a row-list createDataFrame: equal schemas, nullability
+    included, and equal collected rows, naive timestamps read in the
+    process time zone either way."""
+    import os
+    import time
+
+    from powa_archivist_spark.session import local_frame
+
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = tz
+    time.tzset()
+    try:
+        want = spark.createDataFrame(rows, _LOCAL_SCHEMA)
+        got = local_frame(spark, rows, _LOCAL_SCHEMA)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+    finally:
+        if old is None:
+            os.environ.pop("TZ")
+        else:
+            os.environ["TZ"] = old
+        time.tzset()

@@ -256,10 +256,11 @@ def purge_constvalues_history(
     """``powa_qualstats_purge`` (powa--5.2.0.sql:7238-7260): drop packed
     constvalues history whose range fell out of retention (the reference
     only bothers with already-coalesced data)."""
-    from .purge import _purge_table
+    from .purge import purge_tables
 
     now = now or dt.datetime.now(dt.timezone.utc)
-    _purge_table(wh, CONSTVALUES_HISTORY_TABLE, srvid, now - retention)
+    purge_tables(wh, srvid, now - retention,
+                 [(CONSTVALUES_HISTORY_TABLE, None)])
 
 
 def constvalues_history(wh: Warehouse,

@@ -1846,7 +1846,8 @@ class IvfIndex:
         from ..txn import GLOBAL_LANE, StagedPass
 
         # an interrupted earlier write must not fold in after this one
-        StagedPass.recover(wh, GLOBAL_LANE, sweep=True)
+        StagedPass.recover(wh, GLOBAL_LANE)
+        StagedPass.sweep_stages(*map(wh.path, self.tables))
         cents, codebook = _train(
             emb, pq=self.codec == "pq", centroid_mod=centroid_mod,
             n_cells_target=n_cells_target, refine_iters=refine_iters,
@@ -1930,9 +1931,10 @@ class IvfIndex:
         wh = wh.engine()
         new_emb = adopt(wh.spark, new_emb)
         # complete any interrupted index publish first (idempotent,
-        # cheap — readers would self-heal anyway via the manifest, this
-        # also sweeps dead stage trees)
-        StagedPass.recover(wh, GLOBAL_LANE, sweep=True)
+        # cheap — readers would self-heal anyway via the manifest), then
+        # reclaim the index's dead stages
+        StagedPass.recover(wh, GLOBAL_LANE)
+        StagedPass.sweep_stages(*map(wh.path, self.tables))
         cells_t, delta_t, bloom_t = (
             self.table("cells"), self.table("delta"), self.table("id_bloom")
         )

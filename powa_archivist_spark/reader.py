@@ -14,12 +14,12 @@ committed manifests plus a directory listing, then pins the result as a
 HARD-LINKED snapshot directory.  Three properties make this sound with
 zero cooperation from the publisher:
 
-1. **The manifest records every staged file name** (txn.py r8:
-   ``_staged_files``/``_staged_children``), and staged part-file names
-   are uuid-unique.  The post-commit file set of a table is therefore a
-   pure function of (live listing ∪ op records): appends ADD their
-   recorded names; replaces DROP the target dir's other names and add
-   their own.  Fold progress never changes the answer — a recorded
+1. **The manifest records every staged file name** per partition leaf
+   (txn.py ``_leaves``), and staged part-file names are uuid-unique.
+   The post-commit file set of a table is therefore a pure function of
+   (live listing ∪ op records): appends ADD their recorded names;
+   replaces DROP their leaves' live names (and their ``drops`` leaves)
+   and add their own.  Fold progress never changes the answer — a recorded
    file is either still in its stage dir or already at its live path,
    and the resolver tries both.
 2. **Folding only ever uses atomic renames** (``os.replace``), so each
@@ -40,14 +40,14 @@ resolution is milliseconds, so this converges in practice; a pathological
 publish storm raises after the retry budget rather than returning a torn
 view.
 
-Catalog-managed bucketed ledger tables (``append_files`` ops — the
-streaming dedup/PQ digest ledgers) are covered since r9 (VERDICT r8
-task 4): their ops record the staged bucket file names and both the
-stage and the live location, so resolution works the same way — the
-caller passes the table's catalog ``location=`` to :meth:`snapshot`
-(an external engine knows the warehouse dir it's pointed at; it has no
-session catalog to ask).  Still not covered: tables written by engines
-other than this package.
+Catalog-managed bucketed ledger tables (the streaming dedup digest
+ledger, ``BucketedDigestLedger``) resolve the same way: their appends
+are ordinary ``append`` ops staged at the table's catalog location, so
+the caller passes that ``location=`` to :meth:`snapshot` (an external
+engine knows the warehouse dir it's pointed at; it has no session
+catalog to ask).  A manifest op of any other format raises, naming the
+manifest, rather than resolving to a view without its data.  Still not
+covered: tables written by engines other than this package.
 
 Reference analog: readers of powa's one-statement wCTE snapshots
 (powa--5.2.0.sql:4006-4108) get this from PostgreSQL MVCC; plain
@@ -68,15 +68,15 @@ class TornSnapshotError(RuntimeError):
     budget (pathologically hot publish loop)."""
 
 
-def _pending_ops(root: str, table: str) -> list[dict]:
-    """Ops touching ``table`` from every committed-but-unretired
-    manifest, in manifest order (srv dir, then intent name — passes on
-    one table are serialized by the publisher, so this order is the
-    publish order)."""
+def _pending_ops(root: str, table: str) -> list[tuple[str, dict]]:
+    """(manifest path, op) for every op touching ``table`` in a
+    committed-but-unretired manifest, in manifest order (srv dir, then
+    intent name — passes on one table are serialized by the publisher,
+    so this order is the publish order)."""
     txn_root = os.path.join(root, "_txn")
     if not os.path.isdir(txn_root):
         return []
-    ops: list[dict] = []
+    ops: list[tuple[str, dict]] = []
     for srv in sorted(os.listdir(txn_root)):
         d = os.path.join(txn_root, srv)
         if not os.path.isdir(d):
@@ -84,13 +84,14 @@ def _pending_ops(root: str, table: str) -> list[dict]:
         for name in sorted(os.listdir(d)):
             if not name.endswith(".intent"):
                 continue
+            p = os.path.join(d, name)
             try:
-                with open(os.path.join(d, name)) as f:
+                with open(p) as f:
                     rec = json.load(f)
             except (OSError, json.JSONDecodeError):
                 continue  # being retired / torn: fully-applied or unborn
             ops.extend(
-                op for op in rec.get("ops", [])
+                (p, op) for op in rec.get("ops", [])
                 if op.get("table") == table
             )
     return ops
@@ -98,7 +99,7 @@ def _pending_ops(root: str, table: str) -> list[dict]:
 
 def _live_listing(table_root: str) -> dict[str, dict[str, str]]:
     """relative dir -> {file name -> absolute path}, skipping dot- and
-    underscore-prefixed entries (stages, swapouts, Spark markers)."""
+    underscore-prefixed entries (stages, Spark markers)."""
     out: dict[str, dict[str, str]] = {}
     if not os.path.isdir(table_root):
         return out
@@ -116,106 +117,39 @@ def _live_listing(table_root: str) -> dict[str, dict[str, str]]:
     return out
 
 
-def _op_files(op: dict) -> list[str]:
-    files = op.get("files")
-    if files is None:
-        # pre-r8 manifest without recorded names: best effort from the
-        # stage dir (already-moved files are present in the live
-        # listing; name-level union keeps the set right)
-        stage = op["stage"]
-        files = (
-            sorted(f for f in os.listdir(stage) if f.endswith(".parquet"))
-            if os.path.isdir(stage) else []
-        )
-    return files
-
-
 def _resolve(root: str, table: str,
              table_root: str | None = None) -> dict[str, dict[str, list[str]]]:
     """One resolution attempt: relative dir -> {name -> candidate
-    absolute paths, in preference order}."""
+    absolute paths, in preference order}.  An op stages at its table's
+    live root, so its leaves are relative dirs of the table."""
     if table_root is None:
         table_root = os.path.join(root, table)
-    ops = _pending_ops(root, table)
-    live = _live_listing(table_root)
     out: dict[str, dict[str, list[str]]] = {
         rel: {name: [p] for name, p in names.items()}
-        for rel, names in live.items()
+        for rel, names in _live_listing(table_root).items()
     }
-
-    def rel_of(abs_dir: str) -> str:
-        rel = os.path.relpath(abs_dir, table_root)
-        return "" if rel == "." else rel
-
-    def drop_dir(rel: str) -> None:
-        out.pop(rel, None)
-
-    def add(rel: str, name: str, candidates: list[str]) -> None:
-        out.setdefault(rel, {})[name] = candidates
-
-    for op in ops:
-        kind, stage = op["kind"], op["stage"]
-        if kind == "append":
-            rel = rel_of(os.path.dirname(stage))
-            for name in _op_files(op):
-                add(rel, name, [
-                    os.path.join(table_root, rel, name) if rel
-                    else os.path.join(table_root, name),
-                    os.path.join(stage, name),
-                ])
-        elif kind == "replace":
-            base = os.path.basename(stage)
-            suffix = base[len(".__stageswap__"):]
-            live_dir = os.path.join(
-                os.path.dirname(stage), suffix.split("__")[0]
+    for path, op in _pending_ops(root, table):
+        kind = op.get("kind")
+        if kind not in ("append", "replace") or "leaves" not in op:
+            raise ValueError(
+                f"manifest {path}: cannot resolve staged op {kind!r} on "
+                f"table {table!r}"
             )
-            rel = rel_of(live_dir)
-            drop_dir(rel)
-            for name in _op_files(op):
-                add(rel, name, [
-                    os.path.join(live_dir, name),
-                    os.path.join(stage, name),
-                ])
-        elif kind == "replace_flat":
-            rel = rel_of(os.path.dirname(stage))
-            drop_dir(rel)
-            for name in _op_files(op):
-                add(rel, name, [
-                    os.path.join(os.path.dirname(stage), name),
-                    os.path.join(stage, name),
-                ])
-        elif kind == "append_tree":
-            live_root = os.path.dirname(stage)
-            for child, files in (op.get("children") or {}).items():
-                rel = rel_of(os.path.join(live_root, child))
-                for name in files:
-                    add(rel, name, [
-                        os.path.join(live_root, child, name),
-                        os.path.join(stage, child, name),
-                    ])
-        elif kind == "replace_tree":
-            live_root = os.path.dirname(stage)
-            for child, files in (op.get("children") or {}).items():
-                rel = rel_of(os.path.join(live_root, child))
-                drop_dir(rel)
-                for name in files:
-                    add(rel, name, [
-                        os.path.join(live_root, child, name),
-                        os.path.join(stage, child, name),
-                    ])
-            for leaf in op.get("drops", []):
-                drop_dir(rel_of(os.path.join(live_root, leaf)))
-        elif kind == "append_files":
-            # catalog-managed bucketed ledger (r9): the op records the
-            # live catalog location in ``dest``; staged bucket files
-            # (bucket id in the file name) land flat in it
-            dest = op["dest"]
-            rel = rel_of(dest)
-            for name in _op_files(op):
-                add(rel, name, [
-                    os.path.join(dest, name),
-                    os.path.join(stage, name),
-                ])
+        stage = op["stage"]
+        live = os.path.dirname(stage)
+        if kind == "replace":
+            # a replaced or dropped leaf loses its live files (a
+            # partition leaf its whole subtree)
+            for leaf in [*op["leaves"], *op["drops"]]:
+                for rel in [r for r in out if r == leaf
+                            or leaf and r.startswith(leaf + "/")]:
+                    del out[rel]
+        for leaf, names in op["leaves"].items():
+            for name in names:
+                out.setdefault(leaf, {})[name] = [
+                    os.path.join(live, leaf, name),
+                    os.path.join(stage, leaf, name),
+                ]
     return out
 
 
@@ -260,12 +194,9 @@ class SnapshotReader:
 
         ``location`` (r9): the table's data directory when it is NOT
         ``<root>/<table>`` — i.e. a catalog-managed bucketed ledger
-        (today only ``BucketedDigestLedger`` records the per-commit
-        ``files`` list this resolver needs; the streaming PQ path
-        appends flat, unbucketed — any future bucketed ledger op must
-        record ``files`` the same way), whose location lives in the
-        Spark catalog of the publishing session.  External engines pass
-        the path they were configured with."""
+        (``BucketedDigestLedger``), whose location lives in the Spark
+        catalog of the publishing session.  External engines pass the
+        path they were configured with."""
         last_missing = None
         for _ in range(self.retries):
             resolved = _resolve(self.root, table, location)

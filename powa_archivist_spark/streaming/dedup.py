@@ -35,6 +35,7 @@ side.
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -78,11 +79,12 @@ class BucketedDigestLedger:
     Layout machinery: ``layout.write_bucketed`` catalog tables (bucket
     spec lives in the session catalog).  Appends stay ATOMIC with the
     rest of the micro-batch pass: ``stage_append`` writes the delta as
-    a same-spec bucketed STAGE table (bucket ids ride in the file
-    names, so moving the files preserves assignment) and registers an
-    ``append_files`` op in the pass's StagedPass — publish moves the
-    staged bucket files into the live table location under the one
-    manifest commit and refreshes the catalog.
+    a same-spec bucketed scratch table (bucket ids ride in the file
+    names, so moving the files preserves assignment), moves its files
+    into an ordinary staged ``append`` op at the ledger's catalog
+    location and drops the scratch table.  Publish then moves the files
+    into the live ledger under the pass's one manifest commit;
+    :meth:`read` refreshes the catalog's view of them.
 
     Concurrency contract: one writer/reader loop per ledger (the
     stream's serialized micro-batch loop), matching every other global-lane
@@ -129,37 +131,32 @@ class BucketedDigestLedger:
 
     def stage_append(self, df: DataFrame, sp) -> None:
         """Stage a bucketed delta into the pass's manifest."""
-        from ..layout import write_bucketed
+        from ..layout import drop_table, write_bucketed
 
         self.ensure()
-        stage_tbl = f"{self.table}__stage_{sp.pass_id}_{len(sp._ops)}"
-        write_bucketed(df.select("text_hash"), stage_tbl,
-                       ["text_hash"], self.n_buckets)
-        stage_loc = self._location(stage_tbl)
-        sp._ops.append({
-            "kind": "append_files",
-            "table": self.table,
-            "stage": stage_loc,
-            "dest": self._location(self.table),
-            # recorded names (r9): lets an OUT-OF-PROCESS SnapshotReader
-            # resolve this op's post-commit file set without racing the
-            # fold — each staged bucket file is at exactly one of
-            # stage/<name> or dest/<name> at any instant
-            "files": sorted(
-                f for f in os.listdir(stage_loc) if f.endswith(".parquet")
-            ),
-            "drop_stage_table": stage_tbl,
-            "refresh": self.table,
-        })
+
+        def write(d: str) -> None:
+            scratch = f"{self.table}__stage_{uuid.uuid4().hex[:12]}"
+            write_bucketed(df.select("text_hash"), scratch,
+                           ["text_hash"], self.n_buckets)
+            os.replace(self._location(scratch), d)
+            drop_table(self.spark, scratch)
+
+        sp.stage("append", self.table, write,
+                 root=self._location(self.table))
 
     def sweep_stages(self) -> None:
-        """Drop stage tables left by passes that died before their
-        manifest rename (committed ones were consumed by recover())."""
+        """Reclaim what passes that died before their manifest rename
+        left: scratch tables, and stages at the ledger location
+        (committed ones were consumed by recover())."""
         from ..layout import drop_table
+        from ..txn import StagedPass
 
         for t in self.spark.catalog.listTables():
             if t.name.startswith(f"{self.table}__stage_"):
                 drop_table(self.spark, t.name)
+        if self.exists():
+            StagedPass.sweep_stages(self._location(self.table))
 
 
 def dedup_batch_survivors(

@@ -13,8 +13,10 @@ re-implements them.
    but died before folding it.  Its healed count goes to the optional
    driver-side ``state`` mirror (``state.begin(healed)``): rows that
    landed without this process's fold make a cached view stale;
-3. ``sweep_flat_stages`` reclaims the stage dirs of passes that died
-   before their commit point (invisible to readers either way);
+3. ``StagedPass.sweep_stages`` reclaims, under the fold's ``tables``
+   only, the stage dirs of passes that died before their commit point
+   (invisible to readers either way).  Other writers share the global
+   lane, so a fold sweeps no table it does not write;
 4. the replay probe: ``key = (table, member)`` — an int epoch, or a
    tuple such as ``(epoch, stream_gen)`` — is looked up in an in-process
    memo of landed keys.  A cold memo entry seeds ONCE from the table
@@ -123,7 +125,7 @@ def fold(wh, batch: DataFrame, *, tables, key, build,
     healed = StagedPass.recover(wh, GLOBAL_LANE)
     if state is not None:
         state.begin(healed)
-    StagedPass.sweep_flat_stages(wh, *tables)
+    StagedPass.sweep_stages(*map(wh.path, tables))
     if key is not None and _replayed(wh, *key, key_frame):
         return False
     sp = StagedPass(wh, GLOBAL_LANE)

@@ -1,9 +1,10 @@
-"""Snapshot commit-markers — crash DETECTION for the multi-table pass.
+"""Snapshot commit-markers and staged publishes — crash detection and
+crash invisibility for the multi-table pass.
 
 The reference's snapshot is one atomic wCTE (powa--5.2.0.sql:4006-4108):
 history append, dictionary merge, and staging truncate either all land
 or none do.  Plain-parquet Spark can't get that from a single statement,
-so the engine layers two mechanisms:
+so the engine layers three mechanisms:
 
 1. **Convergence by construction** (operators/snapshot.py, streaming/
    ingest.py): every write step is idempotent (full-row anti-join
@@ -12,20 +13,25 @@ so the engine layers two mechanisms:
    consumer of it has committed (orchestrator._statements_snapshot
    merges the dictionary BEFORE the truncate).  Re-running a crashed
    pass therefore converges to exactly the committed-once state.
-2. **Detection by marker** (this module): a crash that kills the
+2. **Detection by marker** (:class:`TxnLog`): a crash that kills the
    process mid-pass leaves no error-ledger entry — nothing RAN to
    record one.  The orchestrator writes a begin-marker per
    (srvid, snapshot ts) before the first table write and removes it
    after the last; a marker found at the START of a pass is proof of an
    interrupted pass, surfaced into the meta error ledger before this
    pass replays the preserved staging.
+3. **Invisibility by manifest** (:class:`StagedPass`): a pass's sink
+   writes land in dot-prefixed stage dirs and go live together at one
+   manifest rename.  The manifest holds two op kinds over partition
+   leaves — ``append`` and ``replace`` (see :class:`StagedPass`) — and
+   this module is the only one that writes, names or folds them.
 
 A marker is a tiny JSON file under ``<root>/_txn/srvid=<n>/`` written
 atomically (tmp + rename).  This is deliberately NOT a lock (the
 orchestrator has per-srvid locks) and NOT a WAL — the idempotent
 operators make a full WAL unnecessary; the marker only closes the
 observability gap.  A transactional table format (Delta/Iceberg) is the
-documented swap-in that would collapse both mechanisms into real
+documented swap-in that would collapse these mechanisms into real
 multi-table transactions.
 """
 
@@ -99,61 +105,77 @@ class TxnLog:
             self.commit(rec["token"])
 
 
-def _staged_files(stage_dir: str) -> list[str]:
-    """Parquet file names just written into a stage dir.  Recorded in
-    the op (r8) so a READ-ONLY out-of-process reader
-    (:mod:`powa_archivist_spark.reader`) can resolve a table's logical
-    file set purely from the manifest, without having to distinguish
-    already-moved staged files from retired-pending live files by
-    listing races."""
-    return sorted(
-        f for f in os.listdir(stage_dir) if f.endswith(".parquet")
-    )
+#: the manifest's op kinds (see :class:`StagedPass`)
+KINDS = ("append", "replace")
 
 
-def _staged_children(stage_dir: str) -> dict[str, list[str]]:
-    """Per-partition-leaf file names of a staged tree (same purpose as
-    :func:`_staged_files`)."""
+def _is_part(name: str) -> bool:
+    return name.endswith(".parquet") and not name.startswith((".", "_"))
+
+
+def _parquet(d: str) -> list[str]:
+    """Visible parquet file names directly in ``d`` (none if absent)."""
+    return sorted(filter(_is_part, os.listdir(d))) if os.path.isdir(d) else []
+
+
+def _stage_prefix(lane: int) -> str:
+    return f".__stage__{lane}__"
+
+
+def _leaves(stage: str) -> dict[str, list[str]]:
+    """Leaf dir (relative to ``stage``; ``""`` for the stage itself) ->
+    parquet file names, for every leaf a staged write landed files in.
+    The manifest records them so a READ-ONLY out-of-process reader
+    (:mod:`powa_archivist_spark.reader`) resolves a table's file set
+    from the manifest alone; part-file names are uuid-unique."""
     out: dict[str, list[str]] = {}
-    for child in sorted(os.listdir(stage_dir)):
-        p = os.path.join(stage_dir, child)
-        if child.startswith((".", "_")) or not os.path.isdir(p):
-            continue
-        out[child] = sorted(
-            f for f in os.listdir(p) if f.endswith(".parquet")
-        )
+    for cur, dirs, files in os.walk(stage):
+        dirs[:] = [x for x in dirs if not x.startswith((".", "_"))]
+        names = sorted(filter(_is_part, files))
+        if names:
+            rel = os.path.relpath(cur, stage)
+            out["" if rel == "." else rel] = names
     return out
 
 
 class StagedPass:
-    """Atomic multi-sink publish for one (srvid, pass) — crash
+    """Atomic multi-sink publish for one (lane, pass) — crash
     INVISIBILITY, upgrading the begin/commit markers above (crash
     detection) to the reference's one-statement wCTE semantics
     (powa--5.2.0.sql:4006-4108) as far as plain parquet allows.
 
-    Protocol (r7: single-manifest commit — the manifest rename is the
-    ONLY visibility-relevant rename):
+    Every staged write is ONE manifest op over a set of leaves under
+    the table's live root: ``""`` for an unpartitioned table, or a
+    partition dir such as ``srvid=3``, ``cell_id=7`` or
+    ``srvid=3/range_day=2026-01-01``.  Two kinds:
 
-    1. every sink write of the pass lands in a dot-prefixed stage dir
-       (``.__stage__<pass>__<seq>``) inside / next to the target
-       partition — Spark's file index skips dot-prefixed paths, so NO
-       reader observes any of it;
-    2. ``publish()`` writes ONE manifest file (tmp + atomic rename)
-       recording every staged op.  **That single rename is the commit
-       point**: every ``Warehouse.read``/``exists`` first resolves
-       pending manifests for the table it touches (:func:`heal_table`)
-       and folds that table's staged ops in — under the table's write
-       lock — before listing files.  A reader therefore sees the full
+    - ``append`` moves each leaf's staged files into the live leaf,
+      creating it if new;
+    - ``replace`` swaps each staged leaf in for the live one and retires
+      its ``drops`` leaves.  The table-root leaf swaps file by file and
+      never retires the op's own files.  A replace whose frame is empty
+      stages no leaf, so its leaf is a drop.
+
+    Protocol (the manifest rename is the ONLY visibility-relevant
+    rename):
+
+    1. each op writes into its own dot-dir at the table root,
+       ``.__stage__<lane>__<pass>__<seq>`` — Spark's file index skips
+       dot-prefixed paths, so NO reader observes any of it;
+    2. ``publish()`` writes ONE manifest (tmp + atomic rename) recording
+       every op with its leaves' file names.  **That rename is the
+       commit point**: every ``Warehouse.read``/``exists`` first folds
+       the table's committed ops (:func:`heal_table`, under the table's
+       write lock) before listing files, so a reader sees the full
        pre-pass state before the rename and the full post-pass state
-       after it, never a mixture, regardless of how far the background
-       fold has progressed;
-    3. after the manifest lands, ``publish()`` folds the ops itself
-       (appends MOVE staged parquet files into the live partition dir,
-       replaces two-rename-swap the partition dir — all metadata-only
-       renames, each under the owning table's write lock) and removes
-       the manifest.  Fold application is idempotent and
-       lock-serialized, so publisher, readers, and :meth:`recover` can
-       race it freely;
+       after it, never a mixture;
+    3. after the rename ``publish()`` folds the ops itself (metadata-
+       only renames, each op under its table's write lock) and removes
+       the manifest.  An op's stage dir records its progress: the live
+       leaves it retires move INTO it, and the op is complete once the
+       stage dir is gone.  A re-run therefore redoes only what is left
+       and never retires what a later op of the same manifest landed,
+       so the publisher, readers and :meth:`recover` race it freely;
     4. a crash BEFORE the manifest rename leaves only invisible stage
        dirs — readers still see the pre-pass state, and the preserved
        staging replays the pass from scratch (exactly-once via the
@@ -162,23 +184,24 @@ class StagedPass:
        :meth:`recover` completes the fold and drops the manifest.
 
     Residual scope: atomicity holds for every reader that goes through
-    this Warehouse (the engine's single-driver deployment shape) AND —
-    since r8 — for out-of-process readers that resolve through
+    a Warehouse, and for out-of-process readers that resolve through
     :class:`powa_archivist_spark.reader.SnapshotReader` (read-only
-    manifest replay + hard-linked snapshot pinning; every staged op
-    records its file names for exactly this).  Only a foreign engine
-    pointed RAW at the table path (no manifest resolution at all) can
-    still observe a fold mid-flight; a transactional table format
-    (Delta/Iceberg) remains the swap-in that removes even that.
+    manifest replay + hard-linked snapshot pinning).  Only a foreign
+    engine pointed RAW at the table path can still observe a fold
+    mid-flight; a transactional table format (Delta/Iceberg) remains
+    the swap-in that removes even that.
 
-    Concurrency: stage dirs and manifests are per (srvid, pass); the
-    orchestrator's per-srvid lock serializes passes and sweeps before
-    it dispatches a pass's datasources, so recover()'s stale-stage
-    sweep can only ever see leftovers of DEAD passes.
-    Fold ops additionally take the owning table's write lock, so a
-    concurrent ``maintenance.compact`` (which holds the same lock for
-    its list→trash→delete cycle) can never trash a file the fold moved
-    in after its listing (ADVICE r6).
+    Sweep ownership: the stage dirs of a pass that died before its
+    commit point belong to its lane, and only a writer that knows every
+    other writer of a dir is dead may remove them.  A srvid lane's
+    passes are serialized by the orchestrator's per-srvid lock, whose
+    ``recover(sweep=True)`` runs before a pass dispatches any worker.
+    :data:`GLOBAL_LANE` writers (streaming folds, ANN index maintenance)
+    share the lane but not their tables, so each sweeps only the tables
+    it writes (:meth:`sweep_stages`).  Fold ops also take the owning
+    table's write lock, so a concurrent ``maintenance.compact`` (which
+    holds it for its list→trash→delete cycle) never trashes a file a
+    fold moved in after its listing.
     """
 
     def __init__(self, wh, srvid: int, pass_id: str | None = None,
@@ -192,10 +215,10 @@ class StagedPass:
         self.wh = wh.engine() if engine else wh
         self.srvid = srvid
         self.pass_id = pass_id or uuid.uuid4().hex[:12]
-        # the stage-dir naming uses "__" as its field delimiter and
-        # recovery re-parses it (_apply_ops): a pass id containing the
-        # delimiter (or a path separator) would silently reassemble the
-        # WRONG live path at publish/recover time — reject it up front
+        # the stage-dir name uses "__" as its field delimiter and the
+        # sweep reads the lane from it: a pass id containing the
+        # delimiter (or a path separator) would make names ambiguous —
+        # reject it up front
         if "__" in self.pass_id or "/" in self.pass_id:
             raise ValueError(
                 f"invalid pass_id {self.pass_id!r}: must contain neither "
@@ -217,9 +240,6 @@ class StagedPass:
 
     # ---- staging ---------------------------------------------------------
 
-    def _part_dir(self, table: str) -> str:
-        return os.path.join(self.wh.path(table), f"srvid={self.srvid}")
-
     def _acl_check(self, table: str) -> None:
         # staged sinks bypass the Warehouse write methods, so an
         # acl.AclWarehouse exposes its write check through this hook —
@@ -229,12 +249,59 @@ class StagedPass:
         if chk is not None:
             chk(table)
 
+    def stage(self, kind: str, table: str, write=None, drops=(),
+              root: str | None = None):
+        """The staging core every ``stage_*`` entry runs through: reserve
+        the op's manifest slot, run ``write(stage_dir)`` — which lands
+        the op's leaves inside the fresh stage dir; ``None`` lands none
+        — and record the leaves it landed.  ``drops`` (a replace's) are
+        leaves to retire; a leaf the write landed is never dropped.
+        ``root`` is the table's live root when it is not
+        ``wh.path(table)`` (a catalog-managed table).  An op with no
+        leaf and no drop stages nothing.  Returns what ``write``
+        returned."""
+        if kind not in KINDS:
+            raise ValueError(f"unknown staged op kind {kind!r}")
+        self._acl_check(table)
+        idx = self._reserve_op()
+        root = root or self.wh.path(table)
+        d = os.path.join(
+            root, f"{_stage_prefix(self.srvid)}{self.pass_id}__{idx}")
+        out = None if write is None else write(d)
+        os.makedirs(d, exist_ok=True)  # a drop-only op's progress mark
+        leaves = _leaves(d)
+        drops = sorted(set(drops) - set(leaves))
+        if leaves or drops:
+            self._ops[idx] = {"kind": kind, "table": table, "stage": d,
+                              "leaves": leaves, "drops": drops}
+        else:
+            shutil.rmtree(d, ignore_errors=True)
+            with contextlib.suppress(OSError):
+                os.rmdir(root)  # the table root only if nothing is in it
+            self._ops[idx] = {}  # nothing to publish
+        return out
+
     def _write_counted(self, df, d: str) -> int:
-        """Write ``df`` (srvid dropped) to stage dir ``d``; returns the
-        rows written, observed on the write job itself."""
+        """Write ``df`` (srvid dropped) as this pass's srvid leaf of stage
+        dir ``d``; returns the rows written, observed on the write job
+        itself.  An empty write leaves no leaf."""
+        leaf = os.path.join(d, f"srvid={self.srvid}")
         df, rows = observe_rows(adopt(self.wh.spark, df))
-        df.drop("srvid").write.mode("overwrite").parquet(d)
-        return rows()
+        df.drop("srvid").write.mode("overwrite").parquet(leaf)
+        n = rows()
+        if n == 0:
+            shutil.rmtree(leaf)
+        return n
+
+    def _writer(self, df, partition_by=()):
+        """A ``write`` landing ``df`` in the stage dir, partitioned by
+        ``partition_by`` (none: the table-root leaf)."""
+        def write(d: str) -> None:
+            w = adopt(self.wh.spark, df).write.mode("overwrite")
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(d)
+        return write
 
     def stage_append(self, df, table: str) -> int:
         """Stage an append to the srvid partition of ``table``; returns
@@ -242,152 +309,63 @@ class StagedPass:
         here: partition dirs encode it, matching what a partitionBy
         append writes).  An empty ``df`` lands nothing: no file, no op,
         no stage dir."""
-        self._acl_check(table)
-        idx = self._reserve_op()
-        part = self._part_dir(table)
-        d = os.path.join(part, f".__stage__{self.pass_id}__{idx}")
-        n = self._write_counted(df, d)
-        if n == 0:
-            shutil.rmtree(d)
-            with contextlib.suppress(OSError):
-                os.rmdir(part)  # the partition only if nothing is in it
-            self._ops[idx] = {}  # nothing to publish
-        else:
-            self._ops[idx] = {
-                "kind": "append", "table": table, "stage": d,
-                "files": _staged_files(d),
-            }
-        return n
-
-    def stage_append_flat(self, df, table: str) -> None:
-        """Stage an append to an UNPARTITIONED table (streaming sinks,
-        digest ledgers): the staged files publish into the table root.
-        Used by the streaming curation/dedup batch processors so the
-        sink append and the ledger append of one micro-batch commit
-        through one manifest (ADVICE r6: a crash between the two made
-        the epoch replay re-admit the whole survivor set)."""
-        self._acl_check(table)
-        df = adopt(self.wh.spark, df)
-        idx = self._reserve_op()
-        d = os.path.join(
-            self.wh.path(table),
-            f".__stage__{self.pass_id}__{idx}",
-        )
-        df.write.mode("overwrite").parquet(d)
-        self._ops[idx] = {
-            "kind": "append", "table": table, "stage": d,
-            "files": _staged_files(d),
-        }
+        return self.stage("append", table,
+                          lambda d: self._write_counted(df, d))
 
     def stage_replace(self, df, table: str) -> int:
         """Stage a full replace of the srvid partition of ``table`` as
         one parquet file; returns the rows staged.  An empty ``df``
         retires the partition instead of landing an empty parquet
         file."""
-        self._acl_check(table)
-        idx = self._reserve_op()
-        d = os.path.join(
-            self.wh.path(table),
-            f".__stageswap__srvid={self.srvid}__{self.pass_id}__{idx}",
-        )
-        n = self._write_counted(df.coalesce(1), d)
-        if n == 0:
-            # a stage with no parquet file publishes as a partition drop
-            for f in _staged_files(d):
-                os.remove(os.path.join(d, f))
-        self._ops[idx] = {
-            "kind": "replace", "table": table, "stage": d,
-            "files": _staged_files(d),
-        }
-        return n
+        return self.stage("replace", table,
+                          lambda d: self._write_counted(df.coalesce(1), d),
+                          drops=[f"srvid={self.srvid}"])
 
-    def stage_append_tree(
-        self, df, table: str, partition_by: list[str],
-    ) -> None:
-        """Stage a partition-tree APPEND: one Spark job writes ``df``
-        partitioned under a dot-staged tree; publish moves each staged
-        leaf's files INTO the matching live leaf (creating it if new)
-        without replacing existing files.  The partition-wise append for
-        ingest paths whose IO must stay proportional to the batch (ANN
-        upsert fresh rows), committed under the same single manifest."""
-        self._acl_check(table)
-        df = adopt(self.wh.spark, df)
-        idx = self._reserve_op()
-        token = f"{self.pass_id}__{idx}"
-        d = os.path.join(self.wh.path(table), f".__stagetree__{token}")
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(d)
-        self._ops[idx] = {
-            "kind": "append_tree", "table": table, "stage": d,
-            "token": token, "children": _staged_children(d),
-        }
+    def stage_append_flat(self, df, table: str) -> None:
+        """Stage an append to an UNPARTITIONED table (streaming sinks,
+        digest ledgers): the staged files publish into the table root.
+        The streaming batch processors stage their sink and ledger
+        appends in one pass, so both commit through one manifest."""
+        self.stage("append", table, self._writer(df))
+
+    def stage_replace_flat(self, df, table: str) -> None:
+        """Stage a full content replace of an UNPARTITIONED table (the
+        ANN delta run table, a fold's replace)."""
+        self.stage("replace", table, self._writer(df), drops=[""])
 
     def stage_retire_flat(self, table: str) -> None:
         """Stage the retirement of an UNPARTITIONED table's content: a
         flat replace that lands no file, so after publish the table
         reads as absent (``Warehouse.exists`` is False).  No Spark job;
         nothing is staged when the table has no dir."""
-        self._acl_check(table)
-        if not os.path.isdir(self.wh.path(table)):
-            return
-        idx = self._reserve_op()
-        token = f"{self.pass_id}__{idx}"
-        d = os.path.join(self.wh.path(table), f".__stageflatswap__{token}")
-        os.makedirs(d)
-        self._ops[idx] = {
-            "kind": "replace_flat", "table": table, "stage": d,
-            "token": token, "files": [],
-        }
+        if os.path.isdir(self.wh.path(table)):
+            self.stage("replace", table, drops=[""])
 
-    def stage_replace_flat(self, df, table: str) -> None:
-        """Stage a full content replace of an UNPARTITIONED table (the
-        ANN delta run table).  The op records the staged file names so
-        a crashed re-apply can tell this pass's already-moved files
-        from the old content it is retiring."""
-        self._acl_check(table)
-        df = adopt(self.wh.spark, df)
-        idx = self._reserve_op()
-        token = f"{self.pass_id}__{idx}"
-        d = os.path.join(self.wh.path(table), f".__stageflatswap__{token}")
-        df.write.mode("overwrite").parquet(d)
-        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        self._ops[idx] = {
-            "kind": "replace_flat", "table": table, "stage": d,
-            "token": token, "files": files,
-        }
+    def stage_append_tree(
+        self, df, table: str, partition_by: list[str],
+    ) -> None:
+        """Stage a partition-tree APPEND: one Spark job writes ``df``
+        partitioned by ``partition_by``; publish moves each staged
+        leaf's files INTO the matching live leaf without replacing
+        existing files.  The partition-wise append for ingest paths
+        whose IO must stay proportional to the batch (ANN delta
+        compaction)."""
+        self.stage("append", table, self._writer(df, partition_by))
 
     def stage_replace_tree(
         self, df, table: str, partition_by: list[str], drops: list[str] = (),
     ) -> None:
         """Stage a partition-TREE replace: ONE Spark job writes every
-        touched partition of ``df`` (partitioned by ``partition_by``)
-        under a dot-staged tree; publish swaps each staged leaf into the
-        live table and retires the ``drops`` leaves (dir names like
-        ``cell_id=7`` whose new content is empty) — all folded under the
-        single-manifest commit, so readers see the whole tree replace
-        atomically.  Used by the ANN IVF upsert (ADVICE r6: the previous
-        dynamic-partition overwrite read the table it was overwriting
-        and left a crash window holding replaced ids in two cells).
-        A leaf the staged tree rewrites is never dropped, so passing
-        every live leaf as ``drops`` makes a full-table replace (the
-        ANN index rebuild)."""
-        self._acl_check(table)
-        df = adopt(self.wh.spark, df)
-        idx = self._reserve_op()
-        token = f"{self.pass_id}__{idx}"
-        d = os.path.join(self.wh.path(table), f".__stagetree__{token}")
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(d)
-        children = _staged_children(d)
-        self._ops[idx] = {
-            "kind": "replace_tree", "table": table, "stage": d,
-            "token": token, "drops": sorted(set(drops) - set(children)),
-            "children": children,
-        }
+        touched partition of ``df`` (partitioned by ``partition_by``);
+        publish swaps each staged leaf into the live table and retires
+        the ``drops`` leaves (dir names like ``cell_id=7`` whose new
+        content is empty).  Used by the ANN IVF upsert, whose cell
+        rewrite must never leave a replaced id in two cells.  A leaf the
+        staged tree rewrites is never dropped, so passing every live
+        leaf as ``drops`` makes a full-table replace (the ANN index
+        rebuild)."""
+        self.stage("replace", table, self._writer(df, partition_by),
+                   drops=drops)
 
     # ---- publish ---------------------------------------------------------
 
@@ -430,21 +408,18 @@ class StagedPass:
     # ---- recovery --------------------------------------------------------
 
     @staticmethod
-    def sweep_flat_stages(wh, *tables: str) -> None:
-        """Remove stale flat-stage dirs (``.__stage__*`` directly under
-        the given table roots) left by a caller that died BEFORE its
-        manifest rename.  Invisible to readers either way — this only
-        reclaims disk.  Safe only for tables whose global-lane writer is
-        serialized (a streaming sink's single foreachBatch loop); called
-        at batch-processor entry, never from recover()'s generic walk
-        (which cannot tell a dead pass's stage from a concurrent
-        caller's in-flight one)."""
-        for table in tables:
-            root = wh.path(table)
-            if not os.path.isdir(root):
-                continue
-            for name in os.listdir(root):
-                if name.startswith(".__stage__"):
+    def sweep_stages(*roots: str) -> None:
+        """Remove the :data:`GLOBAL_LANE` stage dirs under the given
+        table roots — left by passes that died BEFORE their manifest
+        rename; invisible to readers either way, this only reclaims
+        disk.  Each global-lane writer calls it over the tables it
+        writes, after :meth:`recover`, before it stages: it is their
+        only writer (a stream's serialized batch loop, the single index
+        maintainer), so every stage found there is dead."""
+        pfx = _stage_prefix(GLOBAL_LANE)
+        for root in roots:
+            for name in (os.listdir(root) if os.path.isdir(root) else ()):
+                if name.startswith(pfx):
                     shutil.rmtree(os.path.join(root, name),
                                   ignore_errors=True)
 
@@ -452,11 +427,13 @@ class StagedPass:
     def recover(wh, srvid: int, sweep: bool = False) -> int:
         """Complete every published-but-interrupted pass for ``srvid``
         (cheap: one listing of the tiny ``_txn`` dir, normally empty).
-        With ``sweep=True`` additionally walk the warehouse for stage
-        dirs of passes that died before their commit point — invisible
-        to readers, but disk they'd otherwise leak; the orchestrator
-        does this once per pass, not per spec (a full-tree walk is
-        metadata-heavy on object stores).  Returns the number of intents
+        With ``sweep=True`` additionally walk the warehouse for the
+        lane's stage dirs of passes that died before their commit point
+        — invisible to readers, but disk they'd otherwise leak; the
+        orchestrator does this once per pass, not per spec (a full-tree
+        walk is metadata-heavy on object stores).  The walk removes no
+        :data:`GLOBAL_LANE` stage: its writers sweep their own tables
+        (:meth:`sweep_stages`).  Returns the number of intents
         completed.  The sweep runs under the per-srvid orchestrator lock
         BEFORE a pass dispatches any worker (it would delete a live
         sibling's stage dir).  The non-sweep calls inside ``snapshot()``/
@@ -470,12 +447,10 @@ class StagedPass:
                 if not name.endswith(".intent"):
                     continue
                 p = os.path.join(txn_dir, name)
-                try:
-                    with open(p) as f:
-                        rec = json.load(f)
-                except (OSError, json.JSONDecodeError):
+                ops = _read_intent(p)
+                if ops is None:
                     continue
-                _apply_ops(wh, rec.get("ops", []))
+                _apply_ops(wh, ops)
                 with contextlib.suppress(FileNotFoundError):
                     os.remove(p)
                 done += 1
@@ -490,9 +465,9 @@ class StagedPass:
             return done
         # ONE walk serves two recoveries (a full-tree walk is metadata-
         # heavy on object stores, so the orchestrator pays it once per
-        # pass, not once per concern): (a) stale stage dirs — only this
-        # srvid's, only uncommitted passes (committed ones were consumed
-        # by _apply_ops above); (b) interrupted COMPACTION swaps
+        # pass, not once per concern): (a) the lane's stale stage dirs —
+        # only uncommitted passes' (committed ones were consumed by
+        # _apply_ops above); (b) interrupted COMPACTION swaps
         # (operators/maintenance.py), healed here so a compact() crash
         # becomes visible again at the next pass instead of the next
         # compact call.  Each compaction base resolves under its table's
@@ -500,40 +475,16 @@ class StagedPass:
         # dir must not abort the snapshot pass.
         from .operators.maintenance import recover_base
 
+        pfx = _stage_prefix(srvid) if srvid != GLOBAL_LANE else None
         compact_bases: list[tuple[str, str]] = []
-        root = wh.root
-        for dirpath, dirs, _files in os.walk(root):
+        for dirpath, dirs, _files in os.walk(wh.root):
             if os.path.basename(dirpath) == "_txn":
                 dirs[:] = []
                 continue
-            for d in list(dirs):
-                full = os.path.join(dirpath, d)
-                in_srv_part = os.path.basename(dirpath) == f"srvid={srvid}"
-                if d.startswith(".__stage__") and in_srv_part:
-                    # flat stages (.__stage__ directly under a table
-                    # root) are deliberately NOT swept here: another
-                    # global-lane writer (a streaming batch processor)
-                    # may be mid-stage; each processor sweeps its own
-                    # tables via sweep_flat_stages at batch entry
-                    shutil.rmtree(full, ignore_errors=True)
-                elif d.startswith(f".__stageswap__srvid={srvid}__"):
-                    shutil.rmtree(full, ignore_errors=True)
-                elif d.startswith(".__stagetree__") and srvid == GLOBAL_LANE:
-                    # tree stages (ANN upsert) carry no srvid; they are
-                    # only ever staged under the global lane, whose
-                    # writers are serialized, so any leftover here
-                    # belongs to a dead pass (committed ones were
-                    # consumed by _apply_ops above)
-                    shutil.rmtree(full, ignore_errors=True)
-                elif d.startswith(".__swapout-tree__") and srvid == GLOBAL_LANE:
-                    shutil.rmtree(full, ignore_errors=True)
-                elif d.startswith(
-                    (".__stageflatswap__", ".__swapout-flat__")
-                ) and srvid == GLOBAL_LANE:
-                    shutil.rmtree(full, ignore_errors=True)
-                elif d.startswith(f".__swapout__srvid={srvid}__"):
-                    # completed replace whose cleanup was interrupted
-                    shutil.rmtree(full, ignore_errors=True)
+            for d in dirs:
+                if pfx and d.startswith(pfx):
+                    shutil.rmtree(os.path.join(dirpath, d),
+                                  ignore_errors=True)
                 elif d.startswith(".__trash__"):
                     compact_bases.append((dirpath, d[len(".__trash__"):]))
                 elif d.startswith(".__compact__"):
@@ -546,6 +497,26 @@ class StagedPass:
                 # leave it for the next pass / the owning compact call
                 pass
         return done
+
+
+def _read_intent(path: str) -> list[dict] | None:
+    """The ops of the manifest at ``path``; None when it is torn or
+    already retired.  A manifest holding an op this module cannot fold
+    (another op format's, e.g. one written before ops became leaf sets)
+    raises, naming the manifest: retiring it would silently drop the
+    op's data."""
+    try:
+        with open(path) as f:
+            ops = json.load(f).get("ops", [])
+    except (OSError, json.JSONDecodeError):
+        return None
+    for op in ops:
+        if op.get("kind") not in KINDS or "leaves" not in op:
+            raise ValueError(
+                f"manifest {path}: cannot fold staged op "
+                f"{op.get('kind')!r} on table {op.get('table')!r}"
+            )
+    return ops
 
 
 def heal_table(wh, table: str) -> int:
@@ -579,12 +550,9 @@ def heal_table(wh, table: str) -> int:
             if not name.endswith(".intent"):
                 continue
             p = os.path.join(d, name)
-            try:
-                with open(p) as f:
-                    rec = json.load(f)
-            except (OSError, json.JSONDecodeError):
+            all_ops = _read_intent(p)
+            if all_ops is None:
                 continue  # being retired / torn: nothing to fold
-            all_ops = rec.get("ops", [])
             ops = [op for op in all_ops if op.get("table") == table]
             if ops:
                 _apply_ops(wh, ops, intent_path=p)
@@ -603,160 +571,69 @@ def heal_table(wh, table: str) -> int:
     return folded
 
 
+def _set_aside(root: str, leaf: str, old: str, keep=()) -> None:
+    """Move live leaf ``leaf`` of ``root`` under ``old``: the whole dir,
+    or for the table-root leaf its parquet files other than ``keep``."""
+    if leaf:
+        src = os.path.join(root, leaf)
+        if os.path.isdir(src):
+            dst = os.path.join(old, leaf)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.replace(src, dst)
+        return
+    for f in _parquet(root):
+        if f not in keep:
+            os.makedirs(old, exist_ok=True)
+            os.replace(os.path.join(root, f), os.path.join(old, f))
+
+
 def _apply_ops(wh, ops: list[dict], intent_path: str | None = None) -> None:
-    """Apply staged ops idempotently (safe to re-run after any crash,
+    """Fold staged ops idempotently (safe to re-run after any crash,
     from the publisher, recover(), or a reader's heal_table()).  Each op
     runs under its owning table's write lock, serializing against every
     other mutation path — including maintenance.compact's
     list→trash→delete cycle, which could otherwise trash a staged file
     moved in after its listing (ADVICE r6).
 
+    An op is complete once its stage dir is gone, so a re-run skips it:
+    a replace re-applied after a later op of the same manifest appended
+    to its table would otherwise retire those files.  Leaves a replace
+    retires move into the stage dir's ``.__old__`` and go with it.
+
     ``intent_path`` (ADVICE r7, medium): a healer passes the manifest it
     loaded the ops from; each op re-stats it UNDER the table write lock
     and stops once it is gone — the publisher (or recover) retired the
     pass, meaning every op already applied, so the healer's replay would
-    be pure redundant work (and, for append_files, a redundant
-    REFRESH/DROP round)."""
+    be pure redundant work."""
     for op in ops:
-        stage, table_kind = op["stage"], op["kind"]
-        part_dir = os.path.dirname(stage)
         with wh._write_lock(op["table"]):
             if intent_path is not None and not os.path.exists(intent_path):
                 return
-            if table_kind == "append":
-                if os.path.isdir(stage):
-                    for f in os.listdir(stage):
-                        if f.endswith(".parquet"):
-                            # staged part-file names are uuid-unique; a
-                            # re-run only sees files not yet moved
-                            os.replace(
-                                os.path.join(stage, f),
-                                os.path.join(part_dir, f),
-                            )
-                    shutil.rmtree(stage, ignore_errors=True)
-            elif table_kind == "replace":
-                # stage name: .__stageswap__srvid=N__<pass>__<seq>
-                base = os.path.basename(stage)
-                suffix = base[len(".__stageswap__"):]
-                live = os.path.join(part_dir, suffix.split("__")[0])
-                swapout = os.path.join(part_dir, f".__swapout__{suffix}")
-                if os.path.isdir(stage):
-                    if os.path.isdir(live):
-                        if os.path.isdir(swapout):
-                            shutil.rmtree(swapout)
-                        os.replace(live, swapout)
-                    if op.get("files") == []:
-                        # empty replace: the partition is retired, no
-                        # empty dir goes live
-                        shutil.rmtree(stage)
-                    else:
-                        os.replace(stage, live)
-                # stage consumed (or was already): drop swapout leftover
-                if os.path.isdir(swapout):
-                    shutil.rmtree(swapout)
-            elif table_kind == "append_files":
-                # bucketed catalog-table append (BucketedDigestLedger):
-                # staged bucket files carry their bucket id in the file
-                # name, so a move preserves assignment; the catalog
-                # entry of the stage table is dropped after consumption
-                dest = op["dest"]
-                if os.path.isdir(stage):
-                    os.makedirs(dest, exist_ok=True)
-                    for f in os.listdir(stage):
-                        if f.endswith(".parquet"):
-                            os.replace(
-                                os.path.join(stage, f),
-                                os.path.join(dest, f),
-                            )
-                    shutil.rmtree(stage, ignore_errors=True)
-                spark = getattr(wh, "spark", None)
-                if spark is not None:
-                    try:
-                        spark.sql(f"REFRESH TABLE `{op['refresh']}`")
-                        spark.sql(
-                            f"DROP TABLE IF EXISTS `{op['drop_stage_table']}`"
-                        )
-                    except Exception:  # pragma: no cover - catalog drift
-                        pass  # stage dir already consumed; entry is inert
-            elif table_kind == "replace_flat":
-                live_root = os.path.dirname(stage)
-                token = op["token"]
-                own = set(op.get("files", []))
-                trash = os.path.join(live_root, f".__swapout-flat__{token}")
-                # Stage-guard (ADVICE r7, high): once the stage dir is
-                # consumed the replace HAS happened — a re-apply (crash
-                # replay, reader heal racing the publisher's fold) must
-                # not retire again, or it would trash files a LATER op
-                # in the same manifest appended to this table (the
-                # ANN upsert replace-then-append pattern); those run
-                # files are not in `own` and would be silently lost.
-                if os.path.isdir(stage):
-                    if os.path.isdir(live_root):
-                        os.makedirs(trash, exist_ok=True)
-                        for f in os.listdir(live_root):
-                            # retire old content, but never this pass's
-                            # own already-moved staged files (re-apply
-                            # after a crash mid-move)
-                            if (f.endswith(".parquet")
-                                    and not f.startswith((".", "_"))
-                                    and f not in own):
-                                os.replace(os.path.join(live_root, f),
-                                           os.path.join(trash, f))
-                    os.makedirs(live_root, exist_ok=True)
-                    for f in os.listdir(stage):
-                        if f.endswith(".parquet"):
-                            os.replace(os.path.join(stage, f),
-                                       os.path.join(live_root, f))
-                    shutil.rmtree(stage, ignore_errors=True)
-                if os.path.isdir(trash):
-                    shutil.rmtree(trash, ignore_errors=True)
-            elif table_kind == "append_tree":
-                live_root = os.path.dirname(stage)
-                if os.path.isdir(stage):
-                    for child in sorted(os.listdir(stage)):
-                        src = os.path.join(stage, child)
-                        if child.startswith((".", "_")) or not os.path.isdir(src):
-                            continue
-                        dst = os.path.join(live_root, child)
-                        os.makedirs(dst, exist_ok=True)
-                        for f in os.listdir(src):
-                            if f.endswith(".parquet"):
-                                # uuid-unique names: re-runs only see
-                                # files not yet moved
-                                os.replace(
-                                    os.path.join(src, f),
-                                    os.path.join(dst, f),
-                                )
-                    shutil.rmtree(stage, ignore_errors=True)
-            elif table_kind == "replace_tree":
-                live_root = os.path.dirname(stage)
-                token = op["token"]
-                pfx = f".__swapout-tree__{token}__"
-                if os.path.isdir(stage):
-                    for child in sorted(os.listdir(stage)):
-                        src = os.path.join(stage, child)
-                        if child.startswith((".", "_")) or not os.path.isdir(src):
-                            continue
-                        dst = os.path.join(live_root, child)
-                        swapout = os.path.join(live_root, pfx + child)
-                        if os.path.isdir(dst):
-                            if os.path.isdir(swapout):
-                                shutil.rmtree(swapout)
-                            os.replace(dst, swapout)
+            stage = op["stage"]
+            if not os.path.isdir(stage):
+                continue
+            root, old = os.path.dirname(stage), os.path.join(stage, ".__old__")
+            replace = op["kind"] == "replace"
+            for leaf, files in op["leaves"].items():
+                src = os.path.join(stage, leaf) if leaf else stage
+                dst = os.path.join(root, leaf) if leaf else root
+                if replace and leaf:
+                    # a partition leaf swaps in whole, unless an earlier
+                    # run already did
+                    if os.path.isdir(src):
+                        _set_aside(root, leaf, old)
+                        os.makedirs(os.path.dirname(dst), exist_ok=True)
                         os.replace(src, dst)
-                    shutil.rmtree(stage, ignore_errors=True)
-                # emptied leaves: dot-rename (atomic invisibility) then
-                # retire with the swapouts — a direct rmtree could crash
-                # half-way and leave a partially-populated live leaf
-                for leaf in op.get("drops", []):
-                    d = os.path.join(live_root, leaf)
-                    if os.path.isdir(d):
-                        trash = os.path.join(live_root, pfx + leaf)
-                        if os.path.isdir(trash):
-                            shutil.rmtree(trash)
-                        os.replace(d, trash)
-                if os.path.isdir(live_root):
-                    for name in os.listdir(live_root):
-                        if name.startswith(pfx):
-                            shutil.rmtree(os.path.join(live_root, name),
-                                          ignore_errors=True)
+                    continue
+                if replace:
+                    _set_aside(root, "", old, keep=files)
+                names = _parquet(src)
+                if names:
+                    os.makedirs(dst, exist_ok=True)
+                for f in names:
+                    # uuid-unique part names: a re-run only sees files
+                    # not yet moved
+                    os.replace(os.path.join(src, f), os.path.join(dst, f))
+            for leaf in op["drops"]:
+                _set_aside(root, leaf, old)
+            shutil.rmtree(stage)

@@ -144,6 +144,106 @@ def test_stranded_purge_scratch_is_inert(spark, wh, orch):
     assert wh.read(hist, SPEC.history_schema).count() == 0
 
 
+def test_purge_recovery_at_every_rename(spark, wh):
+    """A purge (the entity table and its _db twin) commits through one
+    staged pass: crash it at EVERY os.replace.  Before any recovery a
+    reader sees exactly the pre-purge or the post-purge history; after
+    recover() the next purge pass leaves exactly the rows retention
+    keeps — the boundary day's kept rows are never stranded in a hidden
+    dir — and no stage dir is left behind."""
+    import glob
+    import os
+
+    from powa_archivist_spark.operators.aggregate import _db_subspec
+    from powa_archivist_spark.operators.purge import purge
+    from powa_archivist_spark.txn import StagedPass
+
+    spec = get_spec("user_functions")
+    tables = {Warehouse.history(spec.name): spec.history_schema,
+              Warehouse.history_db(spec.name):
+                  _db_subspec(spec).history_schema}
+    day = dt.datetime(2026, 1, 3, tzinfo=dt.timezone.utc)
+    h = dt.timedelta(hours=1)
+    retention = dt.timedelta(hours=1)
+    now = day + 13 * h                    # cutoff: day 3, 12:00
+    ranges = [(1, day - 2 * 24 * h + 10 * h),   # expired days
+              (1, day - 24 * h + 10 * h), (1, day - 24 * h + 11 * h),
+              (1, day + 8 * h),                  # boundary day
+              (1, day + 13 * h), (1, day + 15 * h),
+              (1, day + 24 * h + 10 * h),        # a later day
+              (2, day - 2 * 24 * h + 10 * h)]    # another server's
+
+    def seed():
+        for t, schema in tables.items():
+            wh.drop_table(t)
+            df = spark.createDataFrame(
+                [(srv, 5, 7, end - h, end) for srv, end in ranges],
+                "srvid int, dbid long, funcid long, range_start timestamp,"
+                " range_end timestamp",
+            )
+            df = df.select(*[
+                F.col(f.name) if f.name in df.columns
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in schema.fields
+            ]).withColumn("range_day", F.to_date("range_end"))
+            wh.append(df, t, partition_by=["srvid", "range_day"])
+
+    def state():
+        return {t: sorted(map(tuple, wh.read(t, schema).select(
+                    "srvid", F.col("range_end").cast("long")).collect()))
+                for t, schema in tables.items()}
+
+    def run():
+        purge(wh, spec, 1, retention=retention, now=now)
+
+    seed()
+    pre = state()
+    run()
+    post = state()
+    kept = sorted((srv, int(end.timestamp())) for srv, end in ranges
+                  if srv == 2 or end >= now - retention)
+    assert post == {t: kept for t in tables}
+
+    class Boom(RuntimeError):
+        pass
+
+    crash_at = 1
+    while True:
+        seed()
+        calls = {"n": 0}
+        real_replace = os.replace
+
+        def crashing(src, dst, *, _real=real_replace, _calls=calls,
+                     _at=crash_at):
+            _calls["n"] += 1
+            if _calls["n"] == _at:
+                raise Boom()
+            return _real(src, dst)
+
+        os.replace = crashing
+        crashed = False
+        try:
+            run()
+        except Boom:
+            crashed = True
+        finally:
+            os.replace = real_replace
+        if not crashed:
+            break
+        assert state() == (pre if crash_at == 1 else post), crash_at
+        StagedPass.recover(wh, 1, sweep=True)
+        run()
+        assert state() == post, crash_at
+        for t in tables:
+            left = glob.glob(os.path.join(wh.path(t), "**", ".__*"),
+                             recursive=True)
+            assert not left, (crash_at, left)
+        crash_at += 1
+    # the manifest rename, then per table: the boundary day's swap (two
+    # renames) and the two expired-day drops
+    assert crash_at == 10
+
+
 def test_error_isolation(spark, wh):
     """A failing datasource never aborts the pass (powa--5.2.0.sql:3530-3546)."""
     bad = get_spec("pg_stat_database")
@@ -521,86 +621,130 @@ def test_staged_publish_recovery_at_every_rename(spark, wh):
     """Exhaustive crash-point enumeration for StagedPass.publish: crash
     at EVERY os.replace call (intent rename, each file move, each
     partition-swap rename) and prove recover() + nothing else converges
-    the warehouse to exactly the published state."""
+    the warehouse to exactly the published state.  One pass carries
+    every op shape: a partition append and replace, a tree replace with
+    a drop, a tree append, a flat retire and a bucketed-ledger append."""
     import os
 
-    from pyspark.sql import functions as F
-
+    from powa_archivist_spark.layout import drop_table
+    from powa_archivist_spark.streaming.dedup import BucketedDigestLedger
     from powa_archivist_spark.txn import StagedPass
 
-    def build_pass():
+    led = "t_led_bkt"
+    flat = ("t_app", "t_rep", "t_tree", "t_tapp", "t_ret")
+
+    def drop_ledger():
+        for t in spark.catalog.listTables():
+            if t.name.startswith(led):
+                drop_table(spark, t.name)
+
+    def seed():
+        for t in flat:
+            wh.drop_table(t)
+        drop_ledger()
+        # pre-seed the replaced tables so each replace exercises its
+        # set-aside branch
+        wh.append(spark.createDataFrame([(1, 0.0)], "srvid int, m double"),
+                  "t_rep", partition_by=["srvid"])
+        wh.append(spark.createDataFrame([(1, 100), (2, 200), (3, 300)],
+                                        "cell int, x long"),
+                  "t_tree", partition_by=["cell"])
+        wh.append(spark.createDataFrame([(1, 1)], "cell int, x long"),
+                  "t_tapp", partition_by=["cell"])
+        wh.append(spark.createDataFrame([(9,)], "k long"), "t_ret")
+        dl = BucketedDigestLedger(wh, table=led, n_buckets=4)
+        sp = StagedPass(wh, 1)
+        dl.stage_append(
+            spark.createDataFrame([("h1",)], "text_hash string"), sp)
+        sp.publish()
+        return dl
+
+    def build_pass(dl):
         sp = StagedPass(wh, 1)
         a = spark.createDataFrame([(1, 10), (1, 11)], "srvid int, v long")
         b = spark.createDataFrame([(1, 7.5)], "srvid int, m double")
         sp.stage_append(a, "t_app")
         sp.stage_replace(b, "t_rep")
+        sp.stage_replace_tree(
+            spark.createDataFrame([(1, 110)], "cell int, x long"),
+            "t_tree", partition_by=["cell"], drops=["cell=3"])
+        sp.stage_append_tree(
+            spark.createDataFrame([(1, 2), (4, 4)], "cell int, x long"),
+            "t_tapp", partition_by=["cell"])
+        sp.stage_retire_flat("t_ret")
+        dl.stage_append(
+            spark.createDataFrame([("h2",), ("h3",)], "text_hash string"),
+            sp)
         return sp
 
-    # reference final state from one clean publish
-    wh.drop_table("t_app"); wh.drop_table("t_rep")
-    build_pass().publish()
-    want_app = sorted(r.v for r in wh.read("t_app").collect())
-    want_rep = sorted(r.m for r in wh.read("t_rep").collect())
+    def state(dl):
+        out = {t: sorted(map(tuple, wh.read(t).collect()))
+               if wh.exists(t) else [] for t in flat}
+        out[led] = sorted(r.text_hash for r in dl.read().collect())
+        return out
+
+    dl = seed()
+    pre = state(dl)
+    build_pass(dl).publish()
+    post = state(dl)
+    assert post == {
+        "t_app": [(10, 1), (11, 1)], "t_rep": [(7.5, 1)],
+        "t_tree": [(110, 1), (200, 2)],
+        "t_tapp": [(1, 1), (2, 1), (4, 4)], "t_ret": [],
+        led: ["h1", "h2", "h3"],
+    }
 
     class Boom(RuntimeError):
         pass
 
-    crash_at = 1
-    while True:
-        wh.drop_table("t_app"); wh.drop_table("t_rep")
-        # pre-seed t_rep so the replace exercises the swapout branch
-        wh.append(spark.createDataFrame([(1, 0.0)], "srvid int, m double"),
-                  "t_rep", partition_by=["srvid"])
-        sp = build_pass()
-        calls = {"n": 0}
-        real_replace = os.replace
+    try:
+        crash_at = 1
+        while True:
+            dl = seed()
+            sp = build_pass(dl)
+            calls = {"n": 0}
+            real_replace = os.replace
 
-        def crashing(src, dst, *, _real=real_replace, _calls=calls,
-                     _at=crash_at):
-            _calls["n"] += 1
-            if _calls["n"] == _at:
-                raise Boom()
-            return _real(src, dst)
+            def crashing(src, dst, *, _real=real_replace, _calls=calls,
+                         _at=crash_at):
+                _calls["n"] += 1
+                if _calls["n"] == _at:
+                    raise Boom()
+                return _real(src, dst)
 
-        os.replace = crashing
-        crashed = False
-        try:
-            sp.publish()
-        except Boom:
-            crashed = True
-        finally:
-            os.replace = real_replace
-        if not crashed:
-            break  # crash point beyond the last rename: enumeration done
-        # r7 single-manifest commit: BEFORE any recovery, a reader must
-        # see EXACTLY pre-pass (crash before the manifest rename) or
-        # EXACTLY post-pass (manifest landed -> reads resolve through
-        # it and fold the remaining ops themselves).  ZERO intermediate
-        # states at ANY rename crash point.
-        if crash_at == 1:
-            # died before the manifest rename: nothing published
-            assert not wh.exists("t_app")
-            assert [r.m for r in wh.read("t_rep").collect()] == [0.0]
-        else:
-            assert sorted(r.v for r in wh.read("t_app").collect()) == want_app
-            assert sorted(r.m for r in wh.read("t_rep").collect()) == want_rep
-        StagedPass.recover(wh, 1, sweep=True)
-        if crash_at == 1:
-            # recovery only sweeps the invisible stage dirs; the
-            # pre-pass state stands and the pass would replay from
-            # preserved staging
-            assert not wh.exists("t_app")
-            assert [r.m for r in wh.read("t_rep").collect()] == [0.0]
-        else:
-            # recovery retires the manifest; state unchanged
-            assert sorted(r.v for r in wh.read("t_app").collect()) == want_app
-            assert sorted(r.m for r in wh.read("t_rep").collect()) == want_rep
+            os.replace = crashing
+            crashed = False
+            try:
+                sp.publish()
+            except Boom:
+                crashed = True
+            finally:
+                os.replace = real_replace
+            if not crashed:
+                break  # crash point beyond the last rename: done
+            # single-manifest commit: BEFORE any recovery, a reader must
+            # see EXACTLY pre-pass (crash before the manifest rename) or
+            # EXACTLY post-pass (manifest landed -> reads resolve through
+            # it and fold the remaining ops themselves).  ZERO
+            # intermediate states at ANY rename crash point.
+            want = pre if crash_at == 1 else post
+            assert state(dl) == want, crash_at
+            StagedPass.recover(wh, 1, sweep=True)
+            # recovery sweeps a dead pass's invisible stages (crash
+            # before the manifest rename: the pass would replay from
+            # preserved staging) or retires the completed manifest
+            assert state(dl) == want, crash_at
             import glob as _glob
             assert not _glob.glob(
                 os.path.join(wh.root, "_txn", "*", "*.intent")
             ), "recover left a retired manifest behind"
-        crash_at += 1
-    assert crash_at >= 4  # intent + >=1 file move + >=2 swap renames
+            assert not _glob.glob(os.path.join(wh.root, "*", ".__stage*"))
+            crash_at += 1
+    finally:
+        drop_ledger()
+    # intent + file moves + swap renames + drops + the ledger's files
+    assert crash_at >= 10
+
 
 def test_empty_staged_append_lands_nothing(spark, wh):
     """An empty staged append lands no parquet file, no op and no srvid

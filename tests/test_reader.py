@@ -127,15 +127,24 @@ def test_external_reader_crash_enumeration(spark, wh):
     """The reader-side twin of the publish crash enumeration: crash the
     publisher at EVERY os.replace; at each crash point an external
     DuckDB reader (manifest-resolving, no heal, no locks) must see
-    EXACTLY the pre-pass or EXACTLY the post-pass state of all three
-    sinks — append, partition replace, flat replace-then-append (the
-    ivf_upsert pattern) — never a mixture."""
-    from pyspark.sql import functions as F  # noqa: F401
+    EXACTLY the pre-pass or EXACTLY the post-pass state of every sink —
+    append, partition replace, flat replace-then-append (the
+    ivf_upsert pattern), tree replace with a drop, tree append, flat
+    retire and a bucketed-ledger append — never a mixture."""
+    from powa_archivist_spark.layout import drop_table
+    from powa_archivist_spark.streaming.dedup import BucketedDigestLedger
+
+    led = "c_led_bkt"
+
+    def drop_ledger():
+        for t in spark.catalog.listTables():
+            if t.name.startswith(led):
+                drop_table(spark, t.name)
 
     def seed():
-        wh.drop_table("c_app")
-        wh.drop_table("c_rep")
-        wh.drop_table("c_flat")
+        for t in ("c_app", "c_rep", "c_flat", "c_tree", "c_tapp", "c_ret"):
+            wh.drop_table(t)
+        drop_ledger()
         wh.append(
             spark.createDataFrame([(1, 0.0)], "srvid int, m double"),
             "c_rep", partition_by=["srvid"],
@@ -143,8 +152,20 @@ def test_external_reader_crash_enumeration(spark, wh):
         wh.append(
             spark.createDataFrame([(100,)], "k long"), "c_flat"
         )
+        wh.append(spark.createDataFrame([(1, 100), (2, 200), (3, 300)],
+                                        "cell int, x long"),
+                  "c_tree", partition_by=["cell"])
+        wh.append(spark.createDataFrame([(1, 1)], "cell int, x long"),
+                  "c_tapp", partition_by=["cell"])
+        wh.append(spark.createDataFrame([(9,)], "k long"), "c_ret")
+        dl = BucketedDigestLedger(wh, table=led, n_buckets=4)
+        sp = StagedPass(wh, 1)
+        dl.stage_append(
+            spark.createDataFrame([("h1",)], "text_hash string"), sp)
+        sp.publish()
+        return dl
 
-    def build_pass():
+    def build_pass(dl):
         sp = StagedPass(wh, 1)
         sp.stage_append(
             spark.createDataFrame([(1, 10), (1, 11)], "srvid int, v long"),
@@ -161,60 +182,87 @@ def test_external_reader_crash_enumeration(spark, wh):
         sp.stage_append_flat(
             spark.createDataFrame([(300,)], "k long"), "c_flat"
         )
+        sp.stage_replace_tree(
+            spark.createDataFrame([(1, 110)], "cell int, x long"),
+            "c_tree", partition_by=["cell"], drops=["cell=3"])
+        sp.stage_append_tree(
+            spark.createDataFrame([(1, 2), (4, 4)], "cell int, x long"),
+            "c_tapp", partition_by=["cell"])
+        sp.stage_retire_flat("c_ret")
+        dl.stage_append(
+            spark.createDataFrame([("h2",)], "text_hash string"), sp)
         return sp
 
-    PRE = {"app": [], "rep": [(0.0,)], "flat": [(100,)]}
+    PRE = {"app": [], "rep": [(0.0,)], "flat": [(100,)],
+           "tree": [(1, 100), (2, 200), (3, 300)], "tapp": [(1, 1)],
+           "ret": [(9,)], "led": [("h1",)]}
     POST = {"app": [(10,), (11,)], "rep": [(7.5,)],
-            "flat": [(200,), (300,)]}
+            "flat": [(200,), (300,)], "tree": [(1, 110), (2, 200)],
+            "tapp": [(1, 1), (1, 2), (4, 4)], "ret": [],
+            "led": [("h1",), ("h2",)]}
 
-    def external_state():
-        return {
+    def external_state(dl):
+        out = {
             "app": snap_read(wh, "c_app", "v"),
             "rep": snap_read(wh, "c_rep", "m"),
             "flat": snap_read(wh, "c_flat", "k"),
+            "tree": snap_read(wh, "c_tree", "cell, x"),
+            "tapp": snap_read(wh, "c_tapp", "cell, x"),
+            "ret": snap_read(wh, "c_ret", "k"),
         }
-
-    # clean run sanity
-    seed()
-    build_pass().publish()
-    assert external_state() == POST
+        r = SnapshotReader(wh.root)
+        snap = r.snapshot(led, location=dl._location(led))
+        try:
+            out["led"] = duck_rows(snap, "text_hash")
+        finally:
+            r.release(snap)
+        return out
 
     class Boom(RuntimeError):
         pass
 
-    crash_at = 1
-    while True:
-        seed()
-        sp = build_pass()
-        calls = {"n": 0}
-        real_replace = os.replace
+    try:
+        # clean run sanity
+        dl = seed()
+        assert external_state(dl) == PRE
+        build_pass(dl).publish()
+        assert external_state(dl) == POST
 
-        def crashing(src, dst, *, _real=real_replace, _calls=calls,
-                     _at=crash_at):
-            _calls["n"] += 1
-            if _calls["n"] == _at:
-                raise Boom()
-            return _real(src, dst)
+        crash_at = 1
+        while True:
+            dl = seed()
+            sp = build_pass(dl)
+            calls = {"n": 0}
+            real_replace = os.replace
 
-        os.replace = crashing
-        crashed = False
-        try:
-            sp.publish()
-        except Boom:
-            crashed = True
-        finally:
-            os.replace = real_replace
-        if not crashed:
-            break
-        got = external_state()
-        want = PRE if crash_at == 1 else POST
-        assert got == want, (
-            f"crash point {crash_at}: external reader saw {got}, "
-            f"wanted {'PRE' if crash_at == 1 else 'POST'} {want}"
-        )
-        StagedPass.recover(wh, 1, sweep=True)
-        crash_at += 1
-    assert crash_at >= 6  # intent + file moves + swap renames
+            def crashing(src, dst, *, _real=real_replace, _calls=calls,
+                         _at=crash_at):
+                _calls["n"] += 1
+                if _calls["n"] == _at:
+                    raise Boom()
+                return _real(src, dst)
+
+            os.replace = crashing
+            crashed = False
+            try:
+                sp.publish()
+            except Boom:
+                crashed = True
+            finally:
+                os.replace = real_replace
+            if not crashed:
+                break
+            got = external_state(dl)
+            want = PRE if crash_at == 1 else POST
+            assert got == want, (
+                f"crash point {crash_at}: external reader saw {got}, "
+                f"wanted {'PRE' if crash_at == 1 else 'POST'} {want}"
+            )
+            StagedPass.recover(wh, 1, sweep=True)
+            crash_at += 1
+    finally:
+        drop_ledger()
+    assert crash_at >= 12  # intent + file moves + swap renames + drops
 
 
 def test_snapshot_resolves_replace_tree_and_drops(spark, wh):
@@ -250,6 +298,41 @@ def test_snapshot_resolves_replace_tree_and_drops(spark, wh):
     assert snap_read(wh, "r_tree", "cell, x") == [(1, 110), (2, 200)]
     StagedPass.recover(wh, 1, sweep=True)
     assert snap_read(wh, "r_tree", "cell, x") == [(1, 110), (2, 200)]
+
+
+def test_unfoldable_manifest_op_raises_naming_the_manifest(spark, wh):
+    """A manifest op of an unknown kind, or of an older op format (an
+    append without leaf records), stops recovery, in-process reads and
+    the external reader with an error naming the manifest.  Skipping it
+    would let recovery retire the manifest and silently drop the op's
+    data; the manifest stays for an operator to resolve."""
+    import json
+    import re
+
+    wh.append(spark.createDataFrame([(1,)], "k long"), "u_flat")
+    stage = os.path.join(wh.path("u_flat"), ".__stage__-1__old__0")
+    spark.createDataFrame([(2,)], "k long").write.parquet(stage)
+    files = sorted(f for f in os.listdir(stage) if f.endswith(".parquet"))
+    d = os.path.join(wh.root, "_txn", "srvid=-1")
+    os.makedirs(d)
+    for op in ({"kind": "truncate", "table": "u_flat", "stage": stage,
+                "leaves": {"": files}, "drops": []},
+               {"kind": "append", "table": "u_flat", "stage": stage,
+                "files": files}):
+        intent = os.path.join(d, "old.intent")
+        with open(intent, "w") as f:
+            json.dump({"srvid": -1, "ops": [op]}, f)
+        named = re.escape(intent)
+        with pytest.raises(ValueError, match=named):
+            StagedPass.recover(wh, -1)
+        with pytest.raises(ValueError, match=named):
+            wh.read("u_flat")
+        with pytest.raises(ValueError, match=named):
+            SnapshotReader(wh.root).snapshot("u_flat")
+        assert os.path.exists(intent)
+        assert os.listdir(stage)
+    os.remove(intent)
+    assert [r.k for r in wh.read("u_flat").collect()] == [1]
 
 
 def test_torn_snapshot_raises_not_lies(spark, wh, monkeypatch):

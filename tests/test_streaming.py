@@ -1725,3 +1725,43 @@ def test_replayed_epoch_launches_no_spark_job(spark, wh, fold_name):
     out, replay_jobs = jobs_of(f"replay-{fold_name}", 0)
     assert out in (False, None)
     assert replay_jobs == [], replay_jobs
+
+
+def test_global_lane_writers_sweep_only_their_tables(spark, wh):
+    """Writers on the shared global lane each sweep only the tables they
+    write.  An ANN index build starting while a streaming fold's flat
+    replace is staged must leave that stage alone (deleting it left the
+    fold's manifest naming a consumed stage, so its swap never landed),
+    and a fold reclaims its own dead stages, replaces included."""
+    from powa_archivist_spark.pipeline import similarity
+    from powa_archivist_spark.streaming import fold as fold_mod
+    from powa_archivist_spark.txn import GLOBAL_LANE, StagedPass
+
+    schema = "epoch long, v long"
+    wh.append(spark.createDataFrame([(1, 0)], schema), "gl_fold")
+
+    def rows():
+        return sorted(map(tuple, wh.read("gl_fold").collect()))
+
+    def stages():
+        return [n for n in os.listdir(wh.path("gl_fold"))
+                if n.startswith(".__")]
+
+    sp = StagedPass(wh, GLOBAL_LANE)
+    fold_mod.replace(spark.createDataFrame([(2, 5)], schema))(sp, "gl_fold")
+    similarity.IVF.build(
+        wh, spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet"))
+    assert stages(), "the index build swept the fold's in-flight stage"
+    sp.publish()
+    assert rows() == [(2, 5)]
+    assert stages() == []
+
+    # a fold pass that dies before its commit point leaves its stage;
+    # the next fold on the table reclaims it
+    dead = StagedPass(wh, GLOBAL_LANE)
+    fold_mod.replace(spark.createDataFrame([(3, 6)], schema))(dead, "gl_fold")
+    assert stages()
+    fold_mod.fold(wh, spark.createDataFrame([], schema), tables=("gl_fold",),
+                  key=None, build=lambda wh, batch, sp: None)
+    assert stages() == []
+    assert rows() == [(2, 5)]

@@ -221,13 +221,14 @@ class Orchestrator:
         # dead pass committed but didn't finish, sweep the invisible
         # stage dirs of passes that died before their commit point, and
         # heal interrupted compaction swaps — all in ONE warehouse walk
-        # per pass, error-trapped so a stray unreadable dir lands in
-        # the error ledger instead of halting every server's ingestion.
+        # per pass, error-trapped so a stray unreadable dir (or a
+        # manifest op it cannot fold) lands in the error ledger instead
+        # of halting every server's ingestion.
         # It runs before any datasource's worker starts: its sweep would
         # delete a live sibling's stage dir.
         try:
             StagedPass.recover(self.wh, srvid, sweep=True)
-        except OSError as e:
+        except (OSError, ValueError) as e:
             errors.append(f"powa_snapshot_recovery: {e}")
         txn_token = self.txns.begin(srvid, now)
 

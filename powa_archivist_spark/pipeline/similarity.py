@@ -1865,10 +1865,10 @@ class IvfIndex:
             self.table("cells"), partition_by=["cell_id"],
             drops=[d for d in old_cells if d.startswith("cell_id=")],
         )
-        sp.stage_replace_flat(cents, self.table("centroids"))
+        sp.stage_replace_tree(cents, self.table("centroids"))
         if codebook is not None:
-            sp.stage_replace_flat(codebook, self.table("codebook"))
-        sp.stage_replace_flat(
+            sp.stage_replace_tree(codebook, self.table("codebook"))
+        sp.stage_replace_tree(
             _id_bloom_words(emb.select(id_col), id_col),
             self.table("id_bloom"),
         )
@@ -2028,14 +2028,14 @@ class IvfIndex:
                     .limit(1).count() > 0
                 )
                 if has_stale_delta:
-                    sp.stage_replace_flat(
+                    sp.stage_replace_tree(
                         delta.join(F.broadcast(batch_ids), id_col,
                                    "left_anti")
                         .coalesce(1).sortWithinPartitions("cell_id"),
                         delta_t,
                     )
-            sp.stage_append_flat(run, delta_t)
-            sp.stage_replace_flat(new_bloom, bloom_t)
+            sp.stage_append_tree(run, delta_t)
+            sp.stage_replace_tree(new_bloom, bloom_t)
             sp.publish()
             self.compact(wh, compact_delta_runs)
         finally:
@@ -2070,7 +2070,7 @@ class IvfIndex:
             self.table("cells"),
             partition_by=["cell_id"],
         )
-        sp.stage_replace_flat(
+        sp.stage_replace_tree(
             local_frame(wh.spark, [], delta.schema), delta_t
         )
         sp.publish()

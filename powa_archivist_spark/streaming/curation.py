@@ -112,7 +112,7 @@ def process_curation_batch(
             survivors.drop("text_hash"), id_col=id_col
         ).observe(obs, F.count(F.lit(1)).alias("n"))
         # sink write first: the ledger decision reads its observation
-        sp.stage_append_flat(labeled, sink_table)
+        sp.stage_append_tree(labeled, sink_table)
         writes = dict([digest_write(survivors, digest_ledger)]
                       if obs.get["n"] > 0 else [])
         # rejects inherit quality_gate's parallelism-wide spread —

@@ -457,7 +457,7 @@ def process_near_dup_batch(
         # API); the append goes FIRST: it materializes the survivors and
         # the observation — an all-dup batch appends one empty file
         obs = Observation()
-        sp.stage_append_flat(
+        sp.stage_append_tree(
             survivors.observe(obs, F.count(F.lit(1)).alias("n")),
             sink_table,
         )

@@ -103,13 +103,13 @@ def invalidate(root: str) -> None:
 
 def replace(frame: DataFrame):
     """A :func:`fold` write that swaps the table's whole content."""
-    return lambda sp, table: sp.stage_replace_flat(frame, table)
+    return lambda sp, table: sp.stage_replace_tree(frame, table)
 
 
 def _stage(sp: StagedPass, table: str, write):
     if callable(write):
         return lambda: write(sp, table)
-    return lambda: sp.stage_append_flat(write, table)
+    return lambda: sp.stage_append_tree(write, table)
 
 
 def fold(wh, batch: DataFrame, *, tables, key, build,
@@ -158,7 +158,7 @@ def compact_ledger(wh, table: str,
     merged = merge(rows).withColumn("epoch", F.lit(int(top)).cast("long"))
     sp = StagedPass(wh, GLOBAL_LANE)
     # eager checkpoint: the replace reads the table it swaps
-    sp.stage_replace_flat(
+    sp.stage_replace_tree(
         merged.select(*rows.columns).localCheckpoint(), table
     )
     sp.publish()

@@ -321,18 +321,6 @@ class StagedPass:
                           lambda d: self._write_counted(df.coalesce(1), d),
                           drops=[f"srvid={self.srvid}"])
 
-    def stage_append_flat(self, df, table: str) -> None:
-        """Stage an append to an UNPARTITIONED table (streaming sinks,
-        digest ledgers): the staged files publish into the table root.
-        The streaming batch processors stage their sink and ledger
-        appends in one pass, so both commit through one manifest."""
-        self.stage("append", table, self._writer(df))
-
-    def stage_replace_flat(self, df, table: str) -> None:
-        """Stage a full content replace of an UNPARTITIONED table (the
-        ANN delta run table, a fold's replace)."""
-        self.stage("replace", table, self._writer(df), drops=[""])
-
     def stage_retire_flat(self, table: str) -> None:
         """Stage the retirement of an UNPARTITIONED table's content: a
         flat replace that lands no file, so after publish the table
@@ -341,20 +329,18 @@ class StagedPass:
         if os.path.isdir(self.wh.path(table)):
             self.stage("replace", table, drops=[""])
 
-    def stage_append_tree(
-        self, df, table: str, partition_by: list[str],
-    ) -> None:
+    def stage_append_tree(self, df, table: str, partition_by=()) -> None:
         """Stage a partition-tree APPEND: one Spark job writes ``df``
         partitioned by ``partition_by``; publish moves each staged
         leaf's files INTO the matching live leaf without replacing
         existing files.  The partition-wise append for ingest paths
         whose IO must stay proportional to the batch (ANN delta
-        compaction)."""
+        compaction).  No ``partition_by`` appends to an UNPARTITIONED
+        table's root (streaming sinks, digest ledgers, ANN delta runs)."""
         self.stage("append", table, self._writer(df, partition_by))
 
-    def stage_replace_tree(
-        self, df, table: str, partition_by: list[str], drops: list[str] = (),
-    ) -> None:
+    def stage_replace_tree(self, df, table: str, partition_by=(),
+                           drops=()) -> None:
         """Stage a partition-TREE replace: ONE Spark job writes every
         touched partition of ``df`` (partitioned by ``partition_by``);
         publish swaps each staged leaf into the live table and retires
@@ -363,9 +349,10 @@ class StagedPass:
         rewrite must never leave a replaced id in two cells.  A leaf the
         staged tree rewrites is never dropped, so passing every live
         leaf as ``drops`` makes a full-table replace (the ANN index
-        rebuild)."""
+        rebuild).  No ``partition_by`` replaces an UNPARTITIONED table's
+        whole content (the ANN side tables, a fold's replace)."""
         self.stage("replace", table, self._writer(df, partition_by),
-                   drops=drops)
+                   drops=drops if partition_by else [""])
 
     # ---- publish ---------------------------------------------------------
 
@@ -499,18 +486,21 @@ class StagedPass:
         return done
 
 
-def _read_intent(path: str) -> list[dict] | None:
+def _read_intent(path: str, table: str | None = None) -> list[dict] | None:
     """The ops of the manifest at ``path``; None when it is torn or
-    already retired.  A manifest holding an op this module cannot fold
-    (another op format's, e.g. one written before ops became leaf sets)
-    raises, naming the manifest: retiring it would silently drop the
-    op's data."""
+    already retired.  An op this module cannot fold (another op
+    format's, e.g. one written before ops became leaf sets) raises,
+    naming the manifest: retiring it would silently drop the op's data.
+    With ``table`` only that table's ops are checked, so one such op
+    blocks reads of its own table and of no other."""
     try:
         with open(path) as f:
             ops = json.load(f).get("ops", [])
     except (OSError, json.JSONDecodeError):
         return None
     for op in ops:
+        if table is not None and op.get("table") != table:
+            continue
         if op.get("kind") not in KINDS or "leaves" not in op:
             raise ValueError(
                 f"manifest {path}: cannot fold staged op "
@@ -550,7 +540,7 @@ def heal_table(wh, table: str) -> int:
             if not name.endswith(".intent"):
                 continue
             p = os.path.join(d, name)
-            all_ops = _read_intent(p)
+            all_ops = _read_intent(p, table)
             if all_ops is None:
                 continue  # being retired / torn: nothing to fold
             ops = [op for op in all_ops if op.get("table") == table]
@@ -598,7 +588,10 @@ def _apply_ops(wh, ops: list[dict], intent_path: str | None = None) -> None:
     An op is complete once its stage dir is gone, so a re-run skips it:
     a replace re-applied after a later op of the same manifest appended
     to its table would otherwise retire those files.  Leaves a replace
-    retires move into the stage dir's ``.__old__`` and go with it.
+    retires move into the stage dir's ``.__old__`` and go with it: the
+    last rename under the lock moves the stage dir to a ``__done`` name
+    of the same lane, deleted once the lock is released (a purge's
+    expired days), or by the lane's sweep after a crash.
 
     ``intent_path`` (ADVICE r7, medium): a healer passes the manifest it
     loaded the ops from; each op re-stats it UNDER the table write lock
@@ -606,10 +599,11 @@ def _apply_ops(wh, ops: list[dict], intent_path: str | None = None) -> None:
     pass, meaning every op already applied, so the healer's replay would
     be pure redundant work."""
     for op in ops:
+        stage = op["stage"]
+        done = stage + "__done"
         with wh._write_lock(op["table"]):
             if intent_path is not None and not os.path.exists(intent_path):
                 return
-            stage = op["stage"]
             if not os.path.isdir(stage):
                 continue
             root, old = os.path.dirname(stage), os.path.join(stage, ".__old__")
@@ -636,4 +630,5 @@ def _apply_ops(wh, ops: list[dict], intent_path: str | None = None) -> None:
                     os.replace(os.path.join(src, f), os.path.join(dst, f))
             for leaf in op["drops"]:
                 _set_aside(root, leaf, old)
-            shutil.rmtree(stage)
+            os.replace(stage, done)
+        shutil.rmtree(done, ignore_errors=True)

@@ -240,8 +240,8 @@ def test_purge_recovery_at_every_rename(spark, wh):
             assert not left, (crash_at, left)
         crash_at += 1
     # the manifest rename, then per table: the boundary day's swap (two
-    # renames) and the two expired-day drops
-    assert crash_at == 10
+    # renames), the two expired-day drops and the stage dir's retirement
+    assert crash_at == 12
 
 
 def test_error_isolation(spark, wh):

@@ -1470,9 +1470,9 @@ def test_ivf_upsert_crash_atomicity(spark, wh, codec):
 @pytest.mark.parametrize("codec", ["raw", "pq"])
 def test_ivf_upsert_replay_keeps_batch_replacing_delta_ids(spark, wh, codec):
     """r8 (ADVICE r7, high): a batch replacing ids that sit in the DELTA
-    stages replace_flat(delta-minus-batch) AND append_flat(run) on the
+    stages a flat replace (delta-minus-batch) AND a flat append (run) on the
     SAME table in one manifest.  On a crash-replay (manifest applied but
-    not yet retired), the replace_flat retire loop used to trash the
+    not yet retired), the flat replace's retire loop used to trash the
     batch's already-appended run files (not in its own staged-file list)
     — silently losing the vectors while the id Bloom still marks them
     present.  The stage-guard must make the replay a no-op."""
@@ -1636,7 +1636,7 @@ def test_heal_table_retires_single_table_manifest(spark, wh):
 
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
     sp = StagedPass(wh, 0)
-    sp.stage_append_flat(df, "heal_probe_table")
+    sp.stage_append_tree(df, "heal_probe_table")
 
     class Boom(RuntimeError):
         pass

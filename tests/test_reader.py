@@ -176,10 +176,10 @@ def test_external_reader_crash_enumeration(spark, wh):
             "c_rep",
         )
         # replace-then-append on ONE flat table (the ADVICE r7 pattern)
-        sp.stage_replace_flat(
+        sp.stage_replace_tree(
             spark.createDataFrame([(200,)], "k long"), "c_flat"
         )
-        sp.stage_append_flat(
+        sp.stage_append_tree(
             spark.createDataFrame([(300,)], "k long"), "c_flat"
         )
         sp.stage_replace_tree(
@@ -305,23 +305,39 @@ def test_unfoldable_manifest_op_raises_naming_the_manifest(spark, wh):
     append without leaf records), stops recovery, in-process reads and
     the external reader with an error naming the manifest.  Skipping it
     would let recovery retire the manifest and silently drop the op's
-    data; the manifest stays for an operator to resolve."""
+    data; the manifest stays for an operator to resolve.  Only its own
+    table and lane are blocked: other tables still read, and a snapshot
+    pass on its lane records the error in the ledger instead of raising
+    while other servers' passes land."""
     import json
     import re
 
+    from powa_archivist_spark.orchestrator import Orchestrator, ServerConfig
+    from powa_archivist_spark.specs import PG_STAT_BGWRITER as SPEC
+    from powa_archivist_spark.storage import Warehouse
+
+    from .conftest import ts
+
     wh.append(spark.createDataFrame([(1,)], "k long"), "u_flat")
+    wh.append(spark.createDataFrame([(5,)], "k long"), "u_other")
     stage = os.path.join(wh.path("u_flat"), ".__stage__-1__old__0")
     spark.createDataFrame([(2,)], "k long").write.parquet(stage)
     files = sorted(f for f in os.listdir(stage) if f.endswith(".parquet"))
-    d = os.path.join(wh.root, "_txn", "srvid=-1")
-    os.makedirs(d)
-    for op in ({"kind": "truncate", "table": "u_flat", "stage": stage,
+    bad_ops = ({"kind": "truncate", "table": "u_flat", "stage": stage,
                 "leaves": {"": files}, "drops": []},
                {"kind": "append", "table": "u_flat", "stage": stage,
-                "files": files}):
+                "files": files})
+
+    def plant(srvid, op):
+        d = os.path.join(wh.root, "_txn", f"srvid={srvid}")
+        os.makedirs(d, exist_ok=True)
         intent = os.path.join(d, "old.intent")
         with open(intent, "w") as f:
-            json.dump({"srvid": -1, "ops": [op]}, f)
+            json.dump({"srvid": srvid, "ops": [op]}, f)
+        return intent
+
+    for op in bad_ops:
+        intent = plant(-1, op)
         named = re.escape(intent)
         with pytest.raises(ValueError, match=named):
             StagedPass.recover(wh, -1)
@@ -329,10 +345,31 @@ def test_unfoldable_manifest_op_raises_naming_the_manifest(spark, wh):
             wh.read("u_flat")
         with pytest.raises(ValueError, match=named):
             SnapshotReader(wh.root).snapshot("u_flat")
+        assert [r.k for r in wh.read("u_other").collect()] == [5]
+        assert duck_rows(SnapshotReader(wh.root).snapshot("u_other"),
+                         "k") == [(5,)]
+        assert StagedPass.recover(wh, 3, sweep=True) == 0
         assert os.path.exists(intent)
         assert os.listdir(stage)
     os.remove(intent)
     assert [r.k for r in wh.read("u_flat").collect()] == [1]
+
+    intent = plant(0, bad_ops[0])
+    orch = Orchestrator(wh, specs={SPEC.name: SPEC})
+    for srvid in (0, 1):
+        orch.take_snapshot(
+            ServerConfig(srvid=srvid),
+            captures={SPEC.name: spark.createDataFrame(
+                [(srvid, ts(0), 10, 1, 5, 1, 2)], SPEC.staging_schema)},
+            now=ts(0),
+        )
+    errors = orch.read_metas(0)["errors"]
+    assert any(e.startswith("powa_snapshot_recovery") and intent in e
+               for e in errors), errors
+    assert orch.read_metas(1)["errors"] == []
+    cur = wh.read(Warehouse.current(SPEC.name)).collect()
+    assert [r.srvid for r in cur] == [1]
+    assert os.path.exists(intent)
 
 
 def test_torn_snapshot_raises_not_lies(spark, wh, monkeypatch):
@@ -385,7 +422,7 @@ def test_external_reader_covers_bucketed_ledger(spark, wh):
 
     def build_pass(dl):
         sp = StagedPass(wh, GLOBAL_LANE)
-        sp.stage_append_flat(
+        sp.stage_append_tree(
             spark.createDataFrame([(3,)], "doc_id long"), "r9_rdr_sink"
         )
         dl.stage_append(
